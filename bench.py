@@ -13,10 +13,10 @@ local[$SPARK_GRAFT_CPUS]:
   q_merge_indexes  — structural cross-index merge (byte-level posting
                      rebase + delegated phase B) of 2× the bench index
   q_phrase_search  — 100 two-token phrases over the positional index
-  q_search_indexed — 100-query top-10 via the block-max engine on that
+  q_search_indexed — 100-query top-10 via the indexed engine on that
                      index, COLD (term-df cache cleared), median of 3
   q_search_tombstoned — the same 100 queries with a ~14% kill-list applied
-                     (block-max stays live on masked postings)
+                     (masked before shard-local top-k)
   q_search_boolean — the 100 queries as "+req opt -forbidden" boolean
                      grammar (per-shard intersection + exclusion)
   q_search_prefix  — the 100 queries with the first term as a 4-char
@@ -199,7 +199,7 @@ def main() -> None:
     )
 
     def run_search():
-        return search(spark, idx_dir, queries, k=10, use_blockmax=True).count()
+        return search(spark, idx_dir, queries, k=10).count()
 
     # COLD search = REPEAT-MEDIAN of 3 (round-6 verdict: the single-shot
     # number false-regressed 2× on box noise two rounds running — same
@@ -230,14 +230,14 @@ def main() -> None:
         timings["q_search_warm"] / 100 * 1000, 2
     )
 
-    # tombstoned search: ~14% of docs masked at query time, blockmax live
+    # tombstoned search: ~14% of docs masked at query time
     kill = (
         spark.read.parquet(f"{idx_dir}/docs")
         .filter(F.col("doc_id") % 7 == 0)
         .select("doc_id")
     )
     timed("q_search_tombstoned", lambda: search(
-        spark, idx_dir, queries, k=10, use_blockmax=True,
+        spark, idx_dir, queries, k=10,
         exclude_doc_ids=kill,
     ).count())
     extra["search_tombstoned_p50_ms_per_query"] = round(
@@ -251,7 +251,7 @@ def main() -> None:
         .select("doc_id")
     )
     timed("q_search_filtered", lambda: search(
-        spark, idx_dir, queries, k=10, use_blockmax=True,
+        spark, idx_dir, queries, k=10,
         include_doc_ids=allowed,
     ).count())
     extra["search_filtered_p50_ms_per_query"] = round(
@@ -340,7 +340,7 @@ def main() -> None:
     for _ in range(3):
         t0 = time.time()
         search(
-            spark, idx_dir, big_q, k=10, use_blockmax=True,
+            spark, idx_dir, big_q, k=10,
             query_mode="distributed",
         ).count()
         bigbatch_runs.append(round(time.time() - t0, 3))

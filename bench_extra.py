@@ -105,7 +105,7 @@ def main() -> None:
         big_q = synth_queries(spark, 5000).cache()
         big_q.count()
         timed(lambda: search(
-            spark, idx_dir, big_q, k=10, use_blockmax=True,
+            spark, idx_dir, big_q, k=10,
             query_mode="distributed",
         ).count())
         out["queries_per_sec"] = round(5000 / out["median"], 1)
@@ -115,11 +115,11 @@ def main() -> None:
 
         def cold():
             _term_df_cache_clear()
-            search(spark, idx_dir, queries, k=10, use_blockmax=True).count()
+            search(spark, idx_dir, queries, k=10).count()
 
         timed(cold)
         t0 = time.time()
-        search(spark, idx_dir, queries, k=10, use_blockmax=True).count()
+        search(spark, idx_dir, queries, k=10).count()
         out["warm_seconds"] = round(time.time() - t0, 3)
         out["p50_ms_per_query"] = round(out["median"] / 100 * 1000, 2)
     elif metric == "mlt":

@@ -4,14 +4,14 @@ Re-expresses the retrieval semantics of the reference (ninjascant/dense-retrieve
 an offline dense-retrieval pipeline: corpus -> index -> top-k search -> rank metrics,
 see /root/reference/dense_retriever/transforms/ann_index.py) as an idiomatic Spark
 engine: a code-aware Arrow-vectorized tokenizer, a sharded inverted index with
-delta+varbyte compressed postings and block-max metadata, and an Okapi BM25
-(k1=1.2, b=0.75) block-max-WAND top-k scorer — plus the surrounding
+delta+varbyte compressed postings, and an exact Okapi BM25 (k1=1.2,
+b=0.75) top-k scorer — plus the surrounding
 training-data-pipeline operators (dedup, similarity search, text analysis).
 
 Design principles (SURVEY.md §7.0):
 - DataFrame/SQL first; Catalyst plans everything plan-level.
 - Python only in Arrow-batched pandas UDFs / applyInPandas; never per-row.
-- Explicit shuffle shape: term-hash repartitioning, salted hot terms,
+- Explicit shuffle shape: doc-range shards as the hot-term salt,
   broadcast of small sides and of corpus statistics.
 """
 

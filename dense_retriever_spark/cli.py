@@ -423,32 +423,11 @@ def cmd_build_term_cache(args) -> None:
     spark = _spark(args)
     from pyspark.sql import functions as F
 
-    from dense_retriever_spark.index.build import IndexPaths
-    from dense_retriever_spark.index.search import load_stats
+    from dense_retriever_spark.index.search import global_term_stats, load_stats
 
-    idx_stats = load_stats(args.index_dir)
-    paths = IndexPaths(args.index_dir)
-    # postings column pruned by parquet: the cache scan reads 3 columns only
-    if idx_stats.get("global_layout", "merged") == "generational":
-        # per-term totals across gen segments + the loose tail shards
-        gu = int(idx_stats.get("genned_until", 0))
-        legs = [
-            spark.read.parquet(paths.shards)
-            .filter(F.col("shard") >= gu)
-            .select("term", "df", "cf")
-        ]
-        if int(idx_stats.get("n_gens", 0)) > 0:
-            g = spark.read.parquet(paths.global_dir)
-            gen_ids = idx_stats.get("gen_ids")
-            if gen_ids is not None:  # committed gens only (crash orphans)
-                g = g.filter(F.col("gen").isin([int(i) for i in gen_ids]))
-            legs.append(g.select("term", "df", "cf"))
-        u = legs[0] if len(legs) == 1 else legs[0].unionByName(legs[1])
-        stats = u.groupBy("term").agg(
-            F.sum("df").alias("df"), F.sum("cf").alias("cf")
-        )
-    else:
-        stats = spark.read.parquet(paths.global_dir).select("term", "df", "cf")
+    stats = global_term_stats(
+        spark, args.index_dir, load_stats(args.index_dir)
+    )
     if args.min_df > 1:
         stats = stats.filter(F.col("df") >= args.min_df)
     stats.write.mode("overwrite").parquet(args.out)

@@ -481,7 +481,7 @@ SELECT query_vec_id, vec_id, cosine, rank::INT AS rank FROM r WHERE rank <= {_SR
 
 
 # ---------------------------------------------------------------------------
-# q38 — the INDEXED block-max engine under the driver's hash gate: build a
+# q38 — the INDEXED BM25 engine under the contract's hash gate: build a
 # real sharded index over the documents table, search it, and hash-compare
 # against the exact index-free BM25 oracle (Q01_SQL). This promotes the
 # flagship engine's rank-identity guarantee from pytest into the driver's
@@ -538,7 +538,7 @@ def q38_indexed_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     # over-fetch, round to the oracle's 4dp, re-rank on the ROUNDED score —
     # both engines must rank after rounding or a last-ulp raw difference
     # inside a rounding tie would order differently (round-before-rank rule)
-    raw = search(spark, idx, queries, k=50, use_blockmax=True)
+    raw = search(spark, idx, queries, k=50)
     rounded = raw.select(
         "query_id", "doc_id", F.round("score", 4).alias("score")
     )

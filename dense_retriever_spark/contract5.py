@@ -1,11 +1,11 @@
 """Driver-contract queries, wave 4 (round 3): streaming windowed aggregation
 under the hash gate, compaction correctness, star-contraction connected
-components, tombstoned block-max search, and the broadcast-matrix SRP path.
+components, tombstoned indexed search, and the broadcast-matrix SRP path.
 
 These five put every round-3 engine change under the driver's DuckDB
 row/schema/value-hash comparison — each one exercises a code path that
 previously had only pytest coverage (q40: streaming family's FIRST oracle
-presence; q41: compact_index; q42: _cc_star; q43: blockmax-under-tombstones;
+presence; q41: compact_index; q42: _cc_star; q43: search-under-tombstones;
 q44: srp_bits_pandas).
 
 Same conventions as contract.py: identical column aliases both sides,
@@ -112,7 +112,7 @@ def q41_compacted_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     idx = _q41_index_dir(spark, sf_dir)
     queries = spark.createDataFrame(BM25_QUERIES, "query_id long, query string")
-    return _rounded_topk(search(spark, idx, queries, k=50, use_blockmax=True))
+    return _rounded_topk(search(spark, idx, queries, k=50))
 
 
 def _q41_sql() -> str:
@@ -157,12 +157,12 @@ def q42_dedup_components_star(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# q43 — tombstoned BLOCK-MAX search under the hash gate: search the q38 index
-# with a kill-list (doc_id % 7 == 0) and blockmax ON — the masked-postings
-# block re-derivation must stay rank-identical to the exact BM25 oracle with
-# the same docs excluded FROM THE RESULTS (tombstones mask results; corpus
-# statistics stay those of the full index, hence the filter sits after
-# scoring in the SQL, not in the corpus CTE).
+# q43 — tombstoned indexed search under the hash gate: search the q38 index
+# with a kill-list (doc_id % 7 == 0) — the masked-postings scorer must stay
+# rank-identical to the exact BM25 oracle with the same docs excluded FROM
+# THE RESULTS (tombstones mask results; corpus statistics stay those of the
+# full index, hence the filter sits after scoring in the SQL, not in the
+# corpus CTE).
 # ---------------------------------------------------------------------------
 
 def q43_tombstoned_search(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -178,7 +178,7 @@ def q43_tombstoned_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     queries = spark.createDataFrame(BM25_QUERIES, "query_id long, query string")
     raw = search(
-        spark, idx, queries, k=50, use_blockmax=True, exclude_doc_ids=kill
+        spark, idx, queries, k=50, exclude_doc_ids=kill
     )
     return _rounded_topk(raw)
 
@@ -355,7 +355,7 @@ FROM k ORDER BY es_key DESC, hh ASC LIMIT {_WS_N}
 
 
 # ---------------------------------------------------------------------------
-# q48 — metadata-FILTERED block-max search: only lang='en' documents may
+# q48 — metadata-FILTERED indexed search: only lang='en' documents may
 # surface. The allowed set is most of the corpus, so it is never collected —
 # it rides as a second relation COGROUPED with the shard scan (search.py
 # include_doc_ids). Oracle: exact BM25 with the same post-scoring inclusion
@@ -373,7 +373,7 @@ def q48_filtered_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     queries = spark.createDataFrame(BM25_QUERIES, "query_id long, query string")
     raw = search(
-        spark, idx, queries, k=50, use_blockmax=True, include_doc_ids=allowed
+        spark, idx, queries, k=50, include_doc_ids=allowed
     )
     return _rounded_topk(raw)
 

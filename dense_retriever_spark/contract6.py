@@ -58,7 +58,7 @@ def q49_distributed_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     idx = _q49_generational_index_dir(spark, sf_dir)
     queries = spark.createDataFrame(BM25_QUERIES, "query_id long, query string")
     raw = search(
-        spark, idx, queries, k=50, use_blockmax=True,
+        spark, idx, queries, k=50,
         query_mode="distributed",
     )
     return _rounded_topk(raw)

@@ -8,8 +8,8 @@ no decode), and searches the merged index — which must hash-match the exact
 index-free BM25 oracle (Q01_SQL), the same oracle q38 (fresh single build)
 matches. Because the split boundary is a multiple of docs_per_shard, the
 merge's shard-aligned rebase reproduces the original table ids exactly, so
-one row proves: rebased postings decode to the right doc ids, block metadata
-shifts coherently, merged global stats equal a fresh build's, and the
+one row proves: rebased postings decode to the right doc ids, merged
+global stats equal a fresh build's, and the
 delegated resume path treats every carried shard as complete.
 """
 
@@ -64,7 +64,7 @@ def q57_merged_index_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     idx = _q57_merged_index_dir(spark, sf_dir)
     queries = spark.createDataFrame(BM25_QUERIES, "query_id long, query string")
-    raw = search(spark, idx, queries, k=50, use_blockmax=True)
+    raw = search(spark, idx, queries, k=50)
     return _rounded_topk(raw)
 
 

@@ -9,8 +9,8 @@ build over (doc-range × term-bucket) groups:
 PHASE A  (doc-partitioned serving index, ``shards/``)
   ingested corpus --(doc_id, content, shard=doc_id // docs_per_shard)-->
   groupBy(shard).applyInPandas(_build_shard_from_content) → one posting row
-  per (shard, term) with delta+varbyte postings and per-128-doc block-max
-  metadata. Tokenization, tf run-length counting, and encoding all run inside
+  per (shard, term) with df, cf and delta+varbyte postings. Tokenization, tf
+  run-length counting, and encoding all run inside
   the per-shard Arrow batch, so the build's ONLY wide shuffle moves compact
   text rows (measured ~2x faster than exploding tokens JVM-side, and it
   scales: the shuffle volume is the corpus, not the token stream).
@@ -18,13 +18,14 @@ PHASE A  (doc-partitioned serving index, ``shards/``)
   'import') contributes at most docs_per_shard postings to any one group, so
   no reducer can be overloaded no matter how skewed the term distribution.
 
-PHASE B  (term-merged global index, ``global/``)
-  phase-A rows --exchange on xxhash64(term) mod P--> groupBy(term bucket)
-  → order-preserving merge of sub-postings (shard ranges are disjoint and
-  sorted, so merge = concat) → global (term, df, cf, postings, block meta).
-  This is the "merges shards with salted-key skew mitigation" step of the
-  north star; it also yields the global term-statistics table (df per term)
-  that query time broadcasts.
+PHASE B  (global term dictionary, ``global/``)
+  phase-A (term, df, cf) columns --groupBy(term).agg(sum df, sum cf)-->
+  global (term, df, cf). A plain aggregate: partial sums run map-side, so
+  the exchange moves dictionary-sized rows and never a posting byte. Search
+  scores shards/ and reads global/ only for df, so no second copy of the
+  postings is kept. The merged layout aggregates every shard into one
+  table; the generational layout aggregates shard ranges into gen=<id>/
+  segments with the same helper (_aggregate_term_stats).
 
 Resumability: the build loops over shard batches; each completed batch writes
 its manifest rows (shard id, term range, row counts, bytes, input fingerprint,
@@ -61,21 +62,10 @@ from dense_retriever_spark import BM25_B, BM25_K1
 from dense_retriever_spark.index import fs
 import struct
 
-from dense_retriever_spark.index.codec import (
-    _varbyte_encode_raw,
-    block_meta,
-    merge_postings_fast,
-)
+from dense_retriever_spark.index.codec import _varbyte_encode_raw
 
 POSTING_ROW_SCHEMA = (
-    "shard long, term string, df long, cf long, n_blocks int, postings binary, "
-    "block_last_doc_id array<long>, block_max_tf array<long>, "
-    "block_min_dl array<long>"
-)
-GLOBAL_ROW_SCHEMA = (
-    "term string, df long, cf long, n_blocks int, postings binary, "
-    "block_last_doc_id array<long>, block_max_tf array<long>, "
-    "block_min_dl array<long>"
+    "shard long, term string, df long, cf long, postings binary"
 )
 
 
@@ -294,10 +284,7 @@ def _build_shard_rows(
     across a dropped stopword."""
     from dense_retriever_spark.functions.tokenizer import tokenize_code_flat
 
-    cols = [
-        "shard", "term", "df", "cf", "n_blocks", "postings",
-        "block_last_doc_id", "block_max_tf", "block_min_dl",
-    ]
+    cols = ["shard", "term", "df", "cf", "postings"]
     if positions:
         cols = cols + ["positions"]
     empty = pd.DataFrame(columns=cols)
@@ -395,20 +382,7 @@ def _build_shard_rows(
             + tf_b.tobytes()
             + dl_b.tobytes()
         )
-        blast, bmax_tf, bmin_dl = block_meta(
-            p_docs[lo:hi], tfs[lo:hi], p_dls[lo:hi]
-        )
-        row = (
-            shard,
-            p_terms[lo],
-            hi - lo,
-            int(cf_sums[i]),
-            int(blast.size),
-            blob,
-            blast.tolist(),
-            bmax_tf.tolist(),
-            bmin_dl.tolist(),
-        )
+        row = (shard, p_terms[lo], hi - lo, int(cf_sums[i]), blob)
         if positions:
             row = row + (
                 pos_buf[
@@ -419,57 +393,44 @@ def _build_shard_rows(
     return pd.DataFrame(out, columns=cols)
 
 
-def _merge_term_groups(pdf: pd.DataFrame):
-    """applyInPandas body for phase B: merge one term's shard sub-postings.
+# --- phase B: the (term, df, cf) dictionary --------------------------------
 
-    Uses the O(bytes) splice merge (codec.merge_postings_fast): a hot term
-    with df = N costs a memcpy, not a decode+re-encode — without this, the
-    8-ish mega-hot terms serialize the whole merge phase onto 8 tasks
-    (measured: phase B scaled 2x instead of ~4x at 1.5M docs). df/cf are
-    exact sums of the sub-rows. Global block metadata is the CONCATENATION of
-    the per-shard block arrays — blocks stay valid upper-bound metadata but
-    are segment-aligned (the last block of each shard segment may be short);
-    the serving path scores from shards/, which keeps fixed-stride blocks."""
-    out = []
-    for term, grp in pdf.groupby("term", sort=False):
-        grp = grp.sort_values("shard")  # disjoint ascending doc ranges
-        lasts = [int(bl[-1]) for bl in grp["block_last_doc_id"]]
-        blob = merge_postings_fast(list(grp["postings"]), lasts)
-        blast = [int(x) for bl in grp["block_last_doc_id"] for x in bl]
-        bmax_tf = [int(x) for bl in grp["block_max_tf"] for x in bl]
-        bmin_dl = [int(x) for bl in grp["block_min_dl"] for x in bl]
-        out.append(
-            (
-                term,
-                int(grp["df"].sum()),
-                int(grp["cf"].sum()),
-                len(blast),
-                blob,
-                blast,
-                bmax_tf,
-                bmin_dl,
-            )
-        )
-    return pd.DataFrame(
-        out,
-        columns=[
-            "term", "df", "cf", "n_blocks", "postings",
-            "block_last_doc_id", "block_max_tf", "block_min_dl",
-        ],
+def _term_stats_df(
+    spark: SparkSession, paths: IndexPaths, lo: int, hi: int
+) -> DataFrame:
+    """The (term, df, cf) dictionary of shards [lo, hi) — phase B of both
+    layouts: the merged layout aggregates [0, n_shards) into global/, the
+    generational layout aggregates one shard range into a gen=<id>/
+    segment. A plain groupBy aggregate is partial-aggregated map-side, so
+    the exchange moves only (term, df, cf) rows — a term-dictionary-sized
+    cost at any index size. The scan is partition-pruned to the range, and
+    parquet never reads the postings column (column pruning)."""
+    rows = spark.read.parquet(paths.shards).filter(
+        (F.col("shard") >= lo) & (F.col("shard") < hi)
     )
+    return rows.groupBy("term").agg(
+        F.sum("df").alias("df"), F.sum("cf").alias("cf")
+    )
+
+
+def _aggregate_term_stats(
+    spark: SparkSession, paths: IndexPaths, lo: int, hi: int, out_dir: str
+) -> None:
+    """Write _term_stats_df(lo, hi) to ``out_dir``."""
+    df = _term_stats_df(spark, paths, lo, hi)
+    df.write.mode("overwrite").parquet(out_dir)
 
 
 # --- generational global index (incremental phase B) --------------------------
 #
-# The default ("merged") phase B re-merges EVERY shard's rows into global/ on
-# every build — O(total index bytes) even when the resumable phase A rebuilt
-# only the handful of shards a refresh window touched. At 100 TB that makes
-# the steady-state incremental window pay a full-index shuffle per run. The
-# "generational" layout is the LSM/Lucene-segment answer: global/ holds
-# gen=<id>/ directories, each the STATS-ONLY (term, df, cf) aggregate of one
-# contiguous IMMUTABLE shard range; the volatile tail shard (still receiving
-# appends) stays out of any gen and its term stats are read from shards/
-# directly. Per window the build aggregates only the shards that became
+# The default ("merged") phase B re-aggregates EVERY shard's (term, df, cf)
+# rows into global/ on every build — O(all shards' rows) even when the
+# resumable phase A rebuilt only the handful of shards a refresh window
+# touched. The "generational" layout is the LSM/Lucene-segment answer:
+# global/ holds gen=<id>/ directories, each the (term, df, cf) aggregate of
+# one contiguous IMMUTABLE shard range; the volatile tail shard (still
+# receiving appends) stays out of any gen and its term stats are read from
+# shards/ directly. Per window the build aggregates only the shards that became
 # immutable since the last gen — O(window), not O(index). Staleness (a
 # compaction/recrawl rebuilding a genned shard) is detected by comparing
 # each gen's stored fingerprint — an order-independent combinable hash over
@@ -481,17 +442,10 @@ def _merge_term_groups(pdf: pd.DataFrame):
 #
 # Searches never scan gens for scoring (the serving path scores shards/);
 # gens serve (term, df) statistics, aggregated across gens + the loose tail
-# by search.global_term_stats. That is why gens carry NO postings (round 7,
-# gen-aware compaction): merged postings in gens were consumed by nothing,
-# yet made every stale re-merge and fold shuffle the range's posting bytes —
-# so a compaction wave whose fingerprint drift touched every gen re-paid an
-# index-sized merge. Stats-only gens make any re-merge a partial-aggregated
-# (term, df, cf) groupBy: a compaction wave costs a term-dictionary-sized
-# aggregate at any index size. Users who want the single full-postings
-# artifact build with global_layout='merged' (the reference-parity shape:
-# /root/reference/dense_retriever/transforms/ann_index.py:87-98); the
-# generational mode is the incremental-refresh configuration where that
-# artifact would be rebuilt wholesale every window anyway.
+# by search.global_term_stats. A stale re-merge or fold is the same
+# (term, df, cf) aggregate as any other gen, so a compaction wave whose
+# fingerprint drift touches every gen costs a term-dictionary-sized
+# aggregate, not an index-sized one.
 
 def _gens_meta_path(paths: IndexPaths) -> str:
     # underscore name: invisible to Spark's partition discovery over global/
@@ -555,37 +509,6 @@ def _range_fingerprints(
     }
 
 
-def _merge_range_to_gen(
-    spark: SparkSession,
-    paths: IndexPaths,
-    gen_id: int,
-    lo: int,
-    hi: int,
-) -> None:
-    """Aggregate shards [lo, hi) into global/gen=<id>/ as STATS-ONLY rows
-    (term, df, cf) — round 7, the gen-aware-compaction change. Gens serve
-    ONLY term statistics (global_term_stats / the term-cache export); the
-    serving path scores shards/, and the full-postings merged artifact
-    remains the 'merged' layout's global/. Carrying merged postings in gens
-    bought nothing and made every stale re-merge (compaction fingerprint
-    drift) and fold pay a postings-bytes shuffle over the whole range —
-    O(range index bytes). As a plain groupBy aggregate the merge is
-    partial-aggregated map-side and shuffles only (term, df, cf) rows, so a
-    compaction wave that staleness-marks every gen now re-merges at
-    term-dictionary cost, not index cost, and the window gen of a refresh
-    round is metadata-sized. Partition-pruned scan of shards/ either way;
-    parquet never reads the postings column (column pruning). Old
-    postings-bearing gen dirs stay readable — every consumer selects only
-    (term, df, cf), which both formats carry."""
-    rows = spark.read.parquet(paths.shards).filter(
-        (F.col("shard") >= lo) & (F.col("shard") < hi)
-    )
-    merged = rows.groupBy("term").agg(
-        F.sum("df").alias("df"), F.sum("cf").alias("cf")
-    )
-    merged.write.mode("overwrite").parquet(_gen_dir(paths, gen_id))
-
-
 def _phase_b_generational(
     spark: SparkSession,
     paths: IndexPaths,
@@ -641,13 +564,17 @@ def _phase_b_generational(
             # once no committed stats.json references it
             continue
         if cur[0] != g["fp"]:  # stale: a genned shard was rebuilt
-            _merge_range_to_gen(spark, paths, next_id, g["lo"], g["hi"])
+            _aggregate_term_stats(
+                spark, paths, g["lo"], g["hi"], _gen_dir(paths, next_id)
+            )
             g = {"id": next_id, "lo": g["lo"], "hi": g["hi"],
                  "fp": cur[0], "bytes": cur[1]}
             next_id += 1
         out.append(g)
     if new_range and new_range in fps:
-        _merge_range_to_gen(spark, paths, next_id, *new_range)
+        _aggregate_term_stats(
+            spark, paths, *new_range, _gen_dir(paths, next_id)
+        )
         out.append(
             {
                 "id": next_id,
@@ -671,7 +598,7 @@ def _phase_b_generational(
         # copy-forward: fold into a FRESH id; a/b dirs stay untouched until
         # the post-commit sweep (readers on the old stats.json still need
         # them, and a crash here must leave the old committed view whole)
-        _merge_range_to_gen(spark, paths, next_id, lo, hi)
+        _aggregate_term_stats(spark, paths, lo, hi, _gen_dir(paths, next_id))
         fp = _range_fingerprints(spark, paths, [(lo, hi)])[(lo, hi)]
         out[i] = {"id": next_id, "lo": lo, "hi": hi,
                   "fp": fp[0], "bytes": fp[1]}
@@ -710,7 +637,6 @@ def build_index(
     k1: float = BM25_K1,
     b: float = BM25_B,
     shard_batch: int | None = None,
-    merge_partitions: int | None = None,
     timings: dict | None = None,
     build_tag: str = "",
     content_source: DataFrame | None = None,
@@ -735,8 +661,7 @@ def build_index(
     cannot match across a dropped word). Recorded in stats.json; ``None``
     inherits the existing index's set, and an incremental build cannot
     change it (shards would mix vocabularies). The 100 TB lever: the most
-    frequent tokens dominate postings bytes, and dropping them also removes
-    the largest (most skewed) term groups from the phase-B merge.
+    frequent tokens dominate postings bytes.
 
     ``shard_batch``: how many doc-range shards to build per driver round
     (None = all in one Spark job). Smaller batches = finer-grained
@@ -756,7 +681,7 @@ def build_index(
     (the same requirement doc-id assignment already has).
 
     ``global_layout``: ``'merged'`` (default for new indexes) writes global/
-    as ONE term-merged table — rebuilt wholesale every build;
+    as ONE (term, df, cf) table — rebuilt wholesale every build;
     ``'generational'`` writes per-window gen=<id>/ segments so incremental
     builds merge only the shards that became immutable since the last run
     (O(window), not O(index) — see the generational section above). ``None``
@@ -958,8 +883,7 @@ def build_index(
         "shard", F.col("shard").cast("long")
     )
 
-    # N = plain row count — no tokenization pass needed: block metadata is
-    # stats-free (max_tf/min_dl, see codec.block_meta), and avgdl is derived
+    # N = plain row count — no tokenization pass needed: avgdl is derived
     # AFTER phase A from the shards' cf sums. N counts ALL docs (incl.
     # zero-token ones) — same convention as the oracle's corpus_stats.
     # n_shards comes from the MAX doc id, not the count: after a compaction
@@ -1114,15 +1038,7 @@ def build_index(
     todo_df.unpersist()
     mark("phase_a")
 
-    # phase B: term-merged global index. The term-hash repartitioning IS the
-    # groupBy's own exchange on _g = xxhash64(term) mod P — bucketed grouping
-    # gives P pandas groups (sub-grouped by term inside the UDF) instead of
-    # one tiny group per distinct term, and hashing the term (not the shard)
-    # is the skew salt for the merge. NOTE: an explicit .repartition(P,
-    # xxhash64(term)) before this groupBy would NOT be reused by it (different
-    # partitioner) — it doubled the shuffle, moving every posting byte twice
-    # (measured 2 Exchanges vs 1; removed in round 2).
-    p = merge_partitions or spark.sparkContext.defaultParallelism
+    # phase B: the global (term, df, cf) dictionary (_aggregate_term_stats)
     if layout == "generational":
         genned_until, gen_ids = _phase_b_generational(
             spark, paths, n_shards, max_gens,
@@ -1130,21 +1046,7 @@ def build_index(
         )
         n_gens = len(gen_ids)
     else:
-        # explicit projection: applyInPandas is opaque to column pruning, so
-        # without it the merge exchange ships every column — including the
-        # POSITIONS stream of a positional index (≈ posting-sized bytes the
-        # merge never reads; measured 3.2 s vs 1.9 s phase B at 1/4 the
-        # corpus) and n_blocks (recomputed from the merged arrays anyway)
-        shards_df = spark.read.parquet(paths.shards).select(
-            "shard", "term", "df", "cf", "postings",
-            "block_last_doc_id", "block_max_tf", "block_min_dl",
-        )
-        merged = (
-            shards_df
-            .groupBy(F.pmod(F.xxhash64("term"), F.lit(p)).alias("_g"))
-            .applyInPandas(_merge_term_groups, schema=GLOBAL_ROW_SCHEMA)
-        )
-        merged.write.mode("overwrite").parquet(paths.global_dir)
+        _aggregate_term_stats(spark, paths, 0, n_shards, paths.global_dir)
         genned_until, gen_ids, n_gens = 0, [], 0
     mark("phase_b")
 
@@ -1222,10 +1124,6 @@ def build_index(
                 "global_layout": layout,
                 "positions": pos_flag,
                 "stopwords": stop_list,
-                # gens are stats-only (term, df, cf) as of round 7; readers
-                # never needed more, so the marker is documentation, not a
-                # compat gate — old postings-bearing gen dirs still read
-                "gen_format": "stats" if layout == "generational" else None,
                 "genned_until": int(genned_until),
                 "n_gens": int(n_gens),
                 "gen_ids": [int(g) for g in gen_ids],

@@ -26,12 +26,15 @@ import struct
 
 import numpy as np
 
-#: On-disk posting-blob format version, stamped into every index's stats.json
-#: and checked at load/search/resume time. v1 = u32 header fields (round 1),
-#: v2 = u64 header fields (round 2's 10^12-doc headroom). Bumping this is the
-#: explicit "incompatible format" signal — without it, a v1 index decoded by
-#: v2 code silently reads payload bytes as lengths (round-2 ADVICE).
-FORMAT_VERSION = 2
+#: On-disk index format version, stamped into every index's stats.json
+#: and checked at load/search/resume/merge time. v1 = u32 header fields
+#: (round 1), v2 = u64 header fields (round 2's 10^12-doc headroom), v3 =
+#: no per-block max-score columns in shards/ and a merged-layout global/
+#: that is a (term, df, cf) dictionary instead of a second copy of every
+#: posting. Bumping this is the explicit "incompatible format" signal —
+#: without it, a v1 index decoded by v2 code silently reads payload bytes
+#: as lengths (round-2 ADVICE).
+FORMAT_VERSION = 3
 
 _MAX_BYTES = 10  # 64 bits / 7
 
@@ -135,50 +138,6 @@ def _read_one_varbyte(b: bytes, offset: int = 0) -> tuple[int, int]:
         shift += 7
 
 
-def merge_postings_fast(blobs: list[bytes], last_doc_ids: list[int]) -> bytes:
-    """O(bytes) order-preserving merge by BYTE SPLICING.
-
-    ``blobs`` must cover ascending disjoint doc-id ranges (the doc-range
-    shard build guarantees this); ``last_doc_ids[i]`` is the max doc id in
-    blob i (from the shard row's block_last_doc_id[-1]). Only the FIRST
-    v-byte of each subsequent blob's id stream is rewritten (absolute doc id
-    -> delta from the previous blob's last); tf and dl streams concatenate
-    unchanged. This makes merging a term with df = N a memcpy instead of a
-    full decode+re-encode — the hot-term merge skew killer (north_rule).
-    """
-    if len(blobs) == 1:
-        return blobs[0]
-    n_total = 0
-    ids_parts: list[bytes] = []
-    tf_parts: list[bytes] = []
-    dl_parts: list[bytes] = []
-    prev_last: int | None = None
-    for blob, last_id in zip(blobs, last_doc_ids):
-        n, l1, l2, l3 = struct.unpack_from("<QQQQ", blob, 0)
-        o = HEADER_BYTES
-        ids_b = blob[o : o + l1]
-        tf_b = blob[o + l1 : o + l1 + l2]
-        dl_b = blob[o + l1 + l2 : o + l1 + l2 + l3]
-        if prev_last is not None and n > 0:
-            first_abs, consumed = _read_one_varbyte(ids_b, 0)
-            delta = first_abs - prev_last
-            ids_b = (
-                varbyte_encode(np.array([delta], dtype=np.uint64))
-                + ids_b[consumed:]
-            )
-        ids_parts.append(ids_b)
-        tf_parts.append(tf_b)
-        dl_parts.append(dl_b)
-        n_total += n
-        if n > 0:
-            prev_last = int(last_id)
-    ids_all = b"".join(ids_parts)
-    tf_all = b"".join(tf_parts)
-    dl_all = b"".join(dl_parts)
-    header = struct.pack("<QQQQ", n_total, len(ids_all), len(tf_all), len(dl_all))
-    return header + ids_all + tf_all + dl_all
-
-
 def rebase_postings(blob: bytes, offset: int) -> bytes:
     """Shift every doc id in a posting blob by ``offset`` — in O(1) work.
 
@@ -187,8 +146,7 @@ def rebase_postings(blob: bytes, offset: int) -> bytes:
     exactly one v-byte group: first_abs += offset; every subsequent delta is
     unchanged. tf and dl streams are untouched. This is what makes
     cross-index merges (index/merge.py) a byte-level copy instead of a
-    decode+re-encode of every posting — the same property
-    merge_postings_fast exploits for splice merges.
+    decode+re-encode of every posting.
     """
     if offset == 0 or blob is None:
         return blob
@@ -205,25 +163,6 @@ def rebase_postings(blob: bytes, offset: int) -> bytes:
     ids_b = new_first + blob[o + consumed : o + l1]
     header = struct.pack("<QQQQ", n, len(ids_b), l2, l3)
     return header + ids_b + blob[o + l1 :]
-
-
-def merge_postings(blobs: list[bytes]) -> bytes:
-    """Order-preserving merge of sub-postings whose doc-id ranges are disjoint
-    and given in ascending-range order (the salted two-phase build guarantees
-    this: salt = doc-range bucket). Falls back to a sort if ranges interleave."""
-    ids_parts, tf_parts, dl_parts = [], [], []
-    for blob in blobs:
-        i, t, d = decode_postings(blob)
-        ids_parts.append(i)
-        tf_parts.append(t)
-        dl_parts.append(d)
-    ids = np.concatenate(ids_parts) if ids_parts else np.empty(0, np.int64)
-    tfs = np.concatenate(tf_parts) if tf_parts else np.empty(0, np.int64)
-    dls = np.concatenate(dl_parts) if dl_parts else np.empty(0, np.int64)
-    if ids.size > 1 and (np.diff(ids) <= 0).any():
-        order = np.argsort(ids, kind="stable")
-        ids, tfs, dls = ids[order], tfs[order], dls[order]
-    return encode_postings(ids, tfs, dls)
 
 
 def encode_position_stream(flat_positions: np.ndarray, tfs: np.ndarray) -> bytes:
@@ -261,42 +200,3 @@ def decode_position_stream(blob: bytes, tfs: np.ndarray) -> np.ndarray:
     base = np.zeros(t.size, dtype=np.int64)
     base[1:] = c[starts[1:] - 1]
     return c - np.repeat(base, t)
-
-
-# --- block-max metadata -------------------------------------------------------
-
-BLOCK_SIZE = 128
-
-
-def block_meta(
-    doc_ids: np.ndarray,
-    tfs: np.ndarray,
-    dls: np.ndarray,
-    block_size: int = BLOCK_SIZE,
-) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Per-block (last_doc_id, max_tf, min_dl) for block-max pruning.
-
-    The BM25 tf-normalization tfn = tf*(k1+1)/(tf + k1*(1-b+b*dl/avgdl)) is
-    monotone increasing in tf and decreasing in dl, so tfn(max_tf, min_dl)
-    computed AT QUERY TIME (with the live avgdl) upper-bounds every member of
-    the block. Storing the raw (max_tf, min_dl) instead of a precomputed tfn
-    makes block metadata independent of collection statistics — the index
-    build needs NO global stats pass, and the same index stays valid as the
-    collection grows (avgdl drifts) without weakening correctness.
-    """
-    n = doc_ids.size
-    if n == 0:
-        return (
-            np.empty(0, np.int64), np.empty(0, np.int64), np.empty(0, np.int64)
-        )
-    n_blocks = (n + block_size - 1) // block_size
-    starts = np.arange(n_blocks, dtype=np.int64) * block_size
-    # reduceat handles the short tail block natively — the former
-    # pad+reshape implementation allocated three padded copies per call
-    # (the dominant cost of the per-term build loop; outputs identical)
-    last = np.asarray(doc_ids)[
-        np.minimum(starts + block_size, n) - 1
-    ]
-    max_tf = np.maximum.reduceat(np.asarray(tfs), starts)
-    min_dl = np.minimum.reduceat(np.asarray(dls), starts)
-    return last.astype(np.int64), max_tf.astype(np.int64), min_dl.astype(np.int64)

@@ -12,19 +12,18 @@ index. ``merge_indexes`` is that merge, and it is a *byte-level* operation:
 - posting blobs are rebased in O(1) each (codec.rebase_postings rewrites the
   single absolute v-byte at the head of the delta stream; tf/dl bytes are
   untouched) — the merge never decodes a posting list;
-- block metadata arrays shift by the same offset via a native
-  ``transform(...)`` column expression — JVM-side, no UDF;
-- the global index, stats.json, and structured build metrics are produced by
-  delegating to ``build_index`` over the rebased docs table: the recomputed
-  per-shard fingerprints match the manifest rows this module writes, so
-  phase A resumes as a complete no-op and only phase B (global merge) runs.
+- the global (term, df, cf) dictionary, stats.json, and structured build
+  metrics are produced by delegating to ``build_index`` over the rebased
+  docs table: the recomputed per-shard fingerprints match the manifest rows
+  this module writes, so phase A resumes as a complete no-op and only phase
+  B (the term-stats aggregate) runs.
   All of build_index's crash-safety, orphan cleanup, and metrics machinery
   is reused instead of re-implemented.
 
 Scale shape: one narrow scan+write per source for shards (no shuffle — rows
 keep their shard partitioning), one metadata-sized fingerprint aggregation,
-and phase B's usual term-bucketed merge. Nothing is proportional to corpus
-content except the one docs-table write that every build pays.
+and phase B's usual (term, df, cf) aggregate. Nothing is proportional to
+corpus content except the one docs-table write that every build pays.
 
 The merged index is a fully standard index: searchable on both query planes,
 resumable (a later incremental ``build_index`` over the merged docs table +
@@ -172,11 +171,7 @@ def merge_indexes(
             "shard", F.col("shard").cast("long") + F.lit(s_off)
         )
         if d_off:
-            off = int(d_off)
-            df = df.withColumn("postings", _rebase_udf(off)("postings")).withColumn(
-                "block_last_doc_id",
-                F.transform("block_last_doc_id", lambda x: x + F.lit(off)),
-            )
+            df = df.withColumn("postings", _rebase_udf(int(d_off))("postings"))
         merged_shards = df if merged_shards is None else merged_shards.unionByName(df)
     (
         merged_shards.write.mode("overwrite")
@@ -257,9 +252,9 @@ def merge_indexes(
     # dictionary of the union).
     if layout == "generational":
         from dense_retriever_spark.index.build import (
+            _aggregate_term_stats,
             _gen_dir,
             _gens_meta_path,
-            _merge_range_to_gen,
             _range_fingerprints,
             _read_gens,
         )
@@ -306,8 +301,9 @@ def merge_indexes(
                     .parquet(_gen_dir(paths, next_id))
                 )
             else:
-                _merge_range_to_gen(
-                    spark, paths, next_id, cov + s_off, n_sh + s_off
+                _aggregate_term_stats(
+                    spark, paths, cov + s_off, n_sh + s_off,
+                    _gen_dir(paths, next_id),
                 )
             pre.append({
                 "id": next_id, "lo": cov + s_off, "hi": n_sh + s_off,
@@ -332,7 +328,7 @@ def merge_indexes(
     # build_index re-stages docs from merged_docs (ids fixed — no
     # re-assignment happens; it selects the existing doc_id column),
     # recomputes fingerprints, finds every manifest row complete, skips
-    # phase A entirely, and runs the standard global merge + stats commit.
+    # phase A entirely, and runs the standard phase B + stats commit.
     return build_index(
         merged_docs,
         out_dir,

@@ -180,7 +180,7 @@ def more_like_this(
         ).select("query_id", "term")
         pairs = [(int(r["query_id"]), r["term"]) for r in qt.collect()]
         raw = _search_broadcast(
-            spark, index_dir, stats, None, k_fetch, True,
+            spark, index_dir, stats, None, k_fetch,
             exclude_doc_ids, False, include_doc_ids, qt_pairs=pairs,
         )
     elif query_mode == "distributed":
@@ -195,7 +195,7 @@ def more_like_this(
         )
         k_fetch = k + int(max_seeds or 0)
         raw = _search_distributed(
-            spark, index_dir, stats, None, k_fetch, True,
+            spark, index_dir, stats, None, k_fetch,
             exclude_doc_ids, False, include_doc_ids, qt_override=qt,
         )
     else:

@@ -183,7 +183,6 @@ def search_regex(
     exclude_doc_ids: DataFrame | None = None,
     include_doc_ids: DataFrame | None = None,
     eager: bool = True,
-    use_blockmax: bool = True,
     max_expansions: int = MAX_EXPANSIONS,
 ) -> DataFrame:
     """Top-k regex-expanded BM25 search (module docstring has the grammar).
@@ -229,13 +228,13 @@ def search_regex(
         if not qt_pairs:
             return spark.createDataFrame([], RESULT_SCHEMA)
         return _search_broadcast(
-            spark, index_dir, stats, queries_df, k, use_blockmax,
+            spark, index_dir, stats, queries_df, k,
             exclude_doc_ids, eager, include_doc_ids, qt_pairs=qt_pairs,
         )
     if query_mode != "distributed":
         raise ValueError(f"unknown query_mode {query_mode!r}")
     return _search_distributed(
-        spark, index_dir, stats, queries_df, k, use_blockmax,
+        spark, index_dir, stats, queries_df, k,
         exclude_doc_ids, eager, include_doc_ids, qt_override=qt,
     )
 

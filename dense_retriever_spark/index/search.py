@@ -130,14 +130,6 @@ def _term_df_cache_clear() -> None:
         _TERM_DF_CACHE.clear()
         _TERM_DF_SIZES.clear()
 
-#: HISTORICAL (rounds 4-7): block-max pruning was skipped for queries with
-#: more in-shard terms than this. As of round 8 the batch scorer is
-#: exact-only (see _score_shard — with per-term contribution caching the
-#: vectorized block-max path measured 2.6-5.4× slower in EVERY posting
-#: regime, since its phase 1 already touches all postings), so this limit
-#: no longer routes anything; kept for external importers/tests.
-WIDE_QUERY_BLOCKMAX_LIMIT = 32
-
 #: the tombstone broadcast ceiling: below it a kill-list collects to a
 #: sorted driver array riding the score broadcast (latency fast path);
 #: past it the list automatically stays a Spark relation cogrouped with
@@ -150,38 +142,41 @@ TOMBSTONE_WARN_IDS = 10_000_000
 def global_term_stats(
     spark: SparkSession, index_dir: str, stats: dict
 ) -> DataFrame:
-    """(term, df) relation for idf lookups — layout-aware.
+    """The (term, df, cf) dictionary for idf lookups — layout-aware.
 
-    Merged layout (default): global/ has one row per term; return it as-is
-    (no aggregation exchange on the interactive path). Generational layout
-    (build_index(global_layout='generational') — the incremental-refresh
-    mode): df per term is the SUM over the gen segments plus the loose tail
-    shards past ``genned_until`` (their stats come straight from shards/,
-    partition-pruned). Term-predicate pushdown survives the union+aggregate
-    (Catalyst pushes filters on grouping keys below the Aggregate and
-    through the Union), so _term_pruned callers keep their row-group
-    pruning on every leg. The gens scan is filtered to stats.json's
-    COMMITTED gen id list: a partial gen dir left by a crashed build is
-    visible to partition discovery but never committed, and must not be
-    double-counted against the loose-tail leg."""
+    Merged layout (default): global/ is already one (term, df, cf) row per
+    term; it is read as-is (no aggregation exchange on the interactive
+    path). Generational layout (build_index(global_layout='generational') —
+    the incremental-refresh mode): df and cf per term are SUMS over the gen
+    segments plus the loose tail shards past ``genned_until`` (their stats
+    come straight from shards/, partition-pruned). Term-predicate pushdown
+    survives the union+aggregate (Catalyst pushes filters on grouping keys
+    below the Aggregate and through the Union), so _term_pruned callers keep
+    their row-group pruning on every leg. The gens scan is filtered to
+    stats.json's COMMITTED gen id list: a partial gen dir left by a crashed
+    build is visible to partition discovery but never committed, and must
+    not be double-counted against the loose-tail leg."""
     paths = IndexPaths(index_dir)
+    cols = ("term", "df", "cf")
     if stats.get("global_layout", "merged") != "generational":
-        return spark.read.parquet(paths.global_dir)
+        return spark.read.parquet(paths.global_dir).select(*cols)
     legs = []
     gen_ids = stats.get("gen_ids")
     if int(stats.get("n_gens", 0)) > 0:
         g = spark.read.parquet(paths.global_dir)
         if gen_ids is not None:
             g = g.filter(F.col("gen").isin([int(i) for i in gen_ids]))
-        legs.append(g.select("term", "df"))
+        legs.append(g.select(*cols))
     gu = int(stats.get("genned_until", 0))
     legs.append(
         spark.read.parquet(paths.shards)
         .filter(F.col("shard") >= gu)
-        .select("term", "df")
+        .select(*cols)
     )
     u = legs[0] if len(legs) == 1 else legs[0].unionByName(legs[1])
-    return u.groupBy("term").agg(F.sum("df").alias("df"))
+    return u.groupBy("term").agg(
+        F.sum("df").alias("df"), F.sum("cf").alias("cf")
+    )
 
 
 def load_stats(index_dir: str) -> dict:
@@ -194,8 +189,8 @@ def load_stats(index_dir: str) -> dict:
     if v != FORMAT_VERSION:
         raise ValueError(
             f"index at {index_dir} uses posting format v{v}; this engine "
-            f"reads v{FORMAT_VERSION} — rebuild the index (a v1 blob decoded "
-            "as v2 would silently misread payload bytes as header lengths)"
+            f"reads v{FORMAT_VERSION} — rebuild the index (reading another "
+            "format's rows would silently misread them)"
         )
     return stats
 
@@ -209,7 +204,6 @@ def _score_shard(
     b: float,
     avgdl: float,
     docs_per_shard: int,
-    use_blockmax: bool,
     excl: np.ndarray | None = None,
     incl: np.ndarray | None = None,
 ) -> pd.DataFrame:
@@ -219,30 +213,21 @@ def _score_shard(
     dedup kill-list) — masked out of every term's postings before scoring.
     ``incl``: sorted array of ALLOWED doc ids for THIS shard (metadata-
     filtered search — only these docs may appear in results). Both masks can
-    be live at once. Block-max pruning STAYS LIVE under any mask: block
-    metadata is re-derived from the masked posting arrays (codec.block_meta
-    over arrays already decoded — O(shard postings), the cost the scorer is
-    paying anyway), so dedup-heavy / filtered query loads keep WAND pruning
-    instead of silently falling back to the exact scan (the round-2 2-5×
-    regression). Exactness is unaffected either way (blockmax is exact by
-    construction).
+    be live at once; they are applied to the decoded postings before any
+    scoring, so top-k selection stays exact under any mask.
 
     Rows whose term no query asked for (``term not in idfs``) are skipped
     without decoding — distributed query mode may feed the unfiltered shard
     scan when the query-term set is too large to broadcast-prefilter.
 
-    Scorer strategy (round 8, MEASURED): the batch scorer always runs the
-    EXACT dense-accumulator path with per-term contribution caching.
-    ``use_blockmax`` is accepted for API compatibility but no longer routes
-    to ``score_query_blockmax``: the vectorized block-max formulation's
-    phase 1 is itself O(total postings) (every posting's block bound is
-    scatter-added), so once per-term contributions are cached and shared
-    across the batch, block-max does strictly MORE work than exact in every
-    regime — microbenched 2.6–5.4× slower across dense/sparse/skewed
-    posting mixes, 19.0 s → 7.1 s on the 5k-query distributed batch and
-    2.3 s → 1.65 s on the 100-query broadcast batch at sf0.1. Both scorers
-    are exact by construction, so results are bit-identical either way
-    (tests/test_wand_rank_identity.py asserts it).
+    Scorer (round 8, MEASURED): the EXACT dense-accumulator path with
+    per-term contribution caching. A vectorized block-max (WAND-family)
+    pass scatter-adds every posting's block bound, so once contributions
+    are cached and shared across the batch it does strictly MORE work —
+    microbenched 2.6–5.4× slower across dense/sparse/skewed posting mixes,
+    19.0 s → 7.1 s on the 5k-query distributed batch and 2.3 s → 1.65 s on
+    the 100-query broadcast batch at sf0.1. Index format v3 therefore
+    stores no block metadata and there is no pruned scorer.
     """
     if len(pdf) == 0:
         return pd.DataFrame(columns=["query_id", "doc_id", "score", "rank"])
@@ -273,9 +258,9 @@ def _score_shard(
     # query loop — (a) queries with IDENTICAL shard-present term lists are
     # scored once (large batches over a shared vocabulary repeat term sets
     # constantly; identical inputs give identical outputs), and (b) each
-    # term's BM25 contribution / per-posting block bound is computed once
-    # per shard and shared across every query touching the term
-    # (elementwise arrays — bit-identical to the per-query computation).
+    # term's BM25 contribution is computed once per shard and shared across
+    # every query touching the term (elementwise arrays — bit-identical to
+    # the per-query computation).
     by_sig: dict[tuple[str, ...], list[int]] = {}
     for qid, terms in queries.items():
         sig = tuple(t for t in terms if t in decoded)
@@ -343,8 +328,7 @@ def _excl_plan(
     each scorer receives exactly its slice — driver state is O(1) at any
     kill-list size. Masking still happens BEFORE top-k selection inside the
     scorer (an anti-join on the k-row result would lose recall when a
-    query's whole top-k is tombstoned), and block-max stays live on the
-    masked postings either way. A list past the ceiling still warns:
+    query's whole top-k is tombstoned). A list past the ceiling still warns:
     compaction (build.compact_index / pipeline.apply_kill_list) removes the
     per-query masking cost permanently."""
     if exclude_doc_ids is None:
@@ -475,7 +459,6 @@ def search(
     index_dir: str,
     queries_df: DataFrame,
     k: int = 10,
-    use_blockmax: bool = True,
     exclude_doc_ids: DataFrame | None = None,
     eager: bool = True,
     include_doc_ids: DataFrame | None = None,
@@ -493,16 +476,15 @@ def search(
 
     ``exclude_doc_ids``: optional (doc_id) DataFrame of tombstoned docs —
     typically a dedup kill-list (dedup_exact / connected_components output) —
-    removed EXACTLY at query time without rebuilding the index; block-max
-    pruning stays live (blocks re-derived from the masked postings, see
-    _score_shard). Below ~10^7 ids the list is collected and broadcast (the
-    latency fast path); past that ceiling it automatically stays a Spark
-    relation cogrouped with the shard scan (O(1) driver state at any size,
-    see _excl_plan) and a RuntimeWarning recommends compaction: a kill-list
-    that large is a compaction event — ``compact_index`` / the ``compact``
-    CLI rebuilds exactly the affected shards, and
-    ``pipeline.apply_kill_list`` automates the tombstone-vs-compact
-    decision.
+    removed EXACTLY at query time without rebuilding the index (masked
+    before shard-local top-k, see _score_shard). Below ~10^7 ids the list is
+    collected and broadcast (the latency fast path); past that ceiling it
+    automatically stays a Spark relation cogrouped with the shard scan (O(1)
+    driver state at any size, see _excl_plan) and a RuntimeWarning
+    recommends compaction: a kill-list that large is a compaction event —
+    ``compact_index`` / the ``compact`` CLI rebuilds exactly the affected
+    shards, and ``pipeline.apply_kill_list`` automates the
+    tombstone-vs-compact decision.
 
     ``include_doc_ids``: optional (doc_id) DataFrame of ALLOWED docs —
     metadata-filtered search (e.g. ``docs.filter(lang == 'py')``); only these
@@ -543,12 +525,12 @@ def search(
         )
     if query_mode == "broadcast":
         out = _search_broadcast(
-            spark, index_dir, stats, queries_df, k_fetch, use_blockmax,
+            spark, index_dir, stats, queries_df, k_fetch,
             exclude_doc_ids, eager, include_doc_ids,
         )
     elif query_mode == "distributed":
         out = _search_distributed(
-            spark, index_dir, stats, queries_df, k_fetch, use_blockmax,
+            spark, index_dir, stats, queries_df, k_fetch,
             exclude_doc_ids, eager, include_doc_ids,
         )
     else:
@@ -574,8 +556,7 @@ def score_matches(
     disagree.
 
     The plan is the plain search plan with per-shard k = docs_per_shard (a
-    shard cannot contribute more rows, so nothing is pruned) and the exact
-    scorer (block-max prunes nothing when everything survives). The result
+    shard cannot contribute more rows, so nothing is pruned). The result
     is |matches| rows — an intermediate relation meant to feed an
     aggregation, never a ``.collect()``; it stays fully lazy (no eager
     localCheckpoint), so compose it and let one job run end-to-end.
@@ -589,13 +570,13 @@ def score_matches(
         )
     if query_mode == "broadcast":
         return _search_broadcast(
-            spark, index_dir, stats, queries_df, None, False,
+            spark, index_dir, stats, queries_df, None,
             exclude_doc_ids, False, include_doc_ids,
         )
     if query_mode != "distributed":
         raise ValueError(f"unknown query_mode {query_mode!r}")
     return _search_distributed(
-        spark, index_dir, stats, queries_df, None, False,
+        spark, index_dir, stats, queries_df, None,
         exclude_doc_ids, False, include_doc_ids,
     )
 
@@ -674,7 +655,6 @@ def _search_broadcast(
     stats: dict,
     queries_df: DataFrame,
     k: int | None,
-    use_blockmax: bool,
     exclude_doc_ids: DataFrame | None,
     eager: bool,
     include_doc_ids: DataFrame | None,
@@ -689,9 +669,8 @@ def _search_broadcast(
         # score_matches plane: every match survives. A shard holds at most
         # docs_per_shard docs, so per-shard k = docs_per_shard IS "no
         # truncation" (``_finish`` still sees k=None and skips the global
-        # top-k); block-max would prune nothing at that k, so take the
-        # exact scorer (cheaper — no block algebra).
-        k_shard, use_blockmax = stats["docs_per_shard"], False
+        # top-k).
+        k_shard = stats["docs_per_shard"]
     else:
         k_shard = k
 
@@ -730,9 +709,8 @@ def _search_broadcast(
     dps = stats["docs_per_shard"]
     excl, excl_rel = _excl_plan(exclude_doc_ids, dps)
     bc = spark.sparkContext.broadcast((qmap, idfs, excl))
-    # only (shard, term, postings) — the batch scorer is exact-only as of
-    # round 8, so the three block-metadata array columns stay out of the
-    # scan, the Arrow transfer, and the grouping exchange entirely
+    # only (shard, term, postings): df/cf and any positions stream stay
+    # out of the scan, the Arrow transfer, and the grouping exchange
     shard_rows = (
         _term_pruned(spark.read.parquet(paths.shards), present, spark)
         .select("shard", "term", "postings")
@@ -743,7 +721,7 @@ def _search_broadcast(
         def _score(pdf):
             q, i, x = bc.value
             return _score_shard(
-                pdf, q, i, k_shard, k1, b, avgdl, dps, use_blockmax, x
+                pdf, q, i, k_shard, k1, b, avgdl, dps, x
             )
 
         local = shard_rows.groupBy("shard").applyInPandas(
@@ -763,7 +741,7 @@ def _search_broadcast(
             q, i, x = bc.value
             x, incl = _mask_split(right, has_include, has_excl_rel, x)
             return _score_shard(
-                left, q, i, k_shard, k1, b, avgdl, dps, use_blockmax, x, incl
+                left, q, i, k_shard, k1, b, avgdl, dps, x, incl
             )
 
         local = (
@@ -780,7 +758,6 @@ def _search_distributed(
     stats: dict,
     queries_df: DataFrame,
     k: int | None,
-    use_blockmax: bool,
     exclude_doc_ids: DataFrame | None,
     eager: bool,
     include_doc_ids: DataFrame | None,
@@ -807,10 +784,7 @@ def _search_distributed(
     n_docs, avgdl = stats["n_docs"], stats["avgdl"]
     k1, b = stats["k1"], stats["b"]
     dps = stats["docs_per_shard"]
-    if k is None:  # score_matches plane — see _search_broadcast
-        k_shard, use_blockmax = dps, False
-    else:
-        k_shard = k
+    k_shard = dps if k is None else k  # k=None: see _search_broadcast
     from dense_retriever_spark.operators.bm25 import query_terms
 
     # (query_id, term) DISTINCT — never collected. PERSISTED (not
@@ -832,7 +806,7 @@ def _search_distributed(
     # re-running the tokenizer per consuming job is the cheaper steady state
     if k is not None:
         qt = qt.persist()
-    gstats = global_term_stats(spark, index_dir, stats).select("term", "df")
+    gstats = global_term_stats(spark, index_dir, stats)
     # inner join == the broadcast plane's `t in idfs` OOV filter
     qti = qt.join(gstats, "term").select(
         "query_id", "term", F.col("df").cast("long").alias("df")
@@ -847,7 +821,6 @@ def _search_distributed(
         F.lit(False).alias("xm"),
     )
 
-    # exact-only batch scorer (round 8): block metadata never leaves disk
     shard_rows = spark.read.parquet(paths.shards).select(
         "shard", "term", "postings",
     )
@@ -928,8 +901,7 @@ def _search_distributed(
             sel_i = right["term"].isna() & ~right["xm"]
             incl = np.unique(right.loc[sel_i, "doc_id"].to_numpy(np.int64))
         return _score_shard(
-            left, qmap, idfs, k_shard, k1, b, avgdl, dps, use_blockmax,
-            x, incl,
+            left, qmap, idfs, k_shard, k1, b, avgdl, dps, x, incl,
         )
 
     local = (

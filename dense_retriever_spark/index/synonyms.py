@@ -72,7 +72,6 @@ def search_synonyms(
     queries_df: DataFrame,
     synonyms: DataFrame,
     k: int = 10,
-    use_blockmax: bool = True,
     exclude_doc_ids: DataFrame | None = None,
     include_doc_ids: DataFrame | None = None,
     query_mode: str = "broadcast",
@@ -91,13 +90,13 @@ def search_synonyms(
     if query_mode == "broadcast":
         pairs = [(int(r["query_id"]), r["term"]) for r in qt.collect()]
         return _search_broadcast(
-            spark, index_dir, stats, None, k, use_blockmax,
+            spark, index_dir, stats, None, k,
             exclude_doc_ids, eager, include_doc_ids, qt_pairs=pairs,
         )
     if query_mode != "distributed":
         raise ValueError(f"unknown query_mode {query_mode!r}")
     return _search_distributed(
-        spark, index_dir, stats, None, k, use_blockmax,
+        spark, index_dir, stats, None, k,
         exclude_doc_ids, eager, include_doc_ids, qt_override=qt,
     )
 

@@ -1,24 +1,20 @@
-"""Shard-local BM25 top-k scorers (numpy, Arrow-batched — no per-row Python).
+"""Shard-local BM25 top-k scoring (numpy, Arrow-batched — no per-row Python).
 
 Reference analog: ``index.search(query_embeddings, top_n)``
 (/root/reference/dense_retriever/transforms/ann_index.py:93-98) — exact
 brute-force top-n. Here the exact scorer walks only the postings of the query
-terms (sublinear in corpus size), and the block-max scorer additionally prunes
-whole 128-doc blocks via per-block upper bounds.
+terms (sublinear in corpus size):
 
-Two scorers, both EXACT (identical top-k — asserted by tests):
-
-- ``score_query_exact``   — dense float64 accumulator over the shard's doc
+- ``score_query_exact`` — dense float64 accumulator over the shard's doc
   range; contributions added term-by-term in sorted-term order, so the float
   summation order matches the oracle bit-for-bit (SURVEY.md §7.4).
-- ``score_query_blockmax``— block-max pruning in the WAND family: per-block
-  upper bounds (idf × block_max_tfn) generate a candidate set that provably
-  contains every true top-k doc, then candidates are exact-rescored in
-  sorted-term order. The classic sequential WAND pivot loop is re-expressed as
-  vectorized set algebra over block bounds because a per-doc Python loop would
-  violate the no-per-row-Python rule (BASELINE.json:input_hint); the pruning
-  invariant (never fully score a doc whose upper bound is below the proven
-  k-th-best lower bound θ) is WAND's.
+- ``_exact_scores_sorted`` — the same sums for a chosen set of docs (the
+  boolean planes' candidate rescoring).
+
+There is no block-max (WAND-family) pruning: with per-term contributions
+cached across a batch, a vectorized block-max pass touched every posting
+anyway and measured 2.6–5.4× slower than this scorer (round 8), so the
+per-block metadata and the pruned scorer were removed in index format v3.
 
 Scoring math (must stay EXACTLY in this operation order — it mirrors the
 Catalyst expression tree in operators/bm25.py::bm25_contrib_expr):
@@ -32,8 +28,6 @@ from __future__ import annotations
 import math
 
 import numpy as np
-
-from dense_retriever_spark.index.codec import BLOCK_SIZE
 
 
 def idf(df: float, n_docs: float) -> float:
@@ -96,110 +90,20 @@ def score_query_exact(
     return _topk(acc[hit], hit + base, k)
 
 
-def _exact_scores_sorted(term_rows, sel_lidx, base, k1, b, avgdl,
-                         contrib_rows=None):
+def _exact_scores_sorted(term_rows, sel_lidx, base, k1, b, avgdl):
     """Exact scores for a set of local doc indices.
 
     Returns (sel_sorted, scores) with scores aligned to the ASCENDING-sorted
     selection; per-doc sums accumulate in sorted-term order (oracle parity).
-    Fully vectorized membership via searchsorted. ``contrib_rows`` as in
-    score_query_exact (subsetting a precomputed elementwise array yields
-    the same floats as computing on the subset)."""
+    Fully vectorized membership via searchsorted."""
     sel_sorted = np.sort(np.asarray(sel_lidx, dtype=np.int64))
     out = np.zeros(sel_sorted.size, dtype=np.float64)
-    for i, (_t, idf_t, ids, tf, dl) in enumerate(term_rows):
+    for _t, idf_t, ids, tf, dl in term_rows:
         lidx = ids - base
         pos = np.searchsorted(sel_sorted, lidx)
         pos_c = np.minimum(pos, sel_sorted.size - 1)
         m = sel_sorted[pos_c] == lidx
         if not m.any():
             continue
-        if contrib_rows is not None:
-            out[pos_c[m]] += contrib_rows[i][m]
-        else:
-            out[pos_c[m]] += _contrib(idf_t, tf[m], dl[m], k1, b, avgdl)
+        out[pos_c[m]] += _contrib(idf_t, tf[m], dl[m], k1, b, avgdl)
     return sel_sorted, out
-
-
-def posting_upper_bounds(
-    idf_t: float,
-    ids: np.ndarray,
-    bmax_tf: np.ndarray,
-    bmin_dl: np.ndarray,
-    k1: float,
-    b: float,
-    avgdl: float,
-) -> np.ndarray:
-    """Per-POSTING upper bound for one term: each posting carries the bound
-    of its 128-doc block (codec.block_meta), inflated 1e-9 so float
-    re-association can never let a true score exceed its bound. Split out so
-    batch callers can compute it once per (shard, term) and share it across
-    queries."""
-    n = ids.size
-    n_blocks = bmax_tf.size
-    counts = np.full(n_blocks, BLOCK_SIZE, dtype=np.int64)
-    if n_blocks:
-        counts[-1] = n - BLOCK_SIZE * (n_blocks - 1)
-    block_ub = _contrib(idf_t, bmax_tf, bmin_dl, k1, b, avgdl) * (1.0 + 1e-9)
-    return np.repeat(block_ub, counts)
-
-
-def score_query_blockmax(
-    term_rows: list[tuple[str, float, np.ndarray, np.ndarray, np.ndarray]],
-    block_rows: list[tuple[np.ndarray, np.ndarray]],
-    base: int,
-    span: int,
-    k: int,
-    k1: float,
-    b: float,
-    avgdl: float,
-    contrib_rows: list[np.ndarray] | None = None,
-    ub_rows: list[np.ndarray] | None = None,
-) -> tuple[np.ndarray, np.ndarray]:
-    """Block-max pruned scoring; identical output to score_query_exact.
-
-    block_rows[i] = (block_last_doc_id, block_max_tf, block_min_dl) aligned
-    with term_rows[i]; blocks cover BLOCK_SIZE consecutive postings each.
-    The per-block bound is computed from (max_tf, min_dl) and the live
-    avgdl — tfn is monotone up in tf / down in dl, so tfn(max_tf, min_dl)
-    dominates every member (codec.block_meta). ``contrib_rows`` /
-    ``ub_rows``: optional precomputed per-term contribution / per-posting
-    upper-bound arrays (posting_upper_bounds), shared across a batch's
-    queries by the shard scorer — bit-identical results either way.
-    """
-    # Phase 1 — upper-bound accumulator: each posting contributes the bound of
-    # its block; a doc's summed bound >= its true score.
-    ub = np.zeros(span, dtype=np.float64)
-    touched = np.zeros(span, dtype=bool)
-    for i, ((_t, idf_t, ids, _tf, _dl), (_blast, bmax_tf, bmin_dl)) in enumerate(
-        zip(term_rows, block_rows)
-    ):
-        rep = (
-            ub_rows[i]
-            if ub_rows is not None
-            else posting_upper_bounds(
-                idf_t, ids, bmax_tf, bmin_dl, k1, b, avgdl
-            )
-        )
-        lidx = ids - base
-        ub[lidx] += rep
-        touched[lidx] = True
-    hit = np.flatnonzero(touched)
-    if hit.size == 0:
-        return np.empty(0, np.float64), np.empty(0, np.int64)
-
-    # Phase 2 — seed threshold θ: exact-score the k docs with the highest
-    # upper bounds; their true scores lower-bound the final k-th best.
-    kk = min(k, hit.size)
-    seed_sel = hit[np.argpartition(-ub[hit], kk - 1)[:kk]]
-    _, seed_scores = _exact_scores_sorted(
-        term_rows, seed_sel, base, k1, b, avgdl, contrib_rows
-    )
-    theta = seed_scores.min()
-
-    # Phase 3 — prune by the WAND invariant and exact-rescore survivors.
-    surv = hit[ub[hit] >= theta]
-    surv_sorted, scores = _exact_scores_sorted(
-        term_rows, surv, base, k1, b, avgdl, contrib_rows
-    )
-    return _topk(scores, surv_sorted + base, k)

@@ -68,27 +68,6 @@ SEARCH_RESULT_SCHEMA = StructType(
     ]
 )
 
-# Inverted-index rows — matches exactly what index/build.py writes
-# (POSTING_ROW_SCHEMA / GLOBAL_ROW_SCHEMA): block metadata is the STATS-FREE
-# (max_tf, min_dl) pair, upper-bounded at query time with the live avgdl
-# (codec.block_meta rationale); `shard` rides as a partition column in
-# shards/ and is absent from global/.
-INDEX_GLOBAL_SCHEMA = StructType(
-    [
-        StructField("term", StringType(), False),
-        StructField("df", LongType(), False),
-        StructField("cf", LongType(), False),
-        StructField("n_blocks", IntegerType(), False),
-        StructField("postings", BinaryType(), False),
-        StructField("block_last_doc_id", ArrayType(LongType()), False),
-        StructField("block_max_tf", ArrayType(LongType()), False),
-        StructField("block_min_dl", ArrayType(LongType()), False),
-    ]
-)
-INDEX_SHARD_SCHEMA = StructType(
-    [StructField("shard", LongType(), False)] + list(INDEX_GLOBAL_SCHEMA.fields)
-)
-
 # qrels / queries in the reference's file shapes
 # (/root/reference/dense_retriever/transforms/preprocessing.py:56-67)
 QRELS_SCHEMA = StructType(

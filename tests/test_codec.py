@@ -7,11 +7,8 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from dense_retriever_spark.index.codec import (
-    BLOCK_SIZE,
-    block_meta,
     decode_postings,
     encode_postings,
-    merge_postings,
     varbyte_decode,
     varbyte_encode,
 )
@@ -54,89 +51,6 @@ def test_postings_roundtrip(rows):
     assert i2.tolist() == doc_ids.tolist()
     assert t2.tolist() == tfs.tolist()
     assert d2.tolist() == dls.tolist()
-
-
-@given(
-    st.lists(
-        st.lists(st.integers(min_value=0, max_value=10**9), min_size=1,
-                 max_size=60),
-        min_size=1, max_size=6,
-    )
-)
-@settings(max_examples=100, deadline=None)
-def test_merge_fast_equals_decode_concat(segments):
-    """Byte-splice merge == full decode+concat, for any ascending disjoint
-    doc-id segments."""
-    from dense_retriever_spark.index.codec import merge_postings_fast
-
-    rng = np.random.default_rng(7)
-    # make segments ascending + disjoint
-    all_ids = sorted({x for seg in segments for x in seg})
-    if not all_ids:
-        return
-    sizes = [len(s) for s in segments]
-    if sum(sizes) > len(all_ids):
-        sizes = [max(1, len(all_ids) // len(segments))] * len(segments)
-        if sum(sizes) > len(all_ids):
-            sizes = [len(all_ids)] + [0] * (len(segments) - 1)
-    blobs, lasts, want_ids, want_tfs, want_dls = [], [], [], [], []
-    pos = 0
-    for sz in sizes:
-        if sz == 0:
-            continue
-        ids = np.array(all_ids[pos : pos + sz], np.int64)
-        pos += sz
-        tfs = rng.integers(1, 100, ids.size).astype(np.int64)
-        dls = rng.integers(1, 500, ids.size).astype(np.int64)
-        blobs.append(encode_postings(ids, tfs, dls))
-        lasts.append(int(ids[-1]))
-        want_ids += ids.tolist()
-        want_tfs += tfs.tolist()
-        want_dls += dls.tolist()
-    got_i, got_t, got_d = decode_postings(merge_postings_fast(blobs, lasts))
-    assert got_i.tolist() == want_ids
-    assert got_t.tolist() == want_tfs
-    assert got_d.tolist() == want_dls
-
-
-def test_merge_ordered_and_interleaved():
-    a = encode_postings(np.array([1, 5], np.int64), np.array([2, 2], np.int64),
-                        np.array([10, 10], np.int64))
-    b = encode_postings(np.array([7, 9], np.int64), np.array([1, 3], np.int64),
-                        np.array([20, 30], np.int64))
-    ids, tfs, dls = decode_postings(merge_postings([a, b]))
-    assert ids.tolist() == [1, 5, 7, 9]
-    # interleaved ranges trigger the sort fallback
-    ids2, tfs2, dls2 = decode_postings(merge_postings([b, a]))
-    assert ids2.tolist() == [1, 5, 7, 9]
-    assert tfs2.tolist() == [2, 2, 1, 3]
-
-
-def test_block_meta_bounds():
-    n = 1000
-    rng = np.random.default_rng(42)
-    doc_ids = np.sort(rng.choice(10**6, n, replace=False)).astype(np.int64)
-    tfs = rng.integers(1, 50, n).astype(np.int64)
-    dls = rng.integers(20, 400, n).astype(np.int64)
-    k1, b, avgdl = 1.2, 0.75, 200.0
-    last, max_tf, min_dl = block_meta(doc_ids, tfs, dls)
-    assert last.size == max_tf.size == min_dl.size == (
-        (n + BLOCK_SIZE - 1) // BLOCK_SIZE
-    )
-    # tfn(max_tf, min_dl) dominates every member's tfn, at ANY avgdl
-    for avgdl_q in (50.0, 200.0, 10_000.0):
-        tfn = (tfs * (k1 + 1.0)) / (
-            tfs + k1 * ((1.0 - b) + (b * dls) / avgdl_q)
-        )
-        bound = (max_tf * (k1 + 1.0)) / (
-            max_tf + k1 * ((1.0 - b) + (b * min_dl) / avgdl_q)
-        )
-        for blk in range(last.size):
-            lo, hi = blk * BLOCK_SIZE, min((blk + 1) * BLOCK_SIZE, n)
-            assert doc_ids[hi - 1] == last[blk]
-            assert tfs[lo:hi].max() == max_tf[blk]
-            assert dls[lo:hi].min() == min_dl[blk]
-            assert (tfn[lo:hi] <= bound[blk] * (1 + 1e-12)).all()
 
 
 @given(

@@ -81,7 +81,7 @@ def _pdf(df, cols):
 def test_score_matches_is_untruncated_search(spark, field_indexes, qs):
     title, _ = field_indexes
     got = _pdf(score_matches(spark, title, qs), ["query_id", "doc_id"])
-    full = search(spark, title, qs, k=10_000, use_blockmax=False)
+    full = search(spark, title, qs, k=10_000)
     exp = _pdf(
         full.select("query_id", "doc_id", "score"), ["query_id", "doc_id"]
     )
@@ -289,7 +289,7 @@ def test_search_fields_same_dir_twice_fused(spark, field_indexes, qs):
     title, _ = field_indexes
     legs = [("a", title, 1.0), ("b", title, 0.5)]
     got = search_fields(spark, legs, qs, k=5).toPandas()
-    single = search(spark, title, qs, k=5, use_blockmax=False).toPandas()
+    single = search(spark, title, qs, k=5).toPandas()
     m = got.merge(single, on=["query_id", "doc_id"], suffixes=("_f", "_s"))
     assert len(m) == len(got) == len(single)
     assert abs(m["score_f"] - (m["score_s"] * 1.0 + m["score_s"] * 0.5)).max() < 1e-12

@@ -235,18 +235,39 @@ def test_compact_removes_fully_killed_shard(spark, tiny_corpus, tmp_path):
     assert 2 not in _read_manifest(IndexPaths(d), spark)
     shards = spark.read.parquet(IndexPaths(d).shards)
     assert shards.filter(F.col("shard") == 2).count() == 0
-    # global/ carries no postings for the killed range either
-    from dense_retriever_spark.index.codec import decode_postings as dec
-    for r in spark.read.parquet(IndexPaths(d).global_dir).collect():
-        ids, _, _ = dec(bytes(r["postings"]))
-        assert not ((ids >= 64) & (ids < 96)).any()
+    # global/ is exactly the (term, df, cf) dictionary of the survivors
+    from dense_retriever_spark.operators.bm25 import (
+        doc_term_freqs,
+        tokenize_corpus,
+    )
+
+    survivors = tiny_corpus.filter(
+        (F.col("doc_id") < 64) | (F.col("doc_id") >= 96)
+    )
+    want = {
+        r["term"]: (r["df"], r["cf"])
+        for r in doc_term_freqs(tokenize_corpus(survivors))
+        .groupBy("term")
+        .agg(F.count("*").alias("df"), F.sum("tf").alias("cf"))
+        .collect()
+    }
+    g = spark.read.parquet(IndexPaths(d).global_dir)
+    assert g.columns == ["term", "df", "cf"]
+    got = {r["term"]: (r["df"], r["cf"]) for r in g.collect()}
+    assert got == want
 
 
 def test_format_version_and_dps_fail_fast(spark, tiny_corpus, tmp_path):
-    """An index stamped with an older posting format, or resumed with a
-    different docs_per_shard, must be REFUSED loudly — not silently
-    misdecoded (round-2 ADVICE)."""
+    """An index stamped with an older format (v1 u32 headers, v2 block-max
+    columns and a postings-bearing global/), or resumed with a different
+    docs_per_shard, must be REFUSED loudly — not silently misread (round-2
+    ADVICE). Every entry point checks: load_stats/search, a resumed
+    build_index, and merge_indexes."""
+    from dense_retriever_spark.index.codec import FORMAT_VERSION
+    from dense_retriever_spark.index.merge import merge_indexes
     from dense_retriever_spark.index.search import load_stats, search
+
+    assert FORMAT_VERSION == 3
 
     d = str(tmp_path / "vidx")
     build_index(tiny_corpus, d, docs_per_shard=64, term_buckets=2)
@@ -255,16 +276,21 @@ def test_format_version_and_dps_fail_fast(spark, tiny_corpus, tmp_path):
     with pytest.raises(ValueError, match="docs_per_shard"):
         build_index(tiny_corpus, d, docs_per_shard=32, term_buckets=2)
 
-    s = json.load(open(stats_path))
-    s["format_version"] = 1
-    json.dump(s, open(stats_path, "w"))
-    with pytest.raises(ValueError, match="format"):
-        load_stats(d)
-    with pytest.raises(ValueError, match="format"):
-        build_index(tiny_corpus, d, docs_per_shard=64, term_buckets=2)
+    ok = str(tmp_path / "vidx_ok")
+    build_index(tiny_corpus, ok, docs_per_shard=64, term_buckets=2)
     q = spark.createDataFrame([(0, "def")], "query_id long, query string")
-    with pytest.raises(ValueError, match="format"):
-        search(spark, d, q, k=5)
+    s = json.load(open(stats_path))
+    for old in (1, 2):
+        s["format_version"] = old
+        json.dump(s, open(stats_path, "w"))
+        with pytest.raises(ValueError, match="format"):
+            load_stats(d)
+        with pytest.raises(ValueError, match="format"):
+            build_index(tiny_corpus, d, docs_per_shard=64, term_buckets=2)
+        with pytest.raises(ValueError, match="format"):
+            search(spark, d, q, k=5)
+        with pytest.raises(ValueError, match="format"):
+            merge_indexes(spark, [ok, d], str(tmp_path / f"vmerged{old}"))
 
 
 def test_index_on_scheme_qualified_uri(spark, tiny_corpus, tiny_queries, tmp_path):

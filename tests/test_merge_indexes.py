@@ -83,22 +83,19 @@ def test_merge_equals_fresh_build(spark, tmp_path):
     assert sm["n_shards"] == sf["n_shards"]
     assert sm["avgdl"] == pytest.approx(sf["avgdl"])
 
-    # global index identical term stats (postings compared via decode:
-    # byte layout may differ — merged-vs-built blobs are equal here too
-    # because both concatenate the same shard sub-postings in range order)
+    # global/ is the same (term, df, cf) dictionary
     gf = spark.read.parquet(IndexPaths(ifull).global_dir)
     gm = spark.read.parquet(IndexPaths(im).global_dir)
+    assert gf.columns == gm.columns == ["term", "df", "cf"]
     rows_f = {r["term"]: (r["df"], r["cf"]) for r in gf.collect()}
     rows_m = {r["term"]: (r["df"], r["cf"]) for r in gm.collect()}
     assert rows_f == rows_m
 
-    # search bit-identity on both query planes, exact and block-max
-    for kw in (
-        {"use_blockmax": False},
-        {"use_blockmax": True},
-        {"use_blockmax": True, "query_mode": "distributed"},
-    ):
-        assert _res(spark, im, qs, **kw) == _res(spark, ifull, qs, **kw)
+    # search bit-identity on both query planes
+    for mode in ("broadcast", "distributed"):
+        assert _res(spark, im, qs, query_mode=mode) == _res(
+            spark, ifull, qs, query_mode=mode
+        )
 
 
 def test_merge_generational_layout(spark, tmp_path):
@@ -112,9 +109,7 @@ def test_merge_generational_layout(spark, tmp_path):
     merged = merge_indexes(spark, [ia, ib], im, global_layout="generational")
     assert load_stats(im)["global_layout"] == "generational"
     assert load_stats(im)["n_gens"] >= 1
-    assert _res(spark, im, qs, use_blockmax=True) == _res(
-        spark, ifull, qs, use_blockmax=True
-    )
+    assert _res(spark, im, qs) == _res(spark, ifull, qs)
     assert merged.root == im
 
 
@@ -177,9 +172,7 @@ def test_merge_generational_carries_gens_over(spark, tmp_path):
     ifull = str(tmp_path / "full")
     build_index(full, ifull, docs_per_shard=DPS, term_buckets=2)
     qs = synth_queries(spark, 6)
-    assert _res(spark, im, qs, use_blockmax=True) == _res(
-        spark, ifull, qs, use_blockmax=True
-    )
+    assert _res(spark, im, qs) == _res(spark, ifull, qs)
 
 
 def test_merge_validation_errors(spark, tmp_path):

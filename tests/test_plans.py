@@ -130,5 +130,5 @@ def test_phrase_scan_pushdown_and_pruning(spark, tmp_path):
     assert info["pushed_filters"] and "In(term" in info["pushed_filters"], info
     rs = info["read_schema"] or ""
     assert "positions" in rs and "postings" in rs, rs
-    for col in ("block_max_tf", "block_min_dl", "df", "cf", "content"):
+    for col in ("df", "cf", "content"):
         assert col not in rs, (col, rs)

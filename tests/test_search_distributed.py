@@ -39,10 +39,6 @@ def test_plain(spark, idx, tiny_queries):
     _assert_bit_identical(spark, idx, tiny_queries, k=10)
 
 
-def test_exact_scorer(spark, idx, tiny_queries):
-    _assert_bit_identical(spark, idx, tiny_queries, k=10, use_blockmax=False)
-
-
 def test_with_tombstones(spark, idx, tiny_corpus, tiny_queries):
     kill = tiny_corpus.filter(F.col("doc_id") % 3 == 0).select("doc_id")
     _assert_bit_identical(

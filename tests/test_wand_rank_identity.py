@@ -1,8 +1,10 @@
 """End-to-end rank identity: indexed engine == exact oracle (north_rule).
 
-The indexed WAND/exact scorers must reproduce the brute-force BM25 oracle's
-top-k docIDs rank-identically, with scores within 1e-9 (JVM log vs libm log
-can differ in the last ulp; operation order is otherwise identical)."""
+The indexed scorer must reproduce the brute-force BM25 oracle's top-k docIDs
+rank-identically, with scores within 1e-9 (JVM log vs libm log can differ in
+the last ulp; operation order is otherwise identical). Masked searches are
+checked against the oracle's full ranking with the same docs removed from
+the results (masks never change corpus statistics)."""
 
 from __future__ import annotations
 
@@ -47,13 +49,24 @@ def oracle_rows(spark, tiny_corpus, tiny_queries):
     return bm25_exact_topk(tokenize_corpus(tiny_corpus), tiny_queries, k=K).collect()
 
 
+def _masked_oracle(tiny_corpus, queries, keep, k=K):
+    """Oracle top-k of ``queries`` over the docs for which ``keep(doc_id)``
+    holds: the full-corpus ranking (k = corpus size, so every match is
+    present) filtered, truncated to k, and re-ranked."""
+    n = tiny_corpus.count()
+    full = bm25_exact_topk(tokenize_corpus(tiny_corpus), queries, k=n).collect()
+    out = []
+    for qid, rows in _by_query(full).items():
+        kept = [(d, s) for d, s, _ in rows if keep(d)][:k]
+        out += [
+            {"query_id": qid, "doc_id": d, "score": s, "rank": i + 1}
+            for i, (d, s) in enumerate(kept)
+        ]
+    return out
+
+
 def test_exact_scorer_rank_identity(spark, idx, tiny_queries, oracle_rows):
-    got = search(spark, idx, tiny_queries, k=K, use_blockmax=False).collect()
-    _assert_rank_identical(got, oracle_rows)
-
-
-def test_blockmax_scorer_rank_identity(spark, idx, tiny_queries, oracle_rows):
-    got = search(spark, idx, tiny_queries, k=K, use_blockmax=True).collect()
+    got = search(spark, idx, tiny_queries, k=K).collect()
     _assert_rank_identical(got, oracle_rows)
 
 
@@ -61,7 +74,7 @@ def test_k1_and_k50(spark, idx, tiny_corpus, tiny_queries):
     tok = tokenize_corpus(tiny_corpus)
     for k in (1, 50):  # reference default top_n=50 (cli/model_training.py:39)
         want = bm25_exact_topk(tok, tiny_queries, k=k).collect()
-        got = search(spark, idx, tiny_queries, k=k, use_blockmax=True).collect()
+        got = search(spark, idx, tiny_queries, k=k).collect()
         _assert_rank_identical(got, want)
 
 
@@ -79,34 +92,29 @@ def test_oov_and_empty(spark, idx):
 
 
 def test_blockmax_under_tombstones_rank_identity(spark, idx, tiny_corpus, tiny_queries):
-    """A live kill-list keeps block-max pruning (blocks re-derived from the
-    masked postings, VERDICT r2 #2) and stays rank-identical to the exact
-    scorer under the same kill-list; no killed doc ever surfaces."""
+    """A live kill-list is masked out of the postings before shard-local
+    top-k: results equal the oracle's ranking with the killed docs removed,
+    and no killed doc ever surfaces."""
     from pyspark.sql import functions as F
 
     kill = tiny_corpus.filter(F.col("doc_id") % 7 == 0).select("doc_id")
-    killed = {r["doc_id"] for r in kill.collect()}
-    bm = search(
-        spark, idx, tiny_queries, k=K, use_blockmax=True, exclude_doc_ids=kill
-    ).collect()
-    ex = search(
-        spark, idx, tiny_queries, k=K, use_blockmax=False, exclude_doc_ids=kill
-    ).collect()
-    assert len(bm) > 0
-    assert not ({r["doc_id"] for r in bm} & killed)
-    _assert_rank_identical(bm, ex)
+    got = search(spark, idx, tiny_queries, k=K, exclude_doc_ids=kill).collect()
+    assert len(got) > 0
+    assert all(r["doc_id"] % 7 != 0 for r in got)
+    _assert_rank_identical(
+        got, _masked_oracle(tiny_corpus, tiny_queries, lambda d: d % 7 != 0)
+    )
 
 
 def test_shard_scorer_masked_matches_blockmax_oracle(spark, idx):
-    """_score_shard under a live exclusion set (round 8: always the cached
-    exact scorer — use_blockmax routes nowhere) must equal the DIRECT
-    block-max scorer run over the same re-derived masked postings: both
-    scorers are exact by construction, so any divergence is a bug in the
-    masking or caching path."""
+    """_score_shard under a live exclusion set must equal
+    wand.score_query_exact run directly over the same hand-masked postings
+    (no contribution cache, no query grouping): any divergence is a bug in
+    the masking or caching path."""
     import numpy as np
 
     from dense_retriever_spark.index import wand
-    from dense_retriever_spark.index.codec import block_meta, decode_postings
+    from dense_retriever_spark.index.codec import decode_postings
     from dense_retriever_spark.index.search import _score_shard, load_stats
 
     stats = load_stats(idx)
@@ -120,87 +128,72 @@ def test_shard_scorer_masked_matches_blockmax_oracle(spark, idx):
     queries = {0: terms}
     idfs = {t: 1.5 for t in terms}
     excl = np.array([1, 3, 5], dtype=np.int64)
-    args = (queries, idfs, 10, stats["k1"], stats["b"], stats["avgdl"],
-            stats["docs_per_shard"])
-    out_bm = _score_shard(pdf, *args, True, excl)
-    out_ex = _score_shard(pdf, *args, False, excl)
-    cols = ["query_id", "doc_id", "score"]
-    assert out_bm[cols].values.tolist() == out_ex[cols].values.tolist()
-    assert not set(out_bm["doc_id"].tolist()) & {1, 3, 5}
+    out = _score_shard(
+        pdf, queries, idfs, 10, stats["k1"], stats["b"], stats["avgdl"],
+        stats["docs_per_shard"], excl,
+    )
+    assert not set(out["doc_id"].tolist()) & {1, 3, 5}
 
-    # independent oracle: score_query_blockmax over hand-masked postings
+    # independent oracle: score_query_exact over hand-masked postings
     row_of = {t: i for i, t in enumerate(pdf["term"])}
-    term_rows, block_rows = [], []
+    term_rows = []
     for t in terms:
         ids, tfs, dls = decode_postings(pdf["postings"].iloc[row_of[t]])
         keep = ~np.isin(ids, excl, assume_unique=True)
-        ids, tfs, dls = ids[keep], tfs[keep], dls[keep]
-        term_rows.append((t, idfs[t], ids, tfs, dls))
-        block_rows.append(block_meta(ids, tfs, dls))
-    scores, doc_ids = wand.score_query_blockmax(
-        term_rows, block_rows, 0, stats["docs_per_shard"], 10,
+        term_rows.append((t, idfs[t], ids[keep], tfs[keep], dls[keep]))
+    scores, doc_ids = wand.score_query_exact(
+        term_rows, 0, stats["docs_per_shard"], 10,
         stats["k1"], stats["b"], stats["avgdl"],
     )
-    got = out_ex[out_ex["query_id"] == 0].sort_values("rank")
+    got = out[out["query_id"] == 0].sort_values("rank", kind="stable")
     assert got["doc_id"].tolist() == doc_ids.tolist()
-    assert np.allclose(got["score"].to_numpy(), scores)
+    assert got["score"].tolist() == scores.tolist()
 
 
 def test_filtered_search_include_docs(spark, idx, tiny_corpus, tiny_queries):
-    """Metadata-filtered search (include_doc_ids, cogrouped allowed-set): only
-    allowed docs surface, blockmax == exact under the filter, and it composes
-    with a tombstone kill-list."""
+    """Metadata-filtered search (include_doc_ids, cogrouped allowed-set):
+    results equal the oracle's ranking restricted to the allowed docs, alone
+    and composed with a tombstone kill-list."""
     from pyspark.sql import functions as F
 
     allowed = tiny_corpus.filter(F.col("doc_id") % 3 == 1).select("doc_id")
-    aset = {r["doc_id"] for r in allowed.collect()}
-    bm = search(
-        spark, idx, tiny_queries, k=K, use_blockmax=True,
-        include_doc_ids=allowed,
+    got = search(
+        spark, idx, tiny_queries, k=K, include_doc_ids=allowed,
     ).collect()
-    ex = search(
-        spark, idx, tiny_queries, k=K, use_blockmax=False,
-        include_doc_ids=allowed,
-    ).collect()
-    assert len(bm) > 0
-    assert {r["doc_id"] for r in bm} <= aset
-    _assert_rank_identical(bm, ex)
+    assert len(got) > 0
+    _assert_rank_identical(
+        got, _masked_oracle(tiny_corpus, tiny_queries, lambda d: d % 3 == 1)
+    )
 
     kill = tiny_corpus.filter(F.col("doc_id") % 6 == 1).select("doc_id")
-    kset = {r["doc_id"] for r in kill.collect()}
     both = search(
         spark, idx, tiny_queries, k=K,
         include_doc_ids=allowed, exclude_doc_ids=kill,
     ).collect()
-    assert {r["doc_id"] for r in both} <= (aset - kset)
+    _assert_rank_identical(
+        both,
+        _masked_oracle(
+            tiny_corpus, tiny_queries, lambda d: d % 3 == 1 and d % 6 != 1
+        ),
+    )
 
 
 def test_wide_query_adaptive_scorer_identity(spark, idx, tiny_corpus):
-    """A disjunction wider than WIDE_QUERY_BLOCKMAX_LIMIT routes to the
-    exact scorer under use_blockmax=True (the adaptive rule) — results must
-    be IDENTICAL to use_blockmax=False, and to the brute-force oracle."""
-    from pyspark.sql import functions as F
-
-    from dense_retriever_spark.index.search import WIDE_QUERY_BLOCKMAX_LIMIT
-
-    # all sym#### rare terms (400 of them) in one query — far past the limit
+    """A disjunction of 100+ terms scores like any other query: rank-identical
+    to the brute-force oracle."""
     wide = " ".join(f"sym{i:04d}" for i in range(100)) + " merge batch"
-    assert len(wide.split()) > WIDE_QUERY_BLOCKMAX_LIMIT
     qs = spark.createDataFrame([(0, wide)], "query_id long, query string")
-    a = sorted(map(tuple, search(spark, idx, qs, k=K, use_blockmax=True).collect()))
-    b = sorted(map(tuple, search(spark, idx, qs, k=K, use_blockmax=False).collect()))
-    assert a == b and len(a) > 0
+    got = search(spark, idx, qs, k=K).collect()
+    assert len(got) > 0
     want = bm25_exact_topk(tokenize_corpus(tiny_corpus), qs, k=K).collect()
     _assert_rank_identical(
-        [r.asDict() for r in search(spark, idx, qs, k=K).collect()],
-        [r.asDict() for r in want],
+        [r.asDict() for r in got], [r.asDict() for r in want]
     )
 
 
 def test_wide_query_adaptive_under_masks(spark, idx, tiny_corpus):
-    """Mixed batch (one narrow blockmax query + one wide exact-routed query)
-    under a tombstone mask: the lazy masked block rebuild must serve the
-    narrow query while the wide one skips it, with both still exact."""
+    """Mixed batch (one narrow query + one 100-term query) under a tombstone
+    mask: both rank-identical to the oracle with the killed docs removed."""
     from pyspark.sql import functions as F
 
     wide = " ".join(f"sym{i:04d}" for i in range(100))
@@ -208,11 +201,9 @@ def test_wide_query_adaptive_under_masks(spark, idx, tiny_corpus):
         [(0, wide), (1, "merge batch")], "query_id long, query string"
     )
     kill = tiny_corpus.filter(F.col("doc_id") % 4 == 0).select("doc_id")
-    a = sorted(map(tuple, search(
-        spark, idx, qs, k=K, use_blockmax=True, exclude_doc_ids=kill
-    ).collect()))
-    b = sorted(map(tuple, search(
-        spark, idx, qs, k=K, use_blockmax=False, exclude_doc_ids=kill
-    ).collect()))
-    assert a == b and len(a) > 0
-    assert all(d % 4 != 0 for _, d, _, _ in a)
+    got = search(spark, idx, qs, k=K, exclude_doc_ids=kill).collect()
+    assert {r["query_id"] for r in got} == {0, 1}
+    assert all(r["doc_id"] % 4 != 0 for r in got)
+    _assert_rank_identical(
+        got, _masked_oracle(tiny_corpus, qs, lambda d: d % 4 != 0)
+    )

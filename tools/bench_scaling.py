@@ -71,7 +71,7 @@ build_index(corpus, idx, docs_per_shard=dps, term_buckets=4, timings=timings,
 t_build = time.time() - t0
 
 t0 = time.time()
-n_res = search(spark, idx, queries, k=10, use_blockmax=True).count()
+n_res = search(spark, idx, queries, k=10).count()
 t_search = time.time() - t0
 
 print("RESULT " + json.dumps({

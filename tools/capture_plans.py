@@ -7,12 +7,12 @@ Builds a small deterministic index (synth corpus) in a temp dir, constructs
 each query path LAZILY (eager=False where the API materializes by default)
 and dumps the formatted physical plan. Imperative multi-job operators
 (index build) are represented by the plans of their dominant jobs: the
-doc-id assignment projection, the docs staging write input, and the phase-B
-global merge input.
+doc-id assignment projection and the phase-B (term, df, cf) aggregate.
 """
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 import sys
@@ -25,8 +25,6 @@ def main() -> None:
     out_dir = sys.argv[1]
     tag = sys.argv[2] if len(sys.argv) > 2 else "now"
     os.makedirs(out_dir, exist_ok=True)
-
-    from pyspark.sql import functions as F
 
     from dense_retriever_spark.corpus import synth_corpus, synth_queries
     from dense_retriever_spark.index.build import (
@@ -55,32 +53,14 @@ def main() -> None:
     dump("assign_doc_ids", assigned)
     idx = work + "/index"
     build_index(assigned, idx, docs_per_shard=512, term_buckets=2)
-    # positional twin: the phase-B projection difference only matters when
-    # a positions column exists
-    idxp = work + "/index_pos"
-    assigned2 = assign_doc_ids_scalable(spark.read.parquet(work + "/corpus"))
-    build_index(assigned2, idxp, docs_per_shard=512, term_buckets=2,
-                positions=True)
+    # 2) phase-B input: the (term, df, cf) aggregate over every shard (the
+    # merged layout's global/; a generational gen is the same plan over a
+    # shard range)
+    from dense_retriever_spark.index.build import _term_stats_df
 
-    # 2) phase-B global merge input (merged layout) — mirror THIS tree's
-    # build_index code: project iff the local source projects
-    import dense_retriever_spark.index.build as _bmod
-    from dense_retriever_spark.index.build import (
-        GLOBAL_ROW_SCHEMA,
-        _merge_term_groups,
-    )
-
-    src = open(_bmod.__file__).read()
-    shards_df = spark.read.parquet(IndexPaths(idxp).shards)
-    if '"shard", "term", "df", "cf", "postings",' in src:
-        shards_df = shards_df.select(
-            "shard", "term", "df", "cf", "postings",
-            "block_last_doc_id", "block_max_tf", "block_min_dl",
-        )
-    merged = shards_df.groupBy(
-        F.pmod(F.xxhash64("term"), F.lit(8)).alias("_g")
-    ).applyInPandas(_merge_term_groups, schema=GLOBAL_ROW_SCHEMA)
-    dump("phase_b_merge", merged)
+    stats = json.loads(open(IndexPaths(idx).stats).read())
+    dump("phase_b_term_stats",
+         _term_stats_df(spark, IndexPaths(idx), 0, stats["n_shards"]))
 
     queries = synth_queries(spark, 20)
     from dense_retriever_spark.index.search import search
