@@ -39,6 +39,13 @@ def test_plain(spark, idx, tiny_queries):
     _assert_bit_identical(spark, idx, tiny_queries, k=10)
 
 
+def test_exact_scorer(spark, idx, tiny_queries):
+    """Both planes cut the exact scorer's ranking at the same place for the
+    smallest and the reference default depth."""
+    for k in (1, 50):
+        _assert_bit_identical(spark, idx, tiny_queries, k=k)
+
+
 def test_with_tombstones(spark, idx, tiny_corpus, tiny_queries):
     kill = tiny_corpus.filter(F.col("doc_id") % 3 == 0).select("doc_id")
     _assert_bit_identical(
