@@ -26,6 +26,7 @@ bypasses the cache, so the flags live and die with the helper call.
 
 from __future__ import annotations
 
+import os
 from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
@@ -72,6 +73,26 @@ def _fs_path(spark: SparkSession | None, path: str):
         yield s, fs, p
     finally:
         fs.close()
+
+
+def local_path(uri: str, spark: SparkSession | None = None) -> str | None:
+    """The OS path ``uri`` names when it lives on the local filesystem,
+    else None. A path with no scheme resolves against Hadoop's
+    ``fs.defaultFS`` exactly as ``_fs_path`` does, so a plain path under an
+    ``hdfs://`` default filesystem is not local. Only the ``file`` scheme
+    maps to an OS path; no FileSystem is opened for any other scheme."""
+    s = _active_spark(spark)
+    jvm = s._jvm
+    u = jvm.org.apache.hadoop.fs.Path(uri).toUri()
+    scheme = u.getScheme()
+    if scheme is None:
+        conf = s._jsc.hadoopConfiguration()
+        scheme = jvm.org.apache.hadoop.fs.FileSystem.getDefaultUri(
+            conf
+        ).getScheme()
+    if scheme != "file":
+        return None
+    return os.path.abspath(u.getPath())
 
 
 def exists(path: str, spark: SparkSession | None = None) -> bool:

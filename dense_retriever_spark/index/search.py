@@ -17,12 +17,27 @@ Reference analog: ``search_from_prebuilt`` — load index, search, decode ids
                      ▼
          global window top-k (score DESC, doc_id ASC)  →  results
 
-Two query planes, same scorer, bit-identical results (q38 vs q49 oracles):
+Three planes, same scorer, same tie-break, bit-identical results (q38 vs
+q49 oracles; tests/test_long_tail_rank_identity.py):
 
-* ``broadcast`` — the (qid, term) relation is collected and broadcast. Right
+* ``broadcast`` — the (qid, term) relation is collected to the driver. Right
   for interactive/bench batches (a 200-query batch is KBs); the per-shard
   scorer sees every query at once, so the index is read EXACTLY once per
-  search regardless of |Q|.
+  search regardless of |Q|. Once the terms are on the driver, the call
+  takes one of two sub-planes:
+
+  - driver-local (``_search_local``) — when the index is on the local
+    filesystem (``fs.local_path``), ``k`` is set (not ``score_matches``),
+    there is no ``include_doc_ids`` relation and the kill-list fits the
+    driver array (``_excl_plan``). The df dictionary and the term-pruned
+    shard rows are read with pyarrow, each shard is scored with
+    ``_score_shard`` and the top k are merged on the driver; the result is
+    a local relation. A search without a kill-list runs ONE Spark job (the
+    query tokenizer) instead of about eleven — Spark's per-job cost, not
+    BM25, is what a small batch pays for.
+  - Spark broadcast — every other broadcast call (non-local URIs,
+    ``include_doc_ids``, ``score_matches``, kill-lists past the ceiling):
+    qmap/idf ride an sc.broadcast into ``groupBy(shard).applyInPandas``.
 * ``distributed`` — the query relation NEVER touches the driver: query terms
   join the global stats for df, join the shard-term presence relation, and
   arrive at each shard's scorer COGROUPED with the shard scan. Driver state
@@ -41,9 +56,13 @@ from collections import OrderedDict
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.dataset as ds
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from dense_retriever_spark.functions.tokenizer import tokenize_code_expr
+from dense_retriever_spark.index import fs
 from dense_retriever_spark.index.build import IndexPaths
 from dense_retriever_spark.index.codec import decode_postings
 from dense_retriever_spark.index.wand import (
@@ -180,7 +199,6 @@ def global_term_stats(
 
 
 def load_stats(index_dir: str) -> dict:
-    from dense_retriever_spark.index import fs
     from dense_retriever_spark.index.codec import FORMAT_VERSION
 
     # Hadoop FS read — index_dir may be file://, hdfs://, s3a:// (fs.py)
@@ -497,22 +515,31 @@ def search(
     selectivity. Composes with ``exclude_doc_ids``.
 
     ``query_mode``: ``'broadcast'`` (default) collects the (qid, term)
-    relation to the driver and broadcasts it (exactly-once index scan with
-    term-IN parquet pushdown — right for interactive/bench batches, and
-    zero extra jobs on the latency path). ``'distributed'`` keeps the query
-    relation executor-side end-to-end (see module docstring) — driver state
-    is O(1) at any |Q|; this is the plane for training-set-scale query
-    batches. ``'auto'`` probes |Q| with one bounded ``limit().count()`` job
-    and picks broadcast below QUERY_BROADCAST_LIMIT — the right setting when
-    the batch size is unknown (the CLI and the refresh loop use it). Both
-    planes run the same scorer and are bit-identical (pytest + the q38/q49
-    oracle pair).
+    relation to the driver (exactly-once index scan with term-IN pushdown —
+    right for interactive/bench batches). On a local-filesystem index,
+    with no ``include_doc_ids`` and a kill-list within the driver ceiling,
+    the driver-local plane then reads and scores the index with pyarrow and
+    numpy: one Spark job per call (the query tokenizer; a kill-list adds
+    its collect), and the result is a local relation. Otherwise (a
+    non-local URI, ``include_doc_ids``, a kill-list past the ceiling) the
+    Spark broadcast plane scores the shards in a
+    ``groupBy(shard).applyInPandas`` with the terms broadcast. All three
+    planes return the same rows bit for bit. ``'distributed'`` keeps the
+    query relation executor-side end-to-end (see module docstring) —
+    driver state is O(1) at any |Q|; this is the plane for
+    training-set-scale query batches. ``'auto'`` probes |Q| with one
+    bounded ``limit().count()`` job and picks broadcast below
+    QUERY_BROADCAST_LIMIT — the right setting when the batch size is
+    unknown (the CLI and the refresh loop use it). The planes run the same
+    scorer and are bit-identical (pytest + the q38/q49 oracle pair).
 
     ``eager`` (default): run the search now, materialize the bounded
     (≤ k × |Q|-row) result executor-side (localCheckpoint — never collected
     to the driver), and release the per-call broadcasts immediately.
     ``eager=False`` keeps the fully-lazy plan for composition; the caller
-    then owns the broadcast lifetime (released on garbage collection).
+    then owns the broadcast lifetime (released on garbage collection). The
+    driver-local plane has neither: its result is computed during the call
+    and is already a (≤ k × |Q|-row) local relation either way.
     """
     stats = load_stats(index_dir)
     if offset < 0:
@@ -582,7 +609,11 @@ def score_matches(
 
 
 def _term_dfs_cached(
-    spark: SparkSession, index_dir: str, stats: dict, all_terms: list[str]
+    spark: SparkSession,
+    index_dir: str,
+    stats: dict,
+    all_terms: list[str],
+    local_root: str | None = None,
 ) -> dict[str, float]:
     """term → df for ``all_terms`` (−1.0 marks OOV), served from the
     per-build driver cache where possible (term-pruned scan on global/
@@ -590,7 +621,11 @@ def _term_dfs_cached(
     driver already holds). Repeated vocabulary — interactive sessions, the
     bench's tombstoned/filtered re-searches, the refresh loop's fixed query
     set — skips the Spark job entirely after the first lookup. Shared by
-    the broadcast BM25 plane and the boolean plane (index/boolean.py)."""
+    the broadcast BM25 plane and the boolean plane (index/boolean.py).
+
+    ``local_root``: the OS path of a local index (the driver-local plane) —
+    misses are then read with pyarrow (_local_term_dfs) instead of a Spark
+    job; the values and the cache are the same either way."""
     cache_key = json.dumps(
         {"dir": index_dir, "stats": stats}, sort_keys=True
     )
@@ -604,16 +639,19 @@ def _term_dfs_cached(
         vals = {t: dfs[t] for t in all_terms if t in dfs}
     missing = [t for t in all_terms if t not in vals]
     if missing:
-        # the collect runs OUTSIDE the lock (concurrent threads may double-
-        # run the job for the same terms — benign; both write the same df)
-        gstats = (
-            _term_pruned(
-                global_term_stats(spark, index_dir, stats), missing, spark
+        # the read runs OUTSIDE the lock (concurrent threads may double-
+        # run it for the same terms — benign; both write the same df)
+        if local_root is not None:
+            found = _local_term_dfs(local_root, stats, missing)
+        else:
+            gstats = (
+                _term_pruned(
+                    global_term_stats(spark, index_dir, stats), missing, spark
+                )
+                .select("term", "df")
+                .collect()
             )
-            .select("term", "df")
-            .collect()
-        )
-        found = {r["term"]: float(r["df"]) for r in gstats}
+            found = {r["term"]: float(r["df"]) for r in gstats}
         for t in missing:
             vals[t] = found.get(t, -1.0)  # -1 = OOV, cached too
         with _TERM_DF_LOCK:
@@ -649,6 +687,128 @@ def _term_dfs_cached(
     return vals
 
 
+def _local_dataset(root: str, key: str | None = None, keep=None):
+    """pyarrow dataset over the parquet files Spark wrote under ``root``:
+    directly in it, or (``key`` given) in its ``key=<id>`` partition dirs,
+    only those whose id satisfies ``keep``. Names starting with ``_`` or
+    ``.`` (_SUCCESS, _temporary, checksum sidecars, staging dirs) are
+    skipped, as Spark's own listing does; the partition id becomes an
+    int64 column. None when there is no data file."""
+
+    def entries(d: str) -> list:
+        try:
+            with os.scandir(d) as it:
+                return [e for e in it if not e.name.startswith(("_", "."))]
+        except FileNotFoundError:
+            return []
+
+    part = None
+    if key is None:
+        files = [e.path for e in entries(root) if e.is_file()]
+    else:
+        files = []
+        for e in entries(root):
+            name, _, pid = e.name.partition("=")
+            if name != key or not pid.isdigit() or not e.is_dir():
+                continue
+            if keep is None or keep(int(pid)):
+                files += [f.path for f in entries(e.path) if f.is_file()]
+        part = ds.partitioning(pa.schema([(key, pa.int64())]), flavor="hive")
+    if not files:
+        return None
+    return ds.dataset(
+        files, format="parquet", partitioning=part, partition_base_dir=root
+    )
+
+
+def _local_term_dfs(
+    root: str, stats: dict, terms: list[str]
+) -> dict[str, float]:
+    """term → df for the ``terms`` present in the local index at ``root``
+    — the rows global_term_stats returns, read with pyarrow (term-pruned
+    by parquet row-group statistics) instead of a Spark job. Generational
+    layout: the committed ``gen_ids`` partitions of global/ plus the loose
+    tail shards (``shard >= genned_until``), summed per term."""
+    paths = IndexPaths(root)
+    if stats.get("global_layout", "merged") != "generational":
+        legs = [_local_dataset(paths.global_dir)]
+    else:
+        legs = []
+        if int(stats.get("n_gens", 0)) > 0:
+            # committed gens only, as in global_term_stats
+            gen_ids = stats.get("gen_ids")
+            ids = None if gen_ids is None else {int(i) for i in gen_ids}
+            legs.append(_local_dataset(
+                paths.global_dir, "gen", lambda g: ids is None or g in ids
+            ))
+        gu = int(stats.get("genned_until", 0))
+        legs.append(_local_dataset(paths.shards, "shard", lambda s: s >= gu))
+    want = ds.field("term").isin(terms)
+    dfs: dict[str, int] = {}
+    for leg in legs:
+        if leg is None:
+            continue
+        t = leg.to_table(columns=["term", "df"], filter=want)
+        for term, df in zip(t["term"].to_pylist(), t["df"].to_pylist()):
+            dfs[term] = dfs.get(term, 0) + df
+    return {t: float(v) for t, v in dfs.items()}
+
+
+def _search_local(
+    spark: SparkSession,
+    root: str,
+    stats: dict,
+    qmap: dict[int, list[str]],
+    idfs: dict[str, float],
+    terms: list[str],
+    k: int,
+    excl: np.ndarray | None,
+) -> DataFrame:
+    """The driver-local plane of _search_broadcast: read the term-pruned
+    (shard, term, postings) rows of the local index at ``root`` with
+    pyarrow, score each shard with _score_shard, keep the top ``k`` per
+    query by (score DESC, doc_id ASC) — the Spark plane's exact steps, so
+    the result is bit-identical — and hand it back as a local relation:
+    collecting it runs no Spark job."""
+    shards = _local_dataset(IndexPaths(root).shards, "shard")
+    if shards is None:
+        return spark.createDataFrame([], RESULT_SCHEMA)
+    rows = shards.to_table(
+        columns=["shard", "term", "postings"],
+        filter=ds.field("term").isin(terms),
+    ).to_pandas()
+    k1, b, avgdl = stats["k1"], stats["b"], stats["avgdl"]
+    dps = stats["docs_per_shard"]
+    parts = [
+        _score_shard(pdf, qmap, idfs, k, k1, b, avgdl, dps, excl)
+        for _, pdf in rows.groupby("shard", sort=False)
+    ]
+    parts = [p for p in parts if len(p)]
+    if not parts:
+        return spark.createDataFrame([], RESULT_SCHEMA)
+    q = np.concatenate([p["query_id"].to_numpy(np.int64) for p in parts])
+    d = np.concatenate([p["doc_id"].to_numpy(np.int64) for p in parts])
+    s = np.concatenate([p["score"].to_numpy(np.float64) for p in parts])
+    order = np.lexsort((d, -s, q))
+    q, d, s = q[order], d[order], s[order]
+    # 1-based rank within each query's run of rows
+    pos = np.arange(q.size)
+    first = np.r_[True, q[1:] != q[:-1]]
+    rank = pos - np.maximum.accumulate(np.where(first, pos, 0)) + 1
+    keep = rank <= k
+    if not keep.any():
+        return spark.createDataFrame([], RESULT_SCHEMA)
+    return spark.createDataFrame(
+        pd.DataFrame({
+            "query_id": q[keep],
+            "doc_id": d[keep],
+            "score": s[keep],
+            "rank": rank[keep].astype(np.int32),
+        }),
+        RESULT_SCHEMA,
+    )
+
+
 def _search_broadcast(
     spark: SparkSession,
     index_dir: str,
@@ -660,8 +820,6 @@ def _search_broadcast(
     include_doc_ids: DataFrame | None,
     qt_pairs: list[tuple[int, str]] | None = None,
 ) -> DataFrame:
-    from dense_retriever_spark.operators.bm25 import query_terms
-
     paths = IndexPaths(index_dir)
     n_docs, avgdl = stats["n_docs"], stats["avgdl"]
     k1, b = stats["k1"], stats["b"]
@@ -678,7 +836,11 @@ def _search_broadcast(
     # driver — unless the caller already holds the rewritten relation
     # (prefix expansion, index/prefix.py)
     if qt_pairs is None:
-        qt = query_terms(queries_df).collect()
+        # one job: the (qid, term) pairs are deduplicated below, per query,
+        # so the relation needs no distinct() shuffle
+        qt = queries_df.select(
+            "query_id", F.explode(tokenize_code_expr("query")).alias("term")
+        ).collect()
         qt_pairs = [(int(r["query_id"]), r["term"]) for r in qt]
     qmap: dict[int, list[str]] = {}
     for qid, term in qt_pairs:
@@ -690,8 +852,15 @@ def _search_broadcast(
     if not all_terms:
         return spark.createDataFrame([], empty_schema)
 
-    # 2. global term stats → idf (see _term_dfs_cached)
-    vals = _term_dfs_cached(spark, index_dir, stats, all_terms)
+    # 2. global term stats → idf (see _term_dfs_cached). A local index
+    # read with top-k and no allowed-id relation takes the driver-local
+    # plane (_search_local) unless its kill-list is past the driver ceiling
+    local_root = (
+        fs.local_path(index_dir, spark)
+        if k is not None and include_doc_ids is None
+        else None
+    )
+    vals = _term_dfs_cached(spark, index_dir, stats, all_terms, local_root)
     idfs = {
         t: idf_fn(v, float(n_docs)) for t, v in vals.items() if v >= 0.0
     }
@@ -708,6 +877,10 @@ def _search_broadcast(
     # once per executor and scales to very large query batches.
     dps = stats["docs_per_shard"]
     excl, excl_rel = _excl_plan(exclude_doc_ids, dps)
+    if local_root is not None and excl_rel is None:
+        return _search_local(
+            spark, local_root, stats, qmap, idfs, present, k, excl
+        )
     bc = spark.sparkContext.broadcast((qmap, idfs, excl))
     # only (shard, term, postings): df/cf and any positions stream stay
     # out of the scan, the Arrow transfer, and the grouping exchange

@@ -68,3 +68,26 @@ def test_cached_filesystem_checksums_untouched(spark, tmp_path):
         "JVM-cached FileSystem lost its write-checksum setting — a helper "
         "mutated the shared instance"
     )
+
+
+def test_local_path_resolution(spark, tmp_path):
+    """local_path maps a path to an OS path only when it resolves to the
+    ``file`` scheme: a plain path follows ``fs.defaultFS`` like every other
+    helper, so under an hdfs:// default it is not local."""
+    d = str(tmp_path / "idx")
+    assert fs.local_path(d, spark) == d
+    assert fs.local_path("file://" + d, spark) == d
+    assert fs.local_path("hdfs://namenode:8020" + d, spark) is None
+
+    conf = spark._jsc.hadoopConfiguration()
+    prev = conf.get("fs.defaultFS")
+    conf.set("fs.defaultFS", "hdfs://namenode:8020")
+    try:
+        assert fs.local_path(d, spark) is None
+        assert fs.local_path("file://" + d, spark) == d
+    finally:
+        if prev is None:
+            conf.unset("fs.defaultFS")
+        else:
+            conf.set("fs.defaultFS", prev)
+    assert fs.local_path(d, spark) == d

@@ -3,9 +3,13 @@
 ``corpus.synth_corpus`` has a ~440-word vocabulary, so every term sits in a
 fifth of the documents. The generator's corpus has Zipf-drawn identifiers:
 most terms occur in one or two files, a few keywords in nearly all. On it,
-both query planes of both global layouts must return the oracle's top-k
+every query plane of both global layouts must return the oracle's top-k
 (doc_id and rank equal, score within 1e-9, (score DESC, doc_id ASC)
 tie-break), and global/ must hold exactly the per-term sums of shards/.
+
+The planes: ``query_mode="broadcast"`` on a local index is the driver-local
+plane; the Spark broadcast plane is forced by making ``fs.local_path``
+report no local path; ``query_mode="distributed"`` is the third.
 """
 
 from __future__ import annotations
@@ -21,6 +25,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from perfbench.gen import CodeCorpus  # noqa: E402
 
 from dense_retriever_spark.corpus import ingest  # noqa: E402
+from dense_retriever_spark.index import fs  # noqa: E402
+from dense_retriever_spark.index import search as search_mod  # noqa: E402
 from dense_retriever_spark.index.build import IndexPaths, build_index  # noqa: E402
 from dense_retriever_spark.index.search import (  # noqa: E402
     global_term_stats,
@@ -69,6 +75,44 @@ def oracle(long_tail):
     ).collect()
 
 
+@pytest.fixture(scope="module")
+def full_oracle(long_tail):
+    """The oracle's whole ranking (k = corpus size): every match present,
+    so a tombstoned ranking is this one with the killed docs removed."""
+    corpus, queries = long_tail
+    return bm25_exact_topk(
+        tokenize_corpus(corpus), queries, k=N_FILES
+    ).collect()
+
+
+def _masked(rows, keep, k):
+    """``rows`` without the docs ``keep`` rejects, cut to k and re-ranked."""
+    out = []
+    for qid, ranked in _by_query(rows, N_FILES).items():
+        kept = [(d, s) for d, _, s in ranked if keep(d)][:k]
+        out += [
+            {"query_id": qid, "doc_id": d, "score": s, "rank": i + 1}
+            for i, (d, s) in enumerate(kept)
+        ]
+    return out
+
+
+def _assert_matches_oracle(got_rows, oracle_rows, k):
+    got, want = _by_query(got_rows, k), _by_query(oracle_rows, k)
+    assert set(got) == set(want), (k, set(got) ^ set(want))
+    for qid, w in want.items():
+        g = got[qid]
+        assert [(d, r) for d, r, _ in g] == [(d, r) for d, r, _ in w], (
+            k, qid, g, w,
+        )
+        for (_, _, gs), (_, _, ws) in zip(g, w):
+            assert abs(gs - ws) <= 1e-9 * max(1.0, abs(ws)), (k, qid)
+
+
+def _rows(df):
+    return sorted(map(tuple, df.collect()))
+
+
 def _by_query(rows, k):
     out = {}
     for r in sorted(rows, key=lambda r: (r["query_id"], r["rank"])):
@@ -86,20 +130,77 @@ def test_search_rank_identical_to_oracle(
 ):
     _, queries = long_tail
     for k in KS:
-        got = _by_query(
-            search(spark, indexes[layout], queries, k=k,
-                   query_mode=query_mode).collect(),
-            k,
+        got = search(spark, indexes[layout], queries, k=k,
+                     query_mode=query_mode).collect()
+        _assert_matches_oracle(got, oracle, k)
+
+
+@pytest.mark.parametrize("layout", LAYOUTS)
+def test_local_plane_bit_identical_to_spark_planes(
+    spark, long_tail, indexes, layout, monkeypatch
+):
+    """The driver-local plane, the Spark broadcast plane and the
+    distributed plane run the same scorer and the same tie-break, so their
+    results are equal bit for bit, not only rank-identical."""
+    _, queries = long_tail
+    d = indexes[layout]
+    for k in KS:
+        search_mod._term_df_cache_clear()
+        local = _rows(search(spark, d, queries, k=k))
+        dist = _rows(search(spark, d, queries, k=k,
+                            query_mode="distributed"))
+        with monkeypatch.context() as m:
+            m.setattr(fs, "local_path", lambda *a, **kw: None)
+            search_mod._term_df_cache_clear()
+            spark_bc = _rows(search(spark, d, queries, k=k))
+        assert local == spark_bc == dist and len(local) > 0, k
+
+
+@pytest.mark.parametrize("layout", LAYOUTS)
+def test_local_plane_tombstones(
+    spark, long_tail, indexes, full_oracle, layout, monkeypatch
+):
+    """A kill-list below the driver ceiling keeps the local plane: the
+    killed docs are masked before each shard's top-k, so the result is the
+    oracle's ranking with them removed — and equal to both Spark planes."""
+    corpus, queries = long_tail
+    d = indexes[layout]
+    kill = corpus.filter(F.col("doc_id") % 4 == 1).select("doc_id")
+    for k in KS:
+        search_mod._term_df_cache_clear()
+        local = search(spark, d, queries, k=k, exclude_doc_ids=kill).collect()
+        _assert_matches_oracle(
+            local, _masked(full_oracle, lambda x: x % 4 != 1, k), k
         )
-        want = _by_query(oracle, k)
-        assert set(got) == set(want), (k, set(got) ^ set(want))
-        for qid, w in want.items():
-            g = got[qid]
-            assert [(d, r) for d, r, _ in g] == [(d, r) for d, r, _ in w], (
-                k, qid, g, w,
-            )
-            for (_, _, gs), (_, _, ws) in zip(g, w):
-                assert abs(gs - ws) <= 1e-9 * max(1.0, abs(ws)), (k, qid)
+        dist = _rows(search(spark, d, queries, k=k, exclude_doc_ids=kill,
+                            query_mode="distributed"))
+        with monkeypatch.context() as m:
+            m.setattr(fs, "local_path", lambda *a, **kw: None)
+            search_mod._term_df_cache_clear()
+            spark_bc = _rows(search(spark, d, queries, k=k,
+                                    exclude_doc_ids=kill))
+        assert sorted(map(tuple, local)) == spark_bc == dist, k
+
+
+def test_single_query_runs_one_spark_job(spark, long_tail, indexes):
+    """A cold single-query search on a local index runs exactly one Spark
+    job (collecting the query's tokens): the term dictionary and the
+    postings are read on the driver and the result is a local relation."""
+    _, queries = long_tail
+    text = queries.orderBy("query_id").first()["query"]
+    one = spark.createDataFrame([(7, text)], "query_id long, query string")
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    for layout in LAYOUTS:
+        search_mod._term_df_cache_clear()
+        group = f"one_query_{layout}"
+        sc.setJobGroup(group, group)
+        try:
+            rows = search(spark, indexes[layout], one, k=10).collect()
+        finally:
+            sc.setJobGroup(None, None)
+        assert len(tracker.getJobIdsForGroup(group)) == 1, layout
+        assert len(rows) > 0 and {r["query_id"] for r in rows} == {7}
 
 
 @pytest.mark.parametrize("layout", LAYOUTS)

@@ -79,9 +79,13 @@ def test_broadcast_plane_term_semijoin_above_limit(spark, tmp_path,
     """Above TERM_ISIN_LIMIT the broadcast plane must prune its index scans
     with a broadcast left-semi join, not a query-term IN-literal (a 500k-term
     IN is a megabyte-scale plan compiled per search — round-4 verdict); below
-    the limit the IN-literal stays (it reaches parquet as PushedFilters)."""
+    the limit the IN-literal stays (it reaches parquet as PushedFilters).
+    The Spark broadcast plane is forced by making ``fs.local_path`` report
+    no local path: on a local index the driver-local plane would answer,
+    and its result has no index scan in its plan."""
     import dense_retriever_spark.index.search as search_mod
     from dense_retriever_spark.corpus import ingest, synth_corpus, synth_queries
+    from dense_retriever_spark.index import fs
     from dense_retriever_spark.index.build import build_index
     from dense_retriever_spark.index.search import search
     from dense_retriever_spark.plans import physical_plan
@@ -90,6 +94,7 @@ def test_broadcast_plane_term_semijoin_above_limit(spark, tmp_path,
     build_index(ingest(synth_corpus(spark, 120)), d, docs_per_shard=64,
                 term_buckets=2)
     qs = synth_queries(spark, 5)
+    monkeypatch.setattr(fs, "local_path", lambda *a, **kw: None)
 
     monkeypatch.setattr(search_mod, "TERM_ISIN_LIMIT", 1)
     plan = physical_plan(search(spark, d, qs, k=5, eager=False))

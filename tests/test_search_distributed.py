@@ -160,13 +160,20 @@ def test_tombstones_past_ceiling_stay_distributed(
             assert got == expected and len(got) > 0, (mode, kw.keys())
 
 
-def test_term_df_cache_amortizes_stats_job(spark, tmp_path):
+def test_term_df_cache_amortizes_stats_job(spark, tmp_path, monkeypatch):
     """Broadcast plane: the second search against the same build must (a)
-    return bit-identical results and (b) run one fewer Spark job (the
-    global-stats lookup is served from the per-build term→df cache, keyed
-    on stats.json content so a rebuild invalidates it)."""
+    return bit-identical results and (b) not re-read the global stats (the
+    lookup is served from the per-build term→df cache, keyed on stats.json
+    content so a rebuild invalidates it).
+
+    On the Spark broadcast plane (forced by making ``fs.local_path`` report
+    no local path) the saved read is a Spark job, so the warm call runs one
+    job fewer. On the driver-local plane both calls run exactly one job
+    (the query tokenizer) and the saving shows as the local df reader not
+    being called again."""
     import dense_retriever_spark.index.search as search_mod
     from dense_retriever_spark.corpus import ingest, synth_corpus, synth_queries
+    from dense_retriever_spark.index import fs
     from dense_retriever_spark.index.build import build_index
     from dense_retriever_spark.index.search import search
 
@@ -174,7 +181,6 @@ def test_term_df_cache_amortizes_stats_job(spark, tmp_path):
     build_index(ingest(synth_corpus(spark, 150)), d, docs_per_shard=64,
                 term_buckets=2)
     qs = synth_queries(spark, 8)
-    search_mod._term_df_cache_clear()
     sc = spark.sparkContext
     tracker = sc.statusTracker()
 
@@ -189,24 +195,42 @@ def test_term_df_cache_amortizes_stats_job(spark, tmp_path):
             sc.setJobGroup(None, None)
         return out, len(tracker.getJobIdsForGroup(group))
 
-    cold, j_cold = jobs_in(
-        "tdf_cold", lambda: sorted(map(tuple, search(spark, d, qs, k=5).collect()))
-    )
-    warm, j_warm = jobs_in(
-        "tdf_warm", lambda: sorted(map(tuple, search(spark, d, qs, k=5).collect()))
-    )
+    def run(group, index_dir):
+        return jobs_in(group, lambda: sorted(map(tuple, search(
+            spark, index_dir, qs, k=5
+        ).collect())))
+
+    # driver-local plane: one job per call, cold or warm
+    reads = []
+    real_reader = search_mod._local_term_dfs
+
+    def counting_reader(*a, **kw):
+        reads.append(a[2])
+        return real_reader(*a, **kw)
+
+    monkeypatch.setattr(search_mod, "_local_term_dfs", counting_reader)
+    search_mod._term_df_cache_clear()
+    local_cold, jl_cold = run("tdf_local_cold", d)
+    local_warm, jl_warm = run("tdf_local_warm", d)
+    assert local_warm == local_cold and len(local_cold) > 0
+    assert (jl_cold, jl_warm) == (1, 1)
+    assert len(reads) == 1  # the warm call did not re-read global/
+
+    # Spark broadcast plane: the cache saves the stats job
+    monkeypatch.setattr(fs, "local_path", lambda *a, **kw: None)
+    search_mod._term_df_cache_clear()
+    cold, j_cold = run("tdf_cold", d)
+    warm, j_warm = run("tdf_warm", d)
     assert warm == cold and len(cold) > 0
     assert j_warm < j_cold, (j_cold, j_warm)
+    assert cold == local_cold  # both planes, bit for bit
+    assert len(reads) == 1  # the Spark plane never uses the local reader
 
     # rebuild → new stats.json (phase timings differ) → cache key changes,
     # the stats job runs again (no stale df served across builds)
     build_index(ingest(synth_corpus(spark, 150)), str(tmp_path / "idx2"),
                 docs_per_shard=64, term_buckets=2)
-    again, j_again = jobs_in(
-        "tdf_rebuilt", lambda: sorted(map(tuple, search(
-            spark, str(tmp_path / "idx2"), qs, k=5
-        ).collect()))
-    )
+    again, j_again = run("tdf_rebuilt", str(tmp_path / "idx2"))
     assert again == cold  # same corpus content → same results
     assert j_again > j_warm  # cold job count again: cache not reused
 
