@@ -231,13 +231,13 @@ def _fingerprint_df(staged: DataFrame) -> DataFrame:
 
 # --- phase A: per-shard postings (tokenize inside the group) ------------------
 
-def _build_shard_from_content(pdf: pd.DataFrame):
+def _build_shard_from_content(pdf: pd.DataFrame) -> pd.DataFrame:
     """Single-arg applyInPandas wrapper (two params would make Spark treat
     the function as the (key, pdf) grouped-map form)."""
     return _build_shard_rows(pdf, False)
 
 
-def _build_shard_from_content_positional(pdf: pd.DataFrame):
+def _build_shard_from_content_positional(pdf: pd.DataFrame) -> pd.DataFrame:
     return _build_shard_rows(pdf, True)
 
 
@@ -252,7 +252,7 @@ def _make_shard_builder(positions: bool, stopwords):
             else _build_shard_from_content
         )
 
-    def _f(pdf: pd.DataFrame):
+    def _f(pdf: pd.DataFrame) -> pd.DataFrame:
         return _build_shard_rows(pdf, positions, stopwords)
 
     return _f

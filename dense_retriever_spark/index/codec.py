@@ -12,7 +12,17 @@ or 'import' can exceed 2^32 occurrences.
 Varbyte: 7 payload bits per byte, least-significant group first, MSB set on the
 TERMINAL byte of each value (classic v-byte). Encode/decode are O(total_bytes)
 numpy array ops — the per-value loop is over byte-position (≤ 10 iterations),
-never over values.
+never over values. Decode ORs each value's 7-bit groups into place (disjoint
+bits, so the OR is the exact integer value).
+
+Decoding is batched: ``decode_postings_batch`` reads the headers of many
+blobs as one (m, 4) u64 array, gathers the payload bytes of every blob into
+one buffer and decodes them in ONE v-byte pass (a stream always ends on a
+terminal byte, so values never straddle streams or blobs), then rebuilds
+doc ids with a segmented cumsum. A shard's scorer decodes all of its rows in
+one call; ``decode_postings`` is the same kernel on a one-blob list. Per-blob
+Python and numpy call overhead, not the byte work, was the cost of decoding
+a long tail of short lists one blob at a time.
 
 Reference analog: the reference stores postings implicitly inside FAISS's
 binary index file (/root/reference/dense_retriever/transforms/ann_index.py:103-107);
@@ -79,19 +89,26 @@ def varbyte_encode(values: np.ndarray) -> bytes:
 def varbyte_decode(buf: bytes | np.ndarray) -> np.ndarray:
     """Vectorized v-byte decode → uint64 array."""
     b = np.frombuffer(buf, dtype=np.uint8) if isinstance(buf, (bytes, bytearray)) else buf
-    if b.size == 0:
+    return _varbyte_values(b, np.flatnonzero(b >= 0x80))
+
+
+def _varbyte_values(b: np.ndarray, ends: np.ndarray) -> np.ndarray:
+    """v-byte values of ``b`` given the index of every terminal byte."""
+    if ends.size == 0:
         return np.empty(0, dtype=np.uint64)
-    term = (b & 0x80) != 0
-    # group id of each byte: 0-based index of the value it belongs to
-    gid = np.zeros(b.size, dtype=np.int64)
-    gid[1:] = np.cumsum(term[:-1])
-    n_vals = int(term.sum())
-    # position of byte within its group
-    group_starts = np.flatnonzero(np.r_[True, term[:-1]])
-    pos = np.arange(b.size, dtype=np.int64) - group_starts[gid]
-    vals = np.zeros(n_vals, dtype=np.uint64)
-    payload = (b & np.uint8(0x7F)).astype(np.uint64) << (7 * pos).astype(np.uint64)
-    np.add.at(vals, gid, payload)
+    starts = np.empty_like(ends)
+    starts[0] = 0
+    starts[1:] = ends[:-1] + 1
+    payload = (b & np.uint8(0x7F)).astype(np.uint64)
+    vals = payload[starts]
+    # OR in byte k of every value longer than k bytes (≤ 9 rounds)
+    todo = np.flatnonzero(ends > starts)
+    k = 1
+    while todo.size:
+        at = starts[todo] + k
+        vals[todo] |= payload[at] << np.uint64(7 * k)
+        todo = todo[ends[todo] > at]
+        k += 1
     return vals
 
 
@@ -112,15 +129,55 @@ def encode_postings(doc_ids: np.ndarray, tfs: np.ndarray, dls: np.ndarray) -> by
 HEADER_BYTES = 32  # 4 × u64
 
 
+def decode_postings_batch(
+    blobs: list[bytes],
+) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
+    """Decode many posting blobs at once → (counts, doc_ids, tfs, dls).
+
+    ``counts[i]`` is blob i's posting count; the other three are int64 and
+    hold every blob's postings concatenated in input order (blob i's slice
+    starts at ``cumsum(counts)[i] - counts[i]``), each blob's doc ids sorted
+    ascending. Equal to ``decode_postings`` on each blob, concatenated."""
+    m = len(blobs)
+    if m == 0:
+        return tuple(np.empty(0, dtype=np.int64) for _ in range(4))
+    heads = b"".join([x[:HEADER_BYTES] for x in blobs])
+    if len(heads) != m * HEADER_BYTES:
+        raise ValueError("posting blob shorter than its header")
+    hdr = np.frombuffer(heads, dtype="<u8").reshape(m, 4).astype(np.int64)
+    payload = np.frombuffer(
+        b"".join([x[HEADER_BYTES:] for x in blobs]), dtype=np.uint8
+    )
+    counts = hdr[:, 0]
+    streams = hdr[:, 1:].ravel()  # byte length of every (blob, stream)
+    sizes = np.fromiter(map(len, blobs), dtype=np.int64, count=m)
+    terminal = np.flatnonzero(payload >= 0x80)
+    ends = np.cumsum(streams)
+    n_upto = np.cumsum(np.repeat(counts, 3))
+    # every blob is exactly its header's lengths, and every (blob, stream)
+    # holds n values and ends on a terminal byte
+    if (
+        (hdr[:, 1:].sum(axis=1) != sizes - HEADER_BYTES).any()
+        or (np.searchsorted(terminal, ends) != n_upto).any()
+        or not (payload[ends[streams > 0] - 1] >= 0x80).all()
+    ):
+        raise ValueError("posting blob streams disagree with their headers")
+    vals = _varbyte_values(payload, terminal).astype(np.int64)
+    # blob i's values are [ids | tfs | dls], n_i each, from 3 * first_i on
+    first = np.cumsum(counts) - counts
+    at = np.repeat(2 * first, counts) + np.arange(vals.size // 3)
+    n_rep = np.repeat(counts, counts)
+    deltas, tfs, dls = vals[at], vals[at + n_rep], vals[at + 2 * n_rep]
+    # segmented cumsum of the deltas: each blob's first id is absolute
+    # (int64 wraps, so the subtraction is exact past any overflow)
+    c = np.concatenate([[0], np.cumsum(deltas)])
+    doc_ids = c[1:] - np.repeat(c[first], counts)
+    return counts, doc_ids, tfs, dls
+
+
 def decode_postings(blob: bytes) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """→ (doc_ids int64 sorted, tfs int64, dls int64)."""
-    n, l1, l2, l3 = struct.unpack_from("<QQQQ", blob, 0)
-    o = HEADER_BYTES
-    deltas = varbyte_decode(blob[o : o + l1]).astype(np.int64)
-    tfs = varbyte_decode(blob[o + l1 : o + l1 + l2]).astype(np.int64)
-    dls = varbyte_decode(blob[o + l1 + l2 : o + l1 + l2 + l3]).astype(np.int64)
-    doc_ids = np.cumsum(deltas)
-    assert doc_ids.size == n and tfs.size == n and dls.size == n
+    _counts, doc_ids, tfs, dls = decode_postings_batch([blob])
     return doc_ids, tfs, dls
 
 

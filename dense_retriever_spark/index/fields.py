@@ -62,7 +62,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dense_retriever_spark.index.build import IndexPaths
-from dense_retriever_spark.index.codec import decode_postings
+from dense_retriever_spark.index.codec import decode_postings_batch
 from dense_retriever_spark.index.search import (
     MATCHES_SCHEMA,
     RESULT_SCHEMA,
@@ -114,11 +114,22 @@ def _score_shard_fields(
     masked = shard_excl is not None or incl is not None
     decoded: dict[tuple[int, str], tuple] = {}
     contribs: dict[tuple[int, str], np.ndarray] = {}
-    for r in pdf.itertuples(index=False):  # one iteration per (src, term)
-        di = int(r.src)
-        if r.term not in dir_idfs[di]:
-            continue
-        ids, tfs, dls = decode_postings(r.postings)
+    srcs = pdf["src"].astype(int).tolist()
+    terms = pdf["term"].tolist()
+    wanted = [
+        i for i, (di, t) in enumerate(zip(srcs, terms)) if t in dir_idfs[di]
+    ]
+    counts, all_ids, all_tfs, all_dls = decode_postings_batch(
+        pdf["postings"].iloc[wanted].tolist()
+    )
+    cuts = np.cumsum(counts)[:-1]
+    for r, ids, tfs, dls in zip(  # one iteration per (src, term)
+        wanted,
+        np.split(all_ids, cuts),
+        np.split(all_tfs, cuts),
+        np.split(all_dls, cuts),
+    ):
+        di, term = srcs[r], terms[r]
         if shard_excl is not None:
             keep = ~np.isin(ids, shard_excl, assume_unique=True)
             ids, tfs, dls = ids[keep], tfs[keep], dls[keep]
@@ -127,7 +138,7 @@ def _score_shard_fields(
             ids, tfs, dls = ids[keep], tfs[keep], dls[keep]
         if masked and ids.size == 0:
             continue
-        decoded[(di, r.term)] = (ids, tfs, dls)
+        decoded[(di, term)] = (ids, tfs, dls)
 
     def contrib_of(di: int, t: str) -> np.ndarray:
         key = (di, t)

@@ -64,12 +64,8 @@ from pyspark.sql import functions as F
 from dense_retriever_spark.functions.tokenizer import tokenize_code_expr
 from dense_retriever_spark.index import fs
 from dense_retriever_spark.index.build import IndexPaths
-from dense_retriever_spark.index.codec import decode_postings
-from dense_retriever_spark.index.wand import (
-    _contrib,
-    idf as idf_fn,
-    score_query_exact,
-)
+from dense_retriever_spark.index.codec import decode_postings_batch
+from dense_retriever_spark.index.wand import _contrib, idf as idf_fn
 from dense_retriever_spark.operators.topk import topk_per_group
 
 RESULT_SCHEMA = "query_id long, doc_id long, score double, rank int"
@@ -97,6 +93,12 @@ TERM_FILTER_LIMIT = 1_000_000
 #: microbench's tiny scan undervalues) for genuinely small interactive
 #: sets only.
 TERM_ISIN_LIMIT = 512
+
+#: _score_shard scores a batch's signatures in chunks of about this many
+#: dense accumulator cells (signatures × docs_per_shard) plus (signature,
+#: posting) entries: a few tens of bytes each, so one chunk's working set
+#: stays under ~0.1 GB at any batch size.
+_SCORE_CHUNK_CELLS = 1 << 21
 
 #: driver-side (index-build, term) → df cache for the broadcast plane: the
 #: reference loads its index once and serves every query from it; the Spark
@@ -213,6 +215,13 @@ def load_stats(index_dir: str) -> dict:
     return stats
 
 
+def _ragged_arange(lens: np.ndarray) -> np.ndarray:
+    """Concatenated ``arange(l)`` for every ``l`` in ``lens``."""
+    ends = np.cumsum(lens)
+    total = int(ends[-1]) if ends.size else 0
+    return np.arange(total, dtype=np.int64) - np.repeat(ends - lens, lens)
+
+
 def _score_shard(
     pdf: pd.DataFrame,
     queries: dict[int, list[str]],
@@ -238,81 +247,134 @@ def _score_shard(
     without decoding — distributed query mode may feed the unfiltered shard
     scan when the query-term set is too large to broadcast-prefilter.
 
-    Scorer (round 8, MEASURED): the EXACT dense-accumulator path with
-    per-term contribution caching. A vectorized block-max (WAND-family)
-    pass scatter-adds every posting's block bound, so once contributions
-    are cached and shared across the batch it does strictly MORE work —
-    microbenched 2.6–5.4× slower across dense/sparse/skewed posting mixes,
-    19.0 s → 7.1 s on the 5k-query distributed batch and 2.3 s → 1.65 s on
-    the 100-query broadcast batch at sf0.1. Index format v3 therefore
-    stores no block metadata and there is no pruned scorer.
+    The whole batch is scored in a few numpy passes, not one scorer call per
+    query:
+
+    1. the wanted rows are decoded in ONE ``decode_postings_batch`` call and
+       masked, and each posting's BM25 contribution is computed once over
+       the flat arrays (the elementwise ``wand._contrib`` expression, so the
+       floats equal ``score_query_exact``'s);
+    2. queries whose shard-present term lists are identical share one
+       signature and are scored once;
+    3. every (signature, term position j, posting) triple adds its
+       contribution at key = (signature, local doc) of a dense
+       signatures × docs_per_shard accumulator, with one ``acc[key] += c``
+       pass per term position j, ascending. A doc occurs at most once in a
+       term's postings, so a key occurs at most once per pass, and each
+       doc's sum is (((0 + c_t1) + c_t2) + ...) over its terms in the
+       query's sorted-term order: the exact float order of the per-query
+       accumulator ``score_query_exact``, which stays as the reference the
+       tests compare against. A float reduction over each key's terms
+       (``np.add.reduceat``, ``np.sum``) would not keep that order, because
+       numpy sums pairwise;
+    4. a row-wise ``np.partition`` finds each signature's k-th best score;
+       the touched cells at or above it (ties kept) go through one
+       ``lexsort((doc_id, -score, signature))`` and a rank cut at ``k``:
+       every signature's top-k by (score DESC, doc_id ASC).
+
+    Signatures are scored in chunks of about ``_SCORE_CHUNK_CELLS``
+    accumulator cells plus entries, so a large batch (100k queries at
+    docs_per_shard=2048) never allocates signatures × docs_per_shard floats
+    at once.
+
+    There is no block-max (WAND-family) pruning: with per-term
+    contributions shared across the batch it touched every posting anyway
+    and measured 2.6–5.4× slower than the exact scorer (round 8), so index
+    format v3 stores no block metadata.
     """
+    cols = ["query_id", "doc_id", "score", "rank"]
     if len(pdf) == 0:
-        return pd.DataFrame(columns=["query_id", "doc_id", "score", "rank"])
-    shard = int(pdf["shard"].iloc[0])
-    base = shard * docs_per_shard
-    shard_excl = None
+        return pd.DataFrame(columns=cols)
+    dps = docs_per_shard
+    base = int(pdf["shard"].iloc[0]) * dps
+    asked = np.fromiter((t in idfs for t in pdf["term"]), bool, len(pdf))
+    rows = pdf[asked]
+    terms = rows["term"].tolist()
+    counts, ids, tfs, dls = decode_postings_batch(rows["postings"].tolist())
+    keep = None
     if excl is not None and excl.size:
-        lo, hi = np.searchsorted(excl, [base, base + docs_per_shard])
-        shard_excl = excl[lo:hi]
-        if shard_excl.size == 0:
-            shard_excl = None
-    decoded: dict[str, tuple] = {}
-    masked = shard_excl is not None or incl is not None
-    for r in pdf.itertuples(index=False):  # one iteration per TERM, not per row
-        if r.term not in idfs:
-            continue
-        ids, tfs, dls = decode_postings(r.postings)
-        if shard_excl is not None:
-            keep = ~np.isin(ids, shard_excl, assume_unique=True)
-            ids, tfs, dls = ids[keep], tfs[keep], dls[keep]
-        if incl is not None and ids.size:
-            keep = np.isin(ids, incl, assume_unique=True)
-            ids, tfs, dls = ids[keep], tfs[keep], dls[keep]
-        if masked and ids.size == 0:
-            continue
-        decoded[r.term] = (ids, tfs, dls)
-    # BATCH amortization (round 8): per-term work is hoisted out of the
-    # query loop — (a) queries with IDENTICAL shard-present term lists are
-    # scored once (large batches over a shared vocabulary repeat term sets
-    # constantly; identical inputs give identical outputs), and (b) each
-    # term's BM25 contribution is computed once per shard and shared across
-    # every query touching the term (elementwise arrays — bit-identical to
-    # the per-query computation).
-    by_sig: dict[tuple[str, ...], list[int]] = {}
-    for qid, terms in queries.items():
-        sig = tuple(t for t in terms if t in decoded)
+        lo, hi = np.searchsorted(excl, [base, base + dps])
+        if hi > lo:
+            keep = ~np.isin(ids, excl[lo:hi])
+    if incl is not None:
+        allowed = np.isin(ids, incl)
+        keep = allowed if keep is None else keep & allowed
+    if keep is not None:
+        row_of = np.repeat(np.arange(len(terms)), counts)
+        ids, tfs, dls = ids[keep], tfs[keep], dls[keep]
+        counts = np.bincount(row_of[keep], minlength=len(terms))
+    term_idf = np.array([idfs[t] for t in terms], dtype=np.float64)
+    contrib = _contrib(np.repeat(term_idf, counts), tfs, dls, k1, b, avgdl)
+    lidx = ids - base
+    first = np.cumsum(counts) - counts
+    # a term with no (unmasked) postings scores nothing: leave it out
+    row_ix = {t: i for i, t in enumerate(terms) if counts[i]}
+    by_sig: dict[tuple[int, ...], list[int]] = {}
+    for qid, qterms in queries.items():
+        sig = tuple(row_ix[t] for t in qterms if t in row_ix)
         if sig:
             by_sig.setdefault(sig, []).append(qid)
-    contribs: dict[str, np.ndarray] = {}
-
-    def _contrib_of(t: str) -> np.ndarray:
-        c = contribs.get(t)
-        if c is None:
-            ids, tf, dl = decoded[t]
-            c = contribs[t] = _contrib(idfs[t], tf, dl, k1, b, avgdl)
-        return c
-
-    out_q, out_d, out_s = [], [], []
-    for sig, qids in by_sig.items():
-        term_rows = [(t, idfs[t], *decoded[t]) for t in sig]
-        contrib_rows = [_contrib_of(t) for t in sig]
-        scores, doc_ids = score_query_exact(
-            term_rows, base, docs_per_shard, k, k1, b, avgdl,
-            contrib_rows=contrib_rows,
-        )
-        for qid in qids:
-            out_q.append(np.full(scores.size, qid, dtype=np.int64))
-            out_d.append(doc_ids)
-            out_s.append(scores)
-    if not out_q:
-        return pd.DataFrame(columns=["query_id", "doc_id", "score", "rank"])
+    if not by_sig:
+        return pd.DataFrame(columns=cols)
+    n_sig = len(by_sig)
+    sig_len = np.fromiter(map(len, by_sig), dtype=np.int64, count=n_sig)
+    ent_end = np.cumsum(sig_len)
+    ent_row = np.fromiter(
+        (i for sig in by_sig for i in sig), dtype=np.int64, count=ent_end[-1]
+    )
+    ent_sig = np.repeat(np.arange(n_sig), sig_len)
+    ent_pos = _ragged_arange(sig_len)
+    ent_n = counts[ent_row]
+    # chunk boundaries: every ~_SCORE_CHUNK_CELLS cells plus entries
+    weight = np.cumsum(dps + np.add.reduceat(ent_n, ent_end - sig_len))
+    cuts = np.flatnonzero(np.diff(weight // _SCORE_CHUNK_CELLS)) + 1
+    sig_bounds = np.r_[0, cuts, n_sig]
+    out_sig, out_doc, out_score = [], [], []
+    for s0, s1 in zip(sig_bounds[:-1], sig_bounds[1:]):
+        e0, e1 = ent_end[s0] - sig_len[s0], ent_end[s1 - 1]
+        # entries ordered by term position: pass j is one contiguous slice
+        order = e0 + np.argsort(ent_pos[e0:e1], kind="stable")
+        n = ent_n[order]
+        post = np.repeat(first[ent_row[order]], n) + _ragged_arange(n)
+        key = np.repeat((ent_sig[order] - s0) * dps, n) + lidx[post]
+        pass_end = np.cumsum(np.bincount(ent_pos[order], weights=n))
+        acc = np.zeros((s1 - s0, dps), dtype=np.float64)
+        touched = np.zeros(acc.shape, dtype=bool)
+        flat_acc, flat_touched = acc.reshape(-1), touched.reshape(-1)
+        lo = 0
+        for hi in pass_end.astype(np.int64).tolist():
+            flat_acc[key[lo:hi]] += contrib[post[lo:hi]]
+            flat_touched[key[lo:hi]] = True
+            lo = hi
+        if k < dps:  # keep each signature's k best cells and their ties
+            kth = -np.partition(-acc, k - 1, axis=1)[:, k - 1]
+            touched &= acc >= kth[:, None]
+        hit = np.flatnonzero(flat_touched)
+        h_sig, h_doc = np.divmod(hit, dps)
+        score = flat_acc[hit]
+        top = np.lexsort((h_doc, -score, h_sig))
+        h_sig, h_doc, score = h_sig[top], h_doc[top], score[top]
+        run = np.r_[0, np.flatnonzero(np.diff(h_sig)) + 1]
+        cut = _ragged_arange(np.diff(np.r_[run, h_sig.size])) < k
+        out_sig.append(h_sig[cut] + s0)
+        out_doc.append(h_doc[cut] + base)
+        out_score.append(score[cut])
+    sig = np.concatenate(out_sig)
+    # every row of a signature, once per query id sharing it
+    q_n = np.fromiter(map(len, by_sig.values()), dtype=np.int64, count=n_sig)
+    q_ids = np.fromiter(
+        (q for qs in by_sig.values() for q in qs), dtype=np.int64,
+        count=int(q_n.sum()),
+    )
+    rep = q_n[sig]
+    row = np.repeat(np.arange(sig.size), rep)
+    q_at = np.repeat((np.cumsum(q_n) - q_n)[sig], rep) + _ragged_arange(rep)
     return pd.DataFrame(
         {
-            "query_id": np.concatenate(out_q),
-            "doc_id": np.concatenate(out_d),
-            "score": np.concatenate(out_s),
-            "rank": np.zeros(sum(x.size for x in out_q), dtype=np.int32),
+            "query_id": q_ids[q_at],
+            "doc_id": np.concatenate(out_doc)[row],
+            "score": np.concatenate(out_score)[row],
+            "rank": np.zeros(row.size, dtype=np.int32),
         }
     )
 

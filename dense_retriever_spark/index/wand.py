@@ -1,13 +1,18 @@
-"""Shard-local BM25 top-k scoring (numpy, Arrow-batched — no per-row Python).
+"""Shard-local BM25 scoring primitives (numpy — no per-posting Python).
 
 Reference analog: ``index.search(query_embeddings, top_n)``
 (/root/reference/dense_retriever/transforms/ann_index.py:93-98) — exact
 brute-force top-n. Here the exact scorer walks only the postings of the query
 terms (sublinear in corpus size):
 
-- ``score_query_exact`` — dense float64 accumulator over the shard's doc
-  range; contributions added term-by-term in sorted-term order, so the float
-  summation order matches the oracle bit-for-bit (SURVEY.md §7.4).
+- ``_contrib`` — the per-posting BM25 contribution, elementwise, so it gives
+  the same floats over one term's postings or a whole shard's at once.
+- ``score_query_exact`` — ONE query: dense float64 accumulator over the
+  shard's doc range; contributions added term-by-term in sorted-term order,
+  so the float summation order matches the oracle bit-for-bit (SURVEY.md
+  §7.4). The search planes score a shard's whole batch with
+  ``search._score_shard`` instead, which keeps this summation order; this
+  function is the per-query reference its tests compare against bit for bit.
 - ``_exact_scores_sorted`` — the same sums for a chosen set of docs (the
   boolean planes' candidate rescoring).
 
@@ -34,7 +39,7 @@ def idf(df: float, n_docs: float) -> float:
     return math.log(1.0 + (n_docs - df + 0.5) / (df + 0.5))
 
 
-def _contrib(idf_t: float, tf: np.ndarray, dl: np.ndarray,
+def _contrib(idf_t: float | np.ndarray, tf: np.ndarray, dl: np.ndarray,
              k1: float, b: float, avgdl: float) -> np.ndarray:
     tf = tf.astype(np.float64)
     dl = dl.astype(np.float64)

@@ -219,3 +219,102 @@ def test_wide_query_adaptive_under_masks(spark, idx, tiny_corpus):
     _assert_rank_identical(
         got, _masked_oracle(tiny_corpus, qs, lambda d: d % 4 != 0)
     )
+
+
+def _shard_fixture():
+    """One shard (shard 3, 256 docs) of 14 terms with random postings, and
+    a query batch covering the batched scorer's cases: a query with 12
+    present terms (past numpy's 8-term pairwise-sum block, so a reordered
+    float sum shows), query ids sharing one term signature, a query whose
+    only term the masks remove, unasked rows and terms absent here."""
+    import numpy as np
+    import pandas as pd
+
+    from dense_retriever_spark.index.codec import encode_postings
+    from dense_retriever_spark.index.wand import idf
+
+    rng = np.random.default_rng(7)
+    dps, shard = 256, 3
+    base = shard * dps
+    terms = [f"t{i:02d}" for i in range(14)]
+    postings = {}
+    for i, t in enumerate(terms):
+        df = [200, 90, 40, 12, 3, 1][i % 6]
+        ids = np.sort(rng.choice(dps, size=df, replace=False)) + base
+        postings[t] = (
+            ids.astype(np.int64),
+            rng.integers(1, 9, df).astype(np.int64),
+            rng.integers(5, 4000, df).astype(np.int64),
+        )
+    masked_term = "t13"  # its docs: all excluded, none included
+    excl = np.sort(np.r_[postings[masked_term][0], base + np.arange(0, dps, 5)])
+    incl = np.setdiff1d(np.arange(base + 1, base + dps, 2), postings[masked_term][0])
+    rows = [(shard, t, encode_postings(*postings[t])) for t in terms]
+    rows.append((shard, "unasked", encode_postings(*postings["t00"])))
+    pdf = pd.DataFrame(rows, columns=["shard", "term", "postings"])
+    idfs = {t: idf(float(len(postings[t][0])), 5000.0) for t in terms}
+    idfs["absent"] = idf(3.0, 5000.0)
+    queries = {
+        0: sorted(terms[:12]),
+        1: ["t01", "t05"],
+        2: ["t01", "t05"],
+        7: ["absent", "t01", "t05"],
+        3: [masked_term],
+        4: ["absent"],
+        5: ["t02", "t03", "t04", masked_term],
+        6: ["t00"],
+    }
+    return pdf, queries, idfs, postings, dps, base, excl, incl
+
+
+@pytest.mark.parametrize("chunk_cells", [search_mod._SCORE_CHUNK_CELLS, 600])
+def test_score_shard_batch_equals_per_query_exact(monkeypatch, chunk_cells):
+    """The batched shard scorer equals wand.score_query_exact run per query
+    over the same masked postings, bit for bit: doc ids, their order (rank)
+    and the exact float scores, at k=1/10/50 and k=docs_per_shard (no
+    truncation) without a mask, with a kill-list, with an allowed-id list
+    and with both; in one chunk of signatures and in several."""
+    import numpy as np
+
+    from dense_retriever_spark.index import wand
+    from dense_retriever_spark.index.search import _score_shard
+
+    monkeypatch.setattr(search_mod, "_SCORE_CHUNK_CELLS", chunk_cells)
+    pdf, queries, idfs, postings, dps, base, excl, incl = _shard_fixture()
+    k1, b, avgdl = 1.2, 0.75, 731.5
+    for x, i in ((None, None), (excl, None), (None, incl), (excl, incl)):
+        for k in (1, 10, 50, dps):
+            out = _score_shard(pdf, queries, idfs, k, k1, b, avgdl, dps, x, i)
+            for qid, qterms in queries.items():
+                term_rows = []
+                for t in qterms:
+                    if t not in postings:
+                        continue
+                    ids, tfs, dls = postings[t]
+                    keep = np.ones(ids.size, dtype=bool)
+                    if x is not None:
+                        keep &= ~np.isin(ids, x)
+                    if i is not None:
+                        keep &= np.isin(ids, i)
+                    if keep.any():
+                        term_rows.append(
+                            (t, idfs[t], ids[keep], tfs[keep], dls[keep])
+                        )
+                want_s, want_d = (
+                    wand.score_query_exact(
+                        term_rows, base, dps, k, k1, b, avgdl
+                    )
+                    if term_rows
+                    else (np.empty(0), np.empty(0, np.int64))
+                )
+                got = out[out["query_id"] == qid]
+                assert got["doc_id"].tolist() == want_d.tolist(), (qid, k)
+                assert got["score"].tolist() == want_s.tolist(), (qid, k)
+            if x is not None or i is not None:
+                assert not (out["query_id"] == 3).any()
+    # the shared signature is scored once and emitted per query id
+    out = _score_shard(pdf, queries, idfs, 10, k1, b, avgdl, dps)
+    one = out[out["query_id"] == 1][["doc_id", "score"]].to_numpy()
+    for qid in (2, 7):
+        assert (out[out["query_id"] == qid][["doc_id", "score"]].to_numpy() == one).all()
+    assert len(queries[0]) >= 9 and (out["query_id"] == 0).sum() == 10
