@@ -28,13 +28,13 @@ local[$SPARK_GRAFT_CPUS]:
   q_search_bigbatch_dist — 5k queries on the distributed plane, median of 3
   q_stream_refresh_round — one drain→refresh→ack window: ~10k new docs
                      folded incrementally into the existing corpus index
-                     (the steady-state cost of the cron-driven deployment);
-                     runs the DEFAULT configuration = generational layout
-  q_compact_genned_range — compact a ~5% kill slice inside genned ranges:
-                     touched-shard rebuild + stale-gen stats re-aggregate
+                     (the steady-state cost of the cron-driven deployment)
+  q_compact_genned_range — compact a ~5% kill slice of the refresh index:
+                     touched-shard rebuild + (term, df, cf) re-aggregate
                      (the full compaction wave, O(touched), round 7)
-  q_stream_refresh_round_merged — the same window with the merged global
-                     layout (pre-round-7 default; O(index) phase B merge)
+  q_stream_refresh_round_merged — the same window in a second workdir
+                     (the name predates format v4, which has one global/
+                     layout; kept so old artifacts stay comparable)
   q_bm25_exact     — index-free exact BM25 (the oracle path) on documents
   q_dedup_minhash  — MinHash-LSH candidate pairs + Jaccard verify on documents
   q_cosine_topk    — brute-force cosine top-3 on embeddings
@@ -367,9 +367,7 @@ def main() -> None:
         "query_id as qid", "query as text"
     )
     rqrels = rq.select("qid", (F.col("qid") * 7 % 1000).alias("doc_id"))
-    # DEFAULT configuration — which as of round 7 is the GENERATIONAL
-    # global layout (refresh_rounds' default): the out-of-box steady-state
-    # window cost. The explicit 'merged' variant below is the comparison.
+    # DEFAULT configuration: the out-of-box steady-state window cost
     refresh_rounds(
         spark, [spark.read.parquet(stage_root + "/corpus")], rq, rqrels, wd,
         k=10, docs_per_shard=dps, dedup_exact=True,
@@ -392,13 +390,12 @@ def main() -> None:
         10_000 / timings["q_stream_refresh_round"], 1
     )
 
-    # compaction wave under the generational default (round-7 ask #4):
-    # compact a contiguous ~5% slice inside genned ranges. compact_index's
-    # internal rebuild re-runs phase B, so this ONE call is the whole wave —
-    # phase A rebuilds only the touched shards (fingerprint skip for the
-    # rest) and phase B re-aggregates only the stale gens, at stats-only
-    # (term, df, cf) cost instead of a postings-bytes merge. The per-phase
-    # split lands in the artifact.
+    # compaction wave (round-7 ask #4): compact a contiguous ~5% slice.
+    # compact_index's internal rebuild re-runs phase B, so this ONE call is
+    # the whole wave — phase A rebuilds only the touched shards
+    # (fingerprint skip for the rest) and phase B re-aggregates the
+    # (term, df, cf) dictionary, not the postings. The per-phase split
+    # lands in the artifact.
     from dense_retriever_spark.index.build import compact_index
     from dense_retriever_spark.index.search import load_stats
 
@@ -415,14 +412,12 @@ def main() -> None:
     ]
     shutil.rmtree(wd, ignore_errors=True)
 
-    # the same window with the MERGED global layout (the pre-round-7
-    # default, kept as the comparison): phase B re-merges the whole index
-    # (O(index)) where the generational default merges O(window).
+    # the same window in a second workdir (before format v4 this ran the
+    # other global/ layout; the metric name is kept for old artifacts)
     wdg = tempfile.mkdtemp(prefix="bench_refresh_merged_", dir=shm)
     refresh_rounds(
         spark, [spark.read.parquet(stage_root + "/corpus")], rq, rqrels, wdg,
         k=10, docs_per_shard=dps, dedup_exact=True,
-        global_layout="merged",
     )
     arrivals_g = wdg + "/arrivals"
     synth_corpus(spark, 10_000, seed=99).write.parquet(arrivals_g)
@@ -433,7 +428,7 @@ def main() -> None:
         )
         refresh_rounds(
             spark, [b], rq, rqrels, wdg, k=10, docs_per_shard=dps,
-            dedup_exact=True, start_round=1, global_layout="merged",
+            dedup_exact=True, start_round=1,
         )
         ack_corpus_batch(spark, wdg + "/staging", b)
 

@@ -14,7 +14,7 @@ Metrics:
   merge       — self-merge of the bench index (2x), with build-phase split
   build       — full index build with phase split
   build_pos   — positional build (1/4 corpus) with phase split
-  refresh     — one stream-refresh window (generational layout)
+  refresh     — one stream-refresh window
   dedup       — minhash LSH + jaccard verify on the sf documents table
   compact     — compact a 5% kill slice of the refresh index
 

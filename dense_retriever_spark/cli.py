@@ -61,7 +61,6 @@ def cmd_build_index(args) -> None:
         term_buckets=args.term_buckets,
         shard_batch=args.shard_batch,
         content_source=content_source,
-        global_layout=args.global_layout,
         positions=args.positions or None,
         stopwords=(
             [w for w in args.stopwords.split(",") if w]
@@ -464,7 +463,6 @@ def cmd_merge_indexes(args) -> None:
     paths = merge_indexes(
         spark, args.src, args.out_dir,
         content_source=content_source,
-        global_layout=args.global_layout,
         build_tag=args.build_tag,
         timings=timings,
     )
@@ -615,7 +613,6 @@ def cmd_refresh(args) -> None:
         compact_fraction=args.compact_fraction,
         compact_min_ids=args.compact_min_ids,
         auto_reshard=args.auto_reshard,
-        global_layout=args.global_layout,
         metadata_only_docs=args.metadata_only_docs,
     )
     print(json.dumps({"workdir": args.workdir, "rounds": rounds}))
@@ -670,7 +667,6 @@ def cmd_stream_refresh(args) -> None:
         compact_min_ids=args.compact_min_ids,
         start_round=start,
         auto_reshard=args.auto_reshard,
-        global_layout=args.global_layout,
         metadata_only_docs=args.metadata_only_docs,
     )
     ack_corpus_batch(spark, args.staging_dir, batch)
@@ -688,12 +684,6 @@ def main(argv=None) -> None:
     b.add_argument("--index-dir", required=True)
     b.add_argument("--docs-per-shard", type=int, default=1 << 14)
     b.add_argument("--term-buckets", type=int, default=8)
-    b.add_argument("--global-layout", default=None,
-                   choices=["merged", "generational"],
-                   help="global/ layout: 'merged' = one re-merged table per "
-                        "build; 'generational' = per-window gen segments so "
-                        "incremental builds merge O(window), not O(index); "
-                        "default inherits the existing index's layout")
     b.add_argument("--shard-batch", type=int, default=None)
     b.add_argument("--no-stage-content", action="store_true")
     b.add_argument("--positions", action="store_true",
@@ -903,8 +893,6 @@ def main(argv=None) -> None:
     mi.add_argument("--content-source", default=None,
                     help="parquet path of the immutable input table — "
                          "required iff sources use metadata-only docs")
-    mi.add_argument("--global-layout", default=None,
-                    choices=["merged", "generational"])
     mi.add_argument("--build-tag", default="merge")
     mi.set_defaults(fn=cmd_merge_indexes)
 
@@ -990,12 +978,6 @@ def main(argv=None) -> None:
                     help="act on the per-round should_reshard policy "
                          "verdict (always recorded in metrics) by "
                          "coalescing sparse shards mid-loop")
-    rf.add_argument("--global-layout", default="generational",
-                    choices=["merged", "generational"],
-                    help="default 'generational': the refresh loop is the "
-                         "incremental mode — per-window gen merges are "
-                         "O(window), bit-identical to 'merged', and faster; "
-                         "pass 'merged' to opt out")
     rf.add_argument("--metadata-only-docs", action="store_true",
                     help="stage a metadata-only docs table; content joins "
                          "from the corpus at build time (no second "
@@ -1016,9 +998,6 @@ def main(argv=None) -> None:
     sr.add_argument("--compact-fraction", type=float, default=0.1)
     sr.add_argument("--compact-min-ids", type=int, default=10_000_000)
     sr.add_argument("--auto-reshard", action="store_true")
-    sr.add_argument("--global-layout", default="generational",
-                    choices=["merged", "generational"],
-                    help="default 'generational' (see refresh)")
     sr.add_argument("--metadata-only-docs", action="store_true")
     sr.set_defaults(fn=cmd_stream_refresh)
 

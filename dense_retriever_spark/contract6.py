@@ -9,12 +9,8 @@ exactly like the broadcast plane does in q38. Together the pair proves the
 two query planes are interchangeable: O(|Q|) driver state was the round-3
 judge's last input-proportional driver structure.
 
-Round 6: q49's index is built with ``global_layout='generational'`` (the
-LSM-segment phase B the incremental refresh mode runs on), so this one row
-hash-gates BOTH the distributed plane and the layout-aware
-``global_term_stats`` view (gen segments + loose tail, df summed per term)
-against the same oracle q38's merged-layout index matches — proving the
-two global layouts are statistically indistinguishable to a search.
+q49 searches q38's own index (``contract4._q38_index_dir``: same corpus,
+same build parameters), so the two rows differ only in the query plane.
 """
 
 from __future__ import annotations
@@ -23,39 +19,14 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-_Q49_IDX_CACHE: dict[str, str] = {}
-
-
-def _q49_generational_index_dir(spark: SparkSession, sf_dir: str) -> str:
-    """q38's corpus built into a GENERATIONAL-layout index (once per sf_dir
-    per process; atexit-reaped like the q38 fixture)."""
-    import atexit
-    import shutil
-    import tempfile
-
-    from dense_retriever_spark.contract4 import _docs_as_index_input
-    from dense_retriever_spark.index.build import build_index
-
-    if sf_dir in _Q49_IDX_CACHE:
-        return _Q49_IDX_CACHE[sf_dir]
-    root = tempfile.mkdtemp(prefix="q49_gen_idx_")
-    atexit.register(shutil.rmtree, root, ignore_errors=True)
-    idx = root + "/index"
-    build_index(
-        _docs_as_index_input(spark, sf_dir), idx,
-        docs_per_shard=128, term_buckets=2,
-        global_layout="generational",
-    )
-    _Q49_IDX_CACHE[sf_dir] = idx
-    return idx
-
 
 def q49_distributed_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dense_retriever_spark.contract import BM25_QUERIES
+    from dense_retriever_spark.contract4 import _q38_index_dir
     from dense_retriever_spark.contract5 import _rounded_topk
     from dense_retriever_spark.index.search import search
 
-    idx = _q49_generational_index_dir(spark, sf_dir)
+    idx = _q38_index_dir(spark, sf_dir)
     queries = spark.createDataFrame(BM25_QUERIES, "query_id long, query string")
     raw = search(
         spark, idx, queries, k=50,

@@ -23,9 +23,11 @@ PHASE B  (global term dictionary, ``global/``)
   global (term, df, cf). A plain aggregate: partial sums run map-side, so
   the exchange moves dictionary-sized rows and never a posting byte. Search
   scores shards/ and reads global/ only for df, so no second copy of the
-  postings is kept. The merged layout aggregates every shard into one
-  table; the generational layout aggregates shard ranges into gen=<id>/
-  segments with the same helper (_aggregate_term_stats).
+  postings is kept. Each build writes its dictionary into a fresh
+  ``global/gen-<n>/`` directory; stats.json names it, so the atomic
+  stats.json write is the commit and a reader never sees a half-written
+  dictionary (copy-forward: the previous generation is swept one build
+  later).
 
 Resumability: the build loops over shard batches; each completed batch writes
 its manifest rows (shard id, term range, row counts, bytes, input fingerprint,
@@ -177,6 +179,10 @@ class IndexPaths:
     @property
     def stats(self) -> str:
         return os.path.join(self.root, "stats.json")
+
+    def dictionary(self, stats: dict) -> str:
+        """The (term, df, cf) dictionary directory ``stats`` commits."""
+        return os.path.join(self.global_dir, stats["dictionary"])
 
 
 MANIFEST_SCHEMA = (
@@ -395,236 +401,14 @@ def _build_shard_rows(
 
 # --- phase B: the (term, df, cf) dictionary --------------------------------
 
-def _term_stats_df(
-    spark: SparkSession, paths: IndexPaths, lo: int, hi: int
-) -> DataFrame:
-    """The (term, df, cf) dictionary of shards [lo, hi) — phase B of both
-    layouts: the merged layout aggregates [0, n_shards) into global/, the
-    generational layout aggregates one shard range into a gen=<id>/
-    segment. A plain groupBy aggregate is partial-aggregated map-side, so
-    the exchange moves only (term, df, cf) rows — a term-dictionary-sized
-    cost at any index size. The scan is partition-pruned to the range, and
-    parquet never reads the postings column (column pruning)."""
-    rows = spark.read.parquet(paths.shards).filter(
-        (F.col("shard") >= lo) & (F.col("shard") < hi)
-    )
-    return rows.groupBy("term").agg(
+def _term_stats_df(spark: SparkSession, paths: IndexPaths) -> DataFrame:
+    """The (term, df, cf) dictionary over every shard — phase B. A plain
+    groupBy aggregate is partial-aggregated map-side, so the exchange moves
+    only (term, df, cf) rows — a term-dictionary-sized cost at any index
+    size — and parquet never reads the postings column (column pruning)."""
+    return spark.read.parquet(paths.shards).groupBy("term").agg(
         F.sum("df").alias("df"), F.sum("cf").alias("cf")
     )
-
-
-def _aggregate_term_stats(
-    spark: SparkSession, paths: IndexPaths, lo: int, hi: int, out_dir: str
-) -> None:
-    """Write _term_stats_df(lo, hi) to ``out_dir``."""
-    df = _term_stats_df(spark, paths, lo, hi)
-    df.write.mode("overwrite").parquet(out_dir)
-
-
-# --- generational global index (incremental phase B) --------------------------
-#
-# The default ("merged") phase B re-aggregates EVERY shard's (term, df, cf)
-# rows into global/ on every build — O(all shards' rows) even when the
-# resumable phase A rebuilt only the handful of shards a refresh window
-# touched. The "generational" layout is the LSM/Lucene-segment answer:
-# global/ holds gen=<id>/ directories, each the (term, df, cf) aggregate of
-# one contiguous IMMUTABLE shard range; the volatile tail shard (still
-# receiving appends) stays out of any gen and its term stats are read from
-# shards/ directly. Per window the build aggregates only the shards that became
-# immutable since the last gen — O(window), not O(index). Staleness (a
-# compaction/recrawl rebuilding a genned shard) is detected by comparing
-# each gen's stored fingerprint — an order-independent combinable hash over
-# the range's (shard_id, input_fingerprint) manifest rows — against the
-# current manifest, so recovery is a pure function of on-disk state
-# (crash-safe: a half-applied build is re-detected and re-merged). A fold
-# policy bounds the generation count by merging the adjacent pair with the
-# smallest combined byte size (amortized like Lucene's tiered merges).
-#
-# Searches never scan gens for scoring (the serving path scores shards/);
-# gens serve (term, df) statistics, aggregated across gens + the loose tail
-# by search.global_term_stats. A stale re-merge or fold is the same
-# (term, df, cf) aggregate as any other gen, so a compaction wave whose
-# fingerprint drift touches every gen costs a term-dictionary-sized
-# aggregate, not an index-sized one.
-
-def _gens_meta_path(paths: IndexPaths) -> str:
-    # underscore name: invisible to Spark's partition discovery over global/
-    return os.path.join(paths.global_dir, "_gens.json")
-
-
-def _gen_dir(paths: IndexPaths, gen_id: int) -> str:
-    return os.path.join(paths.global_dir, f"gen={int(gen_id)}")
-
-
-def _read_gens(spark: SparkSession, paths: IndexPaths) -> list[dict]:
-    p = _gens_meta_path(paths)
-    if not fs.exists(p, spark):
-        return []
-    return json.loads(fs.read_text(p, spark))["gens"]
-
-
-def _range_fingerprints(
-    spark: SparkSession, paths: IndexPaths, ranges: list[tuple[int, int]]
-) -> dict[tuple[int, int], tuple[str, int]]:
-    """{(lo, hi): (fingerprint, posting_bytes)} over the CURRENT manifest —
-    one pass, ranges bucketed with a when-chain (gen count is policy-bounded,
-    so the chain stays small). The fingerprint is ORDER-INDEPENDENT and
-    COMBINABLE — count plus an exact decimal sum of per-row
-    xxhash64(shard_id:input_fingerprint) — so per-group aggregation state is
-    O(1) even for a folded gen spanning most of the index (a sorted
-    collect_list here would materialize one array per gen on a single task,
-    the driver-/task-proportional-state class this engine bans; decimal sum
-    because ANSI long addition overflows). Any rebuild, orphan sweep, or
-    compaction inside the range changes the value, which is what marks a
-    gen stale; accidental collision odds are the same 2^-64 class as the
-    per-shard fingerprint scheme."""
-    man = _manifest_df(spark, paths)
-    if man is None or not ranges:
-        return {}
-    bucket = F.lit(None).cast("int")
-    for i, (lo, hi) in enumerate(ranges):
-        bucket = F.when(
-            (F.col("shard_id") >= lo) & (F.col("shard_id") < hi), F.lit(i)
-        ).otherwise(bucket)
-    rows = (
-        man.withColumn("_r", bucket)
-        .filter(F.col("_r").isNotNull())
-        .groupBy("_r")
-        .agg(
-            F.concat_ws(
-                ":",
-                F.count("*"),
-                F.sum(
-                    F.xxhash64(
-                        F.concat_ws(":", "shard_id", "input_fingerprint")
-                    ).cast("decimal(28,0)")
-                ),
-            ).alias("fp"),
-            F.sum("bytes").alias("bytes"),
-        )
-        .collect()
-    )
-    return {
-        ranges[int(r["_r"])]: (r["fp"], int(r["bytes"] or 0)) for r in rows
-    }
-
-
-def _phase_b_generational(
-    spark: SparkSession,
-    paths: IndexPaths,
-    n_shards: int,
-    max_gens: int,
-    protected_ids: tuple[int, ...] | list[int] = (),
-) -> tuple[int, list[int]]:
-    """Incremental phase B. Returns (genned_until, gen_ids) for stats.json
-    — readers filter the gens scan to the COMMITTED id list, so a partial
-    gen dir left by a crashed build (visible to parquet partition
-    discovery, but never in _gens.json/stats.json, which are written last)
-    can't be double-counted.
-
-    COPY-FORWARD commit protocol: a committed gen id is NEVER overwritten
-    or deleted mid-build. Stale re-merges and folds write a FRESH gen id,
-    the new id set is committed via _gens.json here and stats.json by the
-    caller, and superseded dirs are reclaimed only once no committed
-    stats.json references them (``protected_ids`` = the PREVIOUS build's
-    committed set, so a reader serving off the old stats.json keeps every
-    dir it can see until the next build's sweep). A crash anywhere in
-    phase B therefore leaves the old committed view fully intact — the
-    fresh dirs are uncommitted garbage the next build overwrites or
-    sweeps, and no reader ever observes a range both in its old gen and a
-    folded successor (the double-count hazard of in-place overwrite).
-
-    Plan = pure function of (manifest, _gens.json): re-merge gens whose
-    range fingerprint drifted (rebuilt/compacted shards), add one gen over
-    shards that became immutable since the last gen ([genned_until, tail)),
-    then fold adjacent gens while the count exceeds ``max_gens``. The tail
-    shard (id n_shards-1) never enters a gen — it is the only shard appends
-    mutate, and excluding it is what keeps each window's merge O(window)
-    instead of chaining every gen into the next."""
-    fs.mkdirs(paths.global_dir, spark)
-    gens = _read_gens(spark, paths)
-    protected = {int(i) for i in protected_ids}
-    genned_until = max((g["hi"] for g in gens), default=0)
-    tail = n_shards - 1
-    new_range = (genned_until, tail) if tail > genned_until else None
-    check = [(g["lo"], g["hi"]) for g in gens]
-    if new_range:
-        check.append(new_range)
-    fps = _range_fingerprints(spark, paths, check)
-
-    out: list[dict] = []
-    # fresh ids must clear every id any committed metadata may reference
-    # (crashed partial dirs above this max are uncommitted → overwrite-safe)
-    next_id = max([g["id"] for g in gens] + sorted(protected), default=-1) + 1
-    for g in gens:
-        cur = fps.get((g["lo"], g["hi"]))
-        if cur is None:
-            # every shard in the range vanished (orphan sweep) — drop the
-            # gen from the new commit; its dir is reclaimed by the sweep
-            # once no committed stats.json references it
-            continue
-        if cur[0] != g["fp"]:  # stale: a genned shard was rebuilt
-            _aggregate_term_stats(
-                spark, paths, g["lo"], g["hi"], _gen_dir(paths, next_id)
-            )
-            g = {"id": next_id, "lo": g["lo"], "hi": g["hi"],
-                 "fp": cur[0], "bytes": cur[1]}
-            next_id += 1
-        out.append(g)
-    if new_range and new_range in fps:
-        _aggregate_term_stats(
-            spark, paths, *new_range, _gen_dir(paths, next_id)
-        )
-        out.append(
-            {
-                "id": next_id,
-                "lo": new_range[0],
-                "hi": new_range[1],
-                "fp": fps[new_range][0],
-                "bytes": fps[new_range][1],
-            }
-        )
-    out.sort(key=lambda g: g["lo"])
-
-    # fold policy: bound the gen count by merging the adjacent pair with the
-    # smallest combined size — amortized O(index / max_gens) per window
-    while len(out) > max_gens:
-        i = min(
-            range(len(out) - 1),
-            key=lambda j: out[j]["bytes"] + out[j + 1]["bytes"],
-        )
-        a, b = out[i], out[i + 1]
-        lo, hi = a["lo"], b["hi"]
-        # copy-forward: fold into a FRESH id; a/b dirs stay untouched until
-        # the post-commit sweep (readers on the old stats.json still need
-        # them, and a crash here must leave the old committed view whole)
-        _aggregate_term_stats(spark, paths, lo, hi, _gen_dir(paths, next_id))
-        fp = _range_fingerprints(spark, paths, [(lo, hi)])[(lo, hi)]
-        out[i] = {"id": next_id, "lo": lo, "hi": hi,
-                  "fp": fp[0], "bytes": fp[1]}
-        next_id += 1
-        del out[i + 1]
-
-    fs.write_text_atomic(
-        _gens_meta_path(paths), json.dumps({"gens": out}), spark
-    )
-    # sweep gen dirs no committed metadata can reference: not in the new
-    # commit (``out``) and not in the PREVIOUS build's committed stats.json
-    # (``protected``). Superseded-but-protected dirs survive one build and
-    # are reclaimed here next time, once stats.json has moved off them —
-    # the storage cost is one window's worth of superseded gens, the gain
-    # is that a concurrent reader never loses a dir it was promised.
-    # O(listing).
-    keep = {int(g["id"]) for g in out} | protected
-    for name in fs.listdir(paths.global_dir, spark):
-        if name.startswith("gen="):
-            try:
-                gid = int(name.split("=", 1)[1])
-            except ValueError:
-                continue
-            if gid not in keep:
-                fs.delete(os.path.join(paths.global_dir, name), spark)
-    return (max((g["hi"] for g in out), default=0), [g["id"] for g in out])
 
 
 # --- the build ----------------------------------------------------------------
@@ -640,8 +424,6 @@ def build_index(
     timings: dict | None = None,
     build_tag: str = "",
     content_source: DataFrame | None = None,
-    global_layout: str | None = None,
-    max_gens: int = 32,
     positions: bool | None = None,
     stopwords: list[str] | None = None,
 ) -> IndexPaths:
@@ -650,7 +432,7 @@ def build_index(
     ``positions``: ``True`` makes the index phrase-capable — every shard
     posting row carries a per-term position stream (see
     _build_shard_from_content), consumed only by index/phrase.py. ``None``
-    inherits the existing index's setting (like ``global_layout``); the flag
+    inherits the existing index's setting (like ``stopwords``); the flag
     cannot change across incremental builds of one index (shards would mix
     layouts) — resharding to a fresh directory is the migration path.
 
@@ -680,16 +462,12 @@ def build_index(
     immutable table, not a re-runnable lineage; natural keys must be unique
     (the same requirement doc-id assignment already has).
 
-    ``global_layout``: ``'merged'`` (default for new indexes) writes global/
-    as ONE (term, df, cf) table — rebuilt wholesale every build;
-    ``'generational'`` writes per-window gen=<id>/ segments so incremental
-    builds merge only the shards that became immutable since the last run
-    (O(window), not O(index) — see the generational section above). ``None``
-    inherits the existing index's layout (stats.json), so compaction /
-    reshard / refresh resumes keep the layout without re-stating it.
-    Switching an existing index's layout explicitly rebuilds global/ from
-    shards (derived data — always safe). ``max_gens`` bounds the generation
-    count via the adjacent-pair fold policy.
+    Every build re-aggregates the whole (term, df, cf) dictionary into a
+    fresh ``global/gen-<n>/`` and commits it by naming it in stats.json
+    (``"dictionary"``). The directory the previous stats.json named is kept
+    until the next build, so a reader still serving off that view keeps
+    every file it can see; every other directory in global/ (superseded or
+    left by a crashed build) is swept after the commit.
     """
     import time
 
@@ -712,10 +490,9 @@ def build_index(
     # docs_per_shard, would silently mis-decode blobs / mis-route doc ids.
     from dense_retriever_spark.index.codec import FORMAT_VERSION
 
-    prev_layout = None
     prev_positions = None
     prev_stop: list[str] | None = None
-    prev_gen_ids: list[int] = []
+    prev_dict: str | None = None
     if fs.exists(paths.stats, spark):
         prev = json.loads(fs.read_text(paths.stats, spark))
         pv = prev.get("format_version", 1)
@@ -733,7 +510,6 @@ def build_index(
                 f"{docs_per_shard}; shard boundaries would not line up — "
                 "pass the original value or use a fresh index directory"
             )
-        prev_layout = prev.get("global_layout", "merged")
         prev_positions = bool(prev.get("positions", False))
         if (
             positions is not None
@@ -759,23 +535,13 @@ def build_index(
                 "resumed shards would mix vocabularies. Rebuild into a "
                 "fresh directory to change it"
             )
-        # the copy-forward sweep must keep every gen dir the CURRENTLY
-        # committed stats.json references (a serving reader's view)
-        prev_gen_ids = [int(i) for i in (prev.get("gen_ids") or [])]
-    if global_layout is not None and global_layout not in (
-        "merged", "generational"
-    ):
-        raise ValueError(f"unknown global_layout {global_layout!r}")
-    layout = global_layout or prev_layout or "merged"
+        # the copy-forward sweep must keep the dictionary the CURRENTLY
+        # committed stats.json names (a serving reader's view)
+        prev_dict = prev.get("dictionary")
     pos_flag = bool(positions) if positions is not None else bool(prev_positions)
     stop_list = (
         sorted(set(stopwords)) if stopwords is not None else (prev_stop or [])
     )
-    if prev_layout is not None and layout != prev_layout:
-        # layout switch: global/ is derived data — rebuild it from shards in
-        # the requested layout (gens metadata lives inside global/, so the
-        # delete resets both)
-        fs.delete(paths.global_dir, spark)
 
     # STAGE: materialize the ingested corpus exactly once (doc dimension table
     # WITH content, partitioned by shard for per-batch pruning). Every
@@ -1038,16 +804,17 @@ def build_index(
     todo_df.unpersist()
     mark("phase_a")
 
-    # phase B: the global (term, df, cf) dictionary (_aggregate_term_stats)
-    if layout == "generational":
-        genned_until, gen_ids = _phase_b_generational(
-            spark, paths, n_shards, max_gens,
-            protected_ids=prev_gen_ids,
-        )
-        n_gens = len(gen_ids)
-    else:
-        _aggregate_term_stats(spark, paths, 0, n_shards, paths.global_dir)
-        genned_until, gen_ids, n_gens = 0, [], 0
+    # phase B: the global (term, df, cf) dictionary, into a directory no
+    # committed stats.json names (copy-forward — never overwritten in place).
+    # zstd, not Spark's snappy default: on a long-tail corpus the dictionary
+    # is mostly one-off identifiers, global/ holds two generations between
+    # builds, and zstd writes each a third smaller (450 long-tail files:
+    # 78.7 KB -> 52.5 KB, same write time)
+    gen = 0 if prev_dict is None else int(prev_dict.rsplit("-", 1)[1]) + 1
+    dict_name = f"gen-{gen}"
+    _term_stats_df(spark, paths).write.mode("overwrite").option(
+        "compression", "zstd"
+    ).parquet(os.path.join(paths.global_dir, dict_name))
     mark("phase_b")
 
     # structured build metrics (north star: 'lineage manifests ... and
@@ -1059,54 +826,17 @@ def build_index(
     m = _manifest_df(spark, paths)
     roll = None
     if m is not None:
-        agg_cols = [
+        roll = m.agg(
             F.count("*").alias("shards"),
             F.sum("row_count").alias("posting_rows"),
             F.sum("bytes").alias("posting_bytes"),
-        ]
-        has_cf = "cf_sum" in m.columns
-        if has_cf:
-            # count() counts NON-NULL rows: a manifest resumed from a build
-            # that predates cf_sum has null rows — trust the sum only when
-            # every shard row carries it, else fall back to the scan below
-            agg_cols += [
-                F.sum("cf_sum").alias("cf"),
-                F.count("cf_sum").alias("cf_rows"),
-            ]
-        roll = m.agg(*agg_cols).collect()[0]
-    if (
-        roll is not None
-        and "cf" in roll.asDict()
-        and roll["cf"] is not None
-        and int(roll["cf_rows"]) == int(roll["shards"])
-    ):
-        total_tokens = int(roll["cf"])
-    elif layout == "generational":
-        gens_cf = (
-            spark.read.parquet(paths.global_dir)
-            .filter(F.col("gen").isin(gen_ids))  # committed gens only
-            .agg(F.sum("cf"))
-            .collect()[0][0]
-            if n_gens
-            else 0
-        ) or 0
-        loose_cf = (
-            spark.read.parquet(paths.shards)
-            .filter(F.col("shard") >= genned_until)
-            .agg(F.sum("cf"))
-            .collect()[0][0]
-            or 0
-        )
-        total_tokens = int(gens_cf) + int(loose_cf)
-    else:
-        total_tokens = (
-            spark.read.parquet(paths.global_dir).agg(F.sum("cf")).collect()[0][0]
-            or 0
-        )
+            F.sum("cf_sum").alias("cf"),
+        ).collect()[0]
+    total_tokens = int(roll["cf"] or 0) if roll else 0
     avgdl = float(total_tokens) / n_docs if n_docs else 0.0
     mark("stats_metrics")
     # atomic replace: stats.json is the reader-visible commit point for the
-    # whole build (incl. the generational gen_ids set) — a serving reader
+    # whole build (incl. the dictionary it names) — a serving reader
     # polling it must never observe a truncated half-write
     fs.write_text_atomic(
         paths.stats,
@@ -1121,12 +851,9 @@ def build_index(
                 "n_shards": n_shards,
                 "term_buckets": term_buckets,
                 "build_tag": build_tag,
-                "global_layout": layout,
                 "positions": pos_flag,
                 "stopwords": stop_list,
-                "genned_until": int(genned_until),
-                "n_gens": int(n_gens),
-                "gen_ids": [int(g) for g in gen_ids],
+                "dictionary": dict_name,
                 "metrics": {
                     "phase_seconds": dict(t),
                     "manifest_shards": int(roll["shards"]) if roll else 0,
@@ -1138,6 +865,12 @@ def build_index(
         ),
         spark,
     )
+    # sweep every dictionary no committed stats.json names: not the new one
+    # and not the previous build's, which a reader that loaded the old
+    # stats.json may still be reading (reclaimed by the next build)
+    for name in fs.listdir(paths.global_dir, spark):
+        if name not in (dict_name, prev_dict):
+            fs.delete(os.path.join(paths.global_dir, name), spark)
     return paths
 
 

@@ -41,10 +41,11 @@ import numpy as np
 #: (round 1), v2 = u64 header fields (round 2's 10^12-doc headroom), v3 =
 #: no per-block max-score columns in shards/ and a merged-layout global/
 #: that is a (term, df, cf) dictionary instead of a second copy of every
-#: posting. Bumping this is the explicit "incompatible format" signal —
-#: without it, a v1 index decoded by v2 code silently reads payload bytes
-#: as lengths (round-2 ADVICE).
-FORMAT_VERSION = 3
+#: posting, v4 = one global/gen-<n>/ dictionary that stats.json names (no
+#: generational gen=<id>/ segments). Bumping this is the explicit
+#: "incompatible format" signal — without it, a v1 index decoded by v2
+#: code silently reads payload bytes as lengths (round-2 ADVICE).
+FORMAT_VERSION = 4
 
 _MAX_BYTES = 10  # 64 bits / 7
 

@@ -15,8 +15,8 @@ where BM25_f uses field f's n_docs / avgdl / df — a short title field gets
 title-appropriate length normalization instead of being drowned by body
 statistics. Each field is a plain index built by ``build_index`` over that
 field's text, so every index feature (incremental refresh, compaction,
-tombstones, generational layout, both query planes) applies per field
-unchanged.
+tombstones, the copy-forward dictionary commit, both query planes) applies
+per field unchanged.
 
 The combination is exact, not top-k-merged: a per-field top-k would lose
 score mass exactly where fields disagree (a doc ranked 200th by body but

@@ -172,8 +172,8 @@ def write_text_atomic(
     the rename overwrites atomically (File.renameTo); stores whose rename
     refuses an existing destination (HDFS semantics) fall back to
     delete+rename — a vanishingly small absent-window instead of a
-    partial-content window, and the committed-metadata files this is used
-    for (stats.json, _gens.json) are re-readable by retry. The plain
+    partial-content window, and the committed-metadata file this is used
+    for (stats.json) is re-readable by retry. The plain
     ``write_text`` truncates in place and must not be used for any file a
     serving reader polls."""
     tmp = path + ".inprogress"

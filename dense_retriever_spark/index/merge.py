@@ -38,7 +38,6 @@ bytes) structural merge.
 from __future__ import annotations
 
 import json
-import os
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -122,7 +121,6 @@ def merge_indexes(
     src_dirs: list[str],
     out_dir: str,
     content_source: DataFrame | None = None,
-    global_layout: str | None = None,
     term_buckets: int | None = None,
     timings: dict | None = None,
     build_tag: str = "merge",
@@ -133,8 +131,6 @@ def merge_indexes(
 
     ``content_source``: required iff any source's docs table is
     metadata-only (no ``content`` column) — same contract as build_index.
-    ``global_layout``: layout for the merged global/ (default: the first
-    source's layout).
 
     Returns the merged IndexPaths. The merged docs table keeps every source
     row with ``doc_id += doc_off[i]`` — because offsets are shard-aligned,
@@ -148,7 +144,6 @@ def merge_indexes(
         )
     stats = _validate_sources(spark, src_dirs)
     docs_per_shard = int(stats[0]["docs_per_shard"])
-    layout = global_layout or stats[0].get("global_layout", "merged")
     buckets = term_buckets or int(stats[0].get("term_buckets", 8))
 
     shard_off: list[int] = []
@@ -234,96 +229,6 @@ def merge_indexes(
         .parquet(paths.manifest)
     )
 
-    # --- generational carry-over: O(metadata) global merge ----------------
-    # Gen stats (term, df, cf) are doc-id-INDEPENDENT — a uniform id shift
-    # changes no count — so each source's committed gens carry over as a
-    # parquet copy with range [lo+off, hi+off) under a fresh id. Only their
-    # fingerprints change (they hash (shard_id, input_fingerprint) pairs,
-    # both rebased), recomputed here from the new manifest in one pass.
-    # A non-last source's loose region (its tail included — immutable once
-    # merged) is covered by one small aggregate gen; a non-last MERGED-
-    # layout source's global/ already IS its full-range (term, df, cf)
-    # aggregate and is copied as a single gen with no aggregation at all.
-    # The last source's loose region is left to the delegated phase B's
-    # standard new-range gen (keeping the tail-shard-never-genned
-    # invariant). The delegated _phase_b_generational then finds every
-    # pre-written gen fingerprint-clean and re-aggregates NOTHING — the
-    # global merge is O(gen metadata + loose windows), not O(term
-    # dictionary of the union).
-    if layout == "generational":
-        from dense_retriever_spark.index.build import (
-            _aggregate_term_stats,
-            _gen_dir,
-            _gens_meta_path,
-            _range_fingerprints,
-            _read_gens,
-        )
-
-        fs.mkdirs(paths.global_dir, spark)
-        pre: list[dict] = []
-        next_id = 0
-        for i, (st, src, s_off) in enumerate(zip(stats, src_dirs, shard_off)):
-            sp = IndexPaths(src)
-            last = i == len(src_dirs) - 1
-            committed = {int(x) for x in (st.get("gen_ids") or [])}
-            src_gens = []
-            if st.get("global_layout") == "generational" and committed:
-                src_gens = sorted(
-                    (g for g in _read_gens(spark, sp)
-                     if int(g["id"]) in committed),
-                    key=lambda g: g["lo"],
-                )
-            for g in src_gens:
-                (
-                    spark.read.parquet(_gen_dir(sp, int(g["id"])))
-                    .select("term", "df", "cf")
-                    .write.mode("overwrite")
-                    .parquet(_gen_dir(paths, next_id))
-                )
-                pre.append({
-                    "id": next_id,
-                    "lo": int(g["lo"]) + s_off,
-                    "hi": int(g["hi"]) + s_off,
-                })
-                next_id += 1
-            if last:
-                continue
-            cov = max((int(g["hi"]) for g in src_gens), default=0)
-            n_sh = int(st["n_shards"])
-            if cov >= n_sh:
-                continue
-            if not src_gens and st.get("global_layout", "merged") == "merged":
-                # merged global/ = the full-range aggregate already
-                (
-                    spark.read.parquet(sp.global_dir)
-                    .select("term", "df", "cf")
-                    .write.mode("overwrite")
-                    .parquet(_gen_dir(paths, next_id))
-                )
-            else:
-                _aggregate_term_stats(
-                    spark, paths, cov + s_off, n_sh + s_off,
-                    _gen_dir(paths, next_id),
-                )
-            pre.append({
-                "id": next_id, "lo": cov + s_off, "hi": n_sh + s_off,
-            })
-            next_id += 1
-        if pre:
-            fps = _range_fingerprints(
-                spark, paths, [(g["lo"], g["hi"]) for g in pre]
-            )
-            kept = []
-            for g in pre:
-                got = fps.get((g["lo"], g["hi"]))
-                if got is None:
-                    continue  # range has no live shards — drop, sweep reaps
-                g["fp"], g["bytes"] = got[0], int(got[1])
-                kept.append(g)
-            fs.write_text_atomic(
-                _gens_meta_path(paths), json.dumps({"gens": kept}), spark
-            )
-
     # --- delegate: docs staging, resume no-op, phase B, stats, metrics ----
     # build_index re-stages docs from merged_docs (ids fixed — no
     # re-assignment happens; it selects the existing doc_id column),
@@ -339,7 +244,6 @@ def merge_indexes(
         timings=timings,
         build_tag=build_tag,
         content_source=content_source,
-        global_layout=layout,
         positions=bool(stats[0].get("positions", False)),
         stopwords=stats[0].get("stopwords") or None,
     )

@@ -20,7 +20,7 @@ lexicographically-smallest matching terms per pattern (Lucene's clause-limit
 analog; the broadcast plane warns when truncation happens).
 
 Expansion is relational on both planes: the term dictionary
-(global_term_stats — gen-layout aware) is filtered by an OR of pushed-down
+(global_term_stats) is filtered by an OR of pushed-down
 ``StartsWith`` predicates (prefix patterns are collected via a bounded probe,
 the _excl_plan pattern — ≤ PREFIX_FILTER_LIMIT strings of driver state at any
 |Q|; past the limit the filter is skipped and the dictionary join does the

@@ -10,7 +10,7 @@ The dictionary stores lowercased terms, so patterns should be written in
 lowercase.
 
 Scale shape mirrors prefix expansion (index/prefix.py): the dictionary
-scan (global_term_stats — gen-layout aware) is prefiltered by each
+scan (global_term_stats) is prefiltered by each
 pattern's LEADING LITERAL characters when it has any (``/merge(r|d)/`` →
 ``StartsWith('merge')``, a pushed-down parquet predicate — Lucene extracts
 the same prefix from its regex automaton); the full anchored match then

@@ -163,41 +163,13 @@ TOMBSTONE_WARN_IDS = 10_000_000
 def global_term_stats(
     spark: SparkSession, index_dir: str, stats: dict
 ) -> DataFrame:
-    """The (term, df, cf) dictionary for idf lookups — layout-aware.
-
-    Merged layout (default): global/ is already one (term, df, cf) row per
-    term; it is read as-is (no aggregation exchange on the interactive
-    path). Generational layout (build_index(global_layout='generational') —
-    the incremental-refresh mode): df and cf per term are SUMS over the gen
-    segments plus the loose tail shards past ``genned_until`` (their stats
-    come straight from shards/, partition-pruned). Term-predicate pushdown
-    survives the union+aggregate (Catalyst pushes filters on grouping keys
-    below the Aggregate and through the Union), so _term_pruned callers keep
-    their row-group pruning on every leg. The gens scan is filtered to
-    stats.json's COMMITTED gen id list: a partial gen dir left by a crashed
-    build is visible to partition discovery but never committed, and must
-    not be double-counted against the loose-tail leg."""
-    paths = IndexPaths(index_dir)
-    cols = ("term", "df", "cf")
-    if stats.get("global_layout", "merged") != "generational":
-        return spark.read.parquet(paths.global_dir).select(*cols)
-    legs = []
-    gen_ids = stats.get("gen_ids")
-    if int(stats.get("n_gens", 0)) > 0:
-        g = spark.read.parquet(paths.global_dir)
-        if gen_ids is not None:
-            g = g.filter(F.col("gen").isin([int(i) for i in gen_ids]))
-        legs.append(g.select(*cols))
-    gu = int(stats.get("genned_until", 0))
-    legs.append(
-        spark.read.parquet(paths.shards)
-        .filter(F.col("shard") >= gu)
-        .select(*cols)
-    )
-    u = legs[0] if len(legs) == 1 else legs[0].unionByName(legs[1])
-    return u.groupBy("term").agg(
-        F.sum("df").alias("df"), F.sum("cf").alias("cf")
-    )
+    """The (term, df, cf) dictionary for idf lookups: the ``global/``
+    directory ``stats`` commits (``IndexPaths.dictionary``), read as-is —
+    one row per term, no aggregation exchange. global/ is never listed, so
+    a directory a build has not committed yet is invisible."""
+    return spark.read.parquet(
+        IndexPaths(index_dir).dictionary(stats)
+    ).select("term", "df", "cf")
 
 
 def load_stats(index_dir: str) -> dict:
@@ -749,13 +721,13 @@ def _term_dfs_cached(
     return vals
 
 
-def _local_dataset(root: str, key: str | None = None, keep=None):
+def _local_dataset(root: str, key: str | None = None):
     """pyarrow dataset over the parquet files Spark wrote under ``root``:
-    directly in it, or (``key`` given) in its ``key=<id>`` partition dirs,
-    only those whose id satisfies ``keep``. Names starting with ``_`` or
-    ``.`` (_SUCCESS, _temporary, checksum sidecars, staging dirs) are
-    skipped, as Spark's own listing does; the partition id becomes an
-    int64 column. None when there is no data file."""
+    directly in it, or (``key`` given) in its ``key=<id>`` partition dirs.
+    Names starting with ``_`` or ``.`` (_SUCCESS, _temporary, checksum
+    sidecars, staging dirs) are skipped, as Spark's own listing does; the
+    partition id becomes an int64 column. None when there is no data
+    file."""
 
     def entries(d: str) -> list:
         try:
@@ -771,9 +743,7 @@ def _local_dataset(root: str, key: str | None = None, keep=None):
         files = []
         for e in entries(root):
             name, _, pid = e.name.partition("=")
-            if name != key or not pid.isdigit() or not e.is_dir():
-                continue
-            if keep is None or keep(int(pid)):
+            if name == key and pid.isdigit() and e.is_dir():
                 files += [f.path for f in entries(e.path) if f.is_file()]
         part = ds.partitioning(pa.schema([(key, pa.int64())]), flavor="hive")
     if not files:
@@ -787,33 +757,17 @@ def _local_term_dfs(
     root: str, stats: dict, terms: list[str]
 ) -> dict[str, float]:
     """term → df for the ``terms`` present in the local index at ``root``
-    — the rows global_term_stats returns, read with pyarrow (term-pruned
-    by parquet row-group statistics) instead of a Spark job. Generational
-    layout: the committed ``gen_ids`` partitions of global/ plus the loose
-    tail shards (``shard >= genned_until``), summed per term."""
-    paths = IndexPaths(root)
-    if stats.get("global_layout", "merged") != "generational":
-        legs = [_local_dataset(paths.global_dir)]
-    else:
-        legs = []
-        if int(stats.get("n_gens", 0)) > 0:
-            # committed gens only, as in global_term_stats
-            gen_ids = stats.get("gen_ids")
-            ids = None if gen_ids is None else {int(i) for i in gen_ids}
-            legs.append(_local_dataset(
-                paths.global_dir, "gen", lambda g: ids is None or g in ids
-            ))
-        gu = int(stats.get("genned_until", 0))
-        legs.append(_local_dataset(paths.shards, "shard", lambda s: s >= gu))
-    want = ds.field("term").isin(terms)
-    dfs: dict[str, int] = {}
-    for leg in legs:
-        if leg is None:
-            continue
-        t = leg.to_table(columns=["term", "df"], filter=want)
-        for term, df in zip(t["term"].to_pylist(), t["df"].to_pylist()):
-            dfs[term] = dfs.get(term, 0) + df
-    return {t: float(v) for t, v in dfs.items()}
+    — the rows global_term_stats returns, read from the same committed
+    dictionary directory with pyarrow (term-pruned by parquet row-group
+    statistics) instead of a Spark job."""
+    d = _local_dataset(IndexPaths(root).dictionary(stats))
+    if d is None:
+        return {}
+    t = d.to_table(columns=["term", "df"], filter=ds.field("term").isin(terms))
+    return {
+        term: float(df)
+        for term, df in zip(t["term"].to_pylist(), t["df"].to_pylist())
+    }
 
 
 def _search_local(

@@ -138,7 +138,6 @@ def refresh_rounds(
     auto_reshard: bool = False,
     reshard_min_avg_bytes: int = 4 << 20,
     reshard_min_shards: int = 64,
-    global_layout: str | None = "generational",
     metadata_only_docs: bool = False,
     ann_index_dir: str | None = None,
     ann_batches: list[DataFrame] | None = None,
@@ -202,18 +201,12 @@ def refresh_rounds(
     write per window. True stages a metadata-only docs table instead
     (build_index's ``content_source`` knob pointed at the corpus); phase A
     joins content by natural key, and train-set hydration reads the corpus
-    directly (it does in both modes — same rows by construction). Combine
-    with ``global_layout='generational'`` for the full incremental
-    configuration: per window, no corpus-sized write and no index-sized
-    merge.
+    directly (it does in both modes — same rows by construction).
 
-    ``global_layout`` DEFAULTS to ``'generational'`` here (round-7): the
-    refresh loop is the incremental mode, and the O(window) gen merge is
-    bit-identical to the merged layout (oracle-gated) and measured faster
-    — out of the box a steady-state window no longer re-merges the whole
-    index. A workdir whose index was built merged is switched on its next
-    round (one O(index) re-merge, then O(window) forever). Pass ``None``
-    to inherit the existing index's layout, or ``'merged'`` to opt out.
+    Each round's build rebuilds only the shards the window changed (phase
+    A resumes by fingerprint) and re-aggregates the (term, df, cf)
+    dictionary, a term-dictionary-sized aggregate, into a fresh global/
+    directory that the round's stats.json commits.
 
     ``ann_index_dir`` + ``ann_batches`` (round-7): maintain a persisted ANN
     artifact alongside the BM25 index, O(window) per round. ``ann_batches``
@@ -372,10 +365,6 @@ def refresh_rounds(
             term_buckets=term_buckets,
             timings=timings,
             build_tag=f"round{rnd}",
-            # 'generational' keeps the per-window global merge O(window)
-            # instead of O(index) — the steady-state cost that dominates an
-            # incremental refresh at scale; None inherits the index's layout
-            global_layout=global_layout,
             # metadata_only_docs: the corpus table IS the immutable content
             # store, so re-writing content into docs/ every round is a
             # second O(corpus-bytes) write per window for nothing — the

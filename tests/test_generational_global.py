@@ -1,29 +1,27 @@
-"""Generational global index (index/build.py phase B, 'generational'
-layout): per-window gen segments must serve EXACTLY the statistics the
-merged layout serves (search bit-identity on both query planes), while
-incremental builds leave prior gens' files untouched (the O(window) vs
-O(index) property), staleness re-merges exactly the affected gen, and the
-fold policy bounds the generation count.
+"""Generations of the global (term, df, cf) dictionary (index/build.py,
+phase B): every build aggregates the dictionary into a fresh
+``global/gen-<n>/`` directory and commits it by naming it in stats.json.
+Readers open exactly the directory their stats.json names and never list
+global/, so a build in progress, or one that crashed before its commit,
+is invisible to them. The directory the previous stats.json named is kept
+for one more build (a reader may still hold that view); everything else
+in global/ is swept after the commit.
 
-Reference analog: the single merged artifact the reference persists
-(/root/reference/dense_retriever/transforms/ann_index.py:87-98),
-generalized to LSM/Lucene-style segments for the incremental refresh mode.
+Reference analog: the reference persists one index artifact per build
+(dense_retriever/transforms/ann_index.py:87-98).
 """
 
 from __future__ import annotations
 
-import glob
 import os
+import threading
 
 from pyspark.sql import functions as F
 
 from dense_retriever_spark.corpus import ingest, synth_corpus, synth_queries
-from dense_retriever_spark.index.build import (
-    IndexPaths,
-    _read_gens,
-    build_index,
-    compact_index,
-)
+from dense_retriever_spark.index import fs
+from dense_retriever_spark.index import search as search_mod
+from dense_retriever_spark.index.build import IndexPaths, build_index
 from dense_retriever_spark.index.search import load_stats, search
 
 
@@ -31,273 +29,68 @@ def _results(spark, idx, qs, **kw):
     return sorted(map(tuple, search(spark, idx, qs, k=5, **kw).collect()))
 
 
-def _gen_file_mtimes(idx):
-    return {
-        p: os.path.getmtime(p)
-        for p in glob.glob(os.path.join(idx, "global", "gen=*", "*.parquet"))
-    }
+def _all_planes(spark, idx, qs, monkeypatch):
+    """(driver-local, Spark broadcast, distributed) results, each read with
+    a cold term-df cache."""
+    search_mod._term_df_cache_clear()
+    local = _results(spark, idx, qs)
+    dist = _results(spark, idx, qs, query_mode="distributed")
+    with monkeypatch.context() as m:
+        m.setattr(fs, "local_path", lambda *a, **kw: None)
+        search_mod._term_df_cache_clear()
+        spark_bc = _results(spark, idx, qs)
+    return local, spark_bc, dist
 
 
-def test_generational_equals_merged_and_incremental_is_o_window(
-    spark, tmp_path
+def test_uncommitted_gen_dir_is_invisible_to_readers(
+    spark, tmp_path, monkeypatch
 ):
-    m_idx = str(tmp_path / "m_idx")
-    g_idx = str(tmp_path / "g_idx")
+    """A dictionary directory no stats.json names — what a build that
+    crashed before its commit leaves — must be ignored by every plane, even
+    when its dfs are wrong, and the next build must sweep it."""
+    idx = str(tmp_path / "orphan_idx")
     qs = synth_queries(spark, 8)
-
-    # append-only growth the way the refresh loop produces it: the second
-    # window's docs get ids AFTER the first window's, so the first window's
-    # shards keep their (doc_id, content) fingerprints byte-identically
-    c1 = ingest(synth_corpus(spark, 300, seed=77)).localCheckpoint(eager=True)
-    c2 = c1.unionByName(
-        ingest(synth_corpus(spark, 150, seed=88))
-        .withColumn("doc_id", F.col("doc_id") + F.lit(300))
-    ).localCheckpoint(eager=True)
-
-    build_index(c1, m_idx, docs_per_shard=32, term_buckets=2)
-    build_index(c1, g_idx, docs_per_shard=32, term_buckets=2,
-                global_layout="generational")
-    sm, sg = load_stats(m_idx), load_stats(g_idx)
-    assert sg["global_layout"] == "generational"
-    assert sg["n_gens"] == 1 and sg["genned_until"] == sg["n_shards"] - 1
-    assert sg["avgdl"] == sm["avgdl"] and sg["n_docs"] == sm["n_docs"]
-
-    # both query planes bit-identical to the merged twin
-    want = _results(spark, m_idx, qs)
-    assert _results(spark, g_idx, qs) == want and len(want) > 0
-    assert _results(spark, g_idx, qs, query_mode="distributed") == want
-
-    # incremental growth: the appended corpus keeps the prefix, so the
-    # rebuild must ADD one gen (old tail + new shards) without rewriting
-    # gen 0's parquet files — the O(window) property
-    before = _gen_file_mtimes(g_idx)
-    assert before  # gen 0 exists on disk
-    build_index(c2, g_idx, docs_per_shard=32, term_buckets=2)  # inherited
-    sg2 = load_stats(g_idx)
-    assert sg2["global_layout"] == "generational"  # None = inherit
-    assert sg2["n_gens"] == 2
-    assert sg2["genned_until"] == sg2["n_shards"] - 1
-    after = _gen_file_mtimes(g_idx)
-    for p, mt in before.items():
-        assert after[p] == mt, f"gen-0 file rewritten: {p}"
-
-    build_index(c2, m_idx, docs_per_shard=32, term_buckets=2)
-    want2 = _results(spark, m_idx, qs)
-    assert _results(spark, g_idx, qs) == want2 and len(want2) > 0
-    assert _results(spark, g_idx, qs, query_mode="distributed") == want2
-
-
-def test_uncommitted_gen_dir_is_invisible_to_readers(spark, tmp_path):
-    """A partial gen=<id> dir left by a crashed build is visible to parquet
-    partition discovery but absent from stats.json's committed gen_ids —
-    readers must not count it (it would double every df it carries), and
-    the next build must reclaim the id and heal it."""
-    g_idx = str(tmp_path / "orphan_idx")
-    qs = synth_queries(spark, 8)
-    c1 = ingest(synth_corpus(spark, 300, seed=81)).localCheckpoint(eager=True)
-    build_index(c1, g_idx, docs_per_shard=32, term_buckets=2,
-                global_layout="generational")
-    want = _results(spark, g_idx, qs)
-
-    # fabricate the crash leftover: a copy of gen 0 under an uncommitted id
-    # (the worst case — every df in it would double-count if read)
-    import shutil
-
-    shutil.copytree(os.path.join(g_idx, "global", "gen=0"),
-                    os.path.join(g_idx, "global", "gen=99"))
-    assert _results(spark, g_idx, qs) == want
-    assert _results(spark, g_idx, qs, query_mode="distributed") == want
-
-    # the next build sweeps the uncommitted dir and results stay correct
-    c2 = c1.unionByName(
-        ingest(synth_corpus(spark, 100, seed=82))
-        .withColumn("doc_id", F.col("doc_id") + F.lit(300))
-    ).localCheckpoint(eager=True)
-    build_index(c2, g_idx, docs_per_shard=32, term_buckets=2)
-    assert not os.path.exists(os.path.join(g_idx, "global", "gen=99"))
-    m_idx = str(tmp_path / "orphan_m")
-    build_index(c2, m_idx, docs_per_shard=32, term_buckets=2)
-    assert _results(spark, g_idx, qs) == _results(spark, m_idx, qs)
-
-
-def test_generational_staleness_on_compaction(spark, tmp_path):
-    """compact_index rebuilds shards inside genned ranges — the fingerprint
-    drift must re-merge exactly the affected gens, and post-compaction
-    search must match the merged-layout twin of the same compaction."""
-    m_idx = str(tmp_path / "mc_idx")
-    g_idx = str(tmp_path / "gc_idx")
-    qs = synth_queries(spark, 8)
-    for idx, layout in ((m_idx, "merged"), (g_idx, "generational")):
-        build_index(ingest(synth_corpus(spark, 300, seed=78)), idx,
-                    docs_per_shard=32, term_buckets=2, global_layout=layout)
-
-    # kill docs 0..39 — entirely inside gen 0's range [0, 9)
-    kill = spark.range(0, 40).select(F.col("id").alias("doc_id"))
-    compact_index(spark, m_idx, kill)
-    compact_index(spark, g_idx, kill)
-    sg = load_stats(g_idx)
-    assert sg["global_layout"] == "generational"  # layout survives compact
-    gens = _read_gens(spark, IndexPaths(g_idx))
-    assert len(gens) == sg["n_gens"]
-    assert _results(spark, g_idx, qs) == _results(spark, m_idx, qs)
-    assert (
-        _results(spark, g_idx, qs, query_mode="distributed")
-        == _results(spark, m_idx, qs)
-    )
-
-
-def _two_gen_index(spark, tmp_path, name, seeds=(91, 92)):
-    """Build a 2-gen generational index via two append-only windows; return
-    (index_dir, second-window corpus) — the corpus re-runs builds exactly."""
-    idx = str(tmp_path / name)
-    c1 = ingest(synth_corpus(spark, 240, seed=seeds[0])).localCheckpoint(
+    corpus = ingest(synth_corpus(spark, 300, seed=81)).localCheckpoint(
         eager=True
     )
-    c2 = c1.unionByName(
-        ingest(synth_corpus(spark, 120, seed=seeds[1]))
-        .withColumn("doc_id", F.col("doc_id") + F.lit(240))
-    ).localCheckpoint(eager=True)
-    build_index(c1, idx, docs_per_shard=32, term_buckets=2,
-                global_layout="generational")
-    build_index(c2, idx, docs_per_shard=32, term_buckets=2)
-    return idx, c2
+    build_index(corpus, idx, docs_per_shard=32, term_buckets=2)
+    stats = load_stats(idx)
+    assert stats["dictionary"] == "gen-0"
+    want = _results(spark, idx, qs)
+    assert want
 
-
-def test_gen_fold_crash_window_copy_forward(spark, tmp_path, monkeypatch):
-    """The round-6 hazard, closed: a fold (or stale re-merge) must NEVER
-    overwrite or delete a dir referenced by the committed stats.json. Crash
-    a fold-build right before the stats.json commit and verify (a) every
-    gen dir the still-committed stats references is byte-untouched, (b) a
-    reader serving off that view is bit-identical on both query planes,
-    (c) recovery is a plain re-run that does NOT re-execute the fold merge
-    (the crashed build's _gens.json already committed the folded gen), and
-    (d) superseded dirs are reclaimed one build later, once no committed
-    stats.json references them."""
-    import pytest
-
-    from dense_retriever_spark.index import build as build_mod
-
-    g_idx, c2 = _two_gen_index(spark, tmp_path, "cf_idx")
-    qs = synth_queries(spark, 8)
-    committed = load_stats(g_idx)
-    assert committed["n_gens"] == 2
-    want = _results(spark, g_idx, qs)
-    mtimes_before = _gen_file_mtimes(g_idx)
-
-    real_atomic = build_mod.fs.write_text_atomic
-
-    def crash_at_stats(path, content, spark_=None):
-        if path.endswith("stats.json"):
-            raise RuntimeError("injected crash before stats commit")
-        return real_atomic(path, content, spark_)
-
-    monkeypatch.setattr(build_mod.fs, "write_text_atomic", crash_at_stats)
-    with pytest.raises(RuntimeError, match="injected crash"):
-        build_index(c2, g_idx, docs_per_shard=32, term_buckets=2, max_gens=1)
-    monkeypatch.setattr(build_mod.fs, "write_text_atomic", real_atomic)
-
-    # (a) the committed view's dirs are whole and byte-untouched — the fold
-    # wrote a FRESH gen id instead of mutating gen 0/1 in place
-    assert load_stats(g_idx)["gen_ids"] == committed["gen_ids"]
-    mtimes_crash = _gen_file_mtimes(g_idx)
-    for p, mt in mtimes_before.items():
-        assert mtimes_crash[p] == mt, f"committed gen file touched: {p}"
-    # the uncommitted folded gen exists on disk (it will be adopted or
-    # swept later) and is invisible to readers
-    folded = [int(g["id"]) for g in _read_gens(spark, IndexPaths(g_idx))]
-    assert folded not in ([0], [1]) and len(folded) == 1
-    fold_dir = os.path.join(g_idx, "global", f"gen={folded[0]}")
-    assert os.path.isdir(fold_dir)
-
-    # (b) reader on the old committed view: bit-identical, both planes
-    assert _results(spark, g_idx, qs) == want
-    assert _results(spark, g_idx, qs, query_mode="distributed") == want
-
-    # (c) recovery = plain re-run; the folded gen's files must NOT be
-    # rewritten (its range fingerprint is unchanged — no fold re-run)
-    fold_mtimes = {
-        p: os.path.getmtime(p)
-        for p in glob.glob(os.path.join(fold_dir, "*.parquet"))
-    }
-    assert fold_mtimes
-    build_index(c2, g_idx, docs_per_shard=32, term_buckets=2, max_gens=1)
-    s2 = load_stats(g_idx)
-    assert s2["n_gens"] == 1 and s2["gen_ids"] == folded
-    for p, mt in fold_mtimes.items():
-        assert os.path.getmtime(p) == mt, f"fold re-ran: {p}"
-    # superseded gen 0/1 dirs survive THIS build (the pre-build committed
-    # stats.json still referenced them — a reader may be holding that view)
-    for gid in committed["gen_ids"]:
-        assert os.path.isdir(os.path.join(g_idx, "global", f"gen={gid}"))
-    assert _results(spark, g_idx, qs) == want
-    assert _results(spark, g_idx, qs, query_mode="distributed") == want
-
-    # (d) one more build: stats.json has moved off gen 0/1 — now reclaimed
-    build_index(c2, g_idx, docs_per_shard=32, term_buckets=2, max_gens=1)
-    for gid in committed["gen_ids"]:
-        assert not os.path.exists(
-            os.path.join(g_idx, "global", f"gen={gid}")
-        ), f"superseded gen={gid} never swept"
-    assert _results(spark, g_idx, qs) == want
-
-
-def test_gen_stale_remerge_is_copy_forward(spark, tmp_path):
-    """Compaction inside a genned range marks the gen stale; the re-merge
-    must land in a FRESH gen id (never overwrite the committed dir), with
-    the superseded dir kept until the next build's sweep."""
-    g_idx, c2 = _two_gen_index(spark, tmp_path, "sr_idx", seeds=(93, 94))
-    before = load_stats(g_idx)
-    assert before["n_gens"] == 2
-    untouched_id = before["gen_ids"][1]
-    untouched_dir = os.path.join(g_idx, "global", f"gen={untouched_id}")
-    untouched_mtimes = {
-        p: os.path.getmtime(p)
-        for p in glob.glob(os.path.join(untouched_dir, "*.parquet"))
-    }
-    assert untouched_mtimes
-    # kill docs inside gen 0's range only
-    kill = spark.range(0, 40).select(F.col("id").alias("doc_id"))
-    compact_index(spark, g_idx, kill)
-    after = load_stats(g_idx)
-    stale_old = before["gen_ids"][0]
-    assert stale_old not in after["gen_ids"], "stale gen id reused in place"
-    assert after["n_gens"] == 2
-    # gen-aware compaction (round-7 ask #4): ONLY the covering gen re-merges
-    # — the untouched gen keeps its id and its files are byte-untouched
-    assert untouched_id in after["gen_ids"]
-    for p, mt in untouched_mtimes.items():
-        assert os.path.getmtime(p) == mt, f"untouched gen re-merged: {p}"
-    # superseded dir survives this build (previous stats referenced it) …
-    assert os.path.isdir(os.path.join(g_idx, "global", f"gen={stale_old}"))
-    # reader correctness on the compacted view vs a compacted merged twin
-    qs = synth_queries(spark, 8)
-    m_idx = str(tmp_path / "sr_m")
-    build_index(c2, m_idx, docs_per_shard=32, term_buckets=2)
-    compact_index(spark, m_idx, kill)
-    assert _results(spark, g_idx, qs) == _results(spark, m_idx, qs)
-    # … and the superseded dir is swept by the next build (which restores
-    # the killed docs from the corpus — both twins rebuilt for parity)
-    build_index(c2, g_idx, docs_per_shard=32, term_buckets=2)
-    assert not os.path.exists(
-        os.path.join(g_idx, "global", f"gen={stale_old}")
+    # the crash leftovers: the next generation a crashed build would have
+    # written, and a stray one, both with every df off by one (any reader
+    # that counted them would score differently)
+    paths = IndexPaths(idx)
+    wrong = spark.read.parquet(paths.dictionary(stats)).withColumn(
+        "df", F.col("df") + 1
     )
-    build_index(c2, m_idx, docs_per_shard=32, term_buckets=2)
-    assert _results(spark, g_idx, qs) == _results(spark, m_idx, qs)
+    for name in ("gen-1", "gen-99"):
+        wrong.write.parquet(os.path.join(paths.global_dir, name))
+    assert _all_planes(spark, idx, qs, monkeypatch) == (want, want, want)
+
+    # the next (no-change) build overwrites gen-1 with the right dictionary,
+    # commits it and sweeps gen-99; gen-0 stays for readers of the old view
+    build_index(corpus, idx, docs_per_shard=32, term_buckets=2)
+    assert load_stats(idx)["dictionary"] == "gen-1"
+    assert sorted(os.listdir(paths.global_dir)) == ["gen-0", "gen-1"]
+    assert _all_planes(spark, idx, qs, monkeypatch) == (want, want, want)
 
 
-def test_concurrent_reader_during_fold(spark, tmp_path):
-    """Round-7 ask #8: a reader thread hammering the index WHILE a
-    fold-build runs must be bit-identical at every instant. A pure fold
-    changes segmentation, not (term, df) content, so old view and new view
-    serve the same results — any mismatch means the reader caught a
-    half-committed state (the exact in-place-overwrite hazard copy-forward
-    removes). stats.json itself is atomic-replaced, so a poll never sees a
-    truncated JSON either."""
-    import threading
-
-    g_idx, c2 = _two_gen_index(spark, tmp_path, "cr_idx", seeds=(95, 96))
+def test_concurrent_reader_during_rebuild(spark, tmp_path):
+    """A reader thread searching (driver-local and distributed planes, cold
+    term-df cache) WHILE two no-change rebuilds run must see the same
+    results at every instant: each rebuild writes its dictionary into a
+    fresh directory and only the atomic stats.json replace publishes it,
+    so no read ever finds the dictionary half-written or missing."""
+    idx = str(tmp_path / "cr_idx")
+    corpus = ingest(synth_corpus(spark, 300, seed=95)).localCheckpoint(
+        eager=True
+    )
+    build_index(corpus, idx, docs_per_shard=32, term_buckets=2)
     qs = synth_queries(spark, 6).localCheckpoint(eager=True)
-    want = _results(spark, g_idx, qs)
+    want = _results(spark, idx, qs)
     assert want
 
     stop = threading.Event()
@@ -306,48 +99,29 @@ def test_concurrent_reader_during_fold(spark, tmp_path):
 
     def reader():
         while not stop.is_set():
-            try:
-                got = _results(spark, g_idx, qs)
-            except Exception as e:  # a vanished file mid-scan lands here
-                mismatches.append(repr(e))
-                return
-            iters[0] += 1
-            if got != want:
-                mismatches.append(got)
-                return
+            for kw in ({}, {"query_mode": "distributed"}):
+                search_mod._term_df_cache_clear()
+                try:
+                    got = _results(spark, idx, qs, **kw)
+                except Exception as e:  # a vanished file mid-scan lands here
+                    mismatches.append(repr(e))
+                    return
+                iters[0] += 1
+                if got != want:
+                    mismatches.append((kw, got))
+                    return
 
     t = threading.Thread(target=reader, daemon=True)
     t.start()
     try:
-        # two fold-builds while the reader runs (fold + superseded sweep)
-        build_index(c2, g_idx, docs_per_shard=32, term_buckets=2, max_gens=1)
-        build_index(c2, g_idx, docs_per_shard=32, term_buckets=2, max_gens=1)
+        build_index(corpus, idx, docs_per_shard=32, term_buckets=2)
+        build_index(corpus, idx, docs_per_shard=32, term_buckets=2)
     finally:
         stop.set()
         t.join(timeout=120)
     assert not mismatches, f"concurrent reader saw a bad view: {mismatches[:1]}"
     assert iters[0] > 0  # the reader actually overlapped the builds
-    assert load_stats(g_idx)["n_gens"] == 1
-    assert _results(spark, g_idx, qs) == want
-
-
-def test_generational_fold_policy_bounds_gen_count(spark, tmp_path):
-    """Growing the corpus window by window with max_gens=2 must fold
-    adjacent gens instead of accumulating one per window — and results
-    stay identical to a from-scratch merged build."""
-    g_idx = str(tmp_path / "gf_idx")
-    qs = synth_queries(spark, 8)
-    for n in (120, 240, 360, 480):
-        build_index(ingest(synth_corpus(spark, n, seed=79)), g_idx,
-                    docs_per_shard=32, term_buckets=2,
-                    global_layout="generational", max_gens=2)
-    sg = load_stats(g_idx)
-    assert sg["n_gens"] <= 2
-    gens = _read_gens(spark, IndexPaths(g_idx))
-    assert [g["lo"] for g in gens] == sorted(g["lo"] for g in gens)
-    assert max(g["hi"] for g in gens) == sg["genned_until"]
-
-    m_idx = str(tmp_path / "mf_idx")
-    build_index(ingest(synth_corpus(spark, 480, seed=79)), m_idx,
-                docs_per_shard=32, term_buckets=2)
-    assert _results(spark, g_idx, qs) == _results(spark, m_idx, qs)
+    # copy-forward: the committed dictionary plus the one before it
+    assert load_stats(idx)["dictionary"] == "gen-2"
+    assert sorted(os.listdir(IndexPaths(idx).global_dir)) == ["gen-1", "gen-2"]
+    assert _results(spark, idx, qs) == want

@@ -52,7 +52,8 @@ def test_global_merge_consistency(spark, built, tiny_corpus):
         .groupBy("term")
         .agg(F.count("*").alias("edf"))
     )
-    got = spark.read.parquet(built.global_dir).select(
+    stats = json.loads(open(built.stats).read())
+    got = spark.read.parquet(built.dictionary(stats)).select(
         "term", F.col("df").alias("gdf")
     )
     diff = got.join(expected, "term", "full").filter(
@@ -251,7 +252,9 @@ def test_compact_removes_fully_killed_shard(spark, tiny_corpus, tmp_path):
         .agg(F.count("*").alias("df"), F.sum("tf").alias("cf"))
         .collect()
     }
-    g = spark.read.parquet(IndexPaths(d).global_dir)
+    from dense_retriever_spark.index.search import load_stats
+
+    g = spark.read.parquet(IndexPaths(d).dictionary(load_stats(d)))
     assert g.columns == ["term", "df", "cf"]
     got = {r["term"]: (r["df"], r["cf"]) for r in g.collect()}
     assert got == want
@@ -259,7 +262,8 @@ def test_compact_removes_fully_killed_shard(spark, tiny_corpus, tmp_path):
 
 def test_format_version_and_dps_fail_fast(spark, tiny_corpus, tmp_path):
     """An index stamped with an older format (v1 u32 headers, v2 block-max
-    columns and a postings-bearing global/), or resumed with a different
+    columns and a postings-bearing global/, v3 a global/ rewritten in place
+    or split into gen=<id>/ segments), or resumed with a different
     docs_per_shard, must be REFUSED loudly — not silently misread (round-2
     ADVICE). Every entry point checks: load_stats/search, a resumed
     build_index, and merge_indexes."""
@@ -267,7 +271,7 @@ def test_format_version_and_dps_fail_fast(spark, tiny_corpus, tmp_path):
     from dense_retriever_spark.index.merge import merge_indexes
     from dense_retriever_spark.index.search import load_stats, search
 
-    assert FORMAT_VERSION == 3
+    assert FORMAT_VERSION == 4
 
     d = str(tmp_path / "vidx")
     build_index(tiny_corpus, d, docs_per_shard=64, term_buckets=2)
@@ -280,7 +284,7 @@ def test_format_version_and_dps_fail_fast(spark, tiny_corpus, tmp_path):
     build_index(tiny_corpus, ok, docs_per_shard=64, term_buckets=2)
     q = spark.createDataFrame([(0, "def")], "query_id long, query string")
     s = json.load(open(stats_path))
-    for old in (1, 2):
+    for old in (1, 2, 3):
         s["format_version"] = old
         json.dump(s, open(stats_path, "w"))
         with pytest.raises(ValueError, match="format"):

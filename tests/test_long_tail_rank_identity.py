@@ -3,9 +3,12 @@
 ``corpus.synth_corpus`` has a ~440-word vocabulary, so every term sits in a
 fifth of the documents. The generator's corpus has Zipf-drawn identifiers:
 most terms occur in one or two files, a few keywords in nearly all. On it,
-every query plane of both global layouts must return the oracle's top-k
-(doc_id and rank equal, score within 1e-9, (score DESC, doc_id ASC)
-tie-break), and global/ must hold exactly the per-term sums of shards/.
+every query plane must return the oracle's top-k (doc_id and rank equal,
+score within 1e-9, (score DESC, doc_id ASC) tie-break), with and without
+kill-lists and include filters, and the committed global/ dictionary must
+hold exactly the per-term sums of shards/ — on an index built in one go
+and on one grown in two builds, whose global/ also holds the superseded
+dictionary generation that no reader may count.
 
 The planes: ``query_mode="broadcast"`` on a local index is the driver-local
 plane; the Spark broadcast plane is forced by making ``fs.local_path``
@@ -41,6 +44,8 @@ from dense_retriever_spark.operators.bm25 import (  # noqa: E402
 N_FILES = 300
 N_QUERIES = 40
 KS = (1, 10, 50)
+#: "merged": one build over the corpus; "generational": the first 200
+#: files, then all of them, so global/ holds two dictionary generations
 LAYOUTS = ("merged", "generational")
 
 
@@ -61,8 +66,10 @@ def indexes(spark, long_tail, tmp_path_factory):
     out = {}
     for layout in LAYOUTS:
         d = str(root / layout)
-        build_index(corpus, d, docs_per_shard=64, term_buckets=4,
-                    global_layout=layout)
+        if layout == "generational":
+            build_index(corpus.filter(F.col("doc_id") < 200), d,
+                        docs_per_shard=64, term_buckets=4)
+        build_index(corpus, d, docs_per_shard=64, term_buckets=4)
         out[layout] = d
     return out
 
@@ -126,13 +133,31 @@ def _by_query(rows, k):
 @pytest.mark.parametrize("layout", LAYOUTS)
 @pytest.mark.parametrize("query_mode", ["broadcast", "distributed"])
 def test_search_rank_identical_to_oracle(
-    spark, long_tail, indexes, oracle, layout, query_mode
+    spark, long_tail, indexes, oracle, full_oracle, layout, query_mode
 ):
-    _, queries = long_tail
+    """Plain search, and ``include_doc_ids`` (the Spark broadcast plane on
+    ``broadcast``) with and without a kill-list: the oracle's ranking
+    restricted to the allowed docs."""
+    corpus, queries = long_tail
+    d = indexes[layout]
+    incl = corpus.filter(F.col("doc_id") % 3 != 0).select("doc_id")
+    kill = corpus.filter(F.col("doc_id") % 4 == 1).select("doc_id")
     for k in KS:
-        got = search(spark, indexes[layout], queries, k=k,
+        got = search(spark, d, queries, k=k,
                      query_mode=query_mode).collect()
         _assert_matches_oracle(got, oracle, k)
+        got = search(spark, d, queries, k=k, query_mode=query_mode,
+                     include_doc_ids=incl).collect()
+        _assert_matches_oracle(
+            got, _masked(full_oracle, lambda x: x % 3 != 0, k), k
+        )
+        got = search(spark, d, queries, k=k, query_mode=query_mode,
+                     include_doc_ids=incl, exclude_doc_ids=kill).collect()
+        _assert_matches_oracle(
+            got,
+            _masked(full_oracle, lambda x: x % 3 != 0 and x % 4 != 1, k),
+            k,
+        )
 
 
 @pytest.mark.parametrize("layout", LAYOUTS)
@@ -218,12 +243,12 @@ def test_global_dictionary_sums_shards(spark, indexes, layout):
         .collect()
     }
     stats = load_stats(d)
-    if layout == "merged":
-        assert spark.read.parquet(paths.global_dir).columns == [
-            "term", "df", "cf"
-        ]
-    else:
-        assert stats["n_gens"] >= 1  # gens plus the loose tail shard
+    gens = ["gen-0"] if layout == "merged" else ["gen-0", "gen-1"]
+    assert sorted(os.listdir(paths.global_dir)) == gens
+    assert stats["dictionary"] == gens[-1]
+    assert spark.read.parquet(paths.dictionary(stats)).columns == [
+        "term", "df", "cf"
+    ]
     g = global_term_stats(spark, d, stats)
     assert g.columns == ["term", "df", "cf"]
     got = {r["term"]: (r["df"], r["cf"]) for r in g.collect()}

@@ -84,8 +84,8 @@ def test_merge_equals_fresh_build(spark, tmp_path):
     assert sm["avgdl"] == pytest.approx(sf["avgdl"])
 
     # global/ is the same (term, df, cf) dictionary
-    gf = spark.read.parquet(IndexPaths(ifull).global_dir)
-    gm = spark.read.parquet(IndexPaths(im).global_dir)
+    gf = spark.read.parquet(IndexPaths(ifull).dictionary(sf))
+    gm = spark.read.parquet(IndexPaths(im).dictionary(sm))
     assert gf.columns == gm.columns == ["term", "df", "cf"]
     rows_f = {r["term"]: (r["df"], r["cf"]) for r in gf.collect()}
     rows_m = {r["term"]: (r["df"], r["cf"]) for r in gm.collect()}
@@ -96,83 +96,6 @@ def test_merge_equals_fresh_build(spark, tmp_path):
         assert _res(spark, im, qs, query_mode=mode) == _res(
             spark, ifull, qs, query_mode=mode
         )
-
-
-def test_merge_generational_layout(spark, tmp_path):
-    full, a, b = _corpus_halves(spark, n=180, seed=23)
-    qs = synth_queries(spark, 6)
-    ia, ib, ifull, im = (str(tmp_path / x) for x in ("a", "b", "full", "m"))
-    build_index(a, ia, docs_per_shard=DPS, term_buckets=2)
-    build_index(b, ib, docs_per_shard=DPS, term_buckets=2,
-                global_layout="generational")
-    build_index(full, ifull, docs_per_shard=DPS, term_buckets=2)
-    merged = merge_indexes(spark, [ia, ib], im, global_layout="generational")
-    assert load_stats(im)["global_layout"] == "generational"
-    assert load_stats(im)["n_gens"] >= 1
-    assert _res(spark, im, qs) == _res(spark, ifull, qs)
-    assert merged.root == im
-
-
-def test_merge_generational_carries_gens_over(spark, tmp_path):
-    """Generational merge is O(metadata): every committed source gen carries
-    over as a copied stats table with a shifted range — no re-aggregation —
-    and the merged index's gens tile all non-last-source shards."""
-    import json as _json
-
-    from dense_retriever_spark.index import fs as idx_fs
-    from dense_retriever_spark.index.build import _read_gens
-
-    full, a, b = _corpus_halves(spark, n=220, seed=61)
-    ia, ib, im = (str(tmp_path / x) for x in ("a", "b", "m"))
-    # two incremental windows per source → each source has committed gens
-    for src, dst, n1 in ((a, ia, 64), (b, ib, 64)):
-        w1 = src.filter(F.col("doc_id") < n1).localCheckpoint(eager=True)
-        build_index(w1, dst, docs_per_shard=DPS, term_buckets=2,
-                    global_layout="generational")
-        build_index(src.localCheckpoint(eager=True), dst,
-                    docs_per_shard=DPS, term_buckets=2)
-    ga = [g for g in _read_gens(spark, IndexPaths(ia))]
-    gb = [g for g in _read_gens(spark, IndexPaths(ib))]
-    assert ga and gb
-    merge_indexes(spark, [ia, ib], im, global_layout="generational")
-
-    st = load_stats(im)
-    gm = sorted(_read_gens(spark, IndexPaths(im)), key=lambda g: g["lo"])
-    committed = {int(x) for x in st["gen_ids"]}
-    gm = [g for g in gm if int(g["id"]) in committed]
-    n_shards_a = _json.loads(
-        idx_fs.read_text(IndexPaths(ia).stats, spark)
-    )["n_shards"]
-    # source a's ranges appear shifted by 0, source b's by n_shards_a; the
-    # whole of source a (incl. its tail shard) is genned in the merge
-    ranges = [(g["lo"], g["hi"]) for g in gm]
-    for g in ga:
-        assert any(lo == g["lo"] and hi >= g["hi"] for lo, hi in ranges)
-    for g in gb:
-        assert any(
-            lo == g["lo"] + n_shards_a and hi >= g["hi"] + n_shards_a
-            for lo, hi in ranges
-        )
-    covered_until = max(hi for _, hi in ranges)
-    assert covered_until >= n_shards_a  # a's loose tail genned too
-    # carried stats equal the source's gen stats (copy, not re-aggregate)
-    src_gen0 = spark.read.parquet(
-        f"{ia}/global/gen={int(ga[0]['id'])}"
-    ).select("term", "df", "cf")
-    dst_match = [g for g in gm if g["lo"] == ga[0]["lo"]
-                 and g["hi"] == ga[0]["hi"]]
-    if dst_match:  # untouched by folds: contents must be identical
-        dst_gen = spark.read.parquet(
-            f"{im}/global/gen={int(dst_match[0]['id'])}"
-        ).select("term", "df", "cf")
-        assert sorted(map(tuple, src_gen0.collect())) == sorted(
-            map(tuple, dst_gen.collect())
-        )
-    # and the merged index still answers like a fresh full build
-    ifull = str(tmp_path / "full")
-    build_index(full, ifull, docs_per_shard=DPS, term_buckets=2)
-    qs = synth_queries(spark, 6)
-    assert _res(spark, im, qs) == _res(spark, ifull, qs)
 
 
 def test_merge_validation_errors(spark, tmp_path):

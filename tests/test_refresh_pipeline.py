@@ -486,8 +486,8 @@ def test_refresh_auto_reshard_bit_identical(spark, tmp_path):
 
 
 def test_refresh_metadata_only_docs_equivalent(spark, tmp_path):
-    """The full incremental configuration (metadata-only docs table +
-    generational global layout) must produce bit-identical searches, MRR,
+    """The metadata-only docs table (content joined from the corpus table
+    at build time) must produce bit-identical searches, MRR,
     and train sets to the default configuration — the corpus table is the
     content store, docs/ carries only metadata."""
     from dense_retriever_spark.corpus import synth_corpus, synth_queries
@@ -510,7 +510,7 @@ def test_refresh_metadata_only_docs_equivalent(spark, tmp_path):
     wd_b = str(tmp_path / "mo_on")
     rounds_b = refresh_rounds(
         spark, batches(), queries, qrels, wd_b, k=5, docs_per_shard=32,
-        metadata_only_docs=True, global_layout="generational",
+        metadata_only_docs=True,
     )
     assert [r["mrr@5"] for r in rounds_a] == [r["mrr@5"] for r in rounds_b]
 

@@ -12,7 +12,6 @@ doc-id assignment projection and the phase-B (term, df, cf) aggregate.
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 import sys
@@ -54,13 +53,10 @@ def main() -> None:
     idx = work + "/index"
     build_index(assigned, idx, docs_per_shard=512, term_buckets=2)
     # 2) phase-B input: the (term, df, cf) aggregate over every shard (the
-    # merged layout's global/; a generational gen is the same plan over a
-    # shard range)
+    # dictionary each build writes into a fresh global/gen-<n>/)
     from dense_retriever_spark.index.build import _term_stats_df
 
-    stats = json.loads(open(IndexPaths(idx).stats).read())
-    dump("phase_b_term_stats",
-         _term_stats_df(spark, IndexPaths(idx), 0, stats["n_shards"]))
+    dump("phase_b_term_stats", _term_stats_df(spark, IndexPaths(idx)))
 
     queries = synth_queries(spark, 20)
     from dense_retriever_spark.index.search import search
