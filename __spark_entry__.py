@@ -21,29 +21,11 @@ def entry(spark: SparkSession) -> DataFrame:
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     from dense_retriever_spark.contract import QUERIES
-    from dense_retriever_spark.contract2 import QUERIES2
-    from dense_retriever_spark.contract3 import QUERIES3
-    from dense_retriever_spark.contract4 import QUERIES4
-    from dense_retriever_spark.contract5 import QUERIES5
-    from dense_retriever_spark.contract6 import QUERIES6
-    from dense_retriever_spark.contract7 import QUERIES7
-    from dense_retriever_spark.contract8 import QUERIES8
-    from dense_retriever_spark.contract9 import QUERIES9
 
-    return {**QUERIES, **QUERIES2, **QUERIES3, **QUERIES4, **QUERIES5,
-            **QUERIES6, **QUERIES7, **QUERIES8, **QUERIES9}
+    return QUERIES
 
 
 def oracle_sql() -> dict[str, str]:
     from dense_retriever_spark.contract import ORACLES
-    from dense_retriever_spark.contract2 import ORACLES2
-    from dense_retriever_spark.contract3 import ORACLES3
-    from dense_retriever_spark.contract4 import ORACLES4
-    from dense_retriever_spark.contract5 import ORACLES5
-    from dense_retriever_spark.contract6 import ORACLES6
-    from dense_retriever_spark.contract7 import ORACLES7
-    from dense_retriever_spark.contract8 import ORACLES8
-    from dense_retriever_spark.contract9 import ORACLES9
 
-    return {**ORACLES, **ORACLES2, **ORACLES3, **ORACLES4, **ORACLES5,
-            **ORACLES6, **ORACLES7, **ORACLES8, **ORACLES9}
+    return ORACLES

@@ -6,7 +6,7 @@ see /root/reference/dense_retriever/transforms/ann_index.py) as an idiomatic Spa
 engine: a code-aware Arrow-vectorized tokenizer, a sharded inverted index with
 delta+varbyte compressed postings, and an exact Okapi BM25 (k1=1.2,
 b=0.75) top-k scorer — plus the surrounding
-training-data-pipeline operators (dedup, similarity search, text analysis).
+training-data-pipeline operators (dedup, similarity search).
 
 Design principles (SURVEY.md §7.0):
 - DataFrame/SQL first; Catalyst plans everything plan-level.

@@ -17,7 +17,7 @@ Reference: 12 click commands (cli/__init__.py:15-26). Mapping:
   (beyond the reference) compact → physically drop a tombstone kill-list
     from the index, rebuilding only the affected shards (build.compact_index)
   train_model / run_inference / build_encoding_cache → out of scope (GPU
-    model training/inference; the KV cache join exists as contract3.q28).
+    model training/inference; the KV cache join exists as contract.q28_cache_join).
 
 Package with ``python tools/package.py`` → ``spark-submit --py-files
 engine.zip -m dense_retriever_spark.cli <cmd> ...`` (or python -m locally).

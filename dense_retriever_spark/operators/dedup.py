@@ -94,7 +94,7 @@ def minhash_signature(df: DataFrame, id_col: str, text_col: str,
     transforms h_i = (a_i*base + b_i) mod 2^31-1 — the standard minwise-family
     construction. (The naive one-md5-per-(shingle, i) variant was 16x the
     hashing work and dominated the dedup benchmark.) SQL-reproducible:
-    contract2.Q13_SQL computes the identical values in DuckDB.
+    contract.Q13_SQL computes the identical values in DuckDB.
     """
     ex = (
         df.select(

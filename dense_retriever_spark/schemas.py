@@ -10,7 +10,6 @@ from __future__ import annotations
 
 from pyspark.sql.types import (
     ArrayType,
-    BinaryType,
     DoubleType,
     IntegerType,
     LongType,
@@ -91,18 +90,5 @@ DOCS_JSONL_SCHEMA = StructType(
     [
         StructField("doc_id", StringType()),
         StructField("text", StringType()),
-    ]
-)
-
-# Multimodal: opaque binary payload + typed metadata (task brief)
-MULTIMODAL_SCHEMA = StructType(
-    [
-        StructField("asset_id", LongType(), False),
-        StructField("kind", StringType(), False),  # image | audio | video
-        StructField("payload", BinaryType()),
-        StructField("mime", StringType()),
-        StructField("width", IntegerType()),
-        StructField("height", IntegerType()),
-        StructField("duration_ms", LongType()),
     ]
 )

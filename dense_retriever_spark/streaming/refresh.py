@@ -303,8 +303,7 @@ def stateful_user_sessions(
 
     State per user: (last_ts_epoch, n_sessions, n_events). Each micro-batch
     folds its events (sorted by ts) into the state and emits one updated row
-    per user: (user_id, n_sessions, n_events). This is the stream twin of the
-    batch sessionization in contract2.q24_sessionize.
+    per user: (user_id, n_sessions, n_events).
 
     The group's Arrow chunks are CONCATENATED and sorted once before the fold
     — a group larger than maxRecordsPerBatch arrives as several chunks whose

@@ -87,29 +87,6 @@ def test_embedding_near_dup_pairs_vs_bruteforce(spark):
     assert len(got) / len(truth) >= 0.9
 
 
-def test_multimodal_resize_and_frames(spark):
-    """1:1 resize (images only, payloads pruned pre-UDF) and 1:N frame
-    fan-out (videos only, n rows per asset)."""
-    from dense_retriever_spark.operators.multimodal import (
-        resize_images,
-        sample_frames,
-        synth_assets,
-    )
-
-    assets = synth_assets(spark, 120)
-    kinds = {r["kind"]: r["n"] for r in
-             assets.groupBy("kind").agg(F.count("*").alias("n")).collect()}
-    rz = resize_images(assets, width=32, height=32)
-    assert rz.count() == kinds["image"]
-    assert rz.filter(F.col("out_bytes") != 32 * 32 * 3).count() == 0
-    fr = sample_frames(assets, n_frames=3)
-    assert fr.count() == 3 * kinds["video"]
-    per = fr.groupBy("asset_id").agg(F.count("*").alias("n"))
-    assert per.filter(F.col("n") != 3).count() == 0
-    # deterministic: same input → same fingerprints
-    assert rz.collect() == resize_images(assets, width=32, height=32).collect()
-
-
 def test_ivf_ann_recall_and_pruning(spark):
     """IVF (fixed-K hash-sample quantizer, nprobe=8) on the weakly-clustered
     synthetic embeddings: recall@3 ≥ 0.7 measured vs bruteforce. SRP
@@ -179,25 +156,6 @@ def test_ivf_kmeans_centroids_variant(spark):
     truth = {(r["query_vec_id"], r["vec_id"]) for r in exact}
     got = {(r["query_vec_id"], r["vec_id"]) for r in approx}
     assert len(truth & got) / len(truth) >= 0.6
-
-
-def test_kmv_distinct_sketch(spark):
-    """KMV: exact below k, ~1/sqrt(k) relative error above it, and the
-    estimate is a pure function of the data (deterministic)."""
-    from dense_retriever_spark.operators.sketches import kmv_distinct
-
-    small = spark.range(40).select(F.concat(F.lit("v"), "id").alias("v"))
-    r = kmv_distinct(small, "v", k=64).collect()[0]
-    assert r["estimate"] == 40.0  # below k → exact
-
-    big = spark.range(5000).select(
-        F.concat(F.lit("tok"), F.pmod("id", F.lit(3777))).alias("v")
-    )  # 3777 distinct values
-    r = kmv_distinct(big, "v", k=64).collect()[0]
-    err = abs(r["estimate"] - 3777) / 3777
-    assert err < 0.35, f"KMV error {err:.2f}"
-    r2 = kmv_distinct(big, "v", k=64).collect()[0]
-    assert r2["estimate"] == r["estimate"]
 
 
 def test_connected_components(spark):
@@ -469,43 +427,3 @@ def test_srp_high_dim_uses_pandas_path(spark):
     for r in rows:
         per_q.setdefault(r["query_vec_id"], []).append(r["rank"])
     assert all(sorted(v) == list(range(1, len(v) + 1)) for v in per_q.values())
-
-
-def test_resize_images_pil_branch_or_guard(spark):
-    """Runs EITHER way: with PIL present the real decoder resizes synthetic
-    PNGs (pixel-byte sha, true byte count); without it, decoder='pil' raises
-    a clear ImportError and the stub path stays deterministic."""
-    from dense_retriever_spark.operators import multimodal
-    from dense_retriever_spark.operators.multimodal import (
-        resize_images,
-        synth_assets,
-    )
-
-    if multimodal._HAS_PIL:
-        import io
-
-        from PIL import Image
-
-        bufs = []
-        for i in range(3):
-            img = Image.new("RGB", (8 + i, 8), color=(i * 40, 10, 200))
-            b = io.BytesIO()
-            img.save(b, format="PNG")
-            bufs.append(b.getvalue())
-        df = spark.createDataFrame(
-            [(i, "image", bufs[i]) for i in range(3)],
-            "asset_id long, kind string, payload binary",
-        )
-        out = resize_images(df, width=4, height=4, decoder="pil").collect()
-        assert len(out) == 3
-        assert all(r["out_bytes"] == 4 * 4 * 3 for r in out)
-        assert len({r["resize_sha"] for r in out}) == 3  # distinct pixels
-    else:
-        import pytest as _pytest
-
-        with _pytest.raises(ImportError, match="PIL"):
-            resize_images(synth_assets(spark, 10), decoder="pil")
-        # auto falls back to the stub and stays deterministic
-        a = resize_images(synth_assets(spark, 30), decoder="auto").collect()
-        b = resize_images(synth_assets(spark, 30), decoder="stub").collect()
-        assert a == b

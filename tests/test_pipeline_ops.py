@@ -1,4 +1,4 @@
-"""Training-data pipeline operators: dedup, similarity, negatives, multimodal."""
+"""Training-data pipeline operators: dedup, similarity, negatives."""
 
 from __future__ import annotations
 
@@ -122,104 +122,6 @@ def test_hard_negative_pipeline(spark):
     assert sorted(map(tuple, tr.collect())) == sorted(map(tuple, tr2.collect()))
 
 
-def test_multimodal_plumbing(spark):
-    from dense_retriever_spark.operators.multimodal import (
-        extract_features,
-        synth_assets,
-    )
-
-    feats = extract_features(synth_assets(spark, 50), dim=8).collect()
-    assert len(feats) == 50
-    for r in feats:
-        assert len(r["feat"]) == 8
-        assert r["n_bytes"] > 0 and len(r["payload_sha"]) == 64
-    # determinism
-    feats2 = extract_features(synth_assets(spark, 50), dim=8).collect()
-    assert sorted(r["asset_id"] for r in feats) == sorted(
-        r["asset_id"] for r in feats2
-    )
-    f1 = {r["asset_id"]: r["feat"] for r in feats}
-    f2 = {r["asset_id"]: r["feat"] for r in feats2}
-    assert f1 == f2
-
-
-def test_text_stats(spark):
-    from dense_retriever_spark.functions.text_stats import (
-        fingerprint_md5,
-        fingerprint_rolling,
-        langid_scores,
-        quality_score,
-        token_count_ws,
-    )
-
-    df = spark.createDataFrame(
-        [
-            (0, "the cat and the dog of to in"),
-            (1, "der hund und die katze ist da"),
-            (2, "xyzzy qwerty"),
-            (3, "The   CAT and the Dog, of; to!! in"),
-        ],
-        "doc_id long, text string",
-    )
-    out = {
-        r["doc_id"]: r
-        for r in df.select(
-            "doc_id",
-            langid_scores("text").alias("lang"),
-            token_count_ws("text").alias("n"),
-            quality_score("text").alias("q"),
-            fingerprint_md5("text").alias("fp"),
-            fingerprint_rolling("text").alias("fpr"),
-        ).collect()
-    }
-    assert out[0]["lang"] == "en"
-    assert out[1]["lang"] == "de"
-    assert out[2]["lang"] == "und"
-    assert out[0]["n"] == 8
-    assert 0.0 <= out[0]["q"] <= 1.0
-    # normalization-insensitive fingerprint: 0 and 3 tokenize identically
-    assert out[0]["fp"] == out[3]["fp"]
-    assert out[0]["fpr"] == out[3]["fpr"]
-
-
-def test_scrub_redaction_and_repetition(spark):
-    """PII/secret scrubbing + repetition filter (functions/scrub.py):
-    redaction replaces every occurrence, audit counts match, repetition
-    ratio is the duplicate-line mass."""
-    from dense_retriever_spark.functions.scrub import (
-        redact_expr,
-        redaction_counts,
-        repetition_ratio,
-    )
-
-    rows = [
-        (1, "mail a@b.com and c.d@e.org, ip 10.1.2.3, key " + "ab" * 20),
-        (2, "clean prose with no pii at all"),
-        (3, "dup\ndup\ndup\nunique"),
-        (4, ""),
-    ]
-    df = spark.createDataFrame(rows, "id long, t string")
-    out = {
-        r["id"]: r
-        for r in df.select(
-            "id",
-            redact_expr("t").alias("red"),
-            redaction_counts("t").alias("c"),
-            repetition_ratio("t").alias("rep"),
-        ).collect()
-    }
-    assert out[1]["c"]["email"] == 2
-    assert out[1]["c"]["ipv4"] == 1
-    assert out[1]["c"]["hex_secret"] == 1
-    assert "<EMAIL>" in out[1]["red"] and "<IP>" in out[1]["red"]
-    assert "<SECRET>" in out[1]["red"]
-    assert "a@b.com" not in out[1]["red"] and "10.1.2.3" not in out[1]["red"]
-    assert out[2]["red"] == rows[1][1]  # clean text untouched
-    assert out[2]["c"]["email"] == 0
-    assert abs(out[3]["rep"] - 0.5) < 1e-9  # 4 lines, 2 distinct
-    assert out[4]["rep"] == 0.0  # empty doc: no lines, defined as 0
-
-
 def test_stratified_sample_quotas(spark):
     """Per-group quotas + determinism under repartitioning (training-mix
     constructor, q51)."""
@@ -258,109 +160,3 @@ def test_stratified_sample_quotas(spark):
         ).collect()
     )
     assert a == b
-
-
-def test_profile_numeric_nulls_and_quartiles(spark):
-    from dense_retriever_spark.operators.profile import profile_numeric
-
-    df = spark.createDataFrame(
-        [(1, 10.0), (2, 20.0), (3, 30.0), (4, None), (5, 40.0)],
-        "a long, b double",
-    )
-    rows = {r["col_name"]: r for r in profile_numeric(df, ["a", "b"]).collect()}
-    a, b = rows["a"], rows["b"]
-    assert (a["n"], a["n_null"], a["n_distinct"]) == (5, 0, 5)
-    assert (a["min_value"], a["max_value"], a["p50"]) == (1.0, 5.0, 3.0)
-    assert (b["n"], b["n_null"], b["n_distinct"]) == (5, 1, 4)
-    # quartiles over non-null {10,20,30,40}: linear interpolation
-    assert (b["p25"], b["p50"], b["p75"]) == (17.5, 25.0, 32.5)
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        profile_numeric(df, [])
-
-
-def test_asof_join_semantics(spark):
-    """asof_join: latest right row at-or-before each left row per key;
-    nulls when nothing precedes; equal timestamps match (l.on >= r.on)."""
-    from dense_retriever_spark.operators.asof import asof_join
-
-    left = spark.createDataFrame(
-        [(1, 10, "u"), (2, 20, "u"), (3, 5, "v"), (4, 30, "w")],
-        "id long, ts long, user string",
-    )
-    right = spark.createDataFrame(
-        [(10, "u", 1.0), (15, "u", 2.0), (20, "u", 3.0), (9, "v", 9.0)],
-        "ts long, user string, price double",
-    )
-    got = {
-        r["id"]: (r["asof_ts"], r["asof_price"])
-        for r in asof_join(
-            left, right, on="ts", by=["user"], value_cols=["price"]
-        ).collect()
-    }
-    assert got[1] == (10, 1.0)   # equal ts matches
-    assert got[2] == (20, 3.0)   # latest at-or-before, not just any prior
-    assert got[3] == (None, None)  # right row is AFTER the left row
-    assert got[4] == (None, None)  # key with no right rows at all
-    # left row count preserved exactly (left join semantics)
-    assert len(got) == 4
-
-
-def test_range_join_binning_exact(spark):
-    """range_join (binned equi-join) must equal the naive inequality join at
-    EVERY bin width, including widths smaller than the intervals."""
-    from pyspark.sql import functions as F
-
-    from dense_retriever_spark.operators.rangejoin import range_join
-
-    pts = spark.createDataFrame(
-        [(i, "k" + str(i % 3), (i * 37) % 100) for i in range(60)],
-        "pid long, k string, x long",
-    )
-    ivs = spark.createDataFrame(
-        [(j, "k" + str(j % 3), (j * 23) % 90, (j * 23) % 90 + 12)
-         for j in range(20)] + [(99, "k0", 50, 40)],  # inverted: dropped
-        "iid long, k string, lo long, hi long",
-    )
-    want = sorted(
-        (r["pid"], r["iid"])
-        for r in pts.join(ivs, "k")
-        .filter(F.col("x").between(F.col("lo"), F.col("hi")))
-        .collect()
-    )
-    assert want  # non-trivial fixture
-    for w in (1, 5, 12, 100):
-        got = sorted(
-            (r["pid"], r["iid"])
-            for r in range_join(
-                pts, ivs, "x", "lo", "hi", by=["k"], bin_width=w
-            ).collect()
-        )
-        assert got == want, f"bin_width={w}"
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        range_join(pts, ivs, "x", "lo", "hi", bin_width=0)
-
-
-def test_profile_approx_mode_and_asof_warning(spark):
-    from dense_retriever_spark.operators.asof import asof_join
-    from dense_retriever_spark.operators.profile import profile_numeric
-
-    df = spark.range(1000).selectExpr("id", "id * 2 AS v")
-    rows = {
-        r["col_name"]: r
-        for r in profile_numeric(df, ["id", "v"], exact=False).collect()
-    }
-    # sketch quartiles land within rank-error of the exact values
-    assert abs(rows["id"]["p50"] - 499.5) <= 2
-    assert abs(rows["v"]["p75"] - 1499.0) <= 4
-    assert rows["id"]["n_distinct"] == 1000
-
-    import pytest as _pytest
-
-    left = spark.createDataFrame([(1, 10)], "id long, ts long")
-    right = spark.createDataFrame([(5, 1.0)], "ts long, price double")
-    with _pytest.warns(RuntimeWarning, match="partition-less"):
-        asof_join(left, right, on="ts")

@@ -1,4 +1,4 @@
-"""Sources (S1-S11), catalog seam, streaming, CLI, plan assertions."""
+"""Sources (S1-S11), streaming, CLI, plan assertions."""
 
 from __future__ import annotations
 
@@ -80,20 +80,6 @@ def test_package_zip_importable(tmp_path):
     )
     assert r.returncode == 0, r.stderr
     assert r.stdout.strip() == "5 32"
-
-
-def test_catalog_snapshots(spark, tmp_path):
-    from dense_retriever_spark.sources.catalog import CatalogTable
-
-    t = CatalogTable(str(tmp_path / "tbl"))
-    assert t.current_snapshot() is None
-    df = spark.range(10).withColumn("lang", F.lit("py"))
-    s0 = t.commit(df, partition_by=["lang"])
-    assert s0["row_count"] == 10 and s0["snapshot_id"] == 0
-    s1 = t.commit(spark.range(5).withColumn("lang", F.lit("go")))
-    assert t.current_snapshot()["snapshot_id"] == 1
-    assert t.read(spark).count() == 5
-    assert len(s1["files"]) >= 1
 
 
 def test_streaming_incremental_tokenize(spark, tmp_path):
