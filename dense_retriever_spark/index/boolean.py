@@ -60,18 +60,16 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from dense_retriever_spark.index.build import IndexPaths
 from dense_retriever_spark.index.codec import decode_postings
 from dense_retriever_spark.index.search import (
-    QUERY_BROADCAST_LIMIT,
     RESULT_SCHEMA,
-    TERM_FILTER_LIMIT,
+    _apply_per_shard,
     _excl_plan,
     _finish,
-    _mask_right_rel,
-    _mask_split,
+    _plane,
+    _route_shards,
+    _shard_scan,
     _term_dfs_cached,
-    _term_pruned,
     global_term_stats,
     load_stats,
 )
@@ -362,40 +360,16 @@ def count_matches(
     if not queries:
         return all_qids.select("query_id", zero.alias("n_matches"))
 
-    paths = IndexPaths(index_dir)
     excl, excl_rel = _excl_plan(exclude_doc_ids, dps)
-    bc = spark.sparkContext.broadcast((queries, excl))
-    shard_rows = _term_pruned(
-        spark.read.parquet(paths.shards), sorted(scan_terms), spark
-    ).select("shard", "term", "postings")
-    schema = "query_id long, n_matches long"
 
-    if include_doc_ids is None and excl_rel is None:
+    def _count(pdf, q, x, incl):
+        return _count_shard_boolean(pdf, q, dps, x, incl, msm=msm)
 
-        def _count(pdf):
-            q, x = bc.value
-            return _count_shard_boolean(pdf, q, dps, x, msm=msm)
-
-        local = shard_rows.groupBy("shard").applyInPandas(
-            _count, schema=schema
-        )
-    else:
-        has_include = include_doc_ids is not None
-        has_excl_rel = excl_rel is not None
-        right_rel, shard_rows = _mask_right_rel(
-            include_doc_ids, excl_rel, dps, shard_rows
-        )
-
-        def _count_co(left, right):
-            q, x = bc.value
-            x, incl = _mask_split(right, has_include, has_excl_rel, x)
-            return _count_shard_boolean(left, q, dps, x, incl, msm=msm)
-
-        local = (
-            shard_rows.groupby("shard")
-            .cogroup(right_rel.groupby("shard"))
-            .applyInPandas(_count_co, schema=schema)
-        )
+    local, bc = _apply_per_shard(
+        spark, _shard_scan(spark, index_dir, sorted(scan_terms)), _count,
+        "query_id long, n_matches long", queries, dps,
+        excl, excl_rel, include_doc_ids,
+    )
     counts = local.groupBy("query_id").agg(
         F.sum("n_matches").cast("long").alias("n_matches")
     )
@@ -435,19 +409,9 @@ def search_boolean(
         raise ValueError(
             f"min_should_match must be >= 0, got {min_should_match}"
         )
-    if query_mode == "auto":
-        n_q = queries_df.limit(QUERY_BROADCAST_LIMIT + 1).count()
-        query_mode = (
-            "broadcast" if n_q <= QUERY_BROADCAST_LIMIT else "distributed"
-        )
-    if query_mode == "broadcast":
-        return _boolean_broadcast(
-            spark, index_dir, stats, queries_df, k,
-            exclude_doc_ids, include_doc_ids, eager, min_should_match,
-        )
-    if query_mode != "distributed":
-        raise ValueError(f"unknown query_mode {query_mode!r}")
-    return _boolean_distributed(
+    plane = _plane(query_mode, queries_df)
+    run = _boolean_broadcast if plane == "broadcast" else _boolean_distributed
+    return run(
         spark, index_dir, stats, queries_df, k,
         exclude_doc_ids, include_doc_ids, eager, min_should_match,
     )
@@ -501,45 +465,18 @@ def _boolean_broadcast(
     if not queries:
         return spark.createDataFrame([], RESULT_SCHEMA)
 
-    paths = IndexPaths(index_dir)
     excl, excl_rel = _excl_plan(exclude_doc_ids, dps)
-    bc = spark.sparkContext.broadcast((queries, idfs, excl))
-    shard_rows = _term_pruned(
-        spark.read.parquet(paths.shards), sorted(scan_terms), spark
-    ).select("shard", "term", "postings")
 
-    if include_doc_ids is None and excl_rel is None:
-
-        def _match(pdf):
-            q, i, x = bc.value
-            return _match_shard_boolean(
-                pdf, q, i, k, k1, b, avgdl, dps, x, msm=msm
-            )
-
-        local = shard_rows.groupBy("shard").applyInPandas(
-            _match, schema=RESULT_SCHEMA
-        )
-    else:
-        # masks cogrouped with the shard scan — the shared construction
-        # (search._mask_right_rel; xm=True marks kill-list rows)
-        has_include = include_doc_ids is not None
-        has_excl_rel = excl_rel is not None
-        right_rel, shard_rows = _mask_right_rel(
-            include_doc_ids, excl_rel, dps, shard_rows
+    def _match(pdf, p, x, incl):
+        q, i = p
+        return _match_shard_boolean(
+            pdf, q, i, k, k1, b, avgdl, dps, x, incl, msm=msm
         )
 
-        def _match_co(left, right):
-            q, i, x = bc.value
-            x, incl = _mask_split(right, has_include, has_excl_rel, x)
-            return _match_shard_boolean(
-                left, q, i, k, k1, b, avgdl, dps, x, incl, msm=msm
-            )
-
-        local = (
-            shard_rows.groupby("shard")
-            .cogroup(right_rel.groupby("shard"))
-            .applyInPandas(_match_co, schema=RESULT_SCHEMA)
-        )
+    local, bc = _apply_per_shard(
+        spark, _shard_scan(spark, index_dir, sorted(scan_terms)), _match,
+        RESULT_SCHEMA, (queries, idfs), dps, excl, excl_rel, include_doc_ids,
+    )
     return _finish(spark, local, k, eager, [bc])
 
 
@@ -597,7 +534,6 @@ def _boolean_distributed(
     n_docs, avgdl = stats["n_docs"], stats["avgdl"]
     k1, b = stats["k1"], stats["b"]
     dps = stats["docs_per_shard"]
-    paths = IndexPaths(index_dir)
 
     qt = boolean_query_terms(queries_df)
     gstats = global_term_stats(spark, index_dir, stats).select("term", "df")
@@ -629,93 +565,21 @@ def _boolean_distributed(
         # would otherwise see an empty opt list and silently skip the
         # min_should_match constraint (matching docs with zero optional
         # hits) — n_opt > 0 with too few shard-present optional terms
-        # proves non-match locally instead (ADVICE r7, high)
+        # proves non-match locally instead
         .withColumn(
             "n_opt",
             F.sum(
                 F.when(F.col("role") == ROLE_OPTIONAL, 1).otherwise(0)
             ).over(qw),
         )
-        .persist()
     )
 
-    presence = spark.read.parquet(paths.shards).select("shard", "term")
-    q_shard = live.join(presence, "term").select(
-        "shard", "query_id", "term", "role", "df", "n_req", "n_opt",
-        F.lit(None).cast("long").alias("doc_id"),
-        F.lit(False).alias("xm"),
-    )
-
-    shard_rows = spark.read.parquet(paths.shards).select(
-        "shard", "term", "postings"
-    )
-    n_terms = (
-        live.select("term").distinct().limit(TERM_FILTER_LIMIT + 1).count()
-    )
-    if n_terms <= TERM_FILTER_LIMIT:
-        shard_rows = shard_rows.join(
-            F.broadcast(live.select("term").distinct()), "term", "left_semi"
-        )
-
-    has_include = include_doc_ids is not None
-    if has_include:
-        incl_flat = include_doc_ids.select(
-            F.col("doc_id").cast("long").alias("doc_id")
-        ).withColumn("shard", (F.col("doc_id") / dps).cast("long"))
-        q_shard = q_shard.unionByName(
-            incl_flat.select(
-                "shard",
-                F.lit(None).cast("long").alias("query_id"),
-                F.lit(None).cast("string").alias("term"),
-                F.lit(None).cast("int").alias("role"),
-                F.lit(None).cast("long").alias("df"),
-                F.lit(None).cast("long").alias("n_req"),
-                F.lit(None).cast("long").alias("n_opt"),
-                "doc_id",
-                F.lit(False).alias("xm"),
-            )
-        )
-        shard_rows = shard_rows.join(
-            incl_flat.select("shard").distinct(), "shard", "left_semi"
-        )
-    excl, excl_rel = _excl_plan(exclude_doc_ids, dps)
-    has_excl_rel = excl_rel is not None
-    if has_excl_rel:
-        q_shard = q_shard.unionByName(
-            excl_rel.select(
-                "shard",
-                F.lit(None).cast("long").alias("query_id"),
-                F.lit(None).cast("string").alias("term"),
-                F.lit(None).cast("int").alias("role"),
-                F.lit(None).cast("long").alias("df"),
-                F.lit(None).cast("long").alias("n_req"),
-                F.lit(None).cast("long").alias("n_opt"),
-                "doc_id",
-                F.lit(True).alias("xm"),
-            )
-        )
-    bcs = []
-    bc_excl = None
-    if excl is not None:
-        bc_excl = spark.sparkContext.broadcast(excl)
-        bcs.append(bc_excl)
-
-    def _match_dist(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        x = bc_excl.value if bc_excl is not None else None
-        if has_excl_rel:
-            selx = right["term"].isna() & right["xm"]
-            xs = right.loc[selx, "doc_id"].to_numpy(np.int64)
-            x = np.sort(xs) if xs.size else None
-        incl = None
-        if has_include:
-            seli = right["term"].isna() & ~right["xm"]
-            incl = np.unique(right.loc[seli, "doc_id"].to_numpy(np.int64))
-        qpart = right[right["term"].notna()]
+    def _match_dist(left, q, x, incl):
         # sorted-term order == the broadcast plane's sorted() everywhere
-        qpart = qpart.sort_values(["query_id", "term"], kind="mergesort")
+        q = q.sort_values(["query_id", "term"], kind="mergesort")
         queries: dict[int, tuple[list[str], list[str], list[str]]] = {}
         idfs: dict[str, float] = {}
-        for qid, grp in qpart.groupby("query_id", sort=False):
+        for qid, grp in q.groupby("query_id", sort=False):
             roles = grp["role"].to_numpy(np.int64)
             terms = grp["term"].tolist()
             n_req = int(grp["n_req"].iloc[0])
@@ -743,9 +607,8 @@ def _boolean_distributed(
             left, queries, idfs, k, k1, b, avgdl, dps, x, incl, msm=msm
         )
 
-    local = (
-        shard_rows.groupby("shard")
-        .cogroup(q_shard.groupby("shard"))
-        .applyInPandas(_match_dist, schema=RESULT_SCHEMA)
+    local, bcs, held = _route_shards(
+        spark, index_dir, live, eager, ["term", "postings"], _match_dist,
+        RESULT_SCHEMA, masks=(exclude_doc_ids, include_doc_ids, dps),
     )
-    return _finish(spark, local, k, eager, bcs, cached=[live])
+    return _finish(spark, local, k, eager, bcs, held)

@@ -61,16 +61,15 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dense_retriever_spark.index.build import IndexPaths
 from dense_retriever_spark.index.codec import decode_postings_batch
 from dense_retriever_spark.index.search import (
     MATCHES_SCHEMA,
     RESULT_SCHEMA,
+    _apply_per_shard,
     _excl_plan,
-    _mask_right_rel,
-    _mask_split,
+    _plane,
+    _shard_scan,
     _term_dfs_cached,
-    _term_pruned,
     load_stats,
     score_matches,
 )
@@ -260,54 +259,23 @@ def _search_fields_fused(
     weights = [float(w) for _n, _d, w in fields]
 
     excl, excl_rel = _excl_plan(exclude_doc_ids, dps)
-    bc = spark.sparkContext.broadcast(
-        (qmap, dir_idfs, dir_params, dir_of, weights, combine, excl)
-    )
-    legs = []
-    for di, d in enumerate(dirs):
-        if not dir_present[di]:
-            continue  # every query term is OOV for this index
-        legs.append(
-            _term_pruned(
-                spark.read.parquet(IndexPaths(d).shards),
-                dir_present[di],
-                spark,
-            )
-            .select("shard", "term", "postings")
-            .withColumn("src", F.lit(di))
-        )
+    legs = [
+        _shard_scan(spark, d, dir_present[di]).withColumn("src", F.lit(di))
+        for di, d in enumerate(dirs)
+        if dir_present[di]  # else every query term is OOV for this index
+    ]
     u = legs[0]
     for leg in legs[1:]:
         u = u.unionByName(leg)
 
-    if include_doc_ids is None and excl_rel is None:
+    def _score(pdf, p, x, incl):
+        return _score_shard_fields(pdf, *p, dps, k, x, incl)
 
-        def _score(pdf):
-            q, di_, dp_, do_, ws, cmb, x = bc.value
-            return _score_shard_fields(
-                pdf, q, di_, dp_, do_, ws, cmb, dps, k, x
-            )
-
-        local = u.groupBy("shard").applyInPandas(
-            _score, schema=RESULT_SCHEMA
-        )
-    else:
-        has_include = include_doc_ids is not None
-        has_excl_rel = excl_rel is not None
-        right_rel, u = _mask_right_rel(include_doc_ids, excl_rel, dps, u)
-
-        def _score_co(left, right):
-            q, di_, dp_, do_, ws, cmb, x = bc.value
-            x, incl = _mask_split(right, has_include, has_excl_rel, x)
-            return _score_shard_fields(
-                left, q, di_, dp_, do_, ws, cmb, dps, k, x, incl
-            )
-
-        local = (
-            u.groupby("shard")
-            .cogroup(right_rel.groupby("shard"))
-            .applyInPandas(_score_co, schema=RESULT_SCHEMA)
-        )
+    local, _bc = _apply_per_shard(
+        spark, u, _score, RESULT_SCHEMA,
+        (qmap, dir_idfs, dir_params, dir_of, weights, combine), dps,
+        excl, excl_rel, include_doc_ids,
+    )
     out = topk_per_group(local.drop("rank"), "query_id", "score", k)
     return out.select(
         F.col("query_id").cast("long"),
@@ -356,13 +324,7 @@ def search_fields(
         raise ValueError(f"duplicate field names in {names}")
     if not fields:
         raise ValueError("fields must be non-empty")
-    if query_mode == "auto":  # probe ONCE, not once per field leg
-        from dense_retriever_spark.index.search import QUERY_BROADCAST_LIMIT
-
-        n_q = queries_df.limit(QUERY_BROADCAST_LIMIT + 1).count()
-        query_mode = (
-            "broadcast" if n_q <= QUERY_BROADCAST_LIMIT else "distributed"
-        )
+    plane = _plane(query_mode, queries_df)  # once, not once per field leg
 
     # FUSED shard-local plan (module docstring): broadcast plane + one
     # shared shard granularity → the combination never leaves the shard,
@@ -370,7 +332,7 @@ def search_fields(
     # general plan (tests + the q68 oracle).
     stats_list = [load_stats(d) for _n, d, _w in fields]
     if (
-        query_mode == "broadcast"
+        plane == "broadcast"
         and len({int(s["docs_per_shard"]) for s in stats_list}) == 1
     ):
         return _search_fields_fused(
@@ -384,7 +346,7 @@ def search_fields(
             spark, index_dir, queries_df,
             exclude_doc_ids=exclude_doc_ids,
             include_doc_ids=include_doc_ids,
-            query_mode=query_mode,
+            query_mode=plane,
         )
         legs.append(m.withColumn("field", F.lit(name)))
     u = legs[0]

@@ -27,10 +27,9 @@ avg_len) key rows, and shuffled once for the join — no all-pairs anywhere.
 Keys are generated at the batch's MAX requested distance (a per-stem
 distance still verifies with its own bound — extra candidates only).
 
-The expansion feeds the EXISTING scoring planes through their
-query-relation overrides (search._search_broadcast(qt_pairs=...) /
-_search_distributed(qt_override=...)), exactly like prefix search — same
-caching, masks, pruning, and plan shape as ``search()``.
+Literal and expanded terms enter the scoring planes through
+``search._search_terms``, the entry every search takes, exactly like prefix
+search — same caching, masks, pruning, and plan shape as ``search()``.
 """
 
 from __future__ import annotations
@@ -39,10 +38,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dense_retriever_spark.index.search import (
-    QUERY_BROADCAST_LIMIT,
-    RESULT_SCHEMA,
-    _search_broadcast,
-    _search_distributed,
+    _plane,
+    _search_terms,
     global_term_stats,
     load_stats,
 )
@@ -291,32 +288,13 @@ def search_fuzzy(
             f"max_edits must be in 1..{MAX_EDITS_LIMIT}, got {max_edits}"
         )
     stats = load_stats(index_dir)
-    if query_mode == "auto":
-        n_q = queries_df.limit(QUERY_BROADCAST_LIMIT + 1).count()
-        query_mode = (
-            "broadcast" if n_q <= QUERY_BROADCAST_LIMIT else "distributed"
-        )
+    plane = _plane(query_mode, queries_df)
     lits, fz = _fuzzy_segments(queries_df, max_edits)
     exp = _expand_fuzzy(spark, index_dir, stats, fz)
-    qt = lits.unionByName(exp.select("query_id", "term")).distinct()
-
-    if query_mode == "broadcast":
-        # one collect for literals + expansions (the prefix-plane shape)
-        both = lits.select("query_id", "term").unionByName(
+    return _search_terms(
+        spark, index_dir, stats, plane,
+        lits.select("query_id", "term").unionByName(
             exp.select("query_id", "term")
-        )
-        qt_pairs = sorted(
-            {(int(r["query_id"]), r["term"]) for r in both.collect()}
-        )
-        if not qt_pairs:
-            return spark.createDataFrame([], RESULT_SCHEMA)
-        return _search_broadcast(
-            spark, index_dir, stats, queries_df, k,
-            exclude_doc_ids, eager, include_doc_ids, qt_pairs=qt_pairs,
-        )
-    if query_mode != "distributed":
-        raise ValueError(f"unknown query_mode {query_mode!r}")
-    return _search_distributed(
-        spark, index_dir, stats, queries_df, k,
-        exclude_doc_ids, eager, include_doc_ids, qt_override=qt,
+        ),
+        k, exclude_doc_ids, eager, include_doc_ids,
     )

@@ -12,9 +12,9 @@ df from the index's global stats, idf the engine's BM25 idf — keep the top
 ``max_terms`` by (score DESC, term ASC). The term score is rounded to 6dp
 before ranking so engine and oracle (whose libm ``ln`` may differ in the
 last ulp) select identical term sets. The selected (query_id, term)
-relation then drives the ordinary search planes (the same qt-injection
-hook prefix/fuzzy expansion uses), and each query's own seed docs are
-anti-joined out of its results.
+relation then enters the ordinary search planes through
+``search._search_terms`` (the entry prefix/fuzzy expansion uses too), and
+each query's own seed docs are anti-joined out of its results.
 
 Scale: seed texts are fetched from the index's own docs table by a
 doc_id join (partition-pruned by shard); tf/df/term-ranking are joins and
@@ -27,13 +27,15 @@ tokenization collect).
 
 from __future__ import annotations
 
+from collections import Counter
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from dense_retriever_spark.index.build import IndexPaths
 from dense_retriever_spark.index.search import (
-    _search_broadcast,
-    _search_distributed,
+    _plane,
+    _search_terms,
     global_term_stats,
     load_stats,
 )
@@ -151,55 +153,36 @@ def more_like_this(
     (masking happens inside the scorer, before top-k).
     """
     stats = load_stats(index_dir)
-    if query_mode == "auto":  # same probe rule as search(), on the seeds
-        from dense_retriever_spark.index.search import QUERY_BROADCAST_LIMIT
-
-        n_q = seeds.limit(QUERY_BROADCAST_LIMIT + 1).count()
-        query_mode = (
-            "broadcast" if n_q <= QUERY_BROADCAST_LIMIT else "distributed"
-        )
-
-    if query_mode == "broadcast":
-        # the broadcast plane already collects the interesting-term relation
-        # (its qt_pairs contract); collecting the SEED relation first — the
-        # same bounded-batch contract — lets one collect serve the docs-scan
-        # shard pruning AND the max-seeds over-fetch bound, removing two
-        # per-batch driver jobs (r7 verdict: fixed driver costs dominated
-        # MLT's batch scaling)
+    plane = _plane(query_mode, seeds)
+    shards = None
+    if plane == "broadcast":
+        # the broadcast plane collects the interesting-term relation anyway;
+        # collecting the SEED relation first — the same bounded-batch
+        # contract — lets one collect serve the docs-scan shard pruning AND
+        # the max-seeds over-fetch bound, removing two per-batch driver
+        # jobs (fixed driver costs dominated MLT's batch scaling)
         seed_rows = seeds.select("query_id", "doc_id").collect()
         dps = int(stats["docs_per_shard"])
-        per_q: dict[int, int] = {}
-        for r in seed_rows:
-            per_q[int(r["query_id"])] = per_q.get(int(r["query_id"]), 0) + 1
-        max_seeds = max(per_q.values(), default=0)
-        shard_set = [int(r["doc_id"]) // dps for r in seed_rows]
-        k_fetch = k + int(max_seeds)
-        qt = interesting_terms(
-            spark, index_dir, seeds, max_terms, content_df,
-            _shards=shard_set if content_df is None else None,
-        ).select("query_id", "term")
-        pairs = [(int(r["query_id"]), r["term"]) for r in qt.collect()]
-        raw = _search_broadcast(
-            spark, index_dir, stats, None, k_fetch,
-            exclude_doc_ids, False, include_doc_ids, qt_pairs=pairs,
+        max_seeds = max(
+            Counter(int(r["query_id"]) for r in seed_rows).values(),
+            default=0,
         )
-    elif query_mode == "distributed":
-        qt = interesting_terms(
-            spark, index_dir, seeds, max_terms, content_df
-        ).select("query_id", "term")
+        if content_df is None:
+            shards = [int(r["doc_id"]) // dps for r in seed_rows]
+    qt = interesting_terms(
+        spark, index_dir, seeds, max_terms, content_df, _shards=shards
+    ).select("query_id", "term")
+    if plane == "distributed":
         # worst case every one of a query's seeds lands in its top list;
         # the max seed count per query bounds the over-fetch (one tiny agg
         # job on the caller-held seeds relation — scalar to the driver)
         max_seeds = (
             seeds.groupBy("query_id").count().agg(F.max("count")).first()[0]
         )
-        k_fetch = k + int(max_seeds or 0)
-        raw = _search_distributed(
-            spark, index_dir, stats, None, k_fetch,
-            exclude_doc_ids, False, include_doc_ids, qt_override=qt,
-        )
-    else:
-        raise ValueError(f"unknown query_mode {query_mode!r}")
+    raw = _search_terms(
+        spark, index_dir, stats, plane, qt, k + int(max_seeds or 0),
+        exclude_doc_ids, False, include_doc_ids,
+    )
 
     res = raw.join(
         seeds.select("query_id", "doc_id"), ["query_id", "doc_id"],

@@ -38,15 +38,15 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from dense_retriever_spark.index.build import IndexPaths
 from dense_retriever_spark.index.codec import (
     decode_position_stream,
     decode_postings,
 )
 from dense_retriever_spark.index.search import (
-    QUERY_BROADCAST_LIMIT,
-    TERM_FILTER_LIMIT,
-    _term_pruned,
+    _apply_per_shard,
+    _plane,
+    _route_shards,
+    _shard_scan,
     load_stats,
 )
 
@@ -173,19 +173,9 @@ def search_phrase(
             f"index at {index_dir} was built without positions — phrase "
             "search needs build_index(positions=True)"
         )
-    if query_mode == "auto":
-        n_q = queries_df.limit(QUERY_BROADCAST_LIMIT + 1).count()
-        query_mode = (
-            "broadcast" if n_q <= QUERY_BROADCAST_LIMIT else "distributed"
-        )
-    if query_mode == "broadcast":
-        return _phrase_broadcast(
-            spark, index_dir, stats, queries_df, k, exclude_doc_ids,
-            include_doc_ids,
-        )
-    if query_mode != "distributed":
-        raise ValueError(f"unknown query_mode {query_mode!r}")
-    return _phrase_distributed(
+    plane = _plane(query_mode, queries_df)
+    run = _phrase_broadcast if plane == "broadcast" else _phrase_distributed
+    return run(
         spark, index_dir, stats, queries_df, k, exclude_doc_ids,
         include_doc_ids,
     )
@@ -224,23 +214,18 @@ def _phrase_broadcast(
     exclude_doc_ids: DataFrame | None = None,
     include_doc_ids: DataFrame | None = None,
 ) -> DataFrame:
-    paths = IndexPaths(index_dir)
     dps = int(stats["docs_per_shard"])
     phrases = _phrase_tokens(queries_df)
     all_terms = sorted({t for ts in phrases.values() for t in ts})
     if not all_terms:
         return spark.createDataFrame([], PHRASE_RESULT_SCHEMA)
 
-    bc = spark.sparkContext.broadcast(phrases)
+    def _match(pdf, p, _x, _incl):
+        return _shard_phrase_matches(pdf, p, dps)
 
-    def _match(pdf: pd.DataFrame) -> pd.DataFrame:
-        return _shard_phrase_matches(pdf, bc.value, dps)
-
-    shard_rows = _term_pruned(
-        spark.read.parquet(paths.shards), all_terms, spark
-    ).select("shard", "term", "postings", "positions")
-    matches = shard_rows.groupBy("shard").applyInPandas(
-        _match, schema=_MATCH_SCHEMA
+    matches, _bc = _apply_per_shard(
+        spark, _shard_scan(spark, index_dir, all_terms, "positions"), _match,
+        _MATCH_SCHEMA, phrases, dps,
     )
     return _rank(
         _mask_matches(matches, exclude_doc_ids, include_doc_ids), k
@@ -258,42 +243,23 @@ def _phrase_distributed(
 ) -> DataFrame:
     """O(1)-driver-state phrase plane: the ordered (query_id, pos, term)
     relation is produced executor-side (posexplode over the Arrow
-    tokenizer), routed to shards holding its terms via the presence join,
-    and cogrouped with the shard scan; each shard's verifier reconstructs
-    its queries' token sequences from its slice and requires every position
-    present (n_terms carried on each row) before chaining."""
+    tokenizer), routed to shards holding its terms via the presence join
+    (search._route_shards), and cogrouped with the shard scan; each shard's
+    verifier reconstructs its queries' token sequences from its slice and
+    requires every position present (n_terms carried on each row) before
+    chaining."""
     from dense_retriever_spark.functions.tokenizer import tokenize_code_pandas
 
-    paths = IndexPaths(index_dir)
     dps = int(stats["docs_per_shard"])
-    qt = (
-        queries_df.select(
-            "query_id",
-            F.posexplode(tokenize_code_pandas("query")).alias("pos", "term"),
-        )
+    qt = queries_df.select(
+        "query_id",
+        F.posexplode(tokenize_code_pandas("query")).alias("pos", "term"),
+    ).withColumn(
         # bounded window: one partition per query, |phrase| rows each
-        .withColumn(
-            "n_terms", F.count("*").over(Window.partitionBy("query_id"))
-        )
-        .persist()
-    )
-    presence = spark.read.parquet(paths.shards).select("shard", "term")
-    q_shard = qt.join(presence, "term").select(
-        "shard", "query_id", "pos", "term", "n_terms"
+        "n_terms", F.count("*").over(Window.partitionBy("query_id"))
     )
 
-    shard_rows = spark.read.parquet(paths.shards).select(
-        "shard", "term", "postings", "positions"
-    )
-    n_terms_probe = (
-        qt.select("term").distinct().limit(TERM_FILTER_LIMIT + 1).count()
-    )
-    if n_terms_probe <= TERM_FILTER_LIMIT:
-        shard_rows = shard_rows.join(
-            F.broadcast(qt.select("term").distinct()), "term", "left_semi"
-        )
-
-    def _match_dist(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
+    def _match_dist(left, right, _x, _incl):
         # rebuild each query's token sequence from this shard's slice; a
         # query whose slice is shorter than n_terms has a position whose
         # term this shard lacks → cannot match here
@@ -306,10 +272,9 @@ def _phrase_distributed(
             phrases[int(qid)] = seq
         return _shard_phrase_matches(left, phrases, dps)
 
-    matches = (
-        shard_rows.groupby("shard")
-        .cogroup(q_shard.groupby("shard"))
-        .applyInPandas(_match_dist, schema=_MATCH_SCHEMA)
+    matches, _bcs, held = _route_shards(
+        spark, index_dir, qt, True, ["term", "postings", "positions"],
+        _match_dist, _MATCH_SCHEMA,
     )
     out = _rank(
         _mask_matches(matches, exclude_doc_ids, include_doc_ids), k
@@ -317,5 +282,6 @@ def _phrase_distributed(
     # bounded (≤ k × |Q|) executor-side materialization so qt's persist can
     # be released now instead of leaking until GC (search._finish pattern)
     out = out.localCheckpoint(eager=True)
-    qt.unpersist()
+    for df in held:
+        df.unpersist()
     return out

@@ -19,30 +19,26 @@ tests). Expansion is DETERMINISTICALLY truncated to the ``max_expansions``
 lexicographically-smallest matching terms per pattern (Lucene's clause-limit
 analog; the broadcast plane warns when truncation happens).
 
-Expansion is relational on both planes: the term dictionary
-(global_term_stats) is filtered by an OR of pushed-down
-``StartsWith`` predicates (prefix patterns are collected via a bounded probe,
-the _excl_plan pattern — ≤ PREFIX_FILTER_LIMIT strings of driver state at any
-|Q|; past the limit the filter is skipped and the dictionary join does the
-work alone), then joined to the pattern relation and truncated with one
-per-pattern window. The result feeds the EXISTING scoring planes through
-their query-relation overrides (search._search_broadcast(qt_pairs=...) /
-_search_distributed(qt_override=...)), so caching, masks, pruning, and plan
-shape are exactly those of ``search()``.
+Expansion is relational on both planes (``_expand_patterns``, shared with
+regex search): the term dictionary (global_term_stats) is filtered by an OR
+of pushed-down ``StartsWith`` predicates (prefix patterns are collected via
+a bounded probe, the _excl_plan pattern — ≤ PREFIX_FILTER_LIMIT strings of
+driver state at any |Q|; past the limit the filter is skipped and the
+dictionary join does the work alone), then joined to the pattern relation
+and truncated with one per-pattern window. Literal and expanded terms
+enter the scoring planes through ``search._search_terms``, the entry every
+search takes, so caching, masks, pruning, and plan shape are exactly those
+of ``search()``.
 """
 
 from __future__ import annotations
-
-import warnings
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from dense_retriever_spark.index.search import (
-    QUERY_BROADCAST_LIMIT,
-    RESULT_SCHEMA,
-    _search_broadcast,
-    _search_distributed,
+    _plane,
+    _search_terms,
     global_term_stats,
     load_stats,
 )
@@ -104,6 +100,72 @@ def _prefix_segments(queries_df: DataFrame) -> tuple[DataFrame, DataFrame]:
     return lits, pfx
 
 
+def _starts_with_any(prefixes: list[str]):
+    """OR of ``StartsWith(term, p)`` — reaches parquet as a pushed filter."""
+    cond = F.col("term").startswith(prefixes[0])
+    for p in prefixes[1:]:
+        cond = cond | F.col("term").startswith(p)
+    return cond
+
+
+def _expand_patterns(
+    spark: SparkSession,
+    index_dir: str,
+    stats: dict,
+    pats: DataFrame,
+    col: str,
+    limit: int,
+    max_expansions: int,
+    prefilter,
+    match,
+) -> DataFrame:
+    """(query_id, <col>) pattern relation → (query_id, term, <col>, rn)
+    expansion relation, shared by prefix and regex search.
+
+    Distinct patterns expand ONCE (the per-pattern window runs on the
+    deduped pattern set, not per query), then join back to query ids. While
+    the distinct-pattern set stays at or below ``limit`` it is collected
+    (one bounded probe) and ``prefilter(patterns)`` may return a pushed-down
+    dictionary filter (None: scan the whole dictionary); ``match`` is the
+    (term, pattern) join condition. Each pattern keeps its
+    ``max_expansions`` lexicographically smallest terms plus ONE row past
+    the cap as a clip sentinel (rn == max+1): "pattern matched exactly max
+    terms" and "pattern was truncated" are indistinguishable from a capped
+    set alone; search._search_terms drops the sentinel before scoring and
+    warns only when it exists."""
+    pats_d = pats.select(col).distinct()
+    dict_terms = global_term_stats(spark, index_dir, stats).select("term")
+    probe = pats_d.limit(limit + 1).collect()
+    if len(probe) <= limit:
+        plist = [r[col] for r in probe]
+        if not plist:
+            return pats.select(
+                "query_id",
+                F.lit(None).cast("string").alias("term"),
+                col,
+                F.lit(None).cast("int").alias("rn"),
+            ).limit(0)
+        cond = prefilter(plist)
+        if cond is not None:
+            dict_terms = dict_terms.filter(cond)  # parquet pushdown
+    exp_d = dict_terms.join(F.broadcast(pats_d), match)
+    w = Window.partitionBy(col).orderBy("term")
+    exp_d = (
+        exp_d.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= max_expansions + 1)
+    )
+    return exp_d.join(pats, col).select("query_id", "term", col, "rn")
+
+
+def _with_literals(lits: DataFrame, exp: DataFrame) -> DataFrame:
+    """Literal (query_id, term) rows (NULL pattern and rn) unioned with an
+    _expand_patterns relation: the ``clip`` input of search._search_terms."""
+    return lits.select(
+        "query_id", "term", F.lit(None).cast("string").alias(exp.columns[2]),
+        F.lit(None).cast("int").alias("rn"),
+    ).unionByName(exp)
+
+
 def _expand(
     spark: SparkSession,
     index_dir: str,
@@ -111,41 +173,12 @@ def _expand(
     pfx: DataFrame,
     max_expansions: int,
 ) -> DataFrame:
-    """(query_id, prefix) → (query_id, term, prefix) expansion relation.
-
-    Distinct patterns expand ONCE (the per-pattern window runs on the
-    deduped pattern set, not per query), then join back to query ids."""
-    pfx_d = pfx.select("prefix").distinct()
-    dict_terms = global_term_stats(spark, index_dir, stats).select("term")
-    probe = pfx_d.limit(PREFIX_FILTER_LIMIT + 1).collect()
-    if len(probe) <= PREFIX_FILTER_LIMIT:
-        pats = [r["prefix"] for r in probe]
-        if not pats:
-            return pfx.select(
-                "query_id",
-                F.lit(None).cast("string").alias("term"),
-                "prefix",
-                F.lit(None).cast("int").alias("rn"),
-            ).limit(0)
-        cond = F.col("term").startswith(pats[0])
-        for p in pats[1:]:
-            cond = cond | F.col("term").startswith(p)
-        dict_terms = dict_terms.filter(cond)  # parquet StartsWith pushdown
-    exp_d = dict_terms.join(
-        F.broadcast(pfx_d),
+    """(query_id, prefix) → (query_id, term, prefix, rn) expansion
+    relation (_expand_patterns with a StartsWith prefilter and match)."""
+    return _expand_patterns(
+        spark, index_dir, stats, pfx, "prefix", PREFIX_FILTER_LIMIT,
+        max_expansions, _starts_with_any,
         F.col("term").startswith(F.col("prefix")),
-    )
-    w = Window.partitionBy("prefix").orderBy("term")
-    # keep ONE row past the cap as a clip sentinel (rn == max+1): "pattern
-    # matched exactly max terms" and "pattern was truncated" are
-    # indistinguishable from a capped set alone; callers drop the sentinel
-    # before scoring and warn only when it exists
-    exp_d = (
-        exp_d.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= max_expansions + 1)
-    )
-    return exp_d.join(pfx, "prefix").select(
-        "query_id", "term", "prefix", "rn"
     )
 
 
@@ -161,67 +194,21 @@ def search_prefix(
     max_expansions: int = MAX_EXPANSIONS,
 ) -> DataFrame:
     """Top-k prefix-expanded BM25 search (module docstring has the grammar).
-    Output: (query_id, doc_id, score, rank)."""
+    Output: (query_id, doc_id, score, rank).
+
+    On the broadcast plane the rewritten relation is bounded by |literal
+    terms| + max_expansions × |patterns| and is collected like search()'s
+    (qid, term) relation, in ONE job with the clip sentinels (so the
+    dictionary scan runs once). Residual prefix-search latency over plain
+    search is the expanded disjunction itself (a short pattern over a
+    heavy-tailed dictionary can legally score hundreds of terms per query —
+    the oracle pays the same), not plan overhead."""
     stats = load_stats(index_dir)
-    if query_mode == "auto":
-        n_q = queries_df.limit(QUERY_BROADCAST_LIMIT + 1).count()
-        query_mode = (
-            "broadcast" if n_q <= QUERY_BROADCAST_LIMIT else "distributed"
-        )
+    plane = _plane(query_mode, queries_df)
     lits, pfx = _prefix_segments(queries_df)
     exp = _expand(spark, index_dir, stats, pfx, max_expansions)
-    kept = exp.filter(F.col("rn") <= max_expansions)
-    qt = lits.unionByName(kept.select("query_id", "term")).distinct()
-
-    if query_mode == "broadcast":
-        # interactive plane: the rewritten relation is bounded by
-        # |literal terms| + max_expansions × |patterns| — collected like
-        # search()'s (qid, term) relation, in ONE job (literals marked by
-        # prefix NULL) so the dictionary scan runs once, not once per
-        # truncation-check/collect. The truncation check rides the same
-        # collect via the rn == max+1 clip sentinel rows (dropped before
-        # scoring). Residual prefix-search latency over plain
-        # search is the expanded disjunction itself (a short pattern over a
-        # heavy-tailed dictionary can legally score hundreds of terms per
-        # query — the oracle pays the same), not plan overhead.
-        both = lits.select(
-            "query_id", "term", F.lit(None).cast("string").alias("prefix"),
-            F.lit(None).cast("int").alias("rn"),
-        ).unionByName(exp)
-        rows = both.collect()
-        # rn == max+1 is the clip SENTINEL (see _expand): its presence —
-        # not the capped set size — proves truncation, so a pattern with
-        # exactly max matches no longer warns falsely
-        clipped = sorted(
-            {
-                r["prefix"] for r in rows
-                if r["rn"] is not None and r["rn"] > max_expansions
-            }
-        )
-        if clipped:
-            warnings.warn(
-                f"prefix pattern(s) {clipped} expanded to >{max_expansions} "
-                "terms and were truncated to the lexicographically smallest "
-                "(raise max_expansions to widen)",
-                RuntimeWarning,
-                stacklevel=2,
-            )
-        qt_pairs = sorted(
-            {
-                (int(r["query_id"]), r["term"])
-                for r in rows
-                if r["rn"] is None or r["rn"] <= max_expansions
-            }
-        )
-        if not qt_pairs:
-            return spark.createDataFrame([], RESULT_SCHEMA)
-        return _search_broadcast(
-            spark, index_dir, stats, queries_df, k,
-            exclude_doc_ids, eager, include_doc_ids, qt_pairs=qt_pairs,
-        )
-    if query_mode != "distributed":
-        raise ValueError(f"unknown query_mode {query_mode!r}")
-    return _search_distributed(
-        spark, index_dir, stats, queries_df, k,
-        exclude_doc_ids, eager, include_doc_ids, qt_override=qt,
+    return _search_terms(
+        spark, index_dir, stats, plane, _with_literals(lits, exp), k,
+        exclude_doc_ids, eager, include_doc_ids,
+        clip=("prefix", max_expansions),
     )

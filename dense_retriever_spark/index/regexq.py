@@ -16,9 +16,10 @@ pattern's LEADING LITERAL characters when it has any (``/merge(r|d)/`` →
 the same prefix from its regex automaton); the full anchored match then
 runs as ``rlike`` on the surviving terms, per-pattern expansion is
 deterministically truncated to the ``max_expansions`` lexicographically-
-smallest matches, and the expanded relation feeds the EXISTING scoring
-planes through their query-relation overrides. A pattern with no literal
-prefix (``/.*ing/``) legally scans the dictionary — the dictionary is the
+smallest matches (``prefix._expand_patterns``, shared with prefix search),
+and literal and expanded terms enter the scoring planes through
+``search._search_terms``, the entry every search takes. A pattern with no
+literal prefix (``/.*ing/``) legally scans the dictionary — the dictionary is the
 small relation here (|vocabulary|, not |corpus|), and the scan says so in
 the plan rather than hiding behind a driver loop.
 """
@@ -26,17 +27,18 @@ the plan rather than hiding behind a driver loop.
 from __future__ import annotations
 
 import re
-import warnings
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from dense_retriever_spark.index.prefix import (
+    _expand_patterns,
+    _starts_with_any,
+    _with_literals,
+)
 from dense_retriever_spark.index.search import (
-    QUERY_BROADCAST_LIMIT,
-    RESULT_SCHEMA,
-    _search_broadcast,
-    _search_distributed,
-    global_term_stats,
+    _plane,
+    _search_terms,
     load_stats,
 )
 
@@ -125,6 +127,21 @@ def _segments(queries_df: DataFrame) -> tuple[DataFrame, DataFrame]:
 REGEX_FILTER_LIMIT = 1000
 
 
+def _prefilter(plist: list[str]):
+    """Validate every pattern on the driver (fail fast, not inside a task)
+    and, when each has a literal prefix, return the pushed-down
+    StartsWith dictionary prefilter (else None)."""
+    for p in plist:
+        try:
+            re.compile(p)
+        except re.error as exc:
+            raise ValueError(f"bad regex {p!r}: {exc}") from exc
+    prefixes = [pf for pf in (literal_prefix(p) for p in plist) if pf]
+    if len(prefixes) == len(plist):
+        return _starts_with_any(prefixes)
+    return None
+
+
 def _expand(
     spark: SparkSession,
     index_dir: str,
@@ -132,45 +149,14 @@ def _expand(
     pats: DataFrame,
     max_expansions: int,
 ) -> DataFrame:
-    pats_d = pats.select("pattern").distinct()
-    probe = pats_d.limit(REGEX_FILTER_LIMIT + 1).collect()
-    dict_terms = global_term_stats(spark, index_dir, stats).select("term")
-    if len(probe) <= REGEX_FILTER_LIMIT:
-        plist = [r["pattern"] for r in probe]
-        if not plist:
-            return pats.select(
-                "query_id",
-                F.lit(None).cast("string").alias("term"),
-                "pattern",
-                F.lit(None).cast("int").alias("rn"),
-            ).limit(0)
-        for p in plist:  # fail fast on the driver, not inside a task
-            try:
-                re.compile(p)
-            except re.error as exc:
-                raise ValueError(f"bad regex {p!r}: {exc}") from exc
-        prefixes = [pf for pf in (literal_prefix(p) for p in plist) if pf]
-        if len(prefixes) == len(plist):
-            # every pattern has a literal prefix → pushed-down prefilter
-            cond = F.col("term").startswith(prefixes[0])
-            for pf in prefixes[1:]:
-                cond = cond | F.col("term").startswith(pf)
-            dict_terms = dict_terms.filter(cond)
-    exp_d = dict_terms.join(
-        F.broadcast(pats_d),
+    """(query_id, pattern) → (query_id, term, pattern, rn) expansion
+    relation (prefix._expand_patterns with a full anchored match)."""
+    return _expand_patterns(
+        spark, index_dir, stats, pats, "pattern", REGEX_FILTER_LIMIT,
+        max_expansions, _prefilter,
         # Column.rlike only takes a literal; the SQL RLIKE expression
         # accepts a column-valued pattern (anchored here for full-match)
         F.expr("term rlike concat('^(?:', pattern, ')$')"),
-    )
-    w = Window.partitionBy("pattern").orderBy("term")
-    # keep ONE row past the cap as a clip sentinel (rn == max+1) — see
-    # index/prefix.py::_expand for the rationale
-    exp_d = (
-        exp_d.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= max_expansions + 1)
-    )
-    return exp_d.join(pats, "pattern").select(
-        "query_id", "term", "pattern", "rn"
     )
 
 
@@ -188,54 +174,13 @@ def search_regex(
     """Top-k regex-expanded BM25 search (module docstring has the grammar).
     Output: (query_id, doc_id, score, rank) — the ``search`` contract."""
     stats = load_stats(index_dir)
-    if query_mode == "auto":
-        n_q = queries_df.limit(QUERY_BROADCAST_LIMIT + 1).count()
-        query_mode = (
-            "broadcast" if n_q <= QUERY_BROADCAST_LIMIT else "distributed"
-        )
+    plane = _plane(query_mode, queries_df)
     lits, pats = _segments(queries_df)
     exp = _expand(spark, index_dir, stats, pats, max_expansions)
-    kept = exp.filter(F.col("rn") <= max_expansions)
-    qt = lits.unionByName(kept.select("query_id", "term")).distinct()
-
-    if query_mode == "broadcast":
-        both = lits.select(
-            "query_id", "term", F.lit(None).cast("string").alias("pattern"),
-            F.lit(None).cast("int").alias("rn"),
-        ).unionByName(exp)
-        rows = both.collect()
-        clipped = sorted(
-            {
-                r["pattern"] for r in rows
-                if r["rn"] is not None and r["rn"] > max_expansions
-            }
-        )
-        if clipped:
-            warnings.warn(
-                f"regex pattern(s) {clipped} expanded to >{max_expansions} "
-                "terms and were truncated to the lexicographically "
-                "smallest (raise max_expansions to widen)",
-                RuntimeWarning,
-                stacklevel=2,
-            )
-        qt_pairs = sorted(
-            {
-                (int(r["query_id"]), r["term"])
-                for r in rows
-                if r["rn"] is None or r["rn"] <= max_expansions
-            }
-        )
-        if not qt_pairs:
-            return spark.createDataFrame([], RESULT_SCHEMA)
-        return _search_broadcast(
-            spark, index_dir, stats, queries_df, k,
-            exclude_doc_ids, eager, include_doc_ids, qt_pairs=qt_pairs,
-        )
-    if query_mode != "distributed":
-        raise ValueError(f"unknown query_mode {query_mode!r}")
-    return _search_distributed(
-        spark, index_dir, stats, queries_df, k,
-        exclude_doc_ids, eager, include_doc_ids, qt_override=qt,
+    return _search_terms(
+        spark, index_dir, stats, plane, _with_literals(lits, exp), k,
+        exclude_doc_ids, eager, include_doc_ids,
+        clip=("regex", max_expansions),
     )
 
 

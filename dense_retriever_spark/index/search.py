@@ -44,6 +44,26 @@ q49 oracles; tests/test_long_tail_rank_identity.py):
   is O(1) at any |Q| — this is the plane the refresh loop's full-training-set
   search (millions of queries, the reference's training.py:75-83 regime)
   runs on, where a driver-side qmap/idf dict would be the scaling ceiling.
+
+The query-plane layer. Every search entry point of the package (``search``,
+``score_matches`` and the prefix, fuzzy, regex, synonym, boolean, phrase,
+multi-field and more-like-this searches) makes its routing decisions
+through the same four private helpers here, so a plane behaves the same
+whichever grammar feeds it:
+
+* ``_plane`` — the plane rule: ``'auto'`` probes the batch with one bounded
+  count against ``QUERY_BROADCAST_LIMIT``; an unknown mode raises.
+* ``_apply_per_shard`` — the Spark broadcast plane's per-shard call: one
+  sc.broadcast of the scorer's payload and the kill-list array, then a
+  plain ``groupBy(shard).applyInPandas`` or, with an allowed-id relation or
+  a kill-list past the driver ceiling, a cogroup with both masks.
+* ``_route_shards`` — the distributed plane's shard routing: the
+  shard-term presence join, the ``TERM_FILTER_LIMIT`` scan prefilter, the
+  mask legs of the cogroup and its right-hand split.
+* ``_search_terms`` — the one entry for a (query_id, term) relation,
+  tokenized or rewritten (prefix/regex/fuzzy expansion, synonyms, MLT
+  term selection): the broadcast plane collects it, the distributed plane
+  keeps it lazy.
 """
 
 from __future__ import annotations
@@ -108,8 +128,8 @@ _SCORE_CHUNK_CELLS = 1 << 21
 #: key and stale df values can never be served. OOV terms are cached as -1
 #: (a miss that re-ran the job every call would defeat the cache).
 #:
-#: Bounded in BYTES, not entries (round-5 verdict: 8 builds × 2M entries
-#: was ~a GB of driver RSS worst-case): builds are evicted WHOLE in LRU
+#: Bounded in BYTES, not entries (8 builds × 2M entries would be ~a GB of
+#: driver RSS worst-case): builds are evicted WHOLE in LRU
 #: order (OrderedDict; every hit refreshes the build's recency) once the
 #: estimated footprint crosses _TERM_DF_BUDGET_BYTES — a long-lived serving
 #: driver that cycles through many index builds plateaus at the budget
@@ -251,8 +271,8 @@ def _score_shard(
 
     There is no block-max (WAND-family) pruning: with per-term
     contributions shared across the batch it touched every posting anyway
-    and measured 2.6–5.4× slower than the exact scorer (round 8), so index
-    format v3 stores no block metadata.
+    and measured 2.6–5.4× slower than the exact scorer (round 8), so the
+    index stores no block metadata.
     """
     cols = ["query_id", "doc_id", "score", "rank"]
     if len(pdf) == 0:
@@ -409,22 +429,45 @@ def _excl_plan(
     return None, flat
 
 
+def _plane(query_mode: str, rel: DataFrame) -> str:
+    """The plane rule of every search entry point: ``'auto'`` counts
+    ``rel`` (the query batch; MLT passes its seeds) with one bounded
+    ``limit(QUERY_BROADCAST_LIMIT + 1).count()`` job and picks broadcast
+    up to the limit, distributed above it; ``'broadcast'`` and
+    ``'distributed'`` pass through; any other mode raises ValueError."""
+    if query_mode == "auto":
+        n_q = rel.limit(QUERY_BROADCAST_LIMIT + 1).count()
+        return "broadcast" if n_q <= QUERY_BROADCAST_LIMIT else "distributed"
+    if query_mode not in ("broadcast", "distributed"):
+        raise ValueError(f"unknown query_mode {query_mode!r}")
+    return query_mode
+
+
+def _shard_scan(
+    spark: SparkSession, index_dir: str, terms: list[str], *cols: str
+) -> DataFrame:
+    """The broadcast planes' index scan: (shard, term, postings, *cols)
+    rows of the query terms only (_term_pruned). df/cf and any unasked
+    positions stream stay out of the scan, the Arrow transfer and the
+    grouping exchange."""
+    return _term_pruned(
+        spark.read.parquet(IndexPaths(index_dir).shards), terms, spark
+    ).select("shard", "term", "postings", *cols)
+
+
 def _mask_right_rel(
     include_doc_ids: DataFrame | None,
     excl_rel: DataFrame | None,
     dps: int,
     shard_rows: DataFrame,
 ) -> tuple[DataFrame, DataFrame]:
-    """The shared include/exclude cogroup construction for the BROADCAST
-    planes (search / boolean / count_matches — previously copy-pasted).
-    Both masks ride ONE right relation keyed by shard (cogroup has a
-    single right slot; a second shuffle per mask would double the
-    exchange): allowed ids carry xm=False, kill-list ids xm=True. Returns
-    (right_rel, shard_rows) with shard_rows semi-join-pruned to the
-    allowed shards when an include mask is present. Call only when at
-    least one mask relation exists. The distributed planes union their
-    masks into the query relation instead (different column shape) and do
-    not use this helper."""
+    """The mask legs of a shard cogroup: allowed ids with xm=False,
+    kill-list ids (past the driver ceiling) with xm=True, both keyed by
+    shard in ONE right relation (cogroup has a single right slot; a second
+    shuffle per mask would double the exchange). Returns (right_rel,
+    shard_rows) with shard_rows semi-join-pruned to the allowed shards
+    when an include mask is present. Call only when at least one mask
+    relation exists."""
     legs = []
     if include_doc_ids is not None:
         incl_flat = include_doc_ids.select(
@@ -445,9 +488,9 @@ def _mask_right_rel(
 
 
 def _mask_split(right, has_include: bool, has_excl_rel: bool, default_excl):
-    """pandas-side twin of _mask_right_rel: one cogrouped right slice →
-    (excl_array, incl_array), keeping the xs.size == 0 → None convention
-    in ONE place so the planes cannot silently diverge on it."""
+    """pandas-side twin of _mask_right_rel: the mask rows of one cogrouped
+    right slice → (excl_array, incl_array), keeping the xs.size == 0 →
+    None convention in ONE place."""
     xm = right["xm"].to_numpy(dtype=bool)
     ids_r = right["doc_id"].to_numpy(np.int64)
     incl = np.unique(ids_r[~xm]) if has_include else None
@@ -456,6 +499,170 @@ def _mask_split(right, has_include: bool, has_excl_rel: bool, default_excl):
         xs = ids_r[xm]
         x = np.sort(xs) if xs.size else None
     return x, incl
+
+
+def _apply_per_shard(
+    spark: SparkSession,
+    shard_rows: DataFrame,
+    fn,
+    schema: str,
+    payload,
+    dps: int,
+    excl: np.ndarray | None = None,
+    excl_rel: DataFrame | None = None,
+    include_doc_ids: DataFrame | None = None,
+):
+    """The Spark broadcast plane's per-shard call, shared by search,
+    boolean, count_matches, phrase and the fused multi-field plan:
+    ``fn(pdf, payload, excl, incl)`` runs once per shard on that shard's
+    rows. Returns (relation, broadcast) — the caller releases the
+    broadcast (``_finish``).
+
+    ``payload`` and the kill-list array ``excl`` ride ONE sc.broadcast,
+    NOT the task closure: a closure is re-pickled into EVERY task
+    (n_shards × |qmap| duplicate bytes — 73 MB of task payload at 733
+    shards × a 100 KB query set), a broadcast ships once per executor.
+    Without mask relations the shards run a plain
+    ``groupBy(shard).applyInPandas``; allowed ids (``include_doc_ids``)
+    and a kill-list past the driver ceiling (``excl_rel``, _excl_plan)
+    are cogrouped with the shard scan instead, so each scorer receives
+    exactly its slice and nothing is collected to the driver. The UDF
+    carries ``fn``'s name (``_co`` appended on the cogroup), so a plan
+    names its scorer."""
+    bc = spark.sparkContext.broadcast((payload, excl))
+    if include_doc_ids is None and excl_rel is None:
+
+        def run(pdf):
+            p, x = bc.value
+            return fn(pdf, p, x, None)
+
+        run.__name__ = fn.__name__
+        return shard_rows.groupBy("shard").applyInPandas(run, schema), bc
+    has_include = include_doc_ids is not None
+    has_excl_rel = excl_rel is not None
+    right_rel, shard_rows = _mask_right_rel(
+        include_doc_ids, excl_rel, dps, shard_rows
+    )
+
+    def run_co(left, right):
+        p, x = bc.value
+        x, incl = _mask_split(right, has_include, has_excl_rel, x)
+        return fn(left, p, x, incl)
+
+    run_co.__name__ = fn.__name__ + "_co"
+    local = (
+        shard_rows.groupby("shard")
+        .cogroup(right_rel.groupby("shard"))
+        .applyInPandas(run_co, schema=schema)
+    )
+    return local, bc
+
+
+def _route_shards(
+    spark: SparkSession,
+    index_dir: str,
+    qt: DataFrame,
+    eager: bool,
+    scan_cols: list[str],
+    fn,
+    schema: str,
+    route=None,
+    masks: tuple | None = None,
+):
+    """The distributed plane's shard routing, shared by search, boolean
+    and phrase. ``qt`` is the query relation (``query_id``, ``term``,
+    ...); ``route(qt)`` (default: ``qt`` itself) the relation each shard
+    receives its slice of:
+
+      route(qt) ⋈ shard-term presence   [each (query, term) row goes to
+                                         exactly the shards holding the
+                                         term]
+      → cogroup with the shard scan by shard id
+
+    ``fn(left, q, excl, incl)`` runs once per shard with the shard's index
+    rows (``shard`` plus ``scan_cols``) and its query rows ``q``.
+
+    The shard scan is prefiltered by ``qt``'s terms (a broadcast
+    left-semi join) while the distinct-term set stays at or below
+    ``TERM_FILTER_LIMIT``; at vocabulary-scale |Q| the filter would not
+    prune and the scorer skips unasked terms anyway.
+
+    ``masks`` = (exclude_doc_ids, include_doc_ids, docs_per_shard) for a
+    plane that masks inside its scorer (search, boolean). The query rows
+    then carry NULL ``doc_id`` / ``xm`` = False, and the mask legs of
+    _mask_right_rel ride the same right relation, NULL-padded to its
+    columns (``term`` NULL marks them; the right-hand split below takes
+    them out before ``fn`` sees ``q``). A kill-list within the driver
+    ceiling rides a broadcast instead. Phrase passes None: it masks its
+    matches after verification.
+
+    ``qt`` is persisted only when ``eager``: the tokenizer then runs once
+    although the relation feeds several jobs (term-count probe, routing,
+    scan prefilter), and the caller releases it (``_finish``) once the
+    result is materialized. A lazy call cannot release it, so it leaves
+    ``qt`` unpersisted instead of pinning its rows until GC.
+
+    Returns (relation, broadcasts, held relations) for the caller to
+    release."""
+    held = []
+    if eager:
+        qt = qt.persist()
+        held.append(qt)
+    qrel = qt if route is None else route(qt)
+    shards = IndexPaths(index_dir).shards
+    presence = spark.read.parquet(shards).select("shard", "term")
+    flags = [] if masks is None else [
+        F.lit(None).cast("long").alias("doc_id"), F.lit(False).alias("xm"),
+    ]
+    routed = qrel.join(presence, "term").select(
+        "shard", *qrel.columns, *flags
+    )
+    shard_rows = spark.read.parquet(shards).select("shard", *scan_cols)
+    terms = qt.select("term").distinct()
+    if terms.limit(TERM_FILTER_LIMIT + 1).count() <= TERM_FILTER_LIMIT:
+        shard_rows = shard_rows.join(F.broadcast(terms), "term", "left_semi")
+
+    bcs = []
+    bc_excl = None
+    has_include = has_excl_rel = False
+    if masks is not None:
+        exclude_doc_ids, include_doc_ids, dps = masks
+        excl, excl_rel = _excl_plan(exclude_doc_ids, dps)
+        has_include = include_doc_ids is not None
+        has_excl_rel = excl_rel is not None
+        if has_include or has_excl_rel:
+            right_rel, shard_rows = _mask_right_rel(
+                include_doc_ids, excl_rel, dps, shard_rows
+            )
+            routed = routed.unionByName(right_rel.select(
+                "shard",
+                *[
+                    F.lit(None).cast(f.dataType).alias(f.name)
+                    for f in qrel.schema.fields
+                ],
+                "doc_id",
+                "xm",
+            ))
+        if excl is not None:
+            bc_excl = spark.sparkContext.broadcast(excl)
+            bcs.append(bc_excl)
+
+    def run(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
+        x = bc_excl.value if bc_excl is not None else None
+        incl = None
+        if has_include or has_excl_rel:
+            is_mask = right["term"].isna()
+            x, incl = _mask_split(right[is_mask], has_include, has_excl_rel, x)
+            right = right[~is_mask]
+        return fn(left, right, x, incl)
+
+    run.__name__ = fn.__name__
+    local = (
+        shard_rows.groupby("shard")
+        .cogroup(routed.groupby("shard"))
+        .applyInPandas(run, schema=schema)
+    )
+    return local, bcs, held
 
 
 def _finish(
@@ -468,7 +675,7 @@ def _finish(
 ) -> DataFrame:
     """Global exact top-k + deterministic tie-break; eager → materialize the
     (≤ k × |Q|)-row result EXECUTOR-SIDE via localCheckpoint (never funnelled
-    through the driver — round-3 ADVICE), release the per-call broadcasts
+    through the driver), release the per-call broadcasts
     immediately instead of waiting for caller GC, and unpersist any
     intermediate relations in ``cached``.
 
@@ -578,24 +785,11 @@ def search(
     stats = load_stats(index_dir)
     if offset < 0:
         raise ValueError(f"offset must be >= 0, got {offset}")
-    k_fetch = k + offset
-    if query_mode == "auto":
-        n_q = queries_df.limit(QUERY_BROADCAST_LIMIT + 1).count()
-        query_mode = (
-            "broadcast" if n_q <= QUERY_BROADCAST_LIMIT else "distributed"
-        )
-    if query_mode == "broadcast":
-        out = _search_broadcast(
-            spark, index_dir, stats, queries_df, k_fetch,
-            exclude_doc_ids, eager, include_doc_ids,
-        )
-    elif query_mode == "distributed":
-        out = _search_distributed(
-            spark, index_dir, stats, queries_df, k_fetch,
-            exclude_doc_ids, eager, include_doc_ids,
-        )
-    else:
-        raise ValueError(f"unknown query_mode {query_mode!r}")
+    plane = _plane(query_mode, queries_df)
+    out = _search_terms(
+        spark, index_dir, stats, plane, _tokenized(queries_df), k + offset,
+        exclude_doc_ids, eager, include_doc_ids,
+    )
     if offset:
         out = out.filter(F.col("rank") > offset)
     return out
@@ -624,21 +818,74 @@ def score_matches(
     Tombstones / allowed-id filters compose exactly as in ``search``.
     """
     stats = load_stats(index_dir)
-    if query_mode == "auto":  # same probe rule as search()
-        n_q = queries_df.limit(QUERY_BROADCAST_LIMIT + 1).count()
-        query_mode = (
-            "broadcast" if n_q <= QUERY_BROADCAST_LIMIT else "distributed"
-        )
-    if query_mode == "broadcast":
-        return _search_broadcast(
-            spark, index_dir, stats, queries_df, None,
-            exclude_doc_ids, False, include_doc_ids,
-        )
-    if query_mode != "distributed":
-        raise ValueError(f"unknown query_mode {query_mode!r}")
-    return _search_distributed(
-        spark, index_dir, stats, queries_df, None,
+    plane = _plane(query_mode, queries_df)
+    return _search_terms(
+        spark, index_dir, stats, plane, _tokenized(queries_df), None,
         exclude_doc_ids, False, include_doc_ids,
+    )
+
+
+def _tokenized(queries_df: DataFrame) -> DataFrame:
+    """(query_id, term) rows of a (query_id, query) batch, one per token
+    (the broadcast plane dedupes per query on the driver, the distributed
+    plane with one distinct() — see _search_terms)."""
+    return queries_df.select(
+        "query_id", F.explode(tokenize_code_expr("query")).alias("term")
+    )
+
+
+def _search_terms(
+    spark: SparkSession,
+    index_dir: str,
+    stats: dict,
+    plane: str,
+    qt: DataFrame,
+    k: int | None,
+    exclude_doc_ids: DataFrame | None,
+    eager: bool,
+    include_doc_ids: DataFrame | None,
+    clip: tuple[str, int] | None = None,
+) -> DataFrame:
+    """The one entry from a (query_id, term) relation to a scoring plane
+    — ``search``'s tokenized batch or a rewritten one (prefix / regex /
+    fuzzy expansion, synonyms, MLT term selection), so caching, masks,
+    pruning and plan shape are ``search()``'s for every grammar. The
+    broadcast plane collects ``qt`` in ONE job; the distributed plane
+    keeps it lazy, deduplicated by one distinct().
+
+    ``clip`` = (label, max_expansions) when ``qt`` is a pattern expansion:
+    (query_id, term, pattern, rn) rows, with NULL pattern/rn on literal
+    terms and rn = max_expansions + 1 on a pattern's clip SENTINEL row
+    (see prefix._expand_patterns). Sentinels are dropped before scoring on
+    both planes; on the broadcast plane their presence — not a capped set's
+    size — proves truncation and raises a RuntimeWarning naming the
+    patterns, from the same collect."""
+    if plane == "distributed":
+        if clip is not None:
+            qt = qt.filter(F.col("rn").isNull() | (F.col("rn") <= clip[1]))
+        return _search_distributed(
+            spark, index_dir, stats, qt.select("query_id", "term").distinct(),
+            k, exclude_doc_ids, eager, include_doc_ids,
+        )
+    rows = qt.collect()
+    if clip is not None:
+        label, cap = clip
+        clipped = sorted(
+            {r[2] for r in rows if r["rn"] is not None and r["rn"] > cap}
+        )
+        if clipped:
+            warnings.warn(
+                f"{label} pattern(s) {clipped} expanded to >{cap} terms and "
+                "were truncated to the lexicographically smallest (raise "
+                "max_expansions to widen)",
+                RuntimeWarning,
+                stacklevel=3,
+            )
+        rows = [r for r in rows if r["rn"] is None or r["rn"] <= cap]
+    return _search_broadcast(
+        spark, index_dir, stats,
+        [(int(r["query_id"]), r["term"]) for r in rows],
+        k, exclude_doc_ids, eager, include_doc_ids,
     )
 
 
@@ -829,37 +1076,24 @@ def _search_broadcast(
     spark: SparkSession,
     index_dir: str,
     stats: dict,
-    queries_df: DataFrame,
+    pairs: list[tuple[int, str]],
     k: int | None,
     exclude_doc_ids: DataFrame | None,
     eager: bool,
     include_doc_ids: DataFrame | None,
-    qt_pairs: list[tuple[int, str]] | None = None,
 ) -> DataFrame:
-    paths = IndexPaths(index_dir)
+    """The broadcast plane over the collected (query_id, term) ``pairs``."""
     n_docs, avgdl = stats["n_docs"], stats["avgdl"]
     k1, b = stats["k1"], stats["b"]
-    if k is None:
-        # score_matches plane: every match survives. A shard holds at most
-        # docs_per_shard docs, so per-shard k = docs_per_shard IS "no
-        # truncation" (``_finish`` still sees k=None and skips the global
-        # top-k).
-        k_shard = stats["docs_per_shard"]
-    else:
-        k_shard = k
+    dps = stats["docs_per_shard"]
+    # k=None (score_matches): every match survives. A shard holds at most
+    # docs_per_shard docs, so per-shard k = docs_per_shard IS "no
+    # truncation" (``_finish`` still sees k=None and skips the global
+    # top-k).
+    k_shard = dps if k is None else k
 
-    # 1. tokenize queries, collect the tiny (qid, term) relation to the
-    # driver — unless the caller already holds the rewritten relation
-    # (prefix expansion, index/prefix.py)
-    if qt_pairs is None:
-        # one job: the (qid, term) pairs are deduplicated below, per query,
-        # so the relation needs no distinct() shuffle
-        qt = queries_df.select(
-            "query_id", F.explode(tokenize_code_expr("query")).alias("term")
-        ).collect()
-        qt_pairs = [(int(r["query_id"]), r["term"]) for r in qt]
     qmap: dict[int, list[str]] = {}
-    for qid, term in qt_pairs:
+    for qid, term in pairs:
         qmap.setdefault(int(qid), []).append(term)
     for qid in qmap:
         qmap[qid] = sorted(set(qmap[qid]))  # sorted-term order everywhere
@@ -868,7 +1102,7 @@ def _search_broadcast(
     if not all_terms:
         return spark.createDataFrame([], empty_schema)
 
-    # 2. global term stats → idf (see _term_dfs_cached). A local index
+    # global term stats → idf (see _term_dfs_cached). A local index
     # read with top-k and no allowed-id relation takes the driver-local
     # plane (_search_local) unless its kill-list is past the driver ceiling
     local_root = (
@@ -886,58 +1120,22 @@ def _search_broadcast(
     qmap = {q: [t for t in ts if t in idfs] for q, ts in qmap.items()}
     qmap = {q: ts for q, ts in qmap.items() if ts}
 
-    # 3. scan shards with a pushed-down term filter; score per shard.
-    # qmap/idfs ride in an sc.broadcast, NOT the task closure: a closure is
-    # re-pickled into EVERY task (n_shards × |qmap| duplicate bytes — 73 MB
-    # of task payload at 733 shards × a 100 KB query set), a broadcast ships
-    # once per executor and scales to very large query batches.
-    dps = stats["docs_per_shard"]
     excl, excl_rel = _excl_plan(exclude_doc_ids, dps)
     if local_root is not None and excl_rel is None:
         return _search_local(
             spark, local_root, stats, qmap, idfs, present, k, excl
         )
-    bc = spark.sparkContext.broadcast((qmap, idfs, excl))
-    # only (shard, term, postings): df/cf and any positions stream stay
-    # out of the scan, the Arrow transfer, and the grouping exchange
-    shard_rows = (
-        _term_pruned(spark.read.parquet(paths.shards), present, spark)
-        .select("shard", "term", "postings")
+
+    def _score(pdf, p, x, incl):
+        q, i = p
+        return _score_shard(
+            pdf, q, i, k_shard, k1, b, avgdl, dps, x, incl
+        )
+
+    local, bc = _apply_per_shard(
+        spark, _shard_scan(spark, index_dir, present), _score,
+        RESULT_SCHEMA, (qmap, idfs), dps, excl, excl_rel, include_doc_ids,
     )
-
-    if include_doc_ids is None and excl_rel is None:
-
-        def _score(pdf):
-            q, i, x = bc.value
-            return _score_shard(
-                pdf, q, i, k_shard, k1, b, avgdl, dps, x
-            )
-
-        local = shard_rows.groupBy("shard").applyInPandas(
-            _score, schema=RESULT_SCHEMA,
-        )
-    else:
-        # allowed ids (and, past the broadcast ceiling, tombstoned ids)
-        # cogrouped with the shard scan: each shard's scorer sees exactly
-        # its slice, nothing is collected to the driver (_mask_right_rel).
-        has_include = include_doc_ids is not None
-        has_excl_rel = excl_rel is not None
-        right_rel, shard_rows = _mask_right_rel(
-            include_doc_ids, excl_rel, dps, shard_rows
-        )
-
-        def _score_co(left, right):
-            q, i, x = bc.value
-            x, incl = _mask_split(right, has_include, has_excl_rel, x)
-            return _score_shard(
-                left, q, i, k_shard, k1, b, avgdl, dps, x, incl
-            )
-
-        local = (
-            shard_rows.groupby("shard")
-            .cogroup(right_rel.groupby("shard"))
-            .applyInPandas(_score_co, schema=RESULT_SCHEMA)
-        )
     return _finish(spark, local, k, eager, [bc])
 
 
@@ -945,160 +1143,62 @@ def _search_distributed(
     spark: SparkSession,
     index_dir: str,
     stats: dict,
-    queries_df: DataFrame,
+    qt: DataFrame,
     k: int | None,
     exclude_doc_ids: DataFrame | None,
     eager: bool,
     include_doc_ids: DataFrame | None,
-    qt_override: DataFrame | None = None,
 ) -> DataFrame:
-    """The O(1)-driver-state query plane. The (qid, term) relation stays a
-    DataFrame end-to-end:
+    """The O(1)-driver-state query plane over the DISTINCT (query_id,
+    term) relation ``qt``, which stays a DataFrame end-to-end:
 
-      query_terms ⋈ global stats (df)            [inner join drops OOV terms]
-                  ⋈ shard-term presence          [each shard learns ITS slice]
-      → cogroup with the shard scan by shard id  [scorer rebuilds qmap/idf
-                                                  per shard from its slice]
+      qt ⋈ global stats (df)                    [inner join drops OOV terms]
+         ⋈ shard-term presence                  [each shard learns ITS slice]
+      → cogroup with the shard scan by shard id [scorer rebuilds qmap/idf
+                                                 per shard from its slice]
 
-    idf is computed INSIDE the scorer from the joined df count with the same
-    Python float math as the broadcast plane (wand.idf), so scores are
-    bit-identical — log() in SQL could differ by an ulp between engines.
+    (_route_shards.) idf is computed INSIDE the scorer from the joined df
+    count with the same Python float math as the broadcast plane
+    (wand.idf), so scores are bit-identical — log() in SQL could differ by
+    an ulp between engines.
 
     The per-shard query slice contains exactly the (query, term) pairs whose
     term that shard holds — the same effective term set the broadcast scorer
     uses after its `t in decoded` filter — sorted by term so float
     accumulation order matches sorted(set(terms)).
     """
-    paths = IndexPaths(index_dir)
     n_docs, avgdl = stats["n_docs"], stats["avgdl"]
     k1, b = stats["k1"], stats["b"]
     dps = stats["docs_per_shard"]
     k_shard = dps if k is None else k  # k=None: see _search_broadcast
-    from dense_retriever_spark.operators.bm25 import query_terms
 
-    # (query_id, term) DISTINCT — never collected. PERSISTED (not
-    # localCheckpoint-ed) so (a) the tokenizer runs once although the
-    # relation feeds three jobs (term-count probe, stats join, scan
-    # prefilter) and (b) the blocks are explicitly unpersisted in _finish's
-    # eager path instead of leaking one checkpointed RDD per call until GC
-    # (the training-set regime pins millions of rows per round otherwise).
-    # ``qt_override``: a caller-rewritten (query_id, term) relation (prefix
-    # expansion, index/prefix.py) replaces the tokenizer output.
-    qt = (
-        qt_override.select("query_id", "term").distinct()
-        if qt_override is not None
-        else query_terms(queries_df)
-    )
-    # the k=None (score_matches) plane returns a LAZY relation — _finish
-    # never runs its unpersist, so persisting here would pin the qt rows in
-    # executor storage until GC on every search_fields/more_like_this call;
-    # re-running the tokenizer per consuming job is the cheaper steady state
-    if k is not None:
-        qt = qt.persist()
-    gstats = global_term_stats(spark, index_dir, stats)
-    # inner join == the broadcast plane's `t in idfs` OOV filter
-    qti = qt.join(gstats, "term").select(
-        "query_id", "term", F.col("df").cast("long").alias("df")
-    )
-
-    # shard-term presence (postings column pruned from this scan): routes
-    # each (query, term) pair to exactly the shards holding the term
-    presence = spark.read.parquet(paths.shards).select("shard", "term")
-    q_shard = qti.join(presence, "term").select(
-        "shard", "query_id", "term", "df",
-        F.lit(None).cast("long").alias("doc_id"),
-        F.lit(False).alias("xm"),
-    )
-
-    shard_rows = spark.read.parquet(paths.shards).select(
-        "shard", "term", "postings",
-    )
-    # prefilter the shard scan by query terms while the distinct-term set is
-    # small enough to broadcast; at vocabulary-scale |Q| the filter would
-    # not prune (and the scorer skips unasked terms anyway)
-    n_terms = qt.select("term").distinct().limit(TERM_FILTER_LIMIT + 1).count()
-    if n_terms <= TERM_FILTER_LIMIT:
-        shard_rows = shard_rows.join(
-            F.broadcast(qt.select("term").distinct()), "term", "left_semi"
+    def with_df(qt: DataFrame) -> DataFrame:
+        # inner join == the broadcast plane's `t in idfs` OOV filter
+        gstats = global_term_stats(spark, index_dir, stats)
+        return qt.join(gstats, "term").select(
+            "query_id", "term", F.col("df").cast("long").alias("df")
         )
 
-    has_include = include_doc_ids is not None
-    if has_include:
-        # allowed ids ride in the SAME right relation (term NULL marks them):
-        # cogroup has one right slot, and a second shuffle per mask would
-        # double the query-side exchange
-        incl_flat = include_doc_ids.select(
-            F.col("doc_id").cast("long").alias("doc_id")
-        ).withColumn("shard", (F.col("doc_id") / dps).cast("long"))
-        q_shard = q_shard.unionByName(
-            incl_flat.select(
-                "shard",
-                F.lit(None).cast("long").alias("query_id"),
-                F.lit(None).cast("string").alias("term"),
-                F.lit(None).cast("long").alias("df"),
-                "doc_id",
-                F.lit(False).alias("xm"),
-            )
-        )
-        shard_rows = shard_rows.join(
-            incl_flat.select("shard").distinct(), "shard", "left_semi"
-        )
-
-    excl, excl_rel = _excl_plan(exclude_doc_ids, dps)
-    has_excl_rel = excl_rel is not None
-    if has_excl_rel:
-        # past the broadcast ceiling the kill-list rides the same right
-        # relation too (term NULL + xm=True) — fully distributed, O(1)
-        # driver state at any kill-list size
-        q_shard = q_shard.unionByName(
-            excl_rel.select(
-                "shard",
-                F.lit(None).cast("long").alias("query_id"),
-                F.lit(None).cast("string").alias("term"),
-                F.lit(None).cast("long").alias("df"),
-                "doc_id",
-                F.lit(True).alias("xm"),
-            )
-        )
-    bcs = []
-    bc_excl = None
-    if excl is not None:
-        bc_excl = spark.sparkContext.broadcast(excl)
-        bcs.append(bc_excl)
-
-    def _score_dist(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        x = bc_excl.value if bc_excl is not None else None
-        if has_excl_rel:
-            sel = right["term"].isna() & right["xm"]
-            xs = right.loc[sel, "doc_id"].to_numpy(np.int64)
-            x = np.sort(xs) if xs.size else None
-        qpart = right[right["term"].notna()]
+    def _score_dist(left, q, x, incl):
         # sorted-term accumulation order == broadcast plane's sorted(set())
-        qpart = qpart.sort_values(["query_id", "term"], kind="mergesort")
+        q = q.sort_values(["query_id", "term"], kind="mergesort")
         qmap: dict[int, list[str]] = {}
         idfs: dict[str, float] = {}
         for qid, t, df_ in zip(
-            qpart["query_id"].to_numpy(np.int64),
-            qpart["term"],
-            qpart["df"].to_numpy(np.int64),
+            q["query_id"].to_numpy(np.int64),
+            q["term"],
+            q["df"].to_numpy(np.int64),
         ):
             qmap.setdefault(int(qid), []).append(t)
             if t not in idfs:
                 idfs[t] = idf_fn(float(df_), float(n_docs))
-        incl = None
-        if has_include:
-            sel_i = right["term"].isna() & ~right["xm"]
-            incl = np.unique(right.loc[sel_i, "doc_id"].to_numpy(np.int64))
         return _score_shard(
             left, qmap, idfs, k_shard, k1, b, avgdl, dps, x, incl,
         )
 
-    local = (
-        shard_rows.groupby("shard")
-        .cogroup(q_shard.groupby("shard"))
-        .applyInPandas(_score_dist, schema=RESULT_SCHEMA)
+    local, bcs, held = _route_shards(
+        spark, index_dir, qt, eager, ["term", "postings"], _score_dist,
+        RESULT_SCHEMA, route=with_df,
+        masks=(exclude_doc_ids, include_doc_ids, dps),
     )
-    return _finish(
-        spark, local, k, eager, bcs,
-        cached=[qt] if k is not None else [],
-    )
+    return _finish(spark, local, k, eager, bcs, held)

@@ -15,10 +15,9 @@ to it).
 Expansion is one relational join on both query planes — the synonym table
 is never collected; direction is as given (term → variant). Callers
 wanting symmetric groups supply both directions (or
-``symmetric_synonyms`` below builds them). The expanded relation feeds the
-EXISTING scoring planes through their query-relation overrides
-(_search_broadcast(qt_pairs=...) / _search_distributed(qt_override=...)),
-so caching, masks, pruning and plan shape are exactly ``search()``'s.
+``symmetric_synonyms`` below builds them). The expanded relation enters the
+scoring planes through ``search._search_terms``, the entry every search
+takes, so caching, masks, pruning and plan shape are exactly ``search()``'s.
 """
 
 from __future__ import annotations
@@ -27,9 +26,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dense_retriever_spark.index.search import (
-    QUERY_BROADCAST_LIMIT,
-    _search_broadcast,
-    _search_distributed,
+    _plane,
+    _search_terms,
     load_stats,
 )
 
@@ -82,22 +80,10 @@ def search_synonyms(
     ``eager`` compose identically."""
     stats = load_stats(index_dir)
     qt = expand_query_terms(queries_df, synonyms)
-    if query_mode == "auto":  # same probe rule as search()
-        n_q = queries_df.limit(QUERY_BROADCAST_LIMIT + 1).count()
-        query_mode = (
-            "broadcast" if n_q <= QUERY_BROADCAST_LIMIT else "distributed"
-        )
-    if query_mode == "broadcast":
-        pairs = [(int(r["query_id"]), r["term"]) for r in qt.collect()]
-        return _search_broadcast(
-            spark, index_dir, stats, None, k,
-            exclude_doc_ids, eager, include_doc_ids, qt_pairs=pairs,
-        )
-    if query_mode != "distributed":
-        raise ValueError(f"unknown query_mode {query_mode!r}")
-    return _search_distributed(
-        spark, index_dir, stats, None, k,
-        exclude_doc_ids, eager, include_doc_ids, qt_override=qt,
+    plane = _plane(query_mode, queries_df)
+    return _search_terms(
+        spark, index_dir, stats, plane, qt, k,
+        exclude_doc_ids, eager, include_doc_ids,
     )
 
 

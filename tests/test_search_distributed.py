@@ -13,14 +13,19 @@ import pytest
 from pyspark.sql import functions as F
 
 from dense_retriever_spark.index import search as search_mod
+from dense_retriever_spark.index.boolean import search_boolean
 from dense_retriever_spark.index.build import build_index
+from dense_retriever_spark.index.phrase import search_phrase
 from dense_retriever_spark.index.search import search
+from dense_retriever_spark.plans import formatted_plan
 
 
 @pytest.fixture(scope="module")
 def idx(spark, tiny_corpus, tmp_path_factory):
     d = str(tmp_path_factory.mktemp("dqidx") / "index")
-    build_index(tiny_corpus, d, docs_per_shard=64, term_buckets=4)
+    build_index(
+        tiny_corpus, d, docs_per_shard=64, term_buckets=4, positions=True
+    )
     return d
 
 
@@ -89,11 +94,38 @@ def test_auto_routes_large_batches(spark, idx, tiny_queries, monkeypatch):
 
 def test_unfiltered_scan_path(spark, idx, tiny_queries, monkeypatch):
     # when the distinct-term set exceeds TERM_FILTER_LIMIT the shard scan is
-    # not prefiltered; the scorer must skip unasked terms and still match
+    # not prefiltered; the search, boolean and phrase scorers must skip
+    # unasked terms and still match
+    bool_q = spark.createDataFrame(
+        [(0, "+def return"), (1, "+class -import self")],
+        "query_id long, query string",
+    )
+    phrase_q = spark.createDataFrame(
+        [(0, "def"), (1, "return self")], "query_id long, query string"
+    )
     want = _rows(search(spark, idx, tiny_queries, k=10))
+    want_bool = _rows(search_boolean(spark, idx, bool_q, k=10))
+    want_phrase = _rows(search_phrase(spark, idx, phrase_q, k=10))
+    assert want_bool and want_phrase
     monkeypatch.setattr(search_mod, "TERM_FILTER_LIMIT", 0)
     got = _rows(search(spark, idx, tiny_queries, k=10, query_mode="distributed"))
     assert got == want
+    got_bool = _rows(search_boolean(
+        spark, idx, bool_q, k=10, query_mode="distributed"
+    ))
+    assert got_bool == want_bool
+    got_phrase = _rows(search_phrase(
+        spark, idx, phrase_q, k=10, query_mode="distributed"
+    ))
+    assert got_phrase == want_phrase
+    # the prefilter is the only left-semi join of these plans: gone from both
+    for lazy in (
+        search(spark, idx, tiny_queries, k=10, query_mode="distributed",
+               eager=False),
+        search_boolean(spark, idx, bool_q, k=10, query_mode="distributed",
+                       eager=False),
+    ):
+        assert "LeftSemi" not in formatted_plan(lazy)
 
 
 def test_lazy_plan(spark, idx, tiny_queries):
