@@ -37,15 +37,19 @@ Two query planes, mirroring index/search.py and sharing its scorer helpers:
   trick) so a shard missing a required term proves non-match locally.
 - ``auto``: probes |Q| with one bounded count and picks like search().
 
-Per shard the conjunction is evaluated postings-first (the classic
-intersect-then-score plan): required posting lists are intersected
-smallest-first (sorted-unique numpy set ops), forbidden lists subtracted,
-and only the surviving candidate set is exact-scored in sorted-term order
-(wand._exact_scores_sorted — float accumulation order identical to the
-oracle and to search()'s scorers). OR-only queries accumulate over the
-scored postings' union. No per-row Python anywhere; tombstone/allowed-set
-masks compose exactly like search() (masked before shard-local top-k, so
-recall is exact under any mask).
+Per shard, one candidate function (``_shard_candidates``) serves search
+and ``count_matches``: the shard's postings are decoded in one
+``decode_postings_batch`` call and masked once (``search._shard_postings``,
+the kill-list/allowed-id masks of every search), then each query's
+required lists are intersected smallest-first, ``min_should_match`` keeps
+the docs holding at least that many distinct optional terms (an overlap
+count) and the forbidden lists are subtracted. Counting takes the sizes of
+the candidate sets. Search scores the same decoded postings with the one
+shard scorer (``search._score_postings`` at k = docs_per_shard, so every
+doc a query touches keeps its exact sorted-term-order sum), keeps the
+candidate rows and takes one (score DESC, doc_id ASC) top-k
+(``search._topk_rows``). Masks apply before matching, so recall is exact
+under any mask.
 
 Scale: same plan shape as search() — one term-pruned scan, one cogroup/
 groupBy exchange, shard-local top-k bounds the output at k × |Q| rows.
@@ -60,7 +64,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from dense_retriever_spark.index.codec import decode_postings
+from dense_retriever_spark.index import fs
 from dense_retriever_spark.index.search import (
     RESULT_SCHEMA,
     _apply_per_shard,
@@ -68,16 +72,15 @@ from dense_retriever_spark.index.search import (
     _finish,
     _plane,
     _route_shards,
+    _score_postings,
+    _shard_postings,
     _shard_scan,
     _term_dfs_cached,
+    _topk_rows,
     global_term_stats,
     load_stats,
 )
-from dense_retriever_spark.index.wand import (
-    _exact_scores_sorted,
-    _topk,
-    idf as idf_fn,
-)
+from dense_retriever_spark.index.wand import idf as idf_fn
 
 #: role codes — ordered so "strongest wins" is a plain max()
 ROLE_OPTIONAL, ROLE_REQUIRED, ROLE_FORBIDDEN = 0, 1, 2
@@ -109,7 +112,127 @@ def parse_boolean_query(query: str) -> list[tuple[str, int]]:
     return sorted(roles.items())
 
 
-def _match_shard_boolean(
+def _parse_batch(queries_df: DataFrame) -> dict[int, list[tuple[str, int]]]:
+    """{query_id: parse_boolean_query(query)} of a collected batch."""
+    return {
+        int(r["query_id"]): parse_boolean_query(r["query"])
+        for r in queries_df.select("query_id", "query").collect()
+    }
+
+
+def _split_roles(
+    spark: SparkSession,
+    index_dir: str,
+    stats: dict,
+    parsed: dict[int, list[tuple[str, int]]],
+) -> tuple[
+    dict[int, tuple[list[str], list[str], list[str]]],
+    list[str],
+    dict[str, float],
+]:
+    """The role split of a parsed batch, shared by search and counting:
+    (queries = {qid: (scored SORTED, required ⊆ scored, forbidden)}, the
+    sorted scan terms of every role, idfs). The df lookup goes through the
+    per-build driver cache (pyarrow on a local index), and OOV terms
+    follow the module docstring's role edge rules, so ``min_should_match``
+    counts in-vocabulary optional terms only."""
+    scored_terms = sorted(
+        {t for ts in parsed.values() for t, role in ts
+         if role != ROLE_FORBIDDEN}
+    )
+    vals = _term_dfs_cached(
+        spark, index_dir, stats, scored_terms, fs.local_path(index_dir, spark)
+    )
+    idfs = {
+        t: idf_fn(v, float(stats["n_docs"]))
+        for t, v in vals.items()
+        if v >= 0.0
+    }
+    queries: dict[int, tuple[list[str], list[str], list[str]]] = {}
+    scan_terms: set[str] = set()
+    for qid, ts in parsed.items():
+        req = [t for t, role in ts if role == ROLE_REQUIRED]
+        if any(t not in idfs for t in req):
+            continue  # OOV required term: the query matches nothing
+        scored = sorted(
+            t for t, role in ts if role != ROLE_FORBIDDEN and t in idfs
+        )
+        if not scored:
+            continue
+        neg = [t for t, role in ts if role == ROLE_FORBIDDEN]
+        queries[qid] = (scored, req, neg)
+        scan_terms.update(scored)
+        scan_terms.update(neg)
+    return queries, sorted(scan_terms), idfs
+
+
+def _shard_candidates(
+    pdf: pd.DataFrame,
+    queries: dict[int, tuple[list[str], list[str], list[str]]],
+    dps: int,
+    excl: np.ndarray | None,
+    incl: np.ndarray | None,
+    msm: int,
+):
+    """One shard's matching docs per query: (decoded postings, {qid:
+    sorted candidate doc ids}) for the queries that match something. The
+    rows of every term some query names are decoded and masked once
+    (``_shard_postings``); ``queries`` as ``_split_roles`` builds them.
+
+    ``msm`` (minimum_should_match): when > 0 and the query has OPTIONAL
+    (non-required) terms, a matching doc must also contain at least ``msm``
+    DISTINCT optional terms — exact shard-locally, as a doc lives in one
+    shard. A query with no optional terms is unconstrained (the Lucene
+    rule)."""
+    wanted = {t for q in queries.values() for ts in q for t in ts}
+    asked = np.fromiter((t in wanted for t in pdf["term"]), bool, len(pdf))
+    post = _shard_postings(pdf, asked, dps, excl, incl)
+    row_of = {t: i for i, t in enumerate(post.terms)}
+    ends = np.cumsum(post.counts)
+
+    def ids(t: str) -> np.ndarray:
+        i = row_of[t]
+        return post.ids[ends[i] - post.counts[i]:ends[i]]
+
+    cands: dict[int, np.ndarray] = {}
+    for qid, (scored, req, neg) in queries.items():
+        if any(r not in row_of for r in req):
+            continue  # a required term is absent from this shard
+        req_set = set(req)
+        opt = [t for t in scored if t not in req_set]
+        if msm > 0 and opt and len(opt) < msm:
+            continue  # the query's optional terms can never reach msm
+        if req:
+            req_ids = sorted((ids(r) for r in req), key=lambda a: a.size)
+            sel = req_ids[0]
+            for other in req_ids[1:]:
+                if sel.size == 0:
+                    break
+                sel = np.intersect1d(sel, other, assume_unique=True)
+        else:
+            present = [ids(t) for t in scored if t in row_of]
+            if not present:
+                continue
+            sel = np.unique(np.concatenate(present))
+        if msm > 0 and opt and sel.size:
+            present_opt = [ids(t) for t in opt if t in row_of]
+            if len(present_opt) < msm:
+                continue  # too few optional terms IN THIS SHARD to reach msm
+            ids_u, cnt = np.unique(
+                np.concatenate(present_opt), return_counts=True
+            )
+            sel = np.intersect1d(sel, ids_u[cnt >= msm], assume_unique=True)
+        for f in neg:
+            if sel.size == 0:
+                break
+            if f in row_of:
+                sel = sel[~np.isin(sel, ids(f), assume_unique=True)]
+        if sel.size:
+            cands[qid] = sel
+    return post, cands
+
+
+def _boolean_shard(
     pdf: pd.DataFrame,
     queries: dict[int, tuple[list[str], list[str], list[str]]],
     idfs: dict[str, float],
@@ -122,103 +245,32 @@ def _match_shard_boolean(
     incl: np.ndarray | None = None,
     msm: int = 0,
 ) -> pd.DataFrame:
-    """applyInPandas body over ONE shard's index rows.
-
-    ``queries``: {qid: (scored_terms SORTED, required_terms, forbidden_terms)}
-    — required ⊆ scored. Masks (``excl`` tombstones / ``incl`` allowed set)
-    are applied to the decoded postings BEFORE matching, exactly like
-    search._score_shard, so shard-local top-k never loses recall under a
-    mask.
-
-    ``msm`` (minimum_should_match): when > 0 and the query has OPTIONAL
-    (non-required, in-vocabulary) terms, a matching doc must contain at
-    least ``msm`` DISTINCT optional terms on top of every required term.
-    Counting is exact shard-locally (a doc lives in exactly one shard). A
-    query whose optional-term count is below ``msm`` matches nothing; a
-    query with no optional terms is unconstrained (the Lucene rule)."""
+    """applyInPandas body of boolean search over ONE shard's index rows:
+    the shard's candidates (``_shard_candidates``), scored by the shard
+    scorer over the same decoded postings at k = docs_per_shard, then
+    the candidate rows' (score DESC, doc_id ASC) top-k per query."""
+    cols = ["query_id", "doc_id", "score", "rank"]
     if len(pdf) == 0 or not queries:
-        return pd.DataFrame(columns=["query_id", "doc_id", "score", "rank"])
-    shard = int(pdf["shard"].iloc[0])
-    base = shard * dps
-    shard_excl = None
-    if excl is not None and excl.size:
-        lo, hi = np.searchsorted(excl, [base, base + dps])
-        shard_excl = excl[lo:hi]
-        if shard_excl.size == 0:
-            shard_excl = None
-    row_of = {t: i for i, t in enumerate(pdf["term"].to_numpy())}
-    decoded: dict[str, tuple] = {}
-
-    def dec(term):
-        got = decoded.get(term)
-        if got is None:
-            ids, tfs, dls = decode_postings(
-                pdf["postings"].iloc[row_of[term]]
-            )
-            if shard_excl is not None:
-                keep = ~np.isin(ids, shard_excl, assume_unique=True)
-                ids, tfs, dls = ids[keep], tfs[keep], dls[keep]
-            if incl is not None and ids.size:
-                keep = np.isin(ids, incl, assume_unique=True)
-                ids, tfs, dls = ids[keep], tfs[keep], dls[keep]
-            got = decoded[term] = (ids, tfs, dls)
-        return got
-
-    out_q, out_d, out_s = [], [], []
-    for qid, (scored, req, neg) in queries.items():
-        if any(r not in row_of for r in req):
-            continue  # a required term is absent from this shard
-        req_set = set(req)
-        opt = [t for t in scored if t not in req_set]
-        if msm > 0 and opt and len(opt) < msm:
-            continue  # the query's optional terms can never reach msm
-        if req:
-            req_ids = sorted((dec(r)[0] for r in req), key=lambda a: a.size)
-            sel = req_ids[0]
-            for ids in req_ids[1:]:
-                if sel.size == 0:
-                    break
-                sel = np.intersect1d(sel, ids, assume_unique=True)
-        else:
-            present = [dec(t)[0] for t in scored if t in row_of]
-            if not present:
-                continue
-            sel = np.unique(np.concatenate(present))
-        if msm > 0 and opt and sel.size:
-            present_opt = [dec(t)[0] for t in opt if t in row_of]
-            if len(present_opt) < msm:
-                continue  # too few optional terms IN THIS SHARD to reach msm
-            ids_u, cnt = np.unique(
-                np.concatenate(present_opt), return_counts=True
-            )
-            ok = ids_u[cnt >= msm]
-            sel = np.intersect1d(sel, ok, assume_unique=True)
-        for f in neg:
-            if sel.size == 0:
-                break
-            if f in row_of:
-                sel = sel[~np.isin(sel, dec(f)[0], assume_unique=True)]
-        if sel.size == 0:
-            continue
-        term_rows = [
-            (t, idfs[t], *dec(t)) for t in scored if t in row_of
-        ]
-        sel_sorted, scores = _exact_scores_sorted(
-            term_rows, sel - base, base, k1, b, avgdl
-        )
-        scores, doc_ids = _topk(scores, sel_sorted + base, k)
-        out_q.append(np.full(scores.size, qid, dtype=np.int64))
-        out_d.append(doc_ids)
-        out_s.append(scores)
-    if not out_q:
-        return pd.DataFrame(columns=["query_id", "doc_id", "score", "rank"])
-    return pd.DataFrame(
-        {
-            "query_id": np.concatenate(out_q),
-            "doc_id": np.concatenate(out_d),
-            "score": np.concatenate(out_s),
-            "rank": np.zeros(sum(x.size for x in out_q), dtype=np.int32),
-        }
+        return pd.DataFrame(columns=cols)
+    post, cands = _shard_candidates(pdf, queries, dps, excl, incl, msm)
+    if not cands:
+        return pd.DataFrame(columns=cols)
+    scored = _score_postings(
+        post, {q: queries[q][0] for q in cands}, idfs, dps, k1, b, avgdl,
+        dps,
+    )
+    q = scored["query_id"].to_numpy(np.int64)
+    d = scored["doc_id"].to_numpy(np.int64)
+    # keep the candidate (query, doc) cells: key = query ordinal × dps +
+    # local doc on both sides
+    qs = np.sort(np.fromiter(cands, np.int64, len(cands)))
+    cand_key = np.concatenate(
+        [np.searchsorted(qs, q_) * dps + c - post.base
+         for q_, c in cands.items()]
+    )
+    keep = np.isin(np.searchsorted(qs, q) * dps + d - post.base, cand_key)
+    return _topk_rows(
+        q[keep], d[keep], scored["score"].to_numpy(np.float64)[keep], k
     )
 
 
@@ -230,87 +282,18 @@ def _count_shard_boolean(
     incl: np.ndarray | None = None,
     msm: int = 0,
 ) -> pd.DataFrame:
-    """Counting body: per-shard MATCH-SET SIZE per query (same candidate
-    algebra as _match_shard_boolean INCLUDING ``msm``, no scoring — df/idf
-    lookups are never run on the counting path; msm counts in-shard
-    vocabulary, so an everywhere-OOV optional term affects count and
-    search identically). Doc ids are unique to their shard, so the global
-    count is a plain sum."""
-    empty = pd.DataFrame({"query_id": [], "n_matches": []}).astype(
-        {"query_id": "int64", "n_matches": "int64"}
-    )
-    if len(pdf) == 0 or not queries:
-        return empty
-    shard = int(pdf["shard"].iloc[0])
-    base = shard * dps
-    shard_excl = None
-    if excl is not None and excl.size:
-        lo, hi = np.searchsorted(excl, [base, base + dps])
-        shard_excl = excl[lo:hi]
-        if shard_excl.size == 0:
-            shard_excl = None
-    row_of = {t: i for i, t in enumerate(pdf["term"].to_numpy())}
-    decoded: dict[str, np.ndarray] = {}
-
-    def dec(term):
-        got = decoded.get(term)
-        if got is None:
-            ids, _tfs, _dls = decode_postings(
-                pdf["postings"].iloc[row_of[term]]
-            )
-            if shard_excl is not None:
-                ids = ids[~np.isin(ids, shard_excl, assume_unique=True)]
-            if incl is not None and ids.size:
-                ids = ids[np.isin(ids, incl, assume_unique=True)]
-            got = decoded[term] = ids
-        return got
-
-    out_q, out_n = [], []
-    for qid, (scored, req, neg) in queries.items():
-        if any(r not in row_of for r in req):
-            continue
-        req_set = set(req)
-        opt = [t for t in scored if t not in req_set]
-        if msm > 0 and opt and len(opt) < msm:
-            continue
-        if req:
-            req_ids = sorted((dec(r) for r in req), key=lambda a: a.size)
-            sel = req_ids[0]
-            for ids in req_ids[1:]:
-                if sel.size == 0:
-                    break
-                sel = np.intersect1d(sel, ids, assume_unique=True)
-        else:
-            present = [dec(t) for t in scored if t in row_of]
-            if not present:
-                continue
-            sel = np.unique(np.concatenate(present))
-        if msm > 0 and opt and sel.size:
-            present_opt = [dec(t) for t in opt if t in row_of]
-            if len(present_opt) < msm:
-                continue
-            ids_u, cnt = np.unique(
-                np.concatenate(present_opt), return_counts=True
-            )
-            sel = np.intersect1d(
-                sel, ids_u[cnt >= msm], assume_unique=True
-            )
-        for f in neg:
-            if sel.size == 0:
-                break
-            if f in row_of:
-                sel = sel[~np.isin(sel, dec(f), assume_unique=True)]
-        if sel.size:
-            out_q.append(qid)
-            out_n.append(int(sel.size))
-    if not out_q:
-        return empty
-    return pd.DataFrame(
-        {
-            "query_id": np.array(out_q, dtype=np.int64),
-            "n_matches": np.array(out_n, dtype=np.int64),
-        }
-    )
+    """Counting body: per-shard MATCH-SET SIZE per query — the sizes of
+    ``_shard_candidates``' sets, so counting and search share one
+    candidate algebra INCLUDING ``msm``. Doc ids are unique to their
+    shard, so the global count is a plain sum."""
+    cands = {}
+    if len(pdf) and queries:
+        _post, cands = _shard_candidates(pdf, queries, dps, excl, incl, msm)
+    return pd.DataFrame({
+        "query_id": np.fromiter(cands, np.int64, len(cands)),
+        "n_matches": np.fromiter(map(len, cands.values()), np.int64,
+                                 len(cands)),
+    })
 
 
 def count_matches(
@@ -327,32 +310,22 @@ def count_matches(
     Output: (query_id, n_matches) with a zero row for every input query
     (OOV-required and no-match queries included).
 
-    Counting needs NO document-frequency lookup (presence only), so this
-    path never runs the global-stats job; an everywhere-absent required
-    term yields 0 through the per-shard conjunction without a dead-query
-    check. Per-shard match sets reduce to one long each; the global count
-    is an exact sum because doc ids never span shards. Interactive
+    Counting shares search's role split (``_split_roles``), so a query
+    counts exactly the docs its search would rank with k unbounded — the
+    out-of-vocabulary rules and ``min_should_match`` included. The df
+    lookup behind it is served from the per-build driver cache (a local
+    index's dictionary is read with pyarrow, not a Spark job). Per-shard
+    match sets reduce to one long each; the global count is an exact sum
+    because doc ids never span shards. Interactive
     (broadcast-plane) surface; training-set-scale counting composes the
     distributed boolean plane with its own aggregation."""
     stats = load_stats(index_dir)
     dps = stats["docs_per_shard"]
     msm = int(min_should_match)
-    rows = queries_df.select("query_id", "query").collect()
-    parsed = {
-        int(r["query_id"]): parse_boolean_query(r["query"]) for r in rows
-    }
-    queries: dict[int, tuple[list[str], list[str], list[str]]] = {}
-    scan_terms: set[str] = set()
-    for qid, ts in parsed.items():
-        req = [t for t, role in ts if role == ROLE_REQUIRED]
-        scored = sorted(t for t, role in ts if role != ROLE_FORBIDDEN)
-        if not scored:
-            continue
-        neg = [t for t, role in ts if role == ROLE_FORBIDDEN]
-        queries[qid] = (scored, req, neg)
-        scan_terms.update(scored)
-        scan_terms.update(neg)
-
+    parsed = _parse_batch(queries_df)
+    queries, scan_terms, _idfs = _split_roles(
+        spark, index_dir, stats, parsed
+    )
     all_qids = spark.createDataFrame(
         [(q,) for q in parsed], "query_id long"
     )
@@ -366,7 +339,7 @@ def count_matches(
         return _count_shard_boolean(pdf, q, dps, x, incl, msm=msm)
 
     local, bc = _apply_per_shard(
-        spark, _shard_scan(spark, index_dir, sorted(scan_terms)), _count,
+        spark, _shard_scan(spark, index_dir, scan_terms), _count,
         "query_id long, n_matches long", queries, dps,
         excl, excl_rel, include_doc_ids,
     )
@@ -428,40 +401,11 @@ def _boolean_broadcast(
     eager: bool,
     msm: int = 0,
 ) -> DataFrame:
-    n_docs, avgdl = stats["n_docs"], stats["avgdl"]
-    k1, b = stats["k1"], stats["b"]
+    avgdl, k1, b = stats["avgdl"], stats["k1"], stats["b"]
     dps = stats["docs_per_shard"]
-
-    rows = queries_df.select("query_id", "query").collect()
-    parsed = {
-        int(r["query_id"]): parse_boolean_query(r["query"]) for r in rows
-    }
-    scored_terms = sorted(
-        {t for ts in parsed.values() for t, role in ts
-         if role != ROLE_FORBIDDEN}
+    queries, scan_terms, idfs = _split_roles(
+        spark, index_dir, stats, _parse_batch(queries_df)
     )
-    if not scored_terms:
-        return spark.createDataFrame([], RESULT_SCHEMA)
-    vals = _term_dfs_cached(spark, index_dir, stats, scored_terms)
-    idfs = {
-        t: idf_fn(v, float(n_docs)) for t, v in vals.items() if v >= 0.0
-    }
-
-    queries: dict[int, tuple[list[str], list[str], list[str]]] = {}
-    scan_terms: set[str] = set()
-    for qid, ts in parsed.items():
-        req = [t for t, role in ts if role == ROLE_REQUIRED]
-        if any(t not in idfs for t in req):
-            continue  # OOV required term: the query matches nothing
-        scored = sorted(
-            t for t, role in ts if role != ROLE_FORBIDDEN and t in idfs
-        )
-        if not scored:
-            continue
-        neg = [t for t, role in ts if role == ROLE_FORBIDDEN]
-        queries[qid] = (scored, req, neg)
-        scan_terms.update(scored)
-        scan_terms.update(neg)
     if not queries:
         return spark.createDataFrame([], RESULT_SCHEMA)
 
@@ -469,12 +413,12 @@ def _boolean_broadcast(
 
     def _match(pdf, p, x, incl):
         q, i = p
-        return _match_shard_boolean(
+        return _boolean_shard(
             pdf, q, i, k, k1, b, avgdl, dps, x, incl, msm=msm
         )
 
     local, bc = _apply_per_shard(
-        spark, _shard_scan(spark, index_dir, sorted(scan_terms)), _match,
+        spark, _shard_scan(spark, index_dir, scan_terms), _match,
         RESULT_SCHEMA, (queries, idfs), dps, excl, excl_rel, include_doc_ids,
     )
     return _finish(spark, local, k, eager, [bc])
@@ -603,7 +547,7 @@ def _boolean_distributed(
             for t, df_ in zip(terms, grp["df"].to_numpy(np.int64)):
                 if t not in idfs:
                     idfs[t] = idf_fn(float(df_), float(n_docs))
-        return _match_shard_boolean(
+        return _boolean_shard(
             left, queries, idfs, k, k1, b, avgdl, dps, x, incl, msm=msm
         )
 

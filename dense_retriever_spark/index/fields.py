@@ -29,16 +29,18 @@ Two physical plans, same results (oracle q68/q69 + tests assert identity):
   doc's postings for EVERY field live in the same doc-range shard id
   (shard = doc_id // docs_per_shard), the weighted combination is
   shard-local — one union of the per-field term-pruned scans tagged with a
-  source ordinal, ONE groupBy(shard) exchange, and a per-shard scorer that
-  dense-accumulates each field exactly like the single-field exact scorer,
-  combines per-doc in the caller's field order, and emits a per-shard
-  top-k of the COMBINED score (exact: shards partition the doc space, so
-  the global top-k of per-shard top-ks is the true top-k). This removes
-  the |matches|-row (query_id, doc_id) shuffle + pivot of the general
-  plan entirely — the round-8 optimization that took the bench multifield
-  p50 from ~14× to ~2× the plain-search p50. Fields that reference the
-  SAME index directory share one scan and one per-(dir, term) score
-  accumulation (identical inputs give identical per-field scores).
+  source ordinal, ONE groupBy(shard) exchange, and a per-shard body
+  (``_fields_shard``) that decodes and masks the shard's rows of every
+  field once, scores each field index with the one shard scorer of every
+  search (``search._score_postings`` at k = docs_per_shard, that index's
+  statistics), combines per-doc in the caller's field order, and emits a
+  per-shard top-k of the COMBINED score (exact: shards partition the doc
+  space, so the global top-k of per-shard top-ks is the true top-k). This
+  removes the |matches|-row (query_id, doc_id) shuffle + pivot of the
+  general plan entirely — the round-8 optimization that took the bench
+  multifield p50 from ~14× to ~2× the plain-search p50. Fields that
+  reference the SAME index directory share one scan and one scoring pass
+  (identical inputs give identical per-field scores).
 * GENERAL (distributed plane, or mismatched docs_per_shard):
   ``score_matches`` (index/search.py) supplies the full per-field matched
   relation — per-shard cost identical to a normal search minus the top-k
@@ -61,23 +63,25 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dense_retriever_spark.index.codec import decode_postings_batch
 from dense_retriever_spark.index.search import (
     MATCHES_SCHEMA,
     RESULT_SCHEMA,
     _apply_per_shard,
     _excl_plan,
+    _finish,
     _plane,
+    _score_postings,
+    _shard_postings,
     _shard_scan,
     _term_dfs_cached,
+    _topk_rows,
     load_stats,
     score_matches,
 )
-from dense_retriever_spark.index.wand import _contrib, _topk, idf as idf_fn
-from dense_retriever_spark.operators.topk import topk_per_group
+from dense_retriever_spark.index.wand import idf as idf_fn
 
 
-def _score_shard_fields(
+def _fields_shard(
     pdf: pd.DataFrame,
     qmap: dict[int, list[str]],
     dir_idfs: list[dict[str, float]],
@@ -91,115 +95,54 @@ def _score_shard_fields(
     incl: np.ndarray | None = None,
 ) -> pd.DataFrame:
     """applyInPandas body for the FUSED plan: one shard's term-pruned rows
-    from EVERY field leg (``src`` = dir ordinal). Per (dir, query) the score
-    is the single-field exact scorer's dense accumulation (sorted-term
-    order, identical floats); the combined score is the caller-field-order
-    left fold w_0·s_0 + w_1·s_1 + … (or the running max for dismax) —
-    exactly the float-op order of the general plan's pivot expression, so
-    the two plans are bit-identical. Per-(dir, term) BM25 contributions are
-    computed once per shard and shared across every query touching the term
-    (elementwise math — values unchanged)."""
-    cols = ["query_id", "doc_id", "score", "rank"]
+    from EVERY field leg (``src`` = dir ordinal), decoded and masked in one
+    ``_shard_postings`` call. Each dir's rows are scored by the shard
+    scorer (``_score_postings`` at k = docs_per_shard with that index's
+    idfs and k1/b/avgdl), so each per-field score is the single-field
+    search's sum; the combined score is the caller-field-order left fold
+    w_0·s_0 + w_1·s_1 + … (or the running max for dismax), with s_f = 0
+    for a doc field f does not match — exactly the float-op order of the
+    general plan's pivot expression, so the two plans are bit-identical.
+    One (score DESC, doc_id ASC) top-k of the combined score per query
+    follows (``_topk_rows``)."""
     if len(pdf) == 0:
-        return pd.DataFrame(columns=cols)
-    shard = int(pdf["shard"].iloc[0])
-    base = shard * dps
-    shard_excl = None
-    if excl is not None and excl.size:
-        lo, hi = np.searchsorted(excl, [base, base + dps])
-        shard_excl = excl[lo:hi]
-        if shard_excl.size == 0:
-            shard_excl = None
-    masked = shard_excl is not None or incl is not None
-    decoded: dict[tuple[int, str], tuple] = {}
-    contribs: dict[tuple[int, str], np.ndarray] = {}
-    srcs = pdf["src"].astype(int).tolist()
-    terms = pdf["term"].tolist()
-    wanted = [
-        i for i, (di, t) in enumerate(zip(srcs, terms)) if t in dir_idfs[di]
-    ]
-    counts, all_ids, all_tfs, all_dls = decode_postings_batch(
-        pdf["postings"].iloc[wanted].tolist()
+        return pd.DataFrame(columns=["query_id", "doc_id", "score", "rank"])
+    pdf = pdf.sort_values("src", kind="stable")  # each dir's rows contiguous
+    src = pdf["src"].to_numpy(np.int64)
+    asked = np.fromiter(
+        (t in dir_idfs[di] for di, t in zip(src, pdf["term"])), bool, len(pdf)
     )
-    cuts = np.cumsum(counts)[:-1]
-    for r, ids, tfs, dls in zip(  # one iteration per (src, term)
-        wanted,
-        np.split(all_ids, cuts),
-        np.split(all_tfs, cuts),
-        np.split(all_dls, cuts),
-    ):
-        di, term = srcs[r], terms[r]
-        if shard_excl is not None:
-            keep = ~np.isin(ids, shard_excl, assume_unique=True)
-            ids, tfs, dls = ids[keep], tfs[keep], dls[keep]
-        if incl is not None and ids.size:
-            keep = np.isin(ids, incl, assume_unique=True)
-            ids, tfs, dls = ids[keep], tfs[keep], dls[keep]
-        if masked and ids.size == 0:
-            continue
-        decoded[(di, term)] = (ids, tfs, dls)
-
-    def contrib_of(di: int, t: str) -> np.ndarray:
-        key = (di, t)
-        c = contribs.get(key)
-        if c is None:
-            ids, tfs, dls = decoded[key]
-            k1, b, avgdl = dir_params[di]
-            c = contribs[key] = _contrib(
-                dir_idfs[di][t], tfs, dls, k1, b, avgdl
-            )
-        return c
-
-    n_dirs = len(dir_idfs)
-    live_dirs = sorted(set(dir_of))
-    out_q, out_d, out_s = [], [], []
-    zeros: np.ndarray | None = None
-    for qid, terms in qmap.items():
-        touched = np.zeros(dps, dtype=bool)
-        accs: list[np.ndarray | None] = [None] * n_dirs
-        for di in live_dirs:
-            acc = None
-            for t in terms:  # sorted-term accumulation order (wand parity)
-                got = decoded.get((di, t))
-                if got is None:
-                    continue
-                if acc is None:
-                    acc = np.zeros(dps, dtype=np.float64)
-                lidx = got[0] - base
-                acc[lidx] += contrib_of(di, t)
-                touched[lidx] = True
-            accs[di] = acc
-        hit = np.flatnonzero(touched)
-        if hit.size == 0:
-            continue
-        total: np.ndarray | None = None
-        for fi, w in enumerate(weights):
-            a = accs[dir_of[fi]]
-            if a is None:
-                if zeros is None:
-                    zeros = np.zeros(dps, dtype=np.float64)
-                a = zeros
-            c = a * w
-            if total is None:
-                total = c
-            elif combine == "sum":
-                total = total + c
-            else:
-                total = np.maximum(total, c)
-        scores, doc_ids = _topk(total[hit], hit + base, k)
-        out_q.append(np.full(scores.size, qid, dtype=np.int64))
-        out_d.append(doc_ids)
-        out_s.append(scores)
-    if not out_q:
-        return pd.DataFrame(columns=cols)
-    return pd.DataFrame(
-        {
-            "query_id": np.concatenate(out_q),
-            "doc_id": np.concatenate(out_d),
-            "score": np.concatenate(out_s),
-            "rank": np.zeros(sum(x.size for x in out_q), dtype=np.int32),
-        }
-    )
+    post = _shard_postings(pdf, asked, dps, excl, incl)
+    bounds = np.searchsorted(src[asked], np.arange(len(dir_idfs) + 1))
+    qs = np.array(sorted(qmap), dtype=np.int64)
+    keys, vals = [], []  # per dir: (query ordinal × dps + local doc, score)
+    for di, (k1, b, avgdl) in enumerate(dir_params):
+        part = _score_postings(
+            post.rows(bounds[di], bounds[di + 1]), qmap, dir_idfs[di],
+            dps, k1, b, avgdl, dps,
+        )
+        keys.append(
+            np.searchsorted(qs, part["query_id"].to_numpy(np.int64)) * dps
+            + part["doc_id"].to_numpy(np.int64) - post.base
+        )
+        vals.append(part["score"].to_numpy(np.float64))
+    hit = np.unique(np.concatenate(keys))
+    per_dir = []
+    for key, val in zip(keys, vals):
+        s = np.zeros(hit.size, dtype=np.float64)
+        s[np.searchsorted(hit, key)] = val
+        per_dir.append(s)
+    total = None
+    for fi, w in enumerate(weights):
+        c = per_dir[dir_of[fi]] * w
+        if total is None:
+            total = c
+        elif combine == "sum":
+            total = total + c
+        else:
+            total = np.maximum(total, c)
+    q_at, lidx = np.divmod(hit, dps)
+    return _topk_rows(qs[q_at], lidx + post.base, total, k)
 
 
 def _search_fields_fused(
@@ -269,20 +212,14 @@ def _search_fields_fused(
         u = u.unionByName(leg)
 
     def _score(pdf, p, x, incl):
-        return _score_shard_fields(pdf, *p, dps, k, x, incl)
+        return _fields_shard(pdf, *p, dps, k, x, incl)
 
     local, _bc = _apply_per_shard(
         spark, u, _score, RESULT_SCHEMA,
         (qmap, dir_idfs, dir_params, dir_of, weights, combine), dps,
         excl, excl_rel, include_doc_ids,
     )
-    out = topk_per_group(local.drop("rank"), "query_id", "score", k)
-    return out.select(
-        F.col("query_id").cast("long"),
-        F.col("doc_id").cast("long"),
-        F.col("score").cast("double"),
-        F.col("rank").cast("int"),
-    )
+    return _finish(spark, local, k, False, [])
 
 
 def search_fields(
@@ -374,13 +311,7 @@ def search_fields(
     scored = per_doc.select(
         "query_id", "doc_id", total.alias("score")
     )
-    out = topk_per_group(scored, "query_id", "score", k)
-    return out.select(
-        F.col("query_id").cast("long"),
-        F.col("doc_id").cast("long"),
-        F.col("score").cast("double"),
-        F.col("rank").cast("int"),
-    )
+    return _finish(spark, scored, k, False, [])
 
 
 def derive_field(

@@ -55,6 +55,7 @@ def interesting_terms(
     max_terms: int = 10,
     content_df: DataFrame | None = None,
     _shards: list[int] | None = None,
+    _stats: dict | None = None,
 ) -> DataFrame:
     """(query_id, term, tscore) — each seed query's top ``max_terms`` terms
     by tf·idf, the MLT term-selection relation (exposed for explain/debug
@@ -63,10 +64,12 @@ def interesting_terms(
     ``seeds``: (query_id, doc_id); multiple seed docs per query are allowed
     (tf sums over them). ``content_df``: optional (doc_id, content) source
     for metadata-only indexes whose docs table carries no content.
+    ``_stats``: the caller's loaded ``stats.json`` (more_like_this), so
+    term selection and scoring read one snapshot of the index.
     """
     from dense_retriever_spark.functions.tokenizer import tokenize_code_pandas
 
-    stats = load_stats(index_dir)
+    stats = load_stats(index_dir) if _stats is None else _stats
     paths = IndexPaths(index_dir)
     n_docs = float(stats["n_docs"])
 
@@ -170,7 +173,8 @@ def more_like_this(
         if content_df is None:
             shards = [int(r["doc_id"]) // dps for r in seed_rows]
     qt = interesting_terms(
-        spark, index_dir, seeds, max_terms, content_df, _shards=shards
+        spark, index_dir, seeds, max_terms, content_df, _shards=shards,
+        _stats=stats,
     ).select("query_id", "term")
     if plane == "distributed":
         # worst case every one of a query's seeds lands in its top list;

@@ -73,6 +73,7 @@ import os
 import threading
 import warnings
 from collections import OrderedDict
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -214,6 +215,67 @@ def _ragged_arange(lens: np.ndarray) -> np.ndarray:
     return np.arange(total, dtype=np.int64) - np.repeat(ends - lens, lens)
 
 
+class _ShardPostings(NamedTuple):
+    """One shard's decoded and masked posting rows (``_shard_postings``):
+    row ``i`` is ``terms[i]``, and its postings are the ``counts[i]``
+    entries of ``ids``/``tfs``/``dls`` after those of rows ``0..i-1``.
+    ``counts[i]`` is 0 when a mask removed all of the row's postings."""
+
+    base: int
+    terms: list[str]
+    counts: np.ndarray
+    ids: np.ndarray
+    tfs: np.ndarray
+    dls: np.ndarray
+
+    def rows(self, r0: int, r1: int) -> "_ShardPostings":
+        """Rows ``r0..r1-1`` alone (views, nothing copied)."""
+        p0, p1 = int(self.counts[:r0].sum()), int(self.counts[:r1].sum())
+        return _ShardPostings(
+            self.base, self.terms[r0:r1], self.counts[r0:r1],
+            self.ids[p0:p1], self.tfs[p0:p1], self.dls[p0:p1],
+        )
+
+
+def _shard_postings(
+    pdf: pd.DataFrame,
+    asked: np.ndarray,
+    dps: int,
+    excl: np.ndarray | None = None,
+    incl: np.ndarray | None = None,
+) -> _ShardPostings:
+    """The first half of the shard scorer: decode the ``asked`` rows of
+    ONE shard's (shard, term, postings) rows in one
+    ``decode_postings_batch`` call and mask them. Rows not asked for are
+    never decoded — the distributed plane may feed the unfiltered shard
+    scan when the query-term set is too large to broadcast-prefilter.
+
+    ``excl``: sorted array of tombstoned doc ids (search-time deletes, e.g.
+    a dedup kill-list). ``incl``: sorted array of ALLOWED doc ids for THIS
+    shard (metadata-filtered search — only these docs may appear in
+    results). Both masks can be live at once; every search (plain,
+    boolean, counting, multi-field) applies them here, to the decoded
+    postings before any matching or scoring, so top-k selection stays
+    exact under any mask."""
+    base = int(pdf["shard"].iloc[0]) * dps
+    rows = pdf[asked]
+    terms = rows["term"].tolist()
+    counts, ids, tfs, dls = decode_postings_batch(rows["postings"].tolist())
+    keep = None
+    if excl is not None and excl.size:
+        lo, hi = np.searchsorted(excl, [base, base + dps])
+        if hi > lo:
+            keep = ~np.isin(ids, excl[lo:hi])
+    if incl is not None:
+        allowed = np.isin(ids, incl)
+        keep = allowed if keep is None else keep & allowed
+    if keep is not None:
+        row_of = np.repeat(np.arange(len(terms)), counts)
+        ids, tfs, dls = ids[keep], tfs[keep], dls[keep]
+        counts = np.bincount(row_of[keep], minlength=len(terms))
+    return _ShardPostings(base, terms, counts, ids, tfs, dls)
+
+
 def _score_shard(
     pdf: pd.DataFrame,
     queries: dict[int, list[str]],
@@ -226,26 +288,43 @@ def _score_shard(
     excl: np.ndarray | None = None,
     incl: np.ndarray | None = None,
 ) -> pd.DataFrame:
-    """applyInPandas body: all index rows of ONE shard matching query terms.
+    """applyInPandas body: all index rows of ONE shard matching query terms
+    — the shard scorer of every search: ``_shard_postings`` decodes and
+    masks the rows whose term some query asked for (``term in idfs``),
+    ``_score_postings`` accumulates and takes each query's top ``k``."""
+    if len(pdf) == 0:
+        return pd.DataFrame(columns=["query_id", "doc_id", "score", "rank"])
+    asked = np.fromiter((t in idfs for t in pdf["term"]), bool, len(pdf))
+    post = _shard_postings(pdf, asked, docs_per_shard, excl, incl)
+    return _score_postings(
+        post, queries, idfs, k, k1, b, avgdl, docs_per_shard
+    )
 
-    ``excl``: sorted array of tombstoned doc ids (search-time deletes, e.g. a
-    dedup kill-list) — masked out of every term's postings before scoring.
-    ``incl``: sorted array of ALLOWED doc ids for THIS shard (metadata-
-    filtered search — only these docs may appear in results). Both masks can
-    be live at once; they are applied to the decoded postings before any
-    scoring, so top-k selection stays exact under any mask.
 
-    Rows whose term no query asked for (``term not in idfs``) are skipped
-    without decoding — distributed query mode may feed the unfiltered shard
-    scan when the query-term set is too large to broadcast-prefilter.
+def _score_postings(
+    post: _ShardPostings,
+    queries: dict[int, list[str]],
+    idfs: dict[str, float],
+    k: int,
+    k1: float,
+    b: float,
+    avgdl: float,
+    dps: int,
+) -> pd.DataFrame:
+    """The second half of the shard scorer and the package's one BM25
+    accumulator (``wand.score_query_exact`` is the per-query reference the
+    tests compare it with): every query's top ``k`` docs of one shard's
+    decoded postings, as (query_id, doc_id, score, rank = 0) rows.
+    ``queries`` maps a query id to its terms in sorted order; a row whose
+    term has no idf (a boolean query's forbidden term) is in no query's
+    list and scores nothing. ``k`` = ``dps`` keeps every touched doc.
 
     The whole batch is scored in a few numpy passes, not one scorer call per
     query:
 
-    1. the wanted rows are decoded in ONE ``decode_postings_batch`` call and
-       masked, and each posting's BM25 contribution is computed once over
-       the flat arrays (the elementwise ``wand._contrib`` expression, so the
-       floats equal ``score_query_exact``'s);
+    1. each posting's BM25 contribution is computed once over the flat
+       arrays (the elementwise ``wand._contrib`` expression, so the floats
+       equal ``score_query_exact``'s);
     2. queries whose shard-present term lists are identical share one
        signature and are scored once;
     3. every (signature, term position j, posting) triple adds its
@@ -255,10 +334,9 @@ def _score_shard(
        term's postings, so a key occurs at most once per pass, and each
        doc's sum is (((0 + c_t1) + c_t2) + ...) over its terms in the
        query's sorted-term order: the exact float order of the per-query
-       accumulator ``score_query_exact``, which stays as the reference the
-       tests compare against. A float reduction over each key's terms
-       (``np.add.reduceat``, ``np.sum``) would not keep that order, because
-       numpy sums pairwise;
+       accumulator ``score_query_exact``. A float reduction over each
+       key's terms (``np.add.reduceat``, ``np.sum``) would not keep that
+       order, because numpy sums pairwise;
     4. a row-wise ``np.partition`` finds each signature's k-th best score;
        the touched cells at or above it (ties kept) go through one
        ``lexsort((doc_id, -score, signature))`` and a rank cut at ``k``:
@@ -275,27 +353,8 @@ def _score_shard(
     index stores no block metadata.
     """
     cols = ["query_id", "doc_id", "score", "rank"]
-    if len(pdf) == 0:
-        return pd.DataFrame(columns=cols)
-    dps = docs_per_shard
-    base = int(pdf["shard"].iloc[0]) * dps
-    asked = np.fromiter((t in idfs for t in pdf["term"]), bool, len(pdf))
-    rows = pdf[asked]
-    terms = rows["term"].tolist()
-    counts, ids, tfs, dls = decode_postings_batch(rows["postings"].tolist())
-    keep = None
-    if excl is not None and excl.size:
-        lo, hi = np.searchsorted(excl, [base, base + dps])
-        if hi > lo:
-            keep = ~np.isin(ids, excl[lo:hi])
-    if incl is not None:
-        allowed = np.isin(ids, incl)
-        keep = allowed if keep is None else keep & allowed
-    if keep is not None:
-        row_of = np.repeat(np.arange(len(terms)), counts)
-        ids, tfs, dls = ids[keep], tfs[keep], dls[keep]
-        counts = np.bincount(row_of[keep], minlength=len(terms))
-    term_idf = np.array([idfs[t] for t in terms], dtype=np.float64)
+    base, terms, counts, ids, tfs, dls = post
+    term_idf = np.array([idfs.get(t, 0.0) for t in terms], dtype=np.float64)
     contrib = _contrib(np.repeat(term_idf, counts), tfs, dls, k1, b, avgdl)
     lidx = ids - base
     first = np.cumsum(counts) - counts
@@ -369,6 +428,30 @@ def _score_shard(
             "rank": np.zeros(row.size, dtype=np.int32),
         }
     )
+
+
+def _topk_rows(
+    q: np.ndarray, d: np.ndarray, s: np.ndarray, k: int
+) -> pd.DataFrame:
+    """The top ``k`` of every query among (query_id ``q``, doc_id ``d``,
+    score ``s``) rows by (score DESC, doc_id ASC), ranked from 1: one
+    lexsort and a rank cut. The driver-local plane merges its shards with
+    it; the boolean and multi-field shard bodies cut their post-filtered
+    ``_score_postings`` rows with it."""
+    order = np.lexsort((d, -s, q))
+    q, d, s = q[order], d[order], s[order]
+    # 1-based rank within each query's run of rows
+    pos = np.arange(q.size)
+    first = np.ones(q.size, dtype=bool)
+    first[1:] = q[1:] != q[:-1]
+    rank = pos - np.maximum.accumulate(np.where(first, pos, 0)) + 1
+    keep = rank <= k
+    return pd.DataFrame({
+        "query_id": q[keep],
+        "doc_id": d[keep],
+        "score": s[keep],
+        "rank": rank[keep].astype(np.int32),
+    })
 
 
 def _term_pruned(
@@ -1049,27 +1132,15 @@ def _search_local(
     parts = [p for p in parts if len(p)]
     if not parts:
         return spark.createDataFrame([], RESULT_SCHEMA)
-    q = np.concatenate([p["query_id"].to_numpy(np.int64) for p in parts])
-    d = np.concatenate([p["doc_id"].to_numpy(np.int64) for p in parts])
-    s = np.concatenate([p["score"].to_numpy(np.float64) for p in parts])
-    order = np.lexsort((d, -s, q))
-    q, d, s = q[order], d[order], s[order]
-    # 1-based rank within each query's run of rows
-    pos = np.arange(q.size)
-    first = np.r_[True, q[1:] != q[:-1]]
-    rank = pos - np.maximum.accumulate(np.where(first, pos, 0)) + 1
-    keep = rank <= k
-    if not keep.any():
-        return spark.createDataFrame([], RESULT_SCHEMA)
-    return spark.createDataFrame(
-        pd.DataFrame({
-            "query_id": q[keep],
-            "doc_id": d[keep],
-            "score": s[keep],
-            "rank": rank[keep].astype(np.int32),
-        }),
-        RESULT_SCHEMA,
+    top = _topk_rows(
+        np.concatenate([p["query_id"].to_numpy(np.int64) for p in parts]),
+        np.concatenate([p["doc_id"].to_numpy(np.int64) for p in parts]),
+        np.concatenate([p["score"].to_numpy(np.float64) for p in parts]),
+        k,
     )
+    if not len(top):
+        return spark.createDataFrame([], RESULT_SCHEMA)
+    return spark.createDataFrame(top, RESULT_SCHEMA)
 
 
 def _search_broadcast(

@@ -10,11 +10,9 @@ terms (sublinear in corpus size):
 - ``score_query_exact`` — ONE query: dense float64 accumulator over the
   shard's doc range; contributions added term-by-term in sorted-term order,
   so the float summation order matches the oracle bit-for-bit (SURVEY.md
-  §7.4). The search planes score a shard's whole batch with
+  §7.4). Every search scores a shard's whole batch with
   ``search._score_shard`` instead, which keeps this summation order; this
   function is the per-query reference its tests compare against bit for bit.
-- ``_exact_scores_sorted`` — the same sums for a chosen set of docs (the
-  boolean planes' candidate rescoring).
 
 There is no block-max (WAND-family) pruning: with per-term contributions
 cached across a batch, a vectorized block-max pass touched every posting
@@ -70,45 +68,14 @@ def score_query_exact(
     k1: float,
     b: float,
     avgdl: float,
-    contrib_rows: list[np.ndarray] | None = None,
 ) -> tuple[np.ndarray, np.ndarray]:
     """term_rows: [(term, idf, doc_ids, tfs, dls)] SORTED by term.
-    Returns (scores, doc_ids) of the shard-local top-k.
-
-    ``contrib_rows``: optional precomputed per-term contribution arrays
-    (aligned with term_rows; each = _contrib over that term's postings) —
-    batch callers compute them ONCE per (shard, term) and share them across
-    every query touching the term. Values are bit-identical either way
-    (same elementwise expression)."""
+    Returns (scores, doc_ids) of the shard-local top-k."""
     acc = np.zeros(span, dtype=np.float64)
     touched = np.zeros(span, dtype=bool)
-    for i, (_term, idf_t, ids, tf, dl) in enumerate(term_rows):
+    for _term, idf_t, ids, tf, dl in term_rows:
         lidx = ids - base
-        c = (
-            contrib_rows[i]
-            if contrib_rows is not None
-            else _contrib(idf_t, tf, dl, k1, b, avgdl)
-        )
-        acc[lidx] += c
+        acc[lidx] += _contrib(idf_t, tf, dl, k1, b, avgdl)
         touched[lidx] = True
     hit = np.flatnonzero(touched)
     return _topk(acc[hit], hit + base, k)
-
-
-def _exact_scores_sorted(term_rows, sel_lidx, base, k1, b, avgdl):
-    """Exact scores for a set of local doc indices.
-
-    Returns (sel_sorted, scores) with scores aligned to the ASCENDING-sorted
-    selection; per-doc sums accumulate in sorted-term order (oracle parity).
-    Fully vectorized membership via searchsorted."""
-    sel_sorted = np.sort(np.asarray(sel_lidx, dtype=np.int64))
-    out = np.zeros(sel_sorted.size, dtype=np.float64)
-    for _t, idf_t, ids, tf, dl in term_rows:
-        lidx = ids - base
-        pos = np.searchsorted(sel_sorted, lidx)
-        pos_c = np.minimum(pos, sel_sorted.size - 1)
-        m = sel_sorted[pos_c] == lidx
-        if not m.any():
-            continue
-        out[pos_c[m]] += _contrib(idf_t, tf[m], dl[m], k1, b, avgdl)
-    return sel_sorted, out

@@ -13,13 +13,20 @@ dictionary generation that no reader may count.
 The planes: ``query_mode="broadcast"`` on a local index is the driver-local
 plane; the Spark broadcast plane is forced by making ``fs.local_path``
 report no local path; ``query_mode="distributed"`` is the third.
+
+Boolean search and ``count_matches`` are checked against a from-scratch
+oracle over the generator's own tokens (plain Python BM25 and boolean
+matching, no index, no Spark), on both planes and under the same masks.
 """
 
 from __future__ import annotations
 
+import math
 import os
 import sys
+from collections import Counter
 
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -27,9 +34,20 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from perfbench.gen import CodeCorpus  # noqa: E402
 
+from dense_retriever_spark import BM25_B, BM25_K1  # noqa: E402
 from dense_retriever_spark.corpus import ingest  # noqa: E402
+from dense_retriever_spark.functions.tokenizer import (  # noqa: E402
+    tokenize_code_series,
+)
 from dense_retriever_spark.index import fs  # noqa: E402
 from dense_retriever_spark.index import search as search_mod  # noqa: E402
+from dense_retriever_spark.index.boolean import (  # noqa: E402
+    ROLE_FORBIDDEN,
+    ROLE_REQUIRED,
+    count_matches,
+    parse_boolean_query,
+    search_boolean,
+)
 from dense_retriever_spark.index.build import IndexPaths, build_index  # noqa: E402
 from dense_retriever_spark.index.search import (  # noqa: E402
     global_term_stats,
@@ -50,10 +68,16 @@ LAYOUTS = ("merged", "generational")
 
 
 @pytest.fixture(scope="module")
-def long_tail(spark):
+def generated():
+    """The generator's documents, their raw tokens and the query batch."""
     gen = CodeCorpus(1)
     frame, tokens = gen.docs(N_FILES)
-    qs = gen.queries(tokens, N_QUERIES)[["query_id", "query"]]
+    return frame, tokens, gen.queries(tokens, N_QUERIES)[["query_id", "query"]]
+
+
+@pytest.fixture(scope="module")
+def long_tail(spark, generated):
+    frame, _, qs = generated
     corpus = ingest(spark.createDataFrame(frame)).cache()
     queries = spark.createDataFrame(qs).cache()
     return corpus, queries
@@ -254,3 +278,163 @@ def test_global_dictionary_sums_shards(spark, indexes, layout):
     got = {r["term"]: (r["df"], r["cf"]) for r in g.collect()}
     assert got == want
     assert sum(cf for _, cf in got.values()) == stats["metrics"]["total_tokens"]
+
+
+#: keywords the boolean batch adds to the generator's queries, so that
+#: bare, required and forbidden segments hit many documents
+_BOOL_KEYWORDS = ("return", "self", "import", "def", "class")
+
+
+def _boolean_queries(qs):
+    """The generator's queries with deterministic boolean roles: the first
+    segment of most multi-segment queries is +required, the last of every
+    other long one -forbidden, and a keyword is appended bare, -forbidden
+    or +required in turn (OOV segments keep whatever role they get); one
+    more query has an out-of-vocabulary optional term alone."""
+    out = []
+    for j, q in zip(qs["query_id"].tolist(), qs["query"].tolist()):
+        segs = q.split()
+        if len(segs) > 1 and j % 3:
+            segs[0] = "+" + segs[0]
+        if len(segs) >= 3 and j % 2 == 0:
+            segs[-1] = "-" + segs[-1]
+        segs.append(("", "-", "+", "")[j % 4] + _BOOL_KEYWORDS[j % 5])
+        out.append((j, " ".join(segs)))
+    # a required term whose only optional term is out of vocabulary:
+    # min_should_match leaves it unconstrained
+    out.append((len(out), "+self qx000000001"))
+    return out
+
+
+@pytest.fixture(scope="module")
+def boolean_oracle(long_tail, generated):
+    """(queries, oracle(msm, keep)): the boolean batch and, for a
+    min_should_match and a doc-id filter, every query's whole ranked
+    match list [(doc_id, score)] by (score DESC, doc_id ASC) — built from
+    the generator's tokens alone. Collection statistics are those of the
+    whole corpus whatever the filter, as masks never change them."""
+    corpus, _ = long_tail
+    frame, tokens, qs = generated
+    number = {int(p.rsplit("/m", 1)[1].split(".")[0]): d
+              for d, p in corpus.select("doc_id", "path").collect()}
+    docs = {
+        number[i]: Counter(ts)
+        for i, ts in enumerate(tokenize_code_series(
+            pd.Series([" ".join(t) for t in tokens])
+        ))
+    }
+    n = float(len(docs))
+    dl = {d: float(sum(c.values())) for d, c in docs.items()}
+    avgdl = sum(dl.values()) / n
+    df = Counter(t for c in docs.values() for t in c)
+    queries = _boolean_queries(qs)
+
+    def contrib(t, d):
+        idf = math.log(1.0 + (n - df[t] + 0.5) / (df[t] + 0.5))
+        tf = float(docs[d][t])
+        denom = tf + BM25_K1 * ((1.0 - BM25_B) + (BM25_B * dl[d]) / avgdl)
+        return ((idf * tf) * (BM25_K1 + 1.0)) / denom
+
+    def oracle(msm, keep):
+        out = {}
+        for qid, q in queries:
+            roles = parse_boolean_query(q)
+            req = [t for t, r in roles if r == ROLE_REQUIRED]
+            neg = [t for t, r in roles if r == ROLE_FORBIDDEN]
+            scored = sorted(t for t, r in roles if r != ROLE_FORBIDDEN)
+            if any(t not in df for t in req):
+                out[qid] = []  # an out-of-vocabulary required term
+                continue
+            scored = [t for t in scored if t in df]
+            opt = [t for t in scored if t not in req]
+            hits = []
+            for d, c in docs.items():
+                if not keep(d) or any(t in c for t in neg):
+                    continue
+                if not all(t in c for t in req):
+                    continue
+                if not any(t in c for t in scored):
+                    continue
+                if msm and opt and sum(t in c for t in opt) < msm:
+                    continue
+                s = 0.0
+                for t in scored:  # sorted-term order
+                    if t in c:
+                        s += contrib(t, d)
+                hits.append((d, s))
+            out[qid] = sorted(hits, key=lambda h: (-h[1], h[0]))
+        return out
+
+    return queries, oracle
+
+
+def _ranked_rows(ranked, k):
+    return [
+        {"query_id": qid, "doc_id": d, "score": s, "rank": i + 1}
+        for qid, hits in ranked.items()
+        for i, (d, s) in enumerate(hits[:k])
+    ]
+
+
+#: (name, doc filter, include mask, kill-list) over doc_id
+_MASKS = (
+    ("none", lambda d: True, None, None),
+    ("kill", lambda d: d % 4 != 1, None, lambda d: d % 4 == 1),
+    ("include", lambda d: d % 3 != 0, lambda d: d % 3 != 0, None),
+    ("both", lambda d: d % 3 != 0 and d % 4 != 1,
+     lambda d: d % 3 != 0, lambda d: d % 4 == 1),
+)
+
+
+def _id_frame(spark, corpus, pick):
+    if pick is None:
+        return None
+    ids = [r[0] for r in corpus.select("doc_id").collect() if pick(r[0])]
+    return spark.createDataFrame([(i,) for i in ids], "doc_id long")
+
+
+@pytest.mark.parametrize("msm", [0, 2])
+def test_boolean_matches_oracle(
+    spark, long_tail, indexes, boolean_oracle, msm
+):
+    """search_boolean (+required, -forbidden, bare; min_should_match 0 and
+    2) on the Spark broadcast and the distributed plane, with and without
+    a kill-list and an include mask, at k = 1/10/50: the oracle's ranking
+    (doc_id and rank equal, score within 1e-9), and the two planes equal
+    bit for bit. count_matches under the same masks is the size of the
+    oracle's whole match list, zero rows included."""
+    corpus, _ = long_tail
+    queries, oracle = boolean_oracle
+    qdf = spark.createDataFrame(queries, "query_id long, query string")
+    d = indexes["merged"]
+    n_hits = 0
+    for name, keep, incl_pick, kill_pick in _MASKS:
+        want = oracle(msm, keep)
+        incl = _id_frame(spark, corpus, incl_pick)
+        kill = _id_frame(spark, corpus, kill_pick)
+        for k in KS:
+            got = {
+                mode: search_boolean(
+                    spark, d, qdf, k=k, query_mode=mode,
+                    exclude_doc_ids=kill, include_doc_ids=incl,
+                    min_should_match=msm,
+                ).collect()
+                for mode in ("broadcast", "distributed")
+            }
+            _assert_matches_oracle(got["broadcast"], _ranked_rows(want, k), k)
+            assert _rows_of(got["broadcast"]) == _rows_of(
+                got["distributed"]
+            ), (name, k)
+            n_hits += len(got["broadcast"])
+        counts = count_matches(
+            spark, d, qdf, exclude_doc_ids=kill, include_doc_ids=incl,
+            min_should_match=msm,
+        ).collect()
+        assert {r["query_id"]: r["n_matches"] for r in counts} == {
+            qid: len(hits) for qid, hits in want.items()
+        }, name
+    assert n_hits > 0
+
+
+def _rows_of(rows):
+    return sorted(map(tuple, rows))

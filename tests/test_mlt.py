@@ -98,3 +98,27 @@ def test_mlt_content_override(spark, mlt_index):
         spark, mlt_index, seeds, max_terms=5, content_df=alt
     ).toPandas()
     assert set(t["term"]) <= {"python", "interpreter", "bytecode"}
+
+
+@pytest.mark.parametrize("query_mode", ["broadcast", "distributed"])
+def test_mlt_reads_stats_once(spark, mlt_index, monkeypatch, query_mode):
+    """One ``stats.json`` read per call: term selection and scoring use
+    the same snapshot, so a refresh committing mid-call cannot give them
+    different index generations."""
+    from dense_retriever_spark.index import mlt, search
+
+    calls = []
+    real = search.load_stats
+
+    def counting(index_dir):
+        calls.append(index_dir)
+        return real(index_dir)
+
+    monkeypatch.setattr(mlt, "load_stats", counting)
+    monkeypatch.setattr(search, "load_stats", counting)
+    seeds = spark.createDataFrame([(0, 0)], "query_id long, doc_id long")
+    r = more_like_this(
+        spark, mlt_index, seeds, k=3, query_mode=query_mode
+    ).collect()
+    assert len(r) > 0
+    assert calls == [mlt_index]

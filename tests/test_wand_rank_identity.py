@@ -318,3 +318,50 @@ def test_score_shard_batch_equals_per_query_exact(monkeypatch, chunk_cells):
     for qid in (2, 7):
         assert (out[out["query_id"] == qid][["doc_id", "score"]].to_numpy() == one).all()
     assert len(queries[0]) >= 9 and (out["query_id"] == 0).sum() == 10
+
+
+def test_shard_bodies_decode_once(monkeypatch):
+    """The boolean, counting and fused multi-field shard bodies decode one
+    shard's rows with exactly one decode_postings_batch call each — the
+    shard scorer's decode-and-mask half — whatever the number of terms,
+    roles, masks or field indexes."""
+    import pandas as pd
+
+    from dense_retriever_spark.index import boolean, codec, fields
+
+    calls = []
+    real = codec.decode_postings_batch
+
+    def counting(blobs):
+        calls.append(len(blobs))
+        return real(blobs)
+
+    for mod in (codec, search_mod, boolean, fields):
+        if hasattr(mod, "decode_postings_batch"):
+            monkeypatch.setattr(mod, "decode_postings_batch", counting)
+    pdf, queries, idfs, _postings, dps, _base, excl, incl = _shard_fixture()
+    k1, b, avgdl = 1.2, 0.75, 731.5
+    bq = {
+        0: (sorted(queries[0]), ["t01", "t02"], ["t13"]),
+        1: (["t01", "t05"], [], ["t03"]),
+        5: (["t02", "t03", "t04"], ["t04"], []),
+    }
+    both = pd.concat([pdf.assign(src=0), pdf.assign(src=1)])
+    bodies = {
+        "boolean": lambda x, i: boolean._boolean_shard(
+            pdf, bq, idfs, 10, k1, b, avgdl, dps, x, i, msm=1
+        ),
+        "count": lambda x, i: boolean._count_shard_boolean(
+            pdf, bq, dps, x, i, msm=1
+        ),
+        "fields": lambda x, i: fields._fields_shard(
+            both, queries, [idfs, idfs], [(k1, b, avgdl)] * 2, [0, 1],
+            [1.0, 0.5], "sum", dps, 10, x, i,
+        ),
+    }
+    for name, body in bodies.items():
+        for x, i in ((None, None), (excl, incl)):
+            calls.clear()
+            out = body(x, i)
+            assert len(out) > 0, name
+            assert len(calls) == 1, (name, calls)
