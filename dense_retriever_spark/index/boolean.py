@@ -27,7 +27,7 @@ Role edge rules (deterministic on both planes):
 Two query planes, mirroring index/search.py and sharing its scorer helpers:
 
 - ``broadcast`` (default, interactive): parse + role-resolve driver-side,
-  term→df served from the per-build driver cache (search._term_dfs_cached),
+  term→df read from the committed dictionary (search._term_dfs),
   union of all roles' terms pushed into the shard scan as a parquet filter,
   broadcast {query → roles} map into a per-shard ``applyInPandas`` matcher.
 - ``distributed``: the (query_id, term, role) relation never touches the
@@ -64,7 +64,6 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from dense_retriever_spark.index import fs
 from dense_retriever_spark.index.search import (
     RESULT_SCHEMA,
     _apply_per_shard,
@@ -75,7 +74,7 @@ from dense_retriever_spark.index.search import (
     _score_postings,
     _shard_postings,
     _shard_scan,
-    _term_dfs_cached,
+    _term_dfs,
     _topk_rows,
     global_term_stats,
     load_stats,
@@ -132,21 +131,17 @@ def _split_roles(
 ]:
     """The role split of a parsed batch, shared by search and counting:
     (queries = {qid: (scored SORTED, required ⊆ scored, forbidden)}, the
-    sorted scan terms of every role, idfs). The df lookup goes through the
-    per-build driver cache (pyarrow on a local index), and OOV terms
-    follow the module docstring's role edge rules, so ``min_should_match``
-    counts in-vocabulary optional terms only."""
+    sorted scan terms of every role, idfs). The df lookup reads the
+    committed dictionary (``_term_dfs``: pyarrow on a local index), and
+    OOV terms follow the module docstring's role edge rules, so
+    ``min_should_match`` counts in-vocabulary optional terms only."""
     scored_terms = sorted(
         {t for ts in parsed.values() for t, role in ts
          if role != ROLE_FORBIDDEN}
     )
-    vals = _term_dfs_cached(
-        spark, index_dir, stats, scored_terms, fs.local_path(index_dir, spark)
-    )
     idfs = {
         t: idf_fn(v, float(stats["n_docs"]))
-        for t, v in vals.items()
-        if v >= 0.0
+        for t, v in _term_dfs(spark, index_dir, stats, scored_terms).items()
     }
     queries: dict[int, tuple[list[str], list[str], list[str]]] = {}
     scan_terms: set[str] = set()
@@ -313,10 +308,9 @@ def count_matches(
     Counting shares search's role split (``_split_roles``), so a query
     counts exactly the docs its search would rank with k unbounded — the
     out-of-vocabulary rules and ``min_should_match`` included. The df
-    lookup behind it is served from the per-build driver cache (a local
-    index's dictionary is read with pyarrow, not a Spark job). Per-shard
-    match sets reduce to one long each; the global count is an exact sum
-    because doc ids never span shards. Interactive
+    lookup behind it reads a local index's dictionary with pyarrow, not a
+    Spark job. Per-shard match sets reduce to one long each; the global
+    count is an exact sum because doc ids never span shards. Interactive
     (broadcast-plane) surface; training-set-scale counting composes the
     distributed boolean plane with its own aggregation."""
     stats = load_stats(index_dir)

@@ -73,7 +73,7 @@ from dense_retriever_spark.index.search import (
     _score_postings,
     _shard_postings,
     _shard_scan,
-    _term_dfs_cached,
+    _term_dfs,
     _topk_rows,
     load_stats,
     score_matches,
@@ -186,11 +186,9 @@ def _search_fields_fused(
     dir_present: list[list[str]] = []
     for d in dirs:
         st = dir_stats[d]
-        vals = _term_dfs_cached(spark, d, st, all_terms)
         idfs = {
             t: idf_fn(v, float(st["n_docs"]))
-            for t, v in vals.items()
-            if v >= 0.0
+            for t, v in _term_dfs(spark, d, st, all_terms).items()
         }
         dir_idfs.append(idfs)
         dir_params.append(

@@ -37,8 +37,6 @@ bytes) structural merge.
 
 from __future__ import annotations
 
-import json
-
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -51,7 +49,7 @@ from dense_retriever_spark.index.build import (
     _manifest_df,
     build_index,
 )
-from dense_retriever_spark.index.codec import FORMAT_VERSION
+from dense_retriever_spark.index.search import load_stats
 
 
 def _rebase_udf(off: int):
@@ -66,27 +64,17 @@ def _rebase_udf(off: int):
     return F.pandas_udf(fn, "binary")
 
 
-def _load_stats(spark: SparkSession, index_dir: str) -> dict:
-    p = IndexPaths(index_dir).stats
-    if not fs.exists(p, spark):
-        raise ValueError(f"no index at {index_dir} (missing stats.json)")
-    return json.loads(fs.read_text(p, spark))
-
-
 def _validate_sources(spark: SparkSession, src_dirs: list[str]) -> list[dict]:
     """Fail fast on structurally incompatible sources (same class of checks
     build_index runs on resume: a silent mismatch would mis-route doc ids or
-    mis-decode blobs)."""
+    mis-decode blobs). Each source is read through ``load_stats``, which
+    refuses another posting format."""
     if len(src_dirs) < 2:
         raise ValueError("merge_indexes needs at least two source indexes")
-    stats = [_load_stats(spark, d) for d in src_dirs]
-    for d, st in zip(src_dirs, stats):
-        pv = st.get("format_version", 1)
-        if pv != FORMAT_VERSION:
-            raise ValueError(
-                f"index at {d} has posting format v{pv}; merge requires "
-                f"v{FORMAT_VERSION}"
-            )
+    for d in src_dirs:
+        if not fs.exists(IndexPaths(d).stats, spark):
+            raise ValueError(f"no index at {d} (missing stats.json)")
+    stats = [load_stats(d) for d in src_dirs]
     key_fields = ("docs_per_shard", "k1", "b")
     first = stats[0]
     for d, st in zip(src_dirs[1:], stats[1:]):

@@ -23,14 +23,16 @@ q49 oracles; tests/test_long_tail_rank_identity.py):
 * ``broadcast`` — the (qid, term) relation is collected to the driver. Right
   for interactive/bench batches (a 200-query batch is KBs); the per-shard
   scorer sees every query at once, so the index is read EXACTLY once per
-  search regardless of |Q|. Once the terms are on the driver, the call
-  takes one of two sub-planes:
+  search regardless of |Q|. Once the terms are on the driver, their df
+  comes from the committed dictionary (``_term_dfs``: pyarrow on a local
+  index, one term-pruned collect elsewhere) and the call takes one of two
+  sub-planes:
 
   - driver-local (``_search_local``) — when the index is on the local
     filesystem (``fs.local_path``), ``k`` is set (not ``score_matches``),
     there is no ``include_doc_ids`` relation and the kill-list fits the
-    driver array (``_excl_plan``). The df dictionary and the term-pruned
-    shard rows are read with pyarrow, each shard is scored with
+    driver array (``_excl_plan``). The term-pruned shard rows are read
+    with pyarrow, each shard is scored with
     ``_score_shard`` and the top k are merged on the driver; the result is
     a local relation. A search without a kill-list runs ONE Spark job (the
     query tokenizer) instead of about eleven — Spark's per-job cost, not
@@ -70,9 +72,7 @@ from __future__ import annotations
 
 import json
 import os
-import threading
 import warnings
-from collections import OrderedDict
 from typing import NamedTuple
 
 import numpy as np
@@ -120,57 +120,6 @@ TERM_ISIN_LIMIT = 512
 #: posting) entries: a few tens of bytes each, so one chunk's working set
 #: stays under ~0.1 GB at any batch size.
 _SCORE_CHUNK_CELLS = 1 << 21
-
-#: driver-side (index-build, term) → df cache for the broadcast plane: the
-#: reference loads its index once and serves every query from it; the Spark
-#: analog is amortizing the global-stats lookup job across searches against
-#: the same build. Keyed on the index's FULL stats.json content — which
-#: embeds per-build phase timings, so any rebuild/compaction produces a new
-#: key and stale df values can never be served. OOV terms are cached as -1
-#: (a miss that re-ran the job every call would defeat the cache).
-#:
-#: Bounded in BYTES, not entries (8 builds × 2M entries would be ~a GB of
-#: driver RSS worst-case): builds are evicted WHOLE in LRU
-#: order (OrderedDict; every hit refreshes the build's recency) once the
-#: estimated footprint crosses _TERM_DF_BUDGET_BYTES — a long-lived serving
-#: driver that cycles through many index builds plateaus at the budget
-#: instead of growing. A single build whose query vocabulary alone
-#: overflows the budget is trimmed to the live query's terms (can't evict
-#: the build being served). Guarded by _TERM_DF_LOCK: concurrent driver
-#: threads may at worst double-run the stats job, never read a half-trimmed
-#: dict.
-_TERM_DF_CACHE: "OrderedDict[str, dict[str, float]]" = OrderedDict()
-_TERM_DF_SIZES: dict[str, int] = {}  # estimated bytes per build, incremental
-_TERM_DF_BUDGET_BYTES = 64 << 20
-#: estimated bytes per cached entry beyond the term text itself: str object
-#: header (~49) + float (24) + dict slot pair amortized (~100)
-_TERM_DF_ENTRY_OVERHEAD = 180
-_TERM_DF_LOCK = threading.Lock()
-
-
-def _term_df_evict(current_key: str) -> None:
-    """Evict least-recently-used builds until the cache fits the byte
-    budget (never the build being served — its overflow case is handled by
-    the caller's trim-to-live-terms path). Lock must be held. O(#builds)
-    driver arithmetic; byte totals are tracked incrementally on insert."""
-    # sum only keys still live in the cache: a caller that cleared the
-    # OrderedDict directly would otherwise leave stale size entries that
-    # inflate the total and over-evict live builds
-    total = sum(_TERM_DF_SIZES.get(k, 0) for k in _TERM_DF_CACHE)
-    while total > _TERM_DF_BUDGET_BYTES and len(_TERM_DF_CACHE) > 1:
-        victim = next(iter(_TERM_DF_CACHE))
-        if victim == current_key:
-            _TERM_DF_CACHE.move_to_end(victim)
-            continue
-        _TERM_DF_CACHE.pop(victim)
-        total -= _TERM_DF_SIZES.pop(victim, 0)
-
-
-def _term_df_cache_clear() -> None:
-    """Reset the cache AND its byte accounting together (test hook)."""
-    with _TERM_DF_LOCK:
-        _TERM_DF_CACHE.clear()
-        _TERM_DF_SIZES.clear()
 
 #: the tombstone broadcast ceiling: below it a kill-list collects to a
 #: sorted driver array riding the score broadcast (latency fast path);
@@ -931,8 +880,8 @@ def _search_terms(
 ) -> DataFrame:
     """The one entry from a (query_id, term) relation to a scoring plane
     — ``search``'s tokenized batch or a rewritten one (prefix / regex /
-    fuzzy expansion, synonyms, MLT term selection), so caching, masks,
-    pruning and plan shape are ``search()``'s for every grammar. The
+    fuzzy expansion, synonyms, MLT term selection), so the df lookup,
+    masks, pruning and plan shape are ``search()``'s for every grammar. The
     broadcast plane collects ``qt`` in ONE job; the distributed plane
     keeps it lazy, deduplicated by one distinct().
 
@@ -972,85 +921,6 @@ def _search_terms(
     )
 
 
-def _term_dfs_cached(
-    spark: SparkSession,
-    index_dir: str,
-    stats: dict,
-    all_terms: list[str],
-    local_root: str | None = None,
-) -> dict[str, float]:
-    """term → df for ``all_terms`` (−1.0 marks OOV), served from the
-    per-build driver cache where possible (term-pruned scan on global/
-    otherwise; the collect is bounded by the query-term set, which the
-    driver already holds). Repeated vocabulary — interactive sessions, the
-    bench's tombstoned/filtered re-searches, the refresh loop's fixed query
-    set — skips the Spark job entirely after the first lookup. Shared by
-    the broadcast BM25 plane and the boolean plane (index/boolean.py).
-
-    ``local_root``: the OS path of a local index (the driver-local plane) —
-    misses are then read with pyarrow (_local_term_dfs) instead of a Spark
-    job; the values and the cache are the same either way."""
-    cache_key = json.dumps(
-        {"dir": index_dir, "stats": stats}, sort_keys=True
-    )
-    with _TERM_DF_LOCK:
-        if cache_key in _TERM_DF_CACHE:
-            _TERM_DF_CACHE.move_to_end(cache_key)  # LRU recency on hit
-        else:
-            _TERM_DF_CACHE[cache_key] = {}
-            _TERM_DF_SIZES[cache_key] = 0
-        dfs = _TERM_DF_CACHE[cache_key]
-        vals = {t: dfs[t] for t in all_terms if t in dfs}
-    missing = [t for t in all_terms if t not in vals]
-    if missing:
-        # the read runs OUTSIDE the lock (concurrent threads may double-
-        # run it for the same terms — benign; both write the same df)
-        if local_root is not None:
-            found = _local_term_dfs(local_root, stats, missing)
-        else:
-            gstats = (
-                _term_pruned(
-                    global_term_stats(spark, index_dir, stats), missing, spark
-                )
-                .select("term", "df")
-                .collect()
-            )
-            found = {r["term"]: float(r["df"]) for r in gstats}
-        for t in missing:
-            vals[t] = found.get(t, -1.0)  # -1 = OOV, cached too
-        with _TERM_DF_LOCK:
-            # re-fetch under the lock: between the two locked sections a
-            # concurrent thread may have EVICTED this build and another
-            # RE-INSERTED a fresh dict at the same key — updating the dict
-            # captured under the first lock would then add `added` bytes
-            # (computed against the orphaned dict) to the fresh entry's
-            # size accounting, inflating it into premature trims/evictions.
-            # A changed dict object is treated exactly like the evicted
-            # case: serve vals, let the fresh entry's owner account for it.
-            if _TERM_DF_CACHE.get(cache_key) is dfs:
-                added = 0
-                for t in missing:
-                    if t not in dfs:
-                        added += len(t) + _TERM_DF_ENTRY_OVERHEAD
-                    dfs[t] = vals[t]
-                _TERM_DF_SIZES[cache_key] += added
-                _term_df_evict(cache_key)
-                build_bytes = _TERM_DF_SIZES.get(cache_key, 0)
-                if build_bytes > _TERM_DF_BUDGET_BYTES:
-                    # this build's vocabulary ALONE overflows the budget:
-                    # trim to the live query's terms instead of growing
-                    keep = {t: dfs[t] for t in all_terms if t in dfs}
-                    dfs.clear()
-                    dfs.update(keep)
-                    _TERM_DF_SIZES[cache_key] = sum(
-                        len(t) + _TERM_DF_ENTRY_OVERHEAD for t in dfs
-                    )
-            # else: this build was evicted (possibly evicted-then-replaced)
-            # by a concurrent thread between the collect and here — serve
-            # vals, don't resurrect or double-account the entry
-    return vals
-
-
 def _local_dataset(root: str, key: str | None = None):
     """pyarrow dataset over the parquet files Spark wrote under ``root``:
     directly in it, or (``key`` given) in its ``key=<id>`` partition dirs.
@@ -1083,13 +953,23 @@ def _local_dataset(root: str, key: str | None = None):
     )
 
 
-def _local_term_dfs(
-    root: str, stats: dict, terms: list[str]
+def _term_dfs(
+    spark: SparkSession, index_dir: str, stats: dict, terms: list[str]
 ) -> dict[str, float]:
-    """term → df for the ``terms`` present in the local index at ``root``
-    — the rows global_term_stats returns, read from the same committed
-    dictionary directory with pyarrow (term-pruned by parquet row-group
-    statistics) instead of a Spark job."""
+    """term → df for the in-vocabulary ``terms``: the rows
+    global_term_stats returns, term-pruned. A local index
+    (``fs.local_path``) is read with pyarrow from the committed dictionary
+    directory, pruned by parquet row-group statistics, in no Spark job;
+    any other URI takes one term-pruned collect, bounded by the query-term
+    set the driver already holds. Every broadcast-plane df lookup (search,
+    boolean, counting, multi-field) comes through here."""
+    if not terms:
+        return {}
+    root = fs.local_path(index_dir, spark)
+    if root is None:
+        g = global_term_stats(spark, index_dir, stats)
+        rows = _term_pruned(g, terms, spark).select("term", "df").collect()
+        return {r["term"]: float(r["df"]) for r in rows}
     d = _local_dataset(IndexPaths(root).dictionary(stats))
     if d is None:
         return {}
@@ -1173,17 +1053,9 @@ def _search_broadcast(
     if not all_terms:
         return spark.createDataFrame([], empty_schema)
 
-    # global term stats → idf (see _term_dfs_cached). A local index
-    # read with top-k and no allowed-id relation takes the driver-local
-    # plane (_search_local) unless its kill-list is past the driver ceiling
-    local_root = (
-        fs.local_path(index_dir, spark)
-        if k is not None and include_doc_ids is None
-        else None
-    )
-    vals = _term_dfs_cached(spark, index_dir, stats, all_terms, local_root)
     idfs = {
-        t: idf_fn(v, float(n_docs)) for t, v in vals.items() if v >= 0.0
+        t: idf_fn(v, float(n_docs))
+        for t, v in _term_dfs(spark, index_dir, stats, all_terms).items()
     }
     present = [t for t in all_terms if t in idfs]
     if not present:
@@ -1191,6 +1063,13 @@ def _search_broadcast(
     qmap = {q: [t for t in ts if t in idfs] for q, ts in qmap.items()}
     qmap = {q: ts for q, ts in qmap.items() if ts}
 
+    # a local index read with top-k and no allowed-id relation takes the
+    # driver-local plane unless its kill-list is past the driver ceiling
+    local_root = (
+        fs.local_path(index_dir, spark)
+        if k is not None and include_doc_ids is None
+        else None
+    )
     excl, excl_rel = _excl_plan(exclude_doc_ids, dps)
     if local_root is not None and excl_rel is None:
         return _search_local(

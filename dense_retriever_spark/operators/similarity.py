@@ -84,25 +84,6 @@ def srp_planes(dim: int, n_planes: int, seed: int = 7):
     return np.random.RandomState(seed).standard_normal((n_planes, dim))
 
 
-def _plane_lit(plane):
-    return F.array(*[F.lit(float(x)) for x in plane])
-
-
-def _srp_band_structs(vec_col, planes, bands: int):
-    """array<struct<band_id,band_key>>: band b's key packs the sign bits of
-    its planes' projections. Projections are rounded to 6dp before the sign
-    test so Spark and the SQL oracle agree even when summation order differs
-    by an ulp around zero.
-
-    All projections are computed by ONE ``transform`` lambda over a 2-D
-    plane-matrix literal (not n_planes separate aggregate expressions): the
-    values are identical, but Catalyst analyzes one higher-order function
-    instead of 64 nested lambda trees — measured ~4x faster query planning
-    on the 64×64 configuration."""
-    bits = srp_bits_expr(vec_col, planes)
-    return _band_structs_from_bits(bits, planes.shape[0], bands)
-
-
 def srp_bits_expr(vec_col, planes):
     """array<long> of sign bits, all projections via ONE transform lambda
     over the 2-D plane-matrix literal."""

@@ -64,8 +64,3 @@ def write_parquet(
     if partition_by:
         w = w.partitionBy(*partition_by)
     w.parquet(path)
-
-
-def write_csv(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """S11 — CSV sink (eval results, transforms/ann_index.py:139-140)."""
-    df.write.mode(mode).option("header", "true").csv(path)

@@ -2,11 +2,15 @@
 
 The reference is batch-only (SURVEY.md §2.11) — its refresh loop re-reads
 everything each round (pipeline_steps/training.py:49-96). Here new corpus
-files are picked up incrementally: a file-source stream with
-``trigger(availableNow=True)`` drains whatever arrived since the last
-checkpoint, appends tokenized rows to the staging table, and the (resumable)
-index build folds the new shards in. Exactly-once comes from the stream
-checkpoint + idempotent parquet appends.
+files are picked up incrementally: ``drain_corpus_stream`` runs a
+file-source stream with ``trigger(availableNow=True)`` that drains whatever
+arrived since the last checkpoint, appends the raw corpus rows to a staging
+table partitioned by stream batch id, and returns the unacknowledged rows
+as one batch for ``pipeline.refresh_rounds``, whose (resumable) index build
+tokenizes them and folds the new shards in; ``ack_corpus_batch`` retires
+the batch once the round commits.
+Delivery is at-least-once (stream checkpoint + consumed-through marker);
+replays are removed by the refresh loop's content-sha dedup.
 
 Also provides a watermarked windowed aggregation over an event stream — the
 standard late-data pattern — used by tests as the streaming coverage probe.
@@ -19,7 +23,6 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dense_retriever_spark.functions.tokenizer import tokenize_code_expr
 from dense_retriever_spark.schemas import CORPUS_SCHEMA
 
 
@@ -39,39 +42,6 @@ class StreamBatch:
 
     def __getattr__(self, name: str):
         return getattr(self.df, name)
-
-
-def stream_tokenize_corpus(
-    spark: SparkSession,
-    input_dir: str,
-    output_dir: str,
-    checkpoint_dir: str,
-) -> None:
-    """Drain newly-arrived corpus parquet files → tokenized staging table.
-
-    availableNow processes the backlog then stops (batch-boundary semantics,
-    cluster-friendly: the same query with a processingTime trigger is a
-    long-running incremental ingest)."""
-    stream = (
-        spark.readStream.schema(CORPUS_SCHEMA)
-        .option("maxFilesPerTrigger", 64)
-        .parquet(input_dir)
-    )
-    tokenized = stream.select(
-        "repo",
-        "path",
-        "commit",
-        F.sha2(F.col("content"), 256).alias("content_sha"),
-        tokenize_code_expr("content").alias("terms"),
-    ).withColumn("dl", F.size("terms"))
-    q = (
-        tokenized.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
 
 
 def _consumed_marker_path(staging_dir: str) -> str:

@@ -20,7 +20,6 @@ from pyspark.sql import functions as F
 
 from dense_retriever_spark.corpus import ingest, synth_corpus, synth_queries
 from dense_retriever_spark.index import fs
-from dense_retriever_spark.index import search as search_mod
 from dense_retriever_spark.index.build import IndexPaths, build_index
 from dense_retriever_spark.index.search import load_stats, search
 
@@ -30,14 +29,11 @@ def _results(spark, idx, qs, **kw):
 
 
 def _all_planes(spark, idx, qs, monkeypatch):
-    """(driver-local, Spark broadcast, distributed) results, each read with
-    a cold term-df cache."""
-    search_mod._term_df_cache_clear()
+    """(driver-local, Spark broadcast, distributed) results."""
     local = _results(spark, idx, qs)
     dist = _results(spark, idx, qs, query_mode="distributed")
     with monkeypatch.context() as m:
         m.setattr(fs, "local_path", lambda *a, **kw: None)
-        search_mod._term_df_cache_clear()
         spark_bc = _results(spark, idx, qs)
     return local, spark_bc, dist
 
@@ -79,11 +75,11 @@ def test_uncommitted_gen_dir_is_invisible_to_readers(
 
 
 def test_concurrent_reader_during_rebuild(spark, tmp_path):
-    """A reader thread searching (driver-local and distributed planes, cold
-    term-df cache) WHILE two no-change rebuilds run must see the same
-    results at every instant: each rebuild writes its dictionary into a
-    fresh directory and only the atomic stats.json replace publishes it,
-    so no read ever finds the dictionary half-written or missing."""
+    """A reader thread searching (driver-local and distributed planes)
+    WHILE two no-change rebuilds run must see the same results at every
+    instant: each rebuild writes its dictionary into a fresh directory and
+    only the atomic stats.json replace publishes it, so no read ever finds
+    the dictionary half-written or missing."""
     idx = str(tmp_path / "cr_idx")
     corpus = ingest(synth_corpus(spark, 300, seed=95)).localCheckpoint(
         eager=True
@@ -100,7 +96,6 @@ def test_concurrent_reader_during_rebuild(spark, tmp_path):
     def reader():
         while not stop.is_set():
             for kw in ({}, {"query_mode": "distributed"}):
-                search_mod._term_df_cache_clear()
                 try:
                     got = _results(spark, idx, qs, **kw)
                 except Exception as e:  # a vanished file mid-scan lands here

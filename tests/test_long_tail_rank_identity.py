@@ -17,6 +17,9 @@ report no local path; ``query_mode="distributed"`` is the third.
 Boolean search and ``count_matches`` are checked against a from-scratch
 oracle over the generator's own tokens (plain Python BM25 and boolean
 matching, no index, no Spark), on both planes and under the same masks.
+
+On a local index every broadcast-plane entry reads term df from the
+committed dictionary with pyarrow, never through a Spark job.
 """
 
 from __future__ import annotations
@@ -40,6 +43,7 @@ from dense_retriever_spark.functions.tokenizer import (  # noqa: E402
     tokenize_code_series,
 )
 from dense_retriever_spark.index import fs  # noqa: E402
+from dense_retriever_spark.index import boolean as boolean_mod  # noqa: E402
 from dense_retriever_spark.index import search as search_mod  # noqa: E402
 from dense_retriever_spark.index.boolean import (  # noqa: E402
     ROLE_FORBIDDEN,
@@ -49,9 +53,11 @@ from dense_retriever_spark.index.boolean import (  # noqa: E402
     search_boolean,
 )
 from dense_retriever_spark.index.build import IndexPaths, build_index  # noqa: E402
+from dense_retriever_spark.index.fields import search_fields  # noqa: E402
 from dense_retriever_spark.index.search import (  # noqa: E402
     global_term_stats,
     load_stats,
+    score_matches,
     search,
 )
 from dense_retriever_spark.operators.bm25 import (  # noqa: E402
@@ -194,13 +200,11 @@ def test_local_plane_bit_identical_to_spark_planes(
     _, queries = long_tail
     d = indexes[layout]
     for k in KS:
-        search_mod._term_df_cache_clear()
         local = _rows(search(spark, d, queries, k=k))
         dist = _rows(search(spark, d, queries, k=k,
                             query_mode="distributed"))
         with monkeypatch.context() as m:
             m.setattr(fs, "local_path", lambda *a, **kw: None)
-            search_mod._term_df_cache_clear()
             spark_bc = _rows(search(spark, d, queries, k=k))
         assert local == spark_bc == dist and len(local) > 0, k
 
@@ -216,7 +220,6 @@ def test_local_plane_tombstones(
     d = indexes[layout]
     kill = corpus.filter(F.col("doc_id") % 4 == 1).select("doc_id")
     for k in KS:
-        search_mod._term_df_cache_clear()
         local = search(spark, d, queries, k=k, exclude_doc_ids=kill).collect()
         _assert_matches_oracle(
             local, _masked(full_oracle, lambda x: x % 4 != 1, k), k
@@ -225,7 +228,6 @@ def test_local_plane_tombstones(
                             query_mode="distributed"))
         with monkeypatch.context() as m:
             m.setattr(fs, "local_path", lambda *a, **kw: None)
-            search_mod._term_df_cache_clear()
             spark_bc = _rows(search(spark, d, queries, k=k,
                                     exclude_doc_ids=kill))
         assert sorted(map(tuple, local)) == spark_bc == dist, k
@@ -241,7 +243,6 @@ def test_single_query_runs_one_spark_job(spark, long_tail, indexes):
     sc = spark.sparkContext
     tracker = sc.statusTracker()
     for layout in LAYOUTS:
-        search_mod._term_df_cache_clear()
         group = f"one_query_{layout}"
         sc.setJobGroup(group, group)
         try:
@@ -438,3 +439,56 @@ def test_boolean_matches_oracle(
 
 def _rows_of(rows):
     return sorted(map(tuple, rows))
+
+
+def test_broadcast_df_lookup_reads_local_dictionary(
+    spark, long_tail, generated, indexes, monkeypatch
+):
+    """With ``global_term_stats`` made to raise, every broadcast-plane entry
+    on a local index still runs — plain search, kill-list,
+    ``include_doc_ids``, ``score_matches``, ``search_boolean`` (msm 0 and
+    2), ``count_matches`` and fused ``search_fields`` over two indexes —
+    because each reads term df from the committed dictionary with pyarrow;
+    and each returns the rows of the same call on the Spark broadcast plane
+    (``fs.local_path`` reporting no local path). The batch is drawn with
+    another generator seed than the module's queries."""
+    corpus, _ = long_tail
+    _, tokens, _ = generated
+    qs = CodeCorpus(2).queries(tokens, N_QUERIES)[["query_id", "query"]]
+    queries = spark.createDataFrame(qs)
+    bool_qs = spark.createDataFrame(
+        _boolean_queries(qs), "query_id long, query string"
+    )
+    incl = corpus.filter(F.col("doc_id") % 3 != 0).select("doc_id")
+    kill = corpus.filter(F.col("doc_id") % 4 == 1).select("doc_id")
+    d = indexes["merged"]
+    fields = [("merged", d, 1.0), ("grown", indexes["generational"], 0.5)]
+    calls = {
+        "include": lambda: search(spark, d, queries, k=10,
+                                  include_doc_ids=incl),
+        "include_kill": lambda: search(spark, d, queries, k=10,
+                                       include_doc_ids=incl,
+                                       exclude_doc_ids=kill),
+        "score_matches": lambda: score_matches(spark, d, queries),
+        "fields": lambda: search_fields(spark, fields, queries, k=10),
+        "plain": lambda: search(spark, d, queries, k=10),
+        "kill": lambda: search(spark, d, queries, k=10,
+                               exclude_doc_ids=kill),
+        "boolean_msm0": lambda: search_boolean(spark, d, bool_qs, k=10),
+        "boolean_msm2": lambda: search_boolean(spark, d, bool_qs, k=10,
+                                               min_should_match=2),
+        "count_matches": lambda: count_matches(spark, d, bool_qs),
+    }
+
+    def spark_lookup(*a, **kw):
+        raise AssertionError("broadcast df lookup ran a Spark job")
+
+    with monkeypatch.context() as m:
+        for mod in (search_mod, boolean_mod):
+            m.setattr(mod, "global_term_stats", spark_lookup)
+        got = {name: _rows(call()) for name, call in calls.items()}
+    with monkeypatch.context() as m:
+        m.setattr(fs, "local_path", lambda *a, **kw: None)
+        for name, call in calls.items():
+            want = _rows(call())
+            assert got[name] == want and len(want) > 0, name

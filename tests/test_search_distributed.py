@@ -190,135 +190,3 @@ def test_tombstones_past_ceiling_stay_distributed(
                     spark, idx, tiny_queries, k=10, query_mode=mode, **kw
                 ))
             assert got == expected and len(got) > 0, (mode, kw.keys())
-
-
-def test_term_df_cache_amortizes_stats_job(spark, tmp_path, monkeypatch):
-    """Broadcast plane: the second search against the same build must (a)
-    return bit-identical results and (b) not re-read the global stats (the
-    lookup is served from the per-build term→df cache, keyed on stats.json
-    content so a rebuild invalidates it).
-
-    On the Spark broadcast plane (forced by making ``fs.local_path`` report
-    no local path) the saved read is a Spark job, so the warm call runs one
-    job fewer. On the driver-local plane both calls run exactly one job
-    (the query tokenizer) and the saving shows as the local df reader not
-    being called again."""
-    import dense_retriever_spark.index.search as search_mod
-    from dense_retriever_spark.corpus import ingest, synth_corpus, synth_queries
-    from dense_retriever_spark.index import fs
-    from dense_retriever_spark.index.build import build_index
-    from dense_retriever_spark.index.search import search
-
-    d = str(tmp_path / "cache_idx")
-    build_index(ingest(synth_corpus(spark, 150)), d, docs_per_shard=64,
-                term_buckets=2)
-    qs = synth_queries(spark, 8)
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
-
-    # count jobs via per-phase JOB GROUPS, not the global job list: the UI
-    # status store evicts old jobs past spark.ui.retainedJobs in long
-    # suite runs, which would silently undercount global-list deltas
-    def jobs_in(group, fn):
-        sc.setJobGroup(group, group)
-        try:
-            out = fn()
-        finally:
-            sc.setJobGroup(None, None)
-        return out, len(tracker.getJobIdsForGroup(group))
-
-    def run(group, index_dir):
-        return jobs_in(group, lambda: sorted(map(tuple, search(
-            spark, index_dir, qs, k=5
-        ).collect())))
-
-    # driver-local plane: one job per call, cold or warm
-    reads = []
-    real_reader = search_mod._local_term_dfs
-
-    def counting_reader(*a, **kw):
-        reads.append(a[2])
-        return real_reader(*a, **kw)
-
-    monkeypatch.setattr(search_mod, "_local_term_dfs", counting_reader)
-    search_mod._term_df_cache_clear()
-    local_cold, jl_cold = run("tdf_local_cold", d)
-    local_warm, jl_warm = run("tdf_local_warm", d)
-    assert local_warm == local_cold and len(local_cold) > 0
-    assert (jl_cold, jl_warm) == (1, 1)
-    assert len(reads) == 1  # the warm call did not re-read global/
-
-    # Spark broadcast plane: the cache saves the stats job
-    monkeypatch.setattr(fs, "local_path", lambda *a, **kw: None)
-    search_mod._term_df_cache_clear()
-    cold, j_cold = run("tdf_cold", d)
-    warm, j_warm = run("tdf_warm", d)
-    assert warm == cold and len(cold) > 0
-    assert j_warm < j_cold, (j_cold, j_warm)
-    assert cold == local_cold  # both planes, bit for bit
-    assert len(reads) == 1  # the Spark plane never uses the local reader
-
-    # rebuild → new stats.json (phase timings differ) → cache key changes,
-    # the stats job runs again (no stale df served across builds)
-    build_index(ingest(synth_corpus(spark, 150)), str(tmp_path / "idx2"),
-                docs_per_shard=64, term_buckets=2)
-    again, j_again = run("tdf_rebuilt", str(tmp_path / "idx2"))
-    assert again == cold  # same corpus content → same results
-    assert j_again > j_warm  # cold job count again: cache not reused
-
-
-def test_term_df_cache_byte_budget_evicts(spark, tmp_path, monkeypatch):
-    """Round-5 verdict: the cache is bounded in BYTES, evicting whole
-    builds LRU — a sweep across builds (or a vocabulary bigger than the
-    budget) plateaus at the budget instead of growing driver RSS."""
-    import dense_retriever_spark.index.search as search_mod
-    from dense_retriever_spark.corpus import ingest, synth_corpus, synth_queries
-    from dense_retriever_spark.index.build import build_index
-    from dense_retriever_spark.index.search import search
-
-    dirs = []
-    for i in range(3):
-        d = str(tmp_path / f"bidx{i}")
-        build_index(ingest(synth_corpus(spark, 60, seed=40 + i)), d,
-                    docs_per_shard=64, term_buckets=2)
-        dirs.append(d)
-    qs = synth_queries(spark, 6)
-    key_of = lambda d: next(  # noqa: E731
-        (k for k in search_mod._TERM_DF_CACHE if d in k), None
-    )
-
-    search_mod._term_df_cache_clear()
-    search(spark, dirs[0], qs, k=3).collect()
-    b0 = search_mod._TERM_DF_SIZES[key_of(dirs[0])]
-    assert b0 > 0 and len(search_mod._TERM_DF_CACHE) == 1
-
-    # budget fits ~1.5 builds: inserting build 1 must evict build 0 (LRU),
-    # never grow to two resident builds
-    monkeypatch.setattr(search_mod, "_TERM_DF_BUDGET_BYTES", b0 + b0 // 2)
-    search(spark, dirs[1], qs, k=3).collect()
-    assert len(search_mod._TERM_DF_CACHE) == 1
-    assert key_of(dirs[1]) and not key_of(dirs[0])
-
-    # sweep on: build 2's insert pushes past the budget again and evicts
-    # build 1 — the cache PLATEAUS at one resident build all through the
-    # sweep instead of accumulating
-    search(spark, dirs[1], qs, k=3).collect()  # cache hit, refreshes recency
-    search(spark, dirs[2], qs, k=3).collect()
-    assert len(search_mod._TERM_DF_CACHE) == 1 and key_of(dirs[2])
-
-    # single-build overflow: a budget smaller than one build's vocabulary
-    # trims the resident dict to the LIVE query's terms instead of growing.
-    # The probe query carries a novel term so the insert path (where the
-    # trim lives) actually runs against the already-warm build.
-    before_trim = len(search_mod._TERM_DF_CACHE[key_of(dirs[2])])
-    monkeypatch.setattr(search_mod, "_TERM_DF_BUDGET_BYTES", 64)
-    probe = spark.createDataFrame(
-        [(0, "zzqcachenovel alpha")], "query_id long, query string"
-    )
-    search(spark, dirs[2], probe, k=3).collect()
-    dfs = search_mod._TERM_DF_CACHE[key_of(dirs[2])]
-    from dense_retriever_spark.operators.bm25 import query_terms
-
-    live = {r["term"] for r in query_terms(probe).collect()}
-    assert set(dfs) <= live and 0 < len(dfs) < before_trim
-    search_mod._term_df_cache_clear()

@@ -82,24 +82,6 @@ def test_package_zip_importable(tmp_path):
     assert r.stdout.strip() == "5 32"
 
 
-def test_streaming_incremental_tokenize(spark, tmp_path):
-    from dense_retriever_spark.corpus import synth_corpus
-    from dense_retriever_spark.streaming.refresh import stream_tokenize_corpus
-
-    inp = str(tmp_path / "in")
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    synth_corpus(spark, 50).write.mode("append").parquet(inp)
-    stream_tokenize_corpus(spark, inp, out, ckpt)
-    assert spark.read.parquet(out).count() == 50
-    # second batch arrives; only the delta is processed (checkpoint)
-    synth_corpus(spark, 30, seed=77).write.mode("append").parquet(inp)
-    stream_tokenize_corpus(spark, inp, out, ckpt)
-    got = spark.read.parquet(out)
-    assert got.count() == 80
-    assert got.filter(F.col("dl") <= 0).count() == 0
-
-
 def test_streaming_windowed_counts_batch_parity(spark, sf_dir="/root/testdata/sf0.001"):
     from dense_retriever_spark.streaming.refresh import windowed_event_counts
 

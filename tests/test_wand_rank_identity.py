@@ -73,9 +73,8 @@ def test_exact_scorer_rank_identity(spark, idx, tiny_queries, oracle_rows):
 
 def test_blockmax_scorer_rank_identity(spark, idx, tiny_queries, oracle_rows):
     """The block-max scorer is gone (format v3); what it guarded still holds
-    on the exact scorer: a repeat search served from a warm term-df cache is
-    bit-equal to a cold one and rank-identical to the oracle."""
-    search_mod._term_df_cache_clear()
+    on the exact scorer: a repeat search is bit-equal to the first and
+    rank-identical to the oracle."""
     cold = search(spark, idx, tiny_queries, k=K).collect()
     warm = search(spark, idx, tiny_queries, k=K).collect()
     assert sorted(map(tuple, cold)) == sorted(map(tuple, warm))
